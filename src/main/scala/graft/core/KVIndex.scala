@@ -14,10 +14,10 @@ import org.apache.spark.sql.functions._
   * Scale design: a write batch touches only the data files whose key range
   * contains a batch key — write amplification is proportional to the touched
   * key range, not table size, mirroring the reference's COW path copy
-  * (`Index.scala:137-160`) at file rather than block granularity. All
-  * validation joins broadcast the (small) batch against the (pruned) current
-  * state, so a 1000-executor cluster validates a batch with one scan of the
-  * touched files only.
+  * (`Index.scala:137-160`) at file rather than block granularity.
+  * Validation is one keyed fold of the whole batch against the (pruned)
+  * current state ([[BatchFold]]), so a 1000-executor cluster validates a
+  * batch of any command count with one scan of the touched files only.
   */
 final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
                     private val maxRowsPerFile: Long = 1L << 19) {
@@ -687,6 +687,11 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * commits nothing in that case (reference `Index.scala:1010-1036`,
     * all-or-nothing discard `QueriesRandomSpec.scala:211-239`).
     *
+    * The whole batch costs a fixed number of Spark jobs, whatever its
+    * command count: one keyed fold validates every command (and derives
+    * the per-command row counts), then one write rewrites the touched
+    * range with each key's last writer — see [[executePinned]].
+    *
     * One batch per opened snapshot: committing creates manifest version
     * `parent+1` with CREATE_NEW semantics, so a second `execute` from the
     * same manifest (or a concurrent writer) fails — the reference's
@@ -697,12 +702,12 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
               recordHistory: Boolean = false): BatchResult = {
     if (cmds.isEmpty) return BatchResult(success = true, None, Some(manifest))
     // Batch inputs are read by SEVERAL write-path passes (key pruning, the
-    // step fold's forced count, range sampling inside writeData, the write
-    // itself) — an uncached compute-heavy input (a dedup pipeline, a join)
-    // would re-execute per pass. Persist batch-sized inputs once,
-    // spill-safe; leave alone anything the caller already persisted AND
-    // anything trivially recomputable (a bare scan / in-memory batch) —
-    // pinning those just adds serialization cost to small write batches.
+    // validation fold, range sampling inside writeData, the write itself)
+    // — an uncached compute-heavy input (a dedup pipeline, a join) would
+    // re-execute per pass. Persist batch-sized inputs once, spill-safe;
+    // leave alone anything the caller already persisted AND anything
+    // trivially recomputable (a bare scan / in-memory batch) — pinning
+    // those just adds serialization cost to small write batches.
     val pin = cmds.map(_.rows)
       .filter(_.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
       .filterNot(KVIndex.isTrivialPlan)
@@ -711,6 +716,18 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     finally pin.foreach(_.unpersist())
   }
 
+  /** The batch as one keyed pass (the reference's single `save` of the
+    * copy-on-write path, `Context.scala:142-174`):
+    *  1. file pruning — one `take` of the batch keys;
+    *  2. validation — every command's key and `expectedVersion` columns,
+    *     tagged with the command index, meet the touched rows' (key,
+    *     version) in ONE keyed aggregate; a per-key fold in command order
+    *     yields the reference-ordered error and each command's row-count
+    *     delta, and only that bounded summary reaches the driver;
+    *  3. the write — touched rows minus batch keys plus, per key, the rows
+    *     of the command that writes it last, in one `writeData` call.
+    * Nothing here scales with the command count but plan size.
+    */
   private def executePinned(cmds: Seq[Command], txVersion: String,
                             recordHistory: Boolean): BatchResult = {
     // ---- file pruning: which files can a batch key live in? ----
@@ -724,160 +741,46 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     val allBatchKeys = cmds.map(c => c.rows.select(key.cols.map(col): _*))
       .reduce(_ unionByName _)
     val (touched, untouched) = pruneFiles(allBatchKeys)
-    val curStart: DataFrame =
+    val cur: DataFrame =
       if (touched.isEmpty) emptyLike(cmds)
       else store.readFiles(touched.map(_.path), manifest)
 
-    // ---- sequential fold with stop-at-first-error ----
-    // each command costs ONE Spark job: the validation probe and the
-    // next-state row count ride the same collect (the probe rows and a
-    // tagged count row union into one small frame), halving the per-step
-    // driver round trips vs the former probe-then-count pair of jobs —
-    // on a commit-protocol-bound workload (streaming micro-batches, IVM
-    // refresh) the per-job plan/schedule latency is the dominant cost.
-    // PRECEDENCE CAVEAT of the fusion: the next state is built (and its
-    // count computed) in the same job as the probe, so a command that
-    // fails validation still evaluates its apply transform over the
-    // would-be next state — a RUNTIME error raised by that transform
-    // (cast overflow, malformed input) surfaces as the thrown exception
-    // instead of the reference-ordered exists -> version -> apply
-    // GraftError the probe would have reported. Commands built by this
-    // engine use total (null-safe, non-throwing) transforms over schemas
-    // it controls, so the trade is taken deliberately; a caller-supplied
-    // transform that can throw must validate its inputs itself.
-    val stepCountTag = " n"
-    var cur = curStart.cache()
-    var err: Option[GraftError] = None
-    val stepCounts = Seq.newBuilder[Long]
-    val it = cmds.iterator
-    while (err.isEmpty && it.hasNext) {
-      val plan = step(cur, it.next(), txVersion)
-      val nextCached = plan.next.cache()
-      val countRow = nextCached
-        .agg(org.apache.spark.sql.functions.count(lit(1)).cast("string").as("key"))
-        .select(lit(stepCountTag).as("kind"), col("key"))
-      val sample = plan.probe.unionByName(countRow).collect()
-      plan.interpret(sample.filter(_.getString(0) != stepCountTag)) match {
-        case Some(e) => err = Some(e); nextCached.unpersist()
-        case None =>
-          // the count row is always present: agg over zero rows yields 0
-          stepCounts += sample.find(_.getString(0) == stepCountTag)
-            .get.getString(1).toLong
-          cur.unpersist()
-          cur = nextCached
-      }
-    }
-
-    if (err.isDefined) { cur.unpersist(); return BatchResult(success = false, err, None) }
-
-    // ---- COW commit: rewrite touched range only ----
-    // the step fold already forced a count of the final state — reuse it
-    // rather than paying another job over the cache
-    val counts = stepCounts.result()
-    val finalRows = counts.lastOption.getOrElse(0L)
-    val nParts = math.max(1, math.ceil(
-      math.max(finalRows, 1L).toDouble / maxRowsPerFile).toInt)
-    val (_, newFiles) = store.writeData(manifest.id, cur, key, nParts)
-    cur.unpersist()
-    val untouchedRows = untouched.map(_.rows).sum
-    val m2 = manifest.copy(
-      version = manifest.version + 1,
-      snapshotId = UUID.randomUUID().toString,
-      numElements = untouchedRows + newFiles.map(_.rows).sum,
-      lastChangeVersion = txVersion,
-      files = (untouched ++ newFiles).sortBy(_.min)(KeyOrd),
-      filesRef = None, disjointHint = None)
-    try BatchResult(success = true, None,
-      Some(store.commit(m2, manifest.version, recordHistory)), counts)
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      BatchResult(success = false, Some(GraftError.ContextAlreadyUsed(manifest.id)), None)
+    // ---- validation: one keyed fold over the whole batch ----
+    // PRECEDENCE CAVEAT: the fold reads only key and `expectedVersion`
+    // columns, and value columns are evaluated only by the write, after
+    // validation passed — a runtime error in a value expression (cast
+    // overflow, malformed input) of a batch that fails validation never
+    // surfaces. What still surfaces ahead of the reference-ordered
+    // GraftError is a throwing expression in a KEY or `expectedVersion`
+    // column: the pruning `take` above evaluates every key column of
+    // every command before any validation, as it always has. Inputs that
+    // `execute` pins evaluate ALL their columns when that take fills the
+    // pin.
+    BatchFold.run(cmds, cur, key, txVersion) match {
+      case Left(e) => BatchResult(success = false, Some(e), None)
+      case Right(deltas) =>
+        // ---- COW commit: rewrite touched range only ----
+        // row counts from the manifest plus the fold's deltas: no count job
+        val counts = deltas.scanLeft(touched.map(_.rows).sum)(_ + _).tail
+        val nParts = math.max(1, math.ceil(
+          math.max(counts.last, 1L).toDouble / maxRowsPerFile).toInt)
+        val next = BatchFold.lastWriters(cmds, cur, key, manifest.valueCols, txVersion)
+        val (_, newFiles) = store.writeData(manifest.id, next, key, nParts)
+        val untouchedRows = untouched.map(_.rows).sum
+        val m2 = manifest.copy(
+          version = manifest.version + 1,
+          snapshotId = UUID.randomUUID().toString,
+          numElements = untouchedRows + newFiles.map(_.rows).sum,
+          lastChangeVersion = txVersion,
+          files = (untouched ++ newFiles).sortBy(_.min)(KeyOrd),
+          filesRef = None, disjointHint = None)
+        try BatchResult(success = true, None,
+          Some(store.commit(m2, manifest.version, recordHistory)), counts)
+        catch { case _: java.nio.file.FileAlreadyExistsException =>
+          BatchResult(success = false, Some(GraftError.ContextAlreadyUsed(manifest.id)), None)
+        }
     }
   }
-
-  /** A command's execution plan: the validation `probe` frame (collected
-    * TOGETHER with the next-state count in the fold's single per-step
-    * job), the `interpret` function turning collected probe rows into the
-    * reference-ordered error (exists -> version -> apply, SURVEY §7
-    * hard-part 1 — probe row ORDER in the frame is irrelevant, the
-    * interpreter re-imposes the reference's reporting order), and the
-    * `next` state to keep when validation passes.
-    */
-  private final case class StepPlan(probe: DataFrame, next: DataFrame,
-                                    interpret: Array[Row] => Option[GraftError])
-
-  /** One command against the current (touched-range) state. */
-  private def step(cur: DataFrame, cmd: Command, tx: String): StepPlan = {
-    val kcols = key.cols
-    def keyStr = concat_ws("/", kcols.map(c => col(c).cast("string")): _*)
-    cmd match {
-      case Command.Insert(rows, upsert) =>
-        val batch = rows
-        // both validations ride in ONE probe (a union of two per-branch
-        // limits), reported in the reference's order: intra-batch
-        // duplicate keys -> DUPLICATED_KEYS (Index.scala:285-288), then
-        // existing key without upsert -> LEAF_DUPLICATE_KEY (Leaf.scala:41-43)
-        val dupProbe = batch.groupBy(kcols.map(col): _*).count()
-          .filter(col("count") > 1)
-          .select(lit("dup").as("kind"), keyStr.as("key")).limit(5)
-        val probe =
-          if (upsert) dupProbe
-          else dupProbe.unionByName(
-            batch.join(cur, kcols, "left_semi")
-              .select(lit("clash").as("kind"), keyStr.as("key")).limit(5))
-        val stamped = batch.select((kcols ++ manifest.valueCols).map(col): _*)
-          .withColumn("version", lit(tx))
-        StepPlan(probe, cur.join(batch, kcols, "left_anti").unionByName(stamped),
-          sample => {
-            val dupS = sample.filter(_.getString(0) == "dup").map(_.getString(1))
-            val clashS = sample.filter(_.getString(0) == "clash").map(_.getString(1))
-            if (dupS.nonEmpty) Some(GraftError.DuplicatedKeys(dupS.toSeq))
-            else if (clashS.nonEmpty) Some(GraftError.KeyAlreadyExists(clashS.toSeq))
-            else None
-          })
-
-      case Command.Update(rows) =>
-        val stamped = rows.select((kcols ++ manifest.valueCols).map(col): _*)
-          .withColumn("version", lit(tx))
-        StepPlan(existsAndVersionProbe(cur, rows, keyStr),
-          cur.join(rows, kcols, "left_anti").unionByName(stamped),
-          interpretExistsAndVersion)
-
-      case Command.Remove(rows) =>
-        StepPlan(existsAndVersionProbe(cur, rows, keyStr),
-          cur.join(rows, kcols, "left_anti"),
-          interpretExistsAndVersion)
-    }
-  }
-
-  /** exists-check then CAS version check probe, in reference order
-    * (`Leaf.scala:58-60` then `:62-72`). `expectedVersion` column optional;
-    * null means unconditional.
-    */
-  private def existsAndVersionProbe(cur: DataFrame, rows: DataFrame,
-                                    keyStr: Column): DataFrame = {
-    val kcols = key.cols
-    // both probes ride one frame (union of per-branch limits); a missing
-    // key cannot also appear stale (the stale probe is an inner join), and
-    // missing is reported first — the reference's order (Leaf.scala:58-72)
-    val missProbe = rows.join(cur, kcols, "left_anti")
-      .select(lit("missing").as("kind"), keyStr.as("key")).limit(5)
-    if (!rows.columns.contains("expectedVersion")) missProbe
-    else missProbe.unionByName(
-      rows.select((kcols :+ "expectedVersion").map(col): _*)
-        .join(cur.select((kcols :+ "version").map(col): _*), kcols)
-        .filter(col("expectedVersion").isNotNull &&
-                col("expectedVersion") =!= col("version"))
-        .select(lit("stale").as("kind"), keyStr.as("key")).limit(5))
-  }
-
-  private val interpretExistsAndVersion: Array[Row] => Option[GraftError] =
-    sample => {
-      val missing = sample.filter(_.getString(0) == "missing").map(_.getString(1))
-      val stale = sample.filter(_.getString(0) == "stale").map(_.getString(1))
-      if (missing.nonEmpty) Some(GraftError.KeyNotFound(missing.toSeq))
-      else if (stale.nonEmpty) Some(GraftError.VersionChanged(stale.toSeq))
-      else None
-    }
 
   /** Manifest-pruned file set: a file is touched iff some batch key falls in
     * its [min,max] — the findPath descent (reference `Index.scala:85-99`)

@@ -128,9 +128,10 @@ object Command {
 }
 
 /** Typed results — reference `Result.scala:3-14`. `commandRowCounts` is
-  * the touched-range row count after each command (free: the write fold
-  * forces each step anyway), the analogue of the reference's per-command
-  * result counts.
+  * the touched-range row count after each command, the analogue of the
+  * reference's per-command result counts. `execute` derives it without a
+  * count job: the touched files' manifest row counts plus the running sum
+  * of the per-command deltas its validation fold returns.
   */
 final case class BatchResult(success: Boolean, error: Option[GraftError],
                              snapshot: Option[SnapshotManifest],

@@ -147,6 +147,43 @@ abstract class KVIndexSpecBase extends SparkSuite {
     assert(after.count == 100) // +1 insert, -1 remove
   }
 
+  test("update: a key repeated in one Update is DUPLICATED_KEYS, nothing committed") {
+    val store = newStore()
+    val ix = boot(store, "tud", n = 3)
+    val res = ix.execute(Seq(Command.Update(kv(Seq("k0002" -> "x", "k0002" -> "y")))))
+    assert(!res.success && res.error.contains(GraftError.DuplicatedKeys(Seq("k0002"))))
+    val latest = KVIndex.open(store, "tud").toOption.get
+    assert(latest.manifest.version == ix.manifest.version && latest.count == 3)
+    assert(latest.get(Seq("k0002")).select("v").as[String].collect().toSeq == Seq("v2"))
+    // the duplicate check precedes the exists check, as for Insert
+    val ghost = ix.execute(Seq(Command.Update(kv(Seq("ghost" -> "x", "ghost" -> "y")))))
+    assert(ghost.error.contains(GraftError.DuplicatedKeys(Seq("ghost"))))
+  }
+
+  test("remove: a key repeated in one Remove is removed once; a repeated ghost is listed per row") {
+    val store = newStore()
+    val ix = boot(store, "trr", n = 3)
+    val ghost = ix.execute(Seq(Command.Remove(Seq("ghost", "ghost").toDF("k"))))
+    assert(ghost.error.contains(GraftError.KeyNotFound(Seq("ghost", "ghost"))))
+    val res = ix.execute(Seq(Command.Remove(Seq("k0002", "k0002").toDF("k"))))
+    assert(res.success && res.commandRowCounts == Seq(2L))
+    val after = KVIndex.open(store, "trr").toOption.get
+    assert(after.count == 2 && dump(after) == Map("k0001" -> "v1", "k0003" -> "v3"))
+  }
+
+  test("validation precedes value evaluation: a throwing value column of a failed batch never runs") {
+    val store = newStore()
+    val ix = boot(store, "tre")
+    def boom(k: String) = spark.range(1)
+      .select(lit(k).as("k"), raise_error(lit("value column evaluated")).cast("string").as("v"))
+    val res = ix.execute(Seq(Command.Update(kv(Seq("ghost" -> "x"))), Command.Insert(boom("new1"))))
+    assert(!res.success && res.error.exists(_.code == "KEY_NOT_FOUND"))
+    // the failing command's own value column is not evaluated either
+    val own = ix.execute(Seq(Command.Update(boom("ghost"))))
+    assert(own.error.contains(GraftError.KeyNotFound(Seq("ghost"))))
+    assert(KVIndex.open(store, "tre").toOption.get.manifest.version == ix.manifest.version)
+  }
+
   test("file-granular COW: untouched files are shared between snapshots") {
     val store = newStore()
     val ix = boot(store, "t7")
@@ -395,7 +432,57 @@ abstract class KVIndexSpecBase extends SparkSuite {
 }
 
 class KVIndexSpec extends KVIndexSpecBase {
+  import spark.implicits._
+
   override def newStore(): SnapshotStore = new FsSnapshotStore(tmpDir("graft-store"), spark)
+
+  test("execute runs the same number of Spark jobs for 1, 2, 4 and 8 commands") {
+    val store = newStore()
+    val kvRows = (1 to 400).map(i => (f"k$i%04d", s"v$i"))
+    // cycles upsert, versioned update, remove and plain insert, each on
+    // its own five keys, spread over the index's files. The rows are a
+    // computed plan, not an in-memory Seq: the pruning take of a LONE
+    // in-memory batch runs on the driver, so a 1-command batch of that
+    // kind is one job cheaper than every larger one.
+    def keys(i: Int, prefix: String) =
+      spark.range(1, 6).select(format_string(s"$prefix%04d", col("id") + i * 47).as("k"))
+    def batch(n: Int): Seq[Command] = (0 until n).map { i =>
+      i % 4 match {
+        case 0 => Command.Insert(keys(i, "k").withColumn("v", lit("up")), upsert = true)
+        case 1 => Command.Update(keys(i, "k").withColumn("v", lit("upd"))
+          .withColumn("expectedVersion", lit("tx0")))
+        case 2 => Command.Remove(keys(i, "k"))
+        case _ => Command.Insert(keys(i, "nk").withColumn("v", lit("new")))
+      }
+    }
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val perBatch = Seq(1, 2, 4, 8).map { n =>
+      val id = s"tjobs$n"
+      KVIndex.bootstrap(store, id, kvRows.toDF("k", "v"), Seq("k"),
+        txVersion = "tx0", maxRowsPerFile = 32).fold(e => fail(e.message), identity)
+      // reopened with the default file size: every batch writes one file
+      val ix = KVIndex.open(store, id).toOption.get
+      assert(ix.numFiles >= 10)
+      val cmds = batch(n)
+      Thread.sleep(500) // listener bus is async: let bootstrap's jobs drain
+      spark.sparkContext.addSparkListener(listener)
+      jobs.set(0)
+      val res =
+        try { val r = ix.execute(cmds); Thread.sleep(500); r }
+        finally spark.sparkContext.removeSparkListener(listener)
+      assert(res.success, s"$n commands: ${res.error}")
+      val removed = (0 until n).count(_ % 4 == 2) * 5
+      val inserted = (0 until n).count(_ % 4 == 3) * 5
+      assert(KVIndex.open(store, id).toOption.get.count == 400 - removed + inserted)
+      n -> jobs.get()
+    }
+    assert(perBatch.map(_._2).distinct.size == 1, s"jobs per batch size: $perBatch")
+    assert(perBatch.head._2 <= 10, s"jobs per batch size: $perBatch")
+  }
 }
 
 class MemoryKVIndexSpec extends KVIndexSpecBase {
