@@ -3,6 +3,7 @@ package graft.core
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The write path's keyed pass over a whole command batch
   * ([[KVIndex.execute]]): a fixed number of Spark jobs, whatever the
@@ -163,10 +164,14 @@ private[core] object BatchFold {
     * touched range is not shuffled before the write), plus each key's last
     * writer among the batch rows — the stamped rows of the command that
     * writes the key last, or nothing when that is a remove. Value columns
-    * are first evaluated here.
+    * are first evaluated here. With a `schema` (the manifest's) every
+    * column is cast to its type: the union with batch rows widens, and the
+    * files must hold the manifest's types. Under ANSI mode an out-of-range
+    * narrowing fails the write instead of storing a wrapped value.
     */
   def lastWriters(cmds: Seq[Command], cur: DataFrame, key: KeySpec,
-                  valueCols: Seq[String], tx: String): DataFrame = {
+                  valueCols: Seq[String], tx: String,
+                  schema: Option[StructType]): DataFrame = {
     val kcols = key.cols.map(col)
     val written = cmds.zipWithIndex.map {
       case (Command.Remove(rows), i) =>
@@ -178,9 +183,10 @@ private[core] object BatchFold {
     }
     val kept = cur.join(cmds.map(_.rows.select(kcols: _*)).reduce(_ unionByName _),
       key.cols, "left_anti")
-    kept.unionByName(written.reduce(_ unionByName _)
+    val next = kept.unionByName(written.reduce(_ unionByName _)
       .withColumn("_last", max("_cmd").over(Window.partitionBy(kcols :+ nullGroup(key): _*)))
       .filter(col("_cmd") === col("_last") && !col("_del"))
       .drop("_cmd", "_del", "_last"))
+    schema.fold(next)(s => next.select(s.map(f => col(f.name).cast(f.dataType).as(f.name)): _*))
   }
 }

@@ -5,7 +5,6 @@ import java.sql.{Connection, DriverManager, SQLException}
 import java.util.UUID
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** The dialect-specific seams of [[JdbcSnapshotStore]] — everything else
   * in the store is portable JDBC. A networked port (PostgreSQL /
@@ -404,10 +403,8 @@ class JdbcSnapshotStore(val url: String, val spark: SparkSession,
     } finally deleteRec(tmpRoot)
   }
 
-  override def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame = {
-    val cols = (m.keyCols ++ m.valueCols :+ "version").map(col)
-    spark.read.parquet(paths.map(materialize): _*).select(cols: _*)
-  }
+  override def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame =
+    readParquet(paths.map(materialize), m)
 
   /** Blobs are immutable — cache each at most once for Spark's reader. */
   private def materialize(logical: String): String = cacheDir.synchronized {

@@ -69,9 +69,11 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       else SnapshotManifest.disjointOrdered(files)
     }
 
-  /** Typed empty result without touching (or resolving) any file list. */
+  /** Typed empty result without touching (or resolving) any file list;
+    * only a legacy manifest with files takes its types from them.
+    */
   private def emptyScan(): DataFrame =
-    if (resolved && fullFiles.nonEmpty) df.limit(0)
+    if (manifest.readSchema.isEmpty && resolved && fullFiles.nonEmpty) df.limit(0)
     else store.emptyTyped(manifest)
 
   /** Caps the PLAN LEAVES (legs) any stitched union or co-range join
@@ -764,7 +766,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         val counts = deltas.scanLeft(touched.map(_.rows).sum)(_ + _).tail
         val nParts = math.max(1, math.ceil(
           math.max(counts.last, 1L).toDouble / maxRowsPerFile).toInt)
-        val next = BatchFold.lastWriters(cmds, cur, key, manifest.valueCols, txVersion)
+        val next = BatchFold.lastWriters(cmds, cur, key, manifest.valueCols, txVersion,
+          manifest.readSchema)
         val (_, newFiles) = store.writeData(manifest.id, next, key, nParts)
         val untouchedRows = untouched.map(_.rows).sum
         val m2 = manifest.copy(
@@ -818,7 +821,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * insert: zero current files are read, zero rewritten).
     */
   private def emptyLike(cmds: Seq[Command]): DataFrame = {
-    if (files.nonEmpty) store.read(manifest).limit(0)
+    if (manifest.readSchema.isDefined) store.emptyTyped(manifest)
+    else if (files.nonEmpty) store.read(manifest).limit(0)
     else {
       val c = cmds.collectFirst { case Command.Insert(r, _) => r }
         .getOrElse(cmds.head.rows)
@@ -2462,8 +2466,9 @@ object KVIndex {
       case Right(m0) =>
         val valueCols = m0.valueCols
         val key = KeySpec(keyCols)
+        // the stamp is a string in every snapshot schema
         val stamped =
-          if (df.columns.contains("version")) df
+          if (df.columns.contains("version")) df.withColumn("version", col("version").cast("string"))
           else df.withColumn("version", lit(txVersion))
         // writeData reads the input twice (range sampling + write): pin a
         // compute-heavy input once, unless the caller already did or the

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructField, StructType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType, StringType}
 import org.apache.spark.storage.StorageLevel
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -28,10 +28,14 @@ final case class FileEntry(path: String, rows: Long,
   * path copy, `Index.scala:137-160`).
   *
   * `colTypes` records the Spark DDL type of each `keyCols ++ valueCols`
-  * column so a ZERO-file snapshot still reads as a correctly-typed empty
-  * DataFrame (the reference returns empty results, never errors, on empty
-  * index reads); empty = unknown (legacy manifests), read falls back to
-  * string columns.
+  * column: with the string `version` stamp they are the read schema of
+  * every snapshot ([[readSchema]]) — the catalog reports it, every read of
+  * the snapshot's files declares it (so no read spends a Spark job
+  * inferring it from parquet footers), every write casts to it, and a
+  * zero-file snapshot reads as a typed empty DataFrame with it (the
+  * reference returns empty results, never errors, on empty index reads).
+  * Empty = unknown (legacy manifests): file reads infer the schema from
+  * the files, and an empty read falls back to string columns.
   */
 final case class SnapshotManifest(
     id: String,                 // index id
@@ -58,6 +62,19 @@ final case class SnapshotManifest(
     disjointHint: Option[Boolean] = None) {
 
   def keySpec: KeySpec = KeySpec(keyCols)
+
+  /** The snapshot's schema from `colTypes` — key and value columns at
+    * their recorded types, then the string `version` stamp, nullable at
+    * every level as any file read is; None for a legacy manifest whose
+    * `colTypes` is incomplete.
+    */
+  @transient lazy val readSchema: Option[StructType] = {
+    val names = keyCols ++ valueCols
+    if (colTypes.size != names.size) None
+    else Some(SnapshotManifest.nullable(StructType(names.zip(colTypes).map { case (n, t) =>
+      StructField(n, DataType.fromDDL(t)) } :+ StructField("version", StringType)))
+      .asInstanceOf[StructType])
+  }
   def isEmpty: Boolean = numElements == 0
   /** capacity predicates — reference QueryableIndex.scala:521-538 */
   def isFull: Boolean = maxNItems > 0 && numElements >= maxNItems
@@ -75,6 +92,15 @@ final case class SnapshotManifest(
 }
 
 object SnapshotManifest {
+  /** `t` with every field, element and map value nullable. */
+  private[core] def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
   private def anyToJson(v: Any): JValue = v match {
     case null => JNull
     case s: String => JString(s)
@@ -324,8 +350,23 @@ trait SnapshotStore {
   def writeData(id: String, df: DataFrame, keySpec: KeySpec,
                 targetPartitions: Int = 0): (String, Seq[FileEntry])
 
-  /** Read a subset of a snapshot's files (the touched set during COW). */
+  /** Read a subset of a snapshot's files (the touched set during COW) as
+    * `m`'s columns, `keyCols ++ valueCols :+ version`. With complete
+    * `colTypes` the frame has exactly [[SnapshotManifest.readSchema]] and
+    * building it launches no Spark job: the schema is declared, not read
+    * from the files (Spark still lists more paths than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold`, 32 by
+    * default, with a job). Only a legacy manifest infers it (one job).
+    */
   def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame
+
+  /** [[readFiles]] over parquet files — shared by every parquet-reading
+    * backend.
+    */
+  protected final def readParquet(paths: Seq[String], m: SnapshotManifest): DataFrame = {
+    val cols = (m.keyCols ++ m.valueCols :+ "version").map(col)
+    m.readSchema.fold(spark.read)(spark.read.schema).parquet(paths: _*).select(cols: _*)
+  }
 
   /** Range-partition + sort `df` by key, write it as parquet under
     * `dir`, and return the per-file stats — shared by every
@@ -345,7 +386,7 @@ trait SnapshotStore {
       .sortWithinPartitions(keyCols: _*)
     if (nParts != 1) {
       part.write.mode("errorifexists").parquet(dir)
-      return fileStats(dir, keySpec)
+      return fileStats(dir, keySpec, part.schema)
     }
     val obs = org.apache.spark.sql.Observation()
     val kstruct = struct(keyCols: _*)
@@ -368,7 +409,7 @@ trait SnapshotStore {
         // old read-back path would have completed this commit
         case scala.util.control.NonFatal(_) => Map.empty
       }
-    if (m.isEmpty) return fileStats(dir, keySpec)
+    if (m.isEmpty) return fileStats(dir, keySpec, part.schema)
     val rows = m("rows").asInstanceOf[Long]
     if (rows == 0L) return Nil
     val p = java.nio.file.Paths.get(dir)
@@ -383,7 +424,7 @@ trait SnapshotStore {
       parts match {
         case one :: Nil => one
         case _ => // unexpected layout — trust the read-back path
-          return fileStats(dir, keySpec)
+          return fileStats(dir, keySpec, part.schema)
       }
     }
     val mn = m("mn").asInstanceOf[org.apache.spark.sql.Row]
@@ -394,10 +435,11 @@ trait SnapshotStore {
 
   /** Per-file stats via one small aggregate over freshly written parquet
     * (struct min/max = lexicographic composite-key min/max in Spark) —
-    * shared by every parquet-writing backend.
+    * shared by every parquet-writing backend. `schema` is the written
+    * frame's, so the read-back infers nothing.
     */
-  def fileStats(dir: String, keySpec: KeySpec): Seq[FileEntry] = {
-    val df = spark.read.parquet(dir)
+  def fileStats(dir: String, keySpec: KeySpec, schema: StructType): Seq[FileEntry] = {
+    val df = spark.read.schema(schema).parquet(dir)
     val kstruct = struct(keySpec.cols.map(col): _*)
     val rows = df.groupBy(input_file_name().as("path"))
       .agg(count(lit(1)).as("rows"), min(kstruct).as("mn"), max(kstruct).as("mx"))
@@ -617,14 +659,10 @@ trait SnapshotStore {
   }
 
   private[graft] def emptyTyped(m: SnapshotManifest): DataFrame = {
-    val names = m.keyCols ++ m.valueCols
-    val types =
-      if (m.colTypes.size == names.size) m.colTypes.map(DataType.fromDDL)
-      else names.map(_ => StringType) // legacy manifest without types
-    val schema = StructType(
-      names.zip(types).map { case (n, t) => StructField(n, t) } :+
-        StructField("version", StringType))
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val schema = m.readSchema.getOrElse( // legacy manifest without types
+      StructType((m.keyCols ++ m.valueCols :+ "version").map(StructField(_, StringType))))
+    // a local relation, so the optimizer sees the emptiness and prunes
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   // ---- temporal log (reference TemporalIndex.scala) ----
@@ -978,13 +1016,17 @@ class FsSnapshotStore(val root: String, val spark: SparkSession)
         SnapshotManifest.keyToJson(f.min), SnapshotManifest.keyToJson(f.max))
     }.toSeq
     val nParts = math.max(1, rows.size / 1000000)
-    spark.createDataset(rows).toDF("seq", "path", "rows", "minJson", "maxJson")
+    spark.createDataset(rows).toDF(FsSnapshotStore.FileListSchema.fieldNames.toSeq: _*)
       .repartition(nParts)
       .write.mode("errorifexists").parquet(p(rel).toString)
   }
 
+  /** A checkpoint read: its fixed schema is declared, never inferred. */
+  private def fileListScan(rel: String): DataFrame =
+    spark.read.schema(FsSnapshotStore.FileListSchema).parquet(p(rel).toString)
+
   override protected def readFileList(rel: String): Seq[FileEntry] =
-    spark.read.parquet(p(rel).toString).orderBy("seq").collect().iterator.map { r =>
+    fileListScan(rel).orderBy("seq").collect().iterator.map { r =>
       FileEntry(r.getAs[String]("path"), r.getAs[Long]("rows"),
         SnapshotManifest.keyFromJson(r.getAs[String]("minJson")),
         SnapshotManifest.keyFromJson(r.getAs[String]("maxJson")))
@@ -1002,9 +1044,7 @@ class FsSnapshotStore(val root: String, val spark: SparkSession)
     import spark.implicits._
     val dec = FsSnapshotStore.decodeEntry
     val keep = pred
-    spark.read.parquet(p(rel).toString)
-      .select(col("seq"), col("path"), col("rows"), col("minJson"), col("maxJson"))
-      .as[(Long, String, Long, String, String)]
+    fileListScan(rel).as[(Long, String, Long, String, String)]
       .filter(t => keep(dec(t)))
       .collect().sortBy(_._1).iterator.map(dec).toSeq
   }
@@ -1014,9 +1054,7 @@ class FsSnapshotStore(val root: String, val spark: SparkSession)
     import spark.implicits._
     val dec = FsSnapshotStore.decodeEntry
     val keep = pred
-    val survivors = spark.read.parquet(p(rel).toString)
-      .select(col("seq"), col("path"), col("rows"), col("minJson"), col("maxJson"))
-      .as[(Long, String, Long, String, String)]
+    val survivors = fileListScan(rel).as[(Long, String, Long, String, String)]
       .filter(t => keep(dec(t)))
     val row = survivors
       .orderBy(if (fromEnd) col("seq").desc else col("seq").asc)
@@ -1044,10 +1082,8 @@ class FsSnapshotStore(val root: String, val spark: SparkSession)
     (snapshotId, writeParquetWithStats(dir.toString, df, keySpec, nParts))
   }
 
-  override def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame = {
-    val cols = (m.keyCols ++ m.valueCols :+ "version").map(col)
-    spark.read.parquet(paths: _*).select(cols: _*)
-  }
+  override def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame =
+    readParquet(paths, m)
 
   override protected def listDataFiles(id: String): Seq[String] = {
     val dataDir = p(id).resolve("data")
@@ -1089,6 +1125,12 @@ class FsSnapshotStore(val root: String, val spark: SparkSession)
 }
 
 object FsSnapshotStore {
+  /** The filelist checkpoint table: one row per file in manifest order. */
+  private[core] val FileListSchema: StructType = StructType(Seq(
+    StructField("seq", LongType), StructField("path", StringType),
+    StructField("rows", LongType), StructField("minJson", StringType),
+    StructField("maxJson", StringType)))
+
   /** Checkpoint-row decoder as a standalone serializable function — shipped
     * inside executor-side prune closures, so it must not capture a store.
     */
@@ -1169,7 +1211,9 @@ final class MemorySnapshotStore(val spark: SparkSession,
       .sortWithinPartitions(keyCols: _*)
       .withColumn("__file", spark_partition_id())
     val rdd = part.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-    val pinned = spark.createDataFrame(rdd, part.schema)
+    // nullable throughout, as a parquet file reads
+    val pinned = spark.createDataFrame(rdd,
+      SnapshotManifest.nullable(part.schema).asInstanceOf[StructType])
     val kstruct = struct(keyCols: _*)
     val stats = pinned.groupBy(col("__file"))
       .agg(count(lit(1)).as("rows"), min(kstruct).as("mn"), max(kstruct).as("mx"))

@@ -30,7 +30,7 @@ class WriteStatsSpec extends SparkSuite {
     // compare entry-for-entry — path, rows, min, max
     val dir = f.path.stripSuffix("/" + java.nio.file.Paths.get(
       new java.net.URI(f.path).getPath).getFileName.toString)
-    val readBack = store.fileStats(dir, ix.key)
+    val readBack = store.fileStats(dir, ix.key, ix.df.schema)
     assert(readBack == fs, s"observed $fs != read-back $readBack")
   }
 
@@ -47,7 +47,7 @@ class WriteStatsSpec extends SparkSuite {
     val f = ix.manifest.files.head
     val dir = f.path.stripSuffix("/" + java.nio.file.Paths.get(
       new java.net.URI(f.path).getPath).getFileName.toString)
-    val readBack = store.fileStats(dir, ix.key)
+    val readBack = store.fileStats(dir, ix.key, ix.df.schema)
     assert(readBack == ix.manifest.files.toSeq)
     // and the pruned point read still finds its row through these stats
     val got = ix.get(Seq("b", java.sql.Timestamp.valueOf("2024-03-01 10:00:00.123456")))
