@@ -76,29 +76,6 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     if (manifest.readSchema.isEmpty && resolved && fullFiles.nonEmpty) df.limit(0)
     else store.emptyTyped(manifest)
 
-  /** Caps the PLAN LEAVES (legs) any stitched union or co-range join
-    * materializes: beyond the cap, legs hold more rows instead of the
-    * plan holding more children (greedy batching can overshoot by one:
-    * ≤ cap+1 stitch legs, ≤ 2·(cap+1)+1 merged join legs). Per-task MEMORY stays bounded at any
-    * leg size — stitch legs sort within partitions and the zip join
-    * merges through spillable local sorts — so what grows is task
-    * duration, the right trade against a 100k-child union Catalyst
-    * cannot plan (rule application and codegen are per-node). Override
-    * with `spark.graft.maxPlanLegs` (e.g. up on a wide cluster whose
-    * scheduler wants more concurrent tasks).
-    */
-  private def maxPlanLegs: Int = {
-    val raw = org.apache.spark.sql.internal.SQLConf.get
-      .getConfString("spark.graft.maxPlanLegs", "4096")
-    val parsed =
-      try raw.trim.toInt
-      catch { case _: NumberFormatException => throw new IllegalArgumentException(
-        s"spark.graft.maxPlanLegs must be an integer, got '$raw'") }
-    math.max(1, parsed)
-  }
-
-  private def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
-
   /** reads of this frozen snapshot */
   def df: DataFrame = store.read(manifest)
   def table: OrderedTable = OrderedTable(df, key)
@@ -169,9 +146,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * view refreshes.
     */
   def tableForHeadRange(lo: Any, hi: Any): OrderedTable = {
-    val covering = filesWhere(f =>
-      KeyOrd.compare(Seq(f.min.head), Seq(hi)) <= 0 &&
-        KeyOrd.compare(Seq(f.max.head), Seq(lo)) >= 0)
+    val covering = filesWhere(LegPlanner.covering(Some(Seq(lo)), Some(Seq(hi))))
     OrderedTable(
       if (covering.isEmpty) emptyScan()
       else store.readFiles(covering.map(_.path), manifest), key)
@@ -346,9 +321,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * reference's prefix comparator convention, `QueryableIndex.scala:370-430`).
     */
   def prefix(p: Seq[Any], reverse: Boolean = false): DataFrame =
-    stitchedScan(f => KeyOrd.compare(p, f.max.take(p.length)) <= 0 &&
-        KeyOrd.compare(f.min.take(p.length), p) <= 0,
-      key.prefixEq(p), reverse)(
+    stitchedScan(LegPlanner.prefix(p), key.prefixEq(p), reverse)(
       table.prefix(p, reverse))
 
   // ------------------------------------------------------------------
@@ -361,51 +334,21 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
   // global sort and no Exchange anywhere in the plan.
   // ------------------------------------------------------------------
 
-  /** Union of one single-partition, locally-sorted scan per LEG, where a
-    * leg groups ADJACENT manifest files up to ~`maxRowsPerFile` rows
-    * (fragmented manifests of many small files collapse into few legs; a
-    * right-sized file stays its own leg). Legs cover disjoint key ranges
-    * in scan order, and each leg's local sort restores the exact order
-    * within it — multiple parquet splits of one leg land in a single
-    * coalesced partition in no contractual order, so the per-leg sort is
-    * load-bearing, not belt-and-braces. It still never shuffles.
-    *
-    * Plan note: leaf count is O(totalRows / maxRowsPerFile) instead of
-    * O(files) — a 10k-small-file snapshot no longer builds a 10k-leaf
-    * union plan for `inOrdered` readers (the same batching
-    * [[pullIterator]] applies to its jobs). A full ordered scan over a
-    * million-file snapshot should still prefer [[pullIterator]] (lazy,
+  /** The ordered stitch of `filesInScanOrder`: legs of ADJACENT files
+    * up to ~`maxRowsPerFile` rows each ([[LegPlanner.legTarget]] floors
+    * the target so the union stays within `spark.graft.maxPlanLegs`
+    * children), so a fragmented manifest of many small files collapses
+    * into few legs and a right-sized file stays its own. Leaf count is
+    * O(totalRows / maxRowsPerFile), not O(files); a full ordered scan over
+    * a million-file snapshot should still prefer [[pullIterator]] (lazy,
     * early-stop) over materializing any whole-snapshot plan.
     */
   private def orderedUnion(filesInScanOrder: Seq[FileEntry],
                            reverse: Boolean): DataFrame = {
-    // leg target: the maxRowsPerFile batching convention, floor-bounded so
-    // the union never exceeds maxPlanLegs children (legs grow instead —
-    // the per-leg sort spills, the plan does not)
-    val legRows = math.max(maxRowsPerFile,
-      ceilDiv(filesInScanOrder.iterator.map(_.rows).sum, maxPlanLegs.toLong))
-    val legs = {
-      val out = Seq.newBuilder[Seq[FileEntry]]
-      var cur = Vector.empty[FileEntry]; var rows = 0L
-      filesInScanOrder.foreach { f =>
-        if (cur.nonEmpty && rows + f.rows > legRows) {
-          out += cur; cur = Vector.empty; rows = 0L
-        }
-        cur :+= f; rows += f.rows
-      }
-      if (cur.nonEmpty) out += cur
-      out.result()
-    }
-    // each leg rides the union-fusion breaker: Spark 4's UnionExec would
-    // otherwise fuse the single-partition legs into ONE serial task
-    // (SQLPartitioningAwareUnionRDD), losing the one-task-per-leg scan
-    // parallelism the batching exists for
-    legs.map { leg =>
-      graft.plans.OrderedPlans.unfused(
-        store.readFiles(leg.map(_.path), manifest)
-          .coalesce(1)
-          .sortWithinPartitions(key.sortCols(reverse): _*))
-    }.reduce(_ unionByName _)
+    val target = LegPlanner.legTarget(
+      filesInScanOrder.iterator.map(_.rows).sum, maxRowsPerFile)
+    LegPlanner.stitch(this, LegPlanner.cut(filesInScanOrder, LegPlanner.fixed(target)),
+      reverse)
   }
 
   /** S1 `inOrder` / S2 `reverse` over a snapshot with NO sort exchange
@@ -470,10 +413,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     */
   private def prunedPlanFor(lo: Option[Any], hi: Option[Any])
       : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
-    val kept = files.filter { f =>
-      hi.forall(h => KeyOrd.compare(Seq(f.min.head), Seq(h)) <= 0) &&
-        lo.forall(l => KeyOrd.compare(Seq(f.max.head), Seq(l)) >= 0)
-    }
+    val kept = files.filter(LegPlanner.covering(lo.map(Seq(_)), hi.map(Seq(_))))
     if (kept.size == files.size) None
     else {
       val pdf = if (kept.isEmpty) df.limit(0) else orderedUnion(kept, reverse = false)
@@ -524,21 +464,13 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       // (boundary files may lose rows to the predicate, so they are
       // read but never counted; strict-compare is conservative for
       // either inclusivity)
-      val covering = files.filter(f =>
-        lo.forall(l => KeyOrd.compare(Seq(f.max.head), Seq(l)) >= 0) &&
-          hi.forall(h => KeyOrd.compare(Seq(f.min.head), Seq(h)) <= 0))
+      val (l, h) = (lo.map(Seq(_)), hi.map(Seq(_)))
+      val covering = files.filter(LegPlanner.covering(l, h))
       if (covering.isEmpty) return Some(emptyScan())
-      val ordered = if (reverse) covering.reverse else covering
-      var sure = 0L
-      val prefix = ordered.takeWhile { f =>
-        val need = sure < n
-        val inside =
-          lo.forall(l => KeyOrd.compare(Seq(f.min.head), Seq(l)) > 0) &&
-            hi.forall(h => KeyOrd.compare(Seq(f.max.head), Seq(h)) < 0)
-        if (inside) sure += f.rows
-        need
-      }
-      Some(orderedUnion(prefix, reverse))
+      val inside = LegPlanner.inside(l, h)
+      Some(orderedUnion(LegPlanner.prefix(
+        if (reverse) covering.reverse else covering, n,
+        f => if (inside(f)) f.rows else 0L), reverse))
     }
 
   /** FULL covering stitch for grow-the-prefix filtered top-k
@@ -572,36 +504,15 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       lo: Option[Seq[Any]] = None, hi: Option[Seq[Any]] = None): Option[DataFrame] =
     if (manifest.isEmpty || files.isEmpty || !filesDisjoint) None
     else {
-      val covering = files.filter(f =>
-        lo.forall(l => KeyOrd.compare(f.max.take(l.size), l) >= 0) &&
-          hi.forall(h => KeyOrd.compare(f.min.take(h.size), h) <= 0))
+      val covering = files.filter(LegPlanner.covering(lo, hi))
       if (covering.isEmpty) return Some(emptyScan())
-      val ordered = if (reverse) covering.reverse else covering
-      val totalRows = ordered.iterator.map(_.rows).sum
-      val floorRows = ceilDiv(totalRows, maxPlanLegs.toLong)
-      val capRows = math.max(32L * maxRowsPerFile, floorRows)
-      val legs = {
-        val out = Seq.newBuilder[Seq[FileEntry]]
-        var done = 0L
-        var cur = Vector.empty[FileEntry]; var curRows = 0L
-        ordered.foreach { f =>
-          // close the current leg once it reached its target: everything
-          // scanned so far (geometric), bounded to [floorRows, capRows]
-          val target = math.max(1L, math.max(floorRows, math.min(done, capRows)))
-          if (cur.nonEmpty && curRows >= target) {
-            out += cur; done += curRows; cur = Vector.empty; curRows = 0L
-          }
-          cur :+= f; curRows += f.rows
-        }
-        if (cur.nonEmpty) out += cur
-        out.result()
-      }
-      Some(legs.map { leg =>
-        graft.plans.OrderedPlans.unfused(
-          store.readFiles(leg.map(_.path), manifest)
-            .coalesce(1)
-            .sortWithinPartitions(key.sortCols(reverse): _*))
-      }.reduce(_ unionByName _))
+      val totalRows = covering.iterator.map(_.rows).sum
+      val capRows = LegPlanner.legTarget(totalRows, 32L * maxRowsPerFile)
+      // each leg targets everything before it (geometric), bounded by the
+      // plan-leg floor below and capRows above
+      Some(LegPlanner.stitch(this, LegPlanner.cut(
+        if (reverse) covering.reverse else covering,
+        (_, done) => LegPlanner.legTarget(totalRows, math.min(done, capRows))), reverse))
     }
 
   /** S3 head/tail over a snapshot: only the manifest-prefix of files
@@ -618,9 +529,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
   def headOrdered(n: Int, reverse: Boolean = false): DataFrame = {
     if (!filesDisjoint)
       return if (reverse) table.tail(n) else table.head(n)
-    val ordered = if (reverse) files.reverse else files
-    var cum = 0L
-    val prefix = ordered.takeWhile { f => val need = cum < n; cum += f.rows; need }
+    val prefix = LegPlanner.prefix(if (reverse) files.reverse else files, n)
     if (prefix.isEmpty) emptyScan()
     else orderedUnion(prefix, reverse).limit(n)
       .coalesce(1).sortWithinPartitions(key.sortCols(reverse): _*)
@@ -658,20 +567,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     // common take(n) consumer), each next batch targets 4× more rows up to
     // `batchRows` — a consumer that drains the whole snapshot still runs
     // O(files/batch) jobs, one that stops early computed almost nothing
-    val batches = {
-      val out = Seq.newBuilder[Seq[FileEntry]]
-      var cur = Vector.empty[FileEntry]; var rows = 0L
-      var target = math.max(1L, batchRows >> 6)
-      fs.foreach { f =>
-        if (cur.nonEmpty && rows + f.rows > target) {
-          out += cur; cur = Vector.empty; rows = 0L
-          target = math.min(batchRows, target << 2)
-        }
-        cur :+= f; rows += f.rows
-      }
-      if (cur.nonEmpty) out += cur
-      out.result()
-    }
+    val batches = LegPlanner.cut(fs, LegPlanner.ramp(math.max(1L, batchRows >> 6), batchRows))
     batches.iterator.flatMap { batch =>
       store.readFiles(batch.map(_.path), manifest)
         .filter(seekPred && pred)
@@ -1425,10 +1321,10 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     // COW-shared files are byte-identical and cancel, so legs cover only
     // the CHANGED ranges and the diff's cost stays ∝ the change volume)
     def pruned(ix: KVIndex, keep: FileEntry => Boolean,
-               lo: Option[Seq[Any]], hi: Option[Seq[Any]]): Seq[FileEntry] =
-      ix.filesWhere(f => keep(f) &&
-        lo.forall(l => KeyOrd.compare(Seq(f.max.head), l) >= 0) &&
-          hi.forall(h => KeyOrd.compare(Seq(f.min.head), h) <= 0))
+               lo: Option[Seq[Any]], hi: Option[Seq[Any]]): Seq[FileEntry] = {
+      val cover = LegPlanner.covering(lo, hi)
+      ix.filesWhere(f => keep(f) && cover(f))
+    }
     val lfs =
       if (leftPreserving) pruned(this, lKeep, lPrune._1, lPrune._2)
       else pruned(this, lKeep, bothLo, bothHi)
@@ -1440,55 +1336,35 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
 
     // per-task row target: the maxRowsPerFile batching convention — leg
     // count GROWS with snapshot size (more tasks), per-leg data does not —
-    // floor-bounded so NEITHER side cuts more than maxPlanLegs boundaries
-    // (the merged sequence is then ≤ 2·maxPlanLegs+1 legs): past the cap,
-    // legs grow instead, which the exec's spillable streaming merge
-    // absorbs with O(one duplicate-key group) task heap
-    val bigger = math.max(
-      lfs.iterator.map(_.rows).sum, rfs.iterator.map(_.rows).sum)
-    // default leg size honors the LARGER of the two sides' batching
-    // conventions — a right side built with a bigger file target would
-    // otherwise have every file split by left-convention boundaries
-    val target = math.max(1L, math.max(
+    // floor-bounded by maxPlanLegs on the bigger side: past the cap, legs
+    // grow instead, which the exec's spillable streaming merge absorbs
+    // with O(one duplicate-key group) task heap. The default honors the
+    // LARGER of the two sides' batching conventions — a right side built
+    // with a bigger file target would otherwise have every file split by
+    // left-convention boundaries
+    val target = LegPlanner.legTarget(
+      math.max(lfs.iterator.map(_.rows).sum, rfs.iterator.map(_.rows).sum),
       if (rowsPerLeg > 0) rowsPerLeg
-      else math.max(maxRowsPerFile, other.maxRowsPerFile),
-      ceilDiv(bigger, maxPlanLegs.toLong)))
+      else math.max(maxRowsPerFile, other.maxRowsPerFile))
 
     // shared boundaries from BOTH sides' (pruned) file bounds: a leg
     // never exceeds either side's target (+ one file — a single
-    // oversized file is the floor, as everywhere in the manifest
-    // machinery, and the exec's spillable merge join absorbs even that)
-    def legBounds(fs: Seq[FileEntry]): Seq[Seq[Any]] = legBoundaryCut(fs, kl, target)
-    val merged = (legBounds(lfs) ++ legBounds(rfs)).sorted(KeyOrd)
-    // KeyOrd-dedupe (Seq#distinct would miss binary keys' value equality)
-    val bounds = merged.foldLeft(Vector.empty[Seq[Any]]) { (acc, b) =>
-      if (acc.nonEmpty && KeyOrd.compare(acc.last, b) == 0) acc else acc :+ b
-    }
-    // leg i covers the half-open range [bounds(i-1), bounds(i)); the first
-    // and last legs are unbounded below/above, so every row of either
-    // side lands in exactly one leg
-    val ranges: Seq[(Option[Seq[Any]], Option[Seq[Any]])] =
-      (None +: bounds.map(Option(_))).zip(bounds.map(Option(_)) :+ None)
-
-    def legDf(ix: KVIndex, fs: Seq[FileEntry],
-              lo: Option[Seq[Any]], hi: Option[Seq[Any]]): DataFrame =
-      legSlice(ix, fs, lo, hi)
-    val coverL = legCoveringSweep(lfs)
-    val coverR = legCoveringSweep(rfs)
+    // oversized file is the floor, and the exec's spillable merge join
+    // absorbs even that); every row of either side lands in exactly one
+    // half-open range
+    val bounds = LegPlanner.boundaries(lfs, kl, target) ++
+      LegPlanner.boundaries(rfs, kl, target)
     // a leg empty on one side is dropped unless that side's opposite is
     // PRESERVED: left-only legs survive for left_outer/left_anti/
-    // full_outer, right-only legs for full_outer. (A skipped side's
-    // sweep self-corrects on its next call: its advance is driven by the
-    // monotone lower bound alone.)
-    val rawLegs = ranges.flatMap { case (lo, hi) =>
-      val afs = coverL(lo, hi)
-      val bfs = coverR(lo, hi)
-      if (afs.nonEmpty && bfs.nonEmpty) Some((lo, hi, afs, bfs))
-      else if (afs.nonEmpty && leftPreserving)
-        Some((lo, hi, afs, Seq.empty[FileEntry]))
-      else if (bfs.nonEmpty && rightPreserving)
-        Some((lo, hi, Seq.empty[FileEntry], bfs))
-      else None
+    // full_outer, right-only legs for full_outer
+    val rawLegs = LegPlanner.ranges(bounds, lfs).zip(LegPlanner.ranges(bounds, rfs)).flatMap {
+      case ((lo, hi, afs), (_, _, bfs)) =>
+        if (afs.nonEmpty && bfs.nonEmpty) Some((lo, hi, afs, bfs))
+        else if (afs.nonEmpty && leftPreserving)
+          Some((lo, hi, afs, Seq.empty[FileEntry]))
+        else if (bfs.nonEmpty && rightPreserving)
+          Some((lo, hi, Seq.empty[FileEntry], bfs))
+        else None
     }
     if (rawLegs.isEmpty) return Some((None, None, None)) // nothing contributes
 
@@ -1516,7 +1392,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
 
     val zipPart = if (zipLegs.isEmpty) None else {
       val legs = zipLegs.map { case (lo, hi, afs, bfs) =>
-        (legDf(this, afs, lo, hi), legDf(other, bfs, lo, hi))
+        (legSlice(this, afs, lo, hi), legSlice(other, bfs, lo, hi))
       }
       val lPlan = legs.map(_._1).reduce(_ unionByName _).queryExecution.analyzed
       val rPlan = legs.map(_._2).reduce(_ unionByName _).queryExecution.analyzed
@@ -1528,33 +1404,12 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         attrsOf(rPlan, other.key.cols.take(kl))))
     }
     val loPart = if (loLegs.isEmpty) None else Some(
-      loLegs.map { case (lo, hi, afs, _) => legDf(this, afs, lo, hi) }
+      loLegs.map { case (lo, hi, afs, _) => legSlice(this, afs, lo, hi) }
         .reduce(_ unionByName _).queryExecution.analyzed)
     val roPart = if (roLegs.isEmpty) None else Some(
-      roLegs.map { case (lo, hi, _, bfs) => legDf(other, bfs, lo, hi) }
+      roLegs.map { case (lo, hi, _, bfs) => legSlice(other, bfs, lo, hi) }
         .reduce(_ unionByName _).queryExecution.analyzed)
-    if (!spark.experimental.extraStrategies.contains(
-        graft.plans.DeclareOrderedStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.DeclareOrderedStrategy
     Some((zipPart, loPart, roPart))
-  }
-
-  /** One leg boundary per ~`target` rows of `fs`, each truncated to `kl`
-    * leading key components — a prefix boundary can never split a
-    * join/equi group (KeyOrd's prefix convention routes the whole group
-    * above it). A single oversized file is the floor, as everywhere in
-    * the manifest machinery; the execs' spillable merges absorb it.
-    */
-  private def legBoundaryCut(fs: Seq[FileEntry], kl: Int,
-                             target: Long): Seq[Seq[Any]] = {
-    val b = Seq.newBuilder[Seq[Any]]
-    var rows = 0L; var first = true
-    fs.foreach { f =>
-      if (!first && rows + f.rows > target) { b += f.min.take(kl); rows = 0L }
-      rows += f.rows; first = false
-    }
-    b.result()
   }
 
   /** One leg: the covering files' scan, bounded to the half-open
@@ -1569,36 +1424,6 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       hi.map(h => ix.key.ltKey(h))).flatten
       .foldLeft(base)((d, p) => d.filter(p))
     graft.plans.OrderedPlans.unfused(bounded.coalesce(1))
-  }
-
-  /** Covering files per leg by a MONOTONIC SWEEP, not a filter-per-leg:
-    * the lists are manifest-ordered with disjoint ranges, legs' lower
-    * bounds are non-decreasing, and a file spanning several legs stays
-    * current across them — driver work is O(files + legs + Σ|covering|)
-    * where the quadratic filter would stall the driver at manifest scale
-    * (millions of files × hundreds of thousands of legs). A skipped
-    * leg's sweep self-corrects on its next call: the advance is driven
-    * by the monotone lower bound alone.
-    */
-  private def legCoveringSweep(fs: Seq[FileEntry])
-      : (Option[Seq[Any]], Option[Seq[Any]]) => Seq[FileEntry] = {
-    val arr = fs.toIndexedSeq
-    var i = 0
-    (lo, hi) => {
-      // drop files wholly below this leg — they can never cover a later
-      // leg either (lower bounds only grow)
-      lo.foreach { l =>
-        while (i < arr.length && KeyOrd.compare(arr(i).max, l) < 0) i += 1
-      }
-      // the covering run: every file from i has max >= lo; take while
-      // it still starts below the leg's upper bound
-      var j = i
-      val b = Seq.newBuilder[FileEntry]
-      while (j < arr.length && hi.forall(h => KeyOrd.compare(arr(j).min, h) < 0)) {
-        b += arr(j); j += 1
-      }
-      b.result()
-    }
   }
 
   /** Single-side leg construction for the PROBE joins ([[asOfProbe]]):
@@ -1622,23 +1447,12 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     // contribute a match for ANY probe-preserving type (matches require
     // exact equality on the equi prefix), so legs are cut from the
     // covering files only — manifest pruning applied to the probe joins.
-    // Compared at LEADING-component grain (head only), conservative for
-    // longer prefixes; same stance as coRangeLegPlans' pruned().
-    val fs = filesWhere(f =>
-      lo.forall(l => KeyOrd.compare(Seq(f.max.head), Seq(l)) >= 0) &&
-        hi.forall(h => KeyOrd.compare(Seq(f.min.head), Seq(h)) <= 0))
+    // Compared at LEADING-component grain, conservative for longer
+    // prefixes; same stance as coRangeLegPlans' pruned().
+    val fs = filesWhere(LegPlanner.covering(lo.map(Seq(_)), hi.map(Seq(_))))
     if (fs.isEmpty) return ProbeLegs.AllPruned
-    val target = math.max(1L, math.max(
-      if (rowsPerLeg > 0) rowsPerLeg else maxRowsPerFile,
-      ceilDiv(fs.iterator.map(_.rows).sum, maxPlanLegs.toLong)))
-    val bounds = legBoundaryCut(fs, kl, target)
-      // KeyOrd-dedupe (prefix truncation can repeat a boundary; Seq#distinct
-      // would miss binary keys' value equality)
-      .foldLeft(Vector.empty[Seq[Any]]) { (acc, b) =>
-        if (acc.nonEmpty && KeyOrd.compare(acc.last, b) == 0) acc else acc :+ b
-      }
-    val ranges = (None +: bounds.map(Option(_))).zip(bounds.map(Option(_)) :+ None)
-    val cover = legCoveringSweep(fs)
+    val target = LegPlanner.legTarget(fs.iterator.map(_.rows).sum,
+      if (rowsPerLeg > 0) rowsPerLeg else maxRowsPerFile)
     // a PREFIX boundary can legitimately empty leg 0: the boundary is the
     // prefix of the lowest group's straddling file, and every full key of
     // that group sorts ABOVE its own prefix (KeyOrd's convention), so no
@@ -1649,10 +1463,9 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     // (Interior/last legs always contain the file whose min cut their
     // lower bound; only leading legs can be empty, but the fold handles
     // any position defensively.)
-    val mergedLegs = ranges.foldLeft(
-        Vector.empty[(Option[Seq[Any]], Option[Seq[Any]], Seq[FileEntry])]) {
-      case (acc, (lo, hi)) =>
-        val afs = cover(lo, hi)
+    val mergedLegs = LegPlanner.ranges(LegPlanner.boundaries(fs, kl, target), fs)
+        .foldLeft(Vector.empty[(Option[Seq[Any]], Option[Seq[Any]], Seq[FileEntry])]) {
+      case (acc, (lo, hi, afs)) =>
         acc.lastOption match {
           case Some((plo, _, pfs)) if afs.isEmpty =>
             acc.init :+ ((plo, hi, pfs)) // absorb the empty leg rightward
@@ -1666,10 +1479,6 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     val legBounds = mergedLegs.tail.map(_._1.get).toVector
     val legs = mergedLegs.map { case (lo, hi, afs) => legSlice(this, afs, lo, hi) }
     val plan = legs.reduce(_ unionByName _).queryExecution.analyzed
-    if (!spark.experimental.extraStrategies.contains(
-        graft.plans.DeclareOrderedStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.DeclareOrderedStrategy
     ProbeLegs.Legs(legBounds, plan)
   }
 
@@ -1691,9 +1500,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
   private[graft] def prefixGroupSignal(m: Int, lo: Option[Any] = None,
       hi: Option[Any] = None): Option[PrefixGroupSignal] = {
     if (manifest.isEmpty || !filesDisjoint) return None
-    val fs = filesWhere(f =>
-      lo.forall(l => KeyOrd.compare(Seq(f.max.head), Seq(l)) >= 0) &&
-        hi.forall(h => KeyOrd.compare(Seq(f.min.head), Seq(h)) <= 0))
+    val fs = filesWhere(LegPlanner.covering(lo.map(Seq(_)), hi.map(Seq(_))))
     if (fs.isEmpty) return None
     var rows = 0L; var wide = 0; var groups = 0L
     var ub = 0L; var ubOk = m == 1
@@ -2224,7 +2031,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     */
   def merge(other: KVIndex, newId: String): Either[GraftError, SnapshotManifest] = {
     val total = count + other.count
-    if (manifest.maxNItems > 0 && total > manifest.maxNItems)
+    if (!manifest.hasEnough(other.count))
       return Left(GraftError.MergeTooLarge(total, manifest.maxNItems))
     if (store.exists(newId)) return Left(GraftError.IndexAlreadyExists(newId))
     val (af, bf) = (files, other.files)

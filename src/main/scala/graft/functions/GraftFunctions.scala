@@ -9,11 +9,14 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * is callable from `spark.sql` — e.g.
   * `SELECT cosine_sim(a.embedding, b.embedding) FROM ...`.
   *
-  * Two registration paths:
+  * Two ways to get the functions:
   *  - [[register]] on a live session (temp functions);
   *  - [[GraftExtensions]] via `spark.sql.extensions=graft.functions.GraftExtensions`
   *    (the `SparkSessionExtensions` injection point, so a cluster config
-  *    can enable the engine without code).
+  *    can enable them without code).
+  *
+  * Catalyst rules and planner strategies are not part of either: they
+  * install themselves through [[graft.sources.GraftRules]].
   */
 object GraftFunctions {
 
@@ -50,11 +53,10 @@ object GraftFunctions {
   }
 }
 
-/** `SparkSessionExtensions` hook (build-brief custom-operator path (b)/(c)
-  * registration point): injects every kernel as a session function and the
-  * snapshot-order planning strategy (`graft.plans.DeclareOrderedStrategy`;
-  * also self-registers on first use via `experimental.extraStrategies`,
-  * so either installation path works).
+/** `SparkSessionExtensions` hook: injects every kernel as a session
+  * function and graft's SQL parser. The rules and strategies are
+  * installed by [[graft.sources.GraftRules.install]] on first use, by
+  * every session alike.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
@@ -62,8 +64,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       e.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo("graft.functions.kernels", name), builder))
     }
-    e.injectPlannerStrategy(_ => graft.plans.DeclareOrderedStrategy)
-    e.injectPlannerStrategy(_ => graft.sources.GraftDmlStrategy)
     // the MATERIALIZED VIEW statement heads Spark's grammar lacks
     // (CREATE/REFRESH MATERIALIZED VIEW → MaterializedAgg/MaterializedJoin);
     // every other statement passes to the stock parser verbatim

@@ -82,12 +82,16 @@ object PageRank {
         // action and a full pass over the rank table per round. Integer
         // arithmetic is unchanged: coalesce(sum, 0) div n is the same
         // truncating long division the driver did (ranks are >= 0).
-        // Checkpoints are LAZY: each iteration's plan is truncated to a
-        // leaf immediately, but materialization happens inside the first
-        // consuming job — the whole fixed-point runs as ONE job chain
-        // instead of paying 2 scheduled actions per round.
+        // Every round's checkpoint is EAGER: the next round's `dang`
+        // broadcast must never be the job that first materializes the
+        // previous checkpoint — a lazy chain lets a broadcast-exchange
+        // thread and the DAG scheduler deadlock inside
+        // RDDCheckpointData.checkpointRDD. The last eager round also runs
+        // while e/nodes are still persisted — the finally-unpersist below
+        // would otherwise strip their caches before the caller's first
+        // action.
         var ranks = nodes.select(col("node"), col("deg"), lit(base).as("r"))
-          .localCheckpoint(iters == 0)
+          .localCheckpoint()
         for (i <- 1 to iters) {
           val dang = ranks.filter(col("deg") === 0L)
             .agg(expr(s"(coalesce(sum(r), 0L) div ${n}L)").as("__dang"))
@@ -103,11 +107,7 @@ object PageRank {
               (lit(teleport) +
                 expr(s"($dampMilli * (contrib + __dang)) div 1000"))
                 .cast("long").as("r"))
-            // the LAST round checkpoints eagerly: the whole lazy chain
-            // materializes in this one job while e/nodes are still
-            // persisted — the finally-unpersist below would otherwise
-            // strip their caches before the caller's first action
-            .localCheckpoint(i == iters)
+            .localCheckpoint()
         }
         ranks.select(col("node"), col("r").as("rank_nano"))
       } finally nodes.unpersist()

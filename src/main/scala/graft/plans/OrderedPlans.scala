@@ -497,55 +497,28 @@ object PruneSnapshotFiles
 }
 
 object OrderedPlans {
-  /** Wraps `df` (whose rows genuinely arrive in `keyCols` order across
-    * partition index — the caller's contract) in the ordering declaration.
-    * Registers the planning strategy on the session idempotently, so no
-    * builder-time `SparkSessionExtensions` wiring is required (though
-    * `injectPlannerStrategy(_ => DeclareOrderedStrategy)` works too).
-    */
   /** Wrap `df` in the manifest-prune marker (see [[SnapshotFilePrune]]). */
   def snapshotPrunable(df: DataFrame, leadingKey: String,
                        prune: (Option[Any], Option[Any]) => Option[LogicalPlan]): DataFrame =
     Shim.ofRows(df.sparkSession,
       SnapshotFilePrune(df.queryExecution.analyzed, leadingKey, prune))
 
-  /** Idempotently registers the strategy + pushdown rules on the session. */
-  private[graft] def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(DeclareOrderedStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ DeclareOrderedStrategy
-    if (!spark.experimental.extraOptimizations.contains(PushThroughDeclareOrdered))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations ++ Seq(PushThroughDeclareOrdered,
-          // stock rules re-instantiated in the same fixed-point batch:
-          // the marker commutes above only EXPOSE pushdown opportunities
-          // — these carry the predicate / narrow schema the rest of the
-          // way down the stitch into the parquet scans
-          org.apache.spark.sql.catalyst.optimizer.PushDownPredicates,
-          org.apache.spark.sql.catalyst.optimizer.ColumnPruning,
-          org.apache.spark.sql.catalyst.optimizer.CollapseProject,
-          PruneSnapshotFiles)
-    // the prefix-cluster rewrite serves the VIEW path too (r18, the
-    // DeclareOrdered source tag) — a pure-view session must get it even
-    // though no catalog table ever ran GraftOrderedScan.register
-    if (!spark.experimental.extraOptimizations.contains(
-        graft.sources.GraftPrefixCluster))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.sources.GraftPrefixCluster
-  }
-
   /** Wrap one stitched LEG in the union-fusion breaker (see
     * [[UnfuseUnion]]): the enclosing union keeps one task per leg.
     */
   def unfused(df: DataFrame): DataFrame = {
-    register(df.sparkSession)
+    graft.sources.GraftRules.install(df.sparkSession)
     Shim.ofRows(df.sparkSession, UnfuseUnion(df.queryExecution.analyzed))
   }
 
+  /** Wraps `df` (whose rows genuinely arrive in `keyCols` order across
+    * partition index — the caller's contract) in the ordering declaration,
+    * installing graft's rules on the session ([[graft.sources.GraftRules]]).
+    */
   def declareOrdered(df: DataFrame, keyCols: Seq[String], reverse: Boolean,
                      source: Option[SnapshotSource] = None): DataFrame = {
     val spark = df.sparkSession
-    register(spark)
+    graft.sources.GraftRules.install(spark)
     val child = df.queryExecution.analyzed
     val dir = if (reverse) Descending else Ascending
     val ordering = keyCols.map { c =>

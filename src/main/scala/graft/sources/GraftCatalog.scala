@@ -75,7 +75,7 @@ final class GraftCatalog extends TableCatalog {
     if (ownsByRoot(active)) owner = active
     // catalog resolution precedes planning, so this is always in time for
     // an UPDATE / MERGE INTO statement on a catalog table
-    GraftDmlStrategy.ensureRegistered(active)
+    GraftRules.install(active)
   }
 
   /** The backing store, RE-RESOLVED from the OWNING session's conf on

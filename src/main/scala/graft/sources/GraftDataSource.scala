@@ -21,7 +21,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex, KeyOrd, SnapshotManifest, SnapshotStore}
+import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex, KeyOrd, LegPlanner, SnapshotManifest, SnapshotStore}
 
 /** DataSource V2 surface for snapshot indexes: `spark.read.format("graft")
   * .option("root", storeRoot).load(indexId)` opens LATEST (or
@@ -205,8 +205,8 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
     extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
   // table resolution happens at ANALYSIS time — early enough that the
-  // session's optimizer picks the rule up for this very query
-  GraftOrderedScan.register(SparkSession.active)
+  // session's optimizer picks the rules up for this very query
+  GraftRules.install(SparkSession.active)
 
   // UPDATE / MERGE INTO compile against the live store (GraftDml)
   private[sources] def storeRef: SnapshotStore = store
@@ -552,20 +552,10 @@ final class GraftScan(store: SnapshotStore, manifest: SnapshotManifest,
   // compare would drop a file whose leading key equals the bound
   // (prefix convention ranks the longer tuple above its prefix)
   private lazy val covering = {
-    val pruned = store.resolveFilesWhere(manifest, f =>
-      lo.forall(l => KeyOrd.compare(Seq(f.max.head), l) >= 0) &&
-        hi.forall(h => KeyOrd.compare(Seq(f.min.head), h) <= 0))
+    val pruned = store.resolveFilesWhere(manifest, LegPlanner.covering(lo, hi))
     // limit prefix: exact entry counts make "enough files for n rows"
     // exact; Spark re-applies the limit above (partial pushdown)
-    val kept = limit match {
-      case Some(n) =>
-        var acc = 0L
-        val b = Seq.newBuilder[graft.core.FileEntry]
-        val it = pruned.iterator
-        while (acc < n && it.hasNext) { val f = it.next(); b += f; acc += f.rows }
-        b.result()
-      case None => pruned
-    }
+    val kept = limit.fold(pruned)(n => LegPlanner.prefix(pruned, n))
     GraftScan.lastPlannedFiles = kept.size
     kept
   }

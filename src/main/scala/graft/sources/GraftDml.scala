@@ -43,14 +43,14 @@ import graft.core.{Command, KVIndex, SnapshotStore}
   * fresh snapshot ([[GraftDelete.retrying]]) — DML serializes behind
   * concurrent writers instead of failing.
   *
-  * Planner registration follows [[graft.plans.DeclareOrderedStrategy]]:
-  * injected by [[GraftExtensions]] or self-registered when a
-  * [[GraftCatalog]] initializes (analysis resolves the catalog before the
-  * planner runs, so registration is always in time). Spark's own row-level
-  * plumbing (`SupportsRowLevelOperations`) is deliberately not used: it
-  * assumes the connector replaces scanned row groups wholesale, while this
-  * engine's native unit of atomicity IS the command batch — compiling to
-  * it reuses validation, pruning, COW write and commit CAS unchanged.
+  * Installed by [[GraftRules.install]] when a [[GraftCatalog]]
+  * initializes (analysis resolves the catalog before the planner runs, so
+  * installation is always in time) or a graft statement parses. Spark's
+  * own row-level plumbing (`SupportsRowLevelOperations`) is deliberately
+  * not used: it assumes the connector replaces scanned row groups
+  * wholesale, while this engine's native unit of atomicity IS the command
+  * batch — compiling to it reuses validation, pruning, COW write and
+  * commit CAS unchanged.
   */
 object GraftDmlStrategy extends SparkStrategy {
 
@@ -65,9 +65,8 @@ object GraftDmlStrategy extends SparkStrategy {
         GraftDmlExec(s"GraftMerge ${tbl.name()}",
           () => GraftDml.runMerge(tbl, out, m)) :: Nil
       }.getOrElse(Nil)
-    // the MV DDL twins (parsed by GraftSqlParser — reaching the planner
-    // at all implies the extensions wiring, which registers this
-    // strategy, so the commands can never plan without a handler)
+    // the MV DDL twins (GraftSqlParser installs this strategy when it
+    // parses one, so the commands can never plan without a handler)
     case c: CreateMatViewCommand =>
       GraftDmlExec(s"GraftCreateMatView ${c.cat}.${c.viewId}",
         () => GraftMatView.runCreate(SparkSession.active, c.cat, c.viewId,
@@ -107,11 +106,6 @@ object GraftDmlStrategy extends SparkStrategy {
       case s: DataSourceV2ScanRelation if s.relation.table.isInstanceOf[GraftTable] =>
         (s.relation.table.asInstanceOf[GraftTable], s.output)
     }
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(GraftDmlStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ GraftDmlStrategy
 }
 
 /** Eagerly-executed DML node (UpdateTable/MergeIntoTable are `Command`s,

@@ -415,22 +415,28 @@ final class GraftSqlParser(session: SparkSession, delegate: ParserInterface)
       .contains(classOf[GraftCatalog].getName)
 
   override def parsePlan(sqlText: String): LogicalPlan = sqlText match {
-    case CreateRe(cat, id, select) => CreateMatViewCommand(cat, id, select.trim)
-    case RefreshRe(cat, id) => RefreshMatViewCommand(cat, id)
-    case DropRe(ifex, cat, id) => DropMatViewCommand(cat, id, ifex != null)
+    case CreateRe(cat, id, select) => graftStatement(CreateMatViewCommand(cat, id, select.trim))
+    case RefreshRe(cat, id) => graftStatement(RefreshMatViewCommand(cat, id))
+    case DropRe(ifex, cat, id) => graftStatement(DropMatViewCommand(cat, id, ifex != null))
     // the maintenance statement heads (r19): VACUUM / COMPACT / SHOW
     // HISTORY over graft catalog tables — Spark's grammar has none of
     // the three (VACUUM is Delta's extension precedent)
     case VacuumRe(cat, id, retain, dry) if graftCat(cat) =>
-      VacuumTableCommand(cat, id, Option(retain).map(_.trim.toInt).getOrElse(2),
-        dryRun = dry != null)
-    case CompactRe(cat, id) if graftCat(cat) => CompactTableCommand(cat, id)
-    case HistoryRe(cat, id) if graftCat(cat) => ShowHistoryCommand(cat, id)
+      graftStatement(VacuumTableCommand(cat, id,
+        Option(retain).map(_.trim.toInt).getOrElse(2), dryRun = dry != null))
+    case CompactRe(cat, id) if graftCat(cat) => graftStatement(CompactTableCommand(cat, id))
+    case HistoryRe(cat, id) if graftCat(cat) => graftStatement(ShowHistoryCommand(cat, id))
     // every other statement parses with the stock grammar; time-travel
     // clauses over graft-REGISTERED VIEWS (Spark's analyzer refuses them
     // on temp views) are then spliced at the parse tree (r20) — identity
     // when the session registered no views
     case _ => graft.plans.ViewTimeTravel.rewrite(session, delegate.parsePlan(sqlText))
+  }
+
+  /** A graft statement plans through [[GraftDmlStrategy]]: install it. */
+  private def graftStatement(p: LogicalPlan): LogicalPlan = {
+    GraftRules.install(if (session != null) session else SparkSession.active)
+    p
   }
 
   override def parseExpression(s: String): Expression = delegate.parseExpression(s)

@@ -1,13 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, Descending, IntegerLiteral, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
 import graft.core.KVIndex
-import graft.plans.{DeclareOrdered, DeclareOrderedStrategy}
+import graft.plans.DeclareOrdered
 
 /** Ordering through the DSV2 path: `SELECT ... FROM cat.indexId ORDER BY
   * key` plans the exchange-free manifest stitch instead of a global sort.
@@ -45,44 +44,6 @@ import graft.plans.{DeclareOrdered, DeclareOrderedStrategy}
   * zero-exchange full read.
   */
 object GraftOrderedScan extends Rule[LogicalPlan] {
-
-  /** Idempotent session wiring: this rewrite plus the declaration
-    * strategy and the filter-push companions it relies on (shared with
-    * the view path — the same objects, so double registration is a
-    * no-op). Called from [[GraftTable]] at analysis time, early enough
-    * for the very query that resolved the table.
-    */
-  def register(spark: SparkSession): Unit = {
-    if (!spark.experimental.extraStrategies.contains(DeclareOrderedStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ DeclareOrderedStrategy
-    if (!spark.experimental.extraOptimizations.contains(this))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ this
-    // the AS-OF idiom registers BEFORE the join rule: it matches the
-    // strictly larger Filter(rn=1, Window(join)) fragment, and must see
-    // it before any future loosening of the join rule could consume the
-    // join underneath (today the join rule declines the ts conjunct, but
-    // the ordering makes that independence structural, not accidental)
-    if (!spark.experimental.extraOptimizations.contains(GraftAsOfIdiom))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftAsOfIdiom
-    if (!spark.experimental.extraOptimizations.contains(GraftCoRangeJoin))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftCoRangeJoin
-    if (!spark.experimental.extraOptimizations.contains(GraftCountRange))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftCountRange
-    // AFTER the count-range rule (group-less aggregates belong to it;
-    // this one requires a non-empty grouping, so the shapes are disjoint
-    // — the ordering makes that structural)
-    if (!spark.experimental.extraOptimizations.contains(GraftPrefixCluster))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ GraftPrefixCluster
-    // the filter/column-push companions are shared with the view path —
-    // ONE registration source of truth, so the rule sets cannot drift
-    graft.plans.OrderedPlans.register(spark)
-  }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     // `ORDER BY <key prefix> LIMIT n` (r18): re-plan the scan under the

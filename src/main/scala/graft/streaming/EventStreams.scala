@@ -42,15 +42,6 @@ object EventStreams {
       .select(col("window.start").as("window_start"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Sliding-window per-user activity rate. */
-  def slidingUserActivity(events: DataFrame, windowLen: String = "1 hour",
-                          slide: String = "30 minutes"): DataFrame =
-    events
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), windowLen, slide), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("window.start").as("window_start"), col("user_id"), col("n_events"))
-
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                    event_type: String, value: Double)
   case class SessionState(start: Long, last: Long, n: Int, sumValue: Double)

@@ -57,6 +57,34 @@ abstract class SplitMergeSpecBase extends SparkSuite {
     assert(tiny.merge(big, "overflow").left.exists(_.code == "MERGE_TOO_LARGE"))
   }
 
+  test("capacity predicates: isFull and hasEnough unbounded, below, at and above maxNItems") {
+    val store = newStore()
+    val cap = KVIndex.bootstrap(store, "cap",
+      (1 to 10).map(i => (f"c$i%03d", "z")).toDF("k", "v"), Seq("k"),
+      maxNItems = 15).toOption.get
+    val m = cap.manifest
+    def at(n: Long, max: Long) = m.copy(numElements = n, maxNItems = max)
+    // unbounded (any maxNItems <= 0): never full, always room
+    for (max <- Seq(-1L, 0L)) {
+      assert(!at(0, max).isFull && !at(Long.MaxValue / 2, max).isFull)
+      assert(at(Long.MaxValue / 2, max).hasEnough(Long.MaxValue / 4))
+    }
+    assert(!at(14, 15).isFull && at(15, 15).isFull && at(16, 15).isFull)
+    assert(at(14, 15).hasEnough(1) && !at(14, 15).hasEnough(2))
+    assert(at(15, 15).hasEnough(0) && !at(15, 15).hasEnough(1))
+    assert(!at(16, 15).hasEnough(0))
+    // merge admits exactly what hasEnough admits: 10 + 5 fits, 10 + 6 does not
+    val five = KVIndex.bootstrap(store, "five",
+      (1 to 5).map(i => (f"d$i%03d", "y")).toDF("k", "v"), Seq("k")).toOption.get
+    val six = KVIndex.bootstrap(store, "six",
+      (1 to 6).map(i => (f"e$i%03d", "y")).toDF("k", "v"), Seq("k")).toOption.get
+    assert(cap.merge(five, "cap5").map(_.numElements) == Right(15L))
+    assert(cap.merge(six, "cap6").left.exists(e =>
+      e.code == "MERGE_TOO_LARGE" && e.message.contains("16")))
+    // an unbounded left side merges any size
+    assert(six.merge(cap, "six_cap").map(_.numElements) == Right(16L))
+  }
+
   test("copy: new id shares every data file (cheap clone)") {
     val store = newStore()
     val a = KVIndex.bootstrap(store, "src",

@@ -73,7 +73,7 @@ class SqlViewAsOfSpec extends SparkSuite {
     store
     val before = stateAt("1970-01-01 00:02:30")
     // force the catalog path's full rule registration
-    // (GraftOrderedScan.register) by running a catalog-table query
+    // (GraftRules.install) by running a catalog-table query
     spark.conf.set("spark.sql.catalog.vasofcat", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.vasofcat.root", store.root)
     assert(spark.sql("SELECT count(*) AS n FROM vasofcat.t ORDER BY n LIMIT 1")
