@@ -19,7 +19,7 @@ object Bench {
     // query happens to run first — per-query numbers become attributable
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").count()
-    SparkEntry.warmup(spark, sfDir)
+    val warmErrors = SparkEntry.warmup(spark, sfDir)
     // min-of-N per query (default 3): one-directional machine-load noise
     // swung identical code ±50% run to run under single-shot timing — the
     // min makes a real regression attributable. Reps interleave by
@@ -35,6 +35,11 @@ object Bench {
     // a clean exit — per-query errors are carried in the artifact and the
     // process exits non-zero so the bench gate sees the breakage
     val errors = scala.collection.mutable.Map.empty[String, String]
+    // strip EVERY control character (codec errors echo binary) so the
+    // artifact stays valid JSON when the detail matters most
+    def describe(e: Throwable): String =
+      (e.getClass.getSimpleName + ": " + Option(e.getMessage).getOrElse("").take(200))
+        .replaceAll("[\\p{Cntrl}\"\\\\]", " ")
     for (_ <- 1 to reps; name <- names) {
       val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
@@ -43,14 +48,7 @@ object Bench {
           if (break.contains(name))
             sys.error(s"SPARK_GRAFT_BENCH_BREAK fault injection for $name")
           fn(spark, sfDir).count(); true
-        } catch { case e: Throwable =>
-          // strip EVERY control character (codec errors echo binary) so
-          // the artifact stays valid JSON when the detail matters most
-          errors(name) = (e.getClass.getSimpleName + ": " +
-            Option(e.getMessage).getOrElse("").take(200))
-              .replaceAll("[\\p{Cntrl}\"\\\\]", " ")
-          false
-        }
+        } catch { case e: Throwable => errors(name) = describe(e); false }
       // a failed rep records NO sample: its near-instant throw must not
       // become the per-query min and flatter the total
       if (ok) {
@@ -76,10 +74,14 @@ object Bench {
       .map(k => "\"" + k + "\":" + samples(k).reverse.mkString("[", ",", "]"))
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
-    val errs = errors.toSeq.sortBy(_._1)
+    def jsonMap(m: Iterable[(String, String)]): String = m.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"errors":$errs,"samples":$all}"""
+    val errs = jsonMap(errors)
+    // warm-up failures (sf0.001 pass) are reported, not gated: the exit
+    // code still follows the timed errors alone
+    val warmErrs = jsonMap(warmErrors.map { case (k, e) => k -> describe(e) })
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"errors":$errs,"warmup_errors":$warmErrs,"samples":$all}"""
     println(line)
     // the driver keeps only a tail of stdout — persist the COMPLETE
     // per-query map so round-over-round comparison covers every query.
@@ -102,7 +104,7 @@ object Bench {
     // compact, always-complete summary carrying the totals and the path
     // of the committed full-sample artifact (self-containment: a
     // truncated capture still parses and still points at the evidence)
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"nqueries":${results.size},"nerrors":${errors.size},"artifact":"${out.toAbsolutePath}"}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","reps":$reps,"nqueries":${results.size},"nerrors":${errors.size},"nwarmup_errors":${warmErrors.size},"artifact":"${out.toAbsolutePath}"}""")
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(s"bench: ${errors.size} quer${if (errors.size == 1) "y" else "ies"} failed: " +

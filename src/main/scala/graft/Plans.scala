@@ -29,7 +29,8 @@ object Plans {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.warmup(spark, sfDir)
+    SparkEntry.warmup(spark, sfDir).toSeq.sortBy(_._1).foreach { case (q, e) =>
+      System.err.println(s"[warmup] $q failed: $e") }
     java.nio.file.Files.createDirectories(outDir)
     for (name <- names) {
       val fn = SparkEntry.queries.getOrElse(name,

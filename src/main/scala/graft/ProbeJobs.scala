@@ -31,7 +31,8 @@ object ProbeJobs {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.warmup(spark, sfDir)
+    SparkEntry.warmup(spark, sfDir).toSeq.sortBy(_._1).foreach { case (q, e) =>
+      System.err.println(s"[warmup] $q failed: $e") }
     @volatile var jobs = 0
     @volatile var stages = 0
     @volatile var tasks = 0

@@ -588,24 +588,33 @@ object SparkEntry {
         .fold(e => sys.error(e.message), identity)
     }._2
 
-  /** A deliberately fragmented index — bootstrap of the low orderkey range
-    * plus three out-of-range append batches (each commit writes exactly one
-    * new file at these data sizes: four files total) — then `compact()`,
-    * which rewrites the small files into one right-sized file. Backs the
+  /** A deliberately fragmented orders index under `id`: a bootstrap of
+    * the low orderkey range [0, 100) plus three out-of-range append
+    * batches — each commit writes exactly one new file at these data
+    * sizes, four files in all. The maintenance fixtures start from it.
+    */
+  private def fragmentedOrders(s: SparkSession, d: String, store: SnapshotStore,
+                               id: String): KVIndex = {
+    val ord = t(s, d, "orders").select("o_orderkey", "o_totalprice")
+    def slice(lo: Long, hi: Long) =
+      ord.filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
+    val ix = KVIndex.bootstrap(store, id, slice(0L, 100L), Seq("o_orderkey"))
+      .fold(e => sys.error(e.message), identity)
+    Seq((100L, 300L), (300L, 1000L), (1000L, Long.MaxValue)).foldLeft(ix) {
+      case (ix, (lo, hi)) =>
+        new KVIndex(store, ix.execute(Seq(Command.Insert(slice(lo, hi)))).orThrow)
+    }
+  }
+
+  /** The [[fragmentedOrders]] index, then `compact()`, which rewrites
+    * the four small files into one right-sized file. Backs the
     * driver-verified W6 structural-maintenance row (kv_compact): checksum
     * invariance + the 4 -> 1 file-count drop, with the pre-compact manifest
     * version read back through the store (versions are immutable history).
     */
   private def compactStore(s: SparkSession, d: String): (SnapshotStore, KVIndex) =
     cachedIndex("kv-compact", s, d) { store =>
-      val ord = t(s, d, "orders").select("o_orderkey", "o_totalprice")
-      def slice(lo: Long, hi: Long) =
-        ord.filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
-      var ix = KVIndex.bootstrap(store, "cord", slice(0L, 100L), Seq("o_orderkey"))
-        .fold(e => sys.error(e.message), identity)
-      for ((lo, hi) <- Seq((100L, 300L), (300L, 1000L), (1000L, Long.MaxValue)))
-        ix = new KVIndex(store, ix.execute(Seq(Command.Insert(slice(lo, hi)))).orThrow)
-      new KVIndex(store, ix.compact().orThrow)
+      new KVIndex(store, fragmentedOrders(s, d, store, "cord").compact().orThrow)
     }
 
   /** vacuum() results per (kind|sfDir) — captured at build time because the
@@ -638,14 +647,7 @@ object SparkEntry {
     */
   private def vacuumStore(s: SparkSession, d: String): (SnapshotStore, KVIndex) =
     cachedIndex("kv-vacuum", s, d) { store =>
-      val ord = t(s, d, "orders").select("o_orderkey", "o_totalprice")
-      def slice(lo: Long, hi: Long) =
-        ord.filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
-      var ix = KVIndex.bootstrap(store, "vord", slice(0L, 100L), Seq("o_orderkey"))
-        .fold(e => sys.error(e.message), identity)
-      for ((lo, hi) <- Seq((100L, 300L), (300L, 1000L), (1000L, Long.MaxValue)))
-        ix = new KVIndex(store, ix.execute(Seq(Command.Insert(slice(lo, hi)))).orThrow)
-      ix = new KVIndex(store, ix.compact().orThrow)
+      fragmentedOrders(s, d, store, "vord").compact().orThrow
       vacResults(s"kv-vacuum|$d") = store.vacuum("vord", retainVersions = 1, graceMs = 0L)
       KVIndex.open(store, "vord").fold(e => sys.error(e.message), identity)
     }
@@ -662,13 +664,7 @@ object SparkEntry {
     */
   private def sqlVacStore(s: SparkSession, d: String): (SnapshotStore, KVIndex) =
     cachedIndex("kv-sqlvac", s, d) { store =>
-      val ord = t(s, d, "orders").select("o_orderkey", "o_totalprice")
-      def slice(lo: Long, hi: Long) =
-        ord.filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
-      var ix = KVIndex.bootstrap(store, "svord", slice(0L, 100L), Seq("o_orderkey"))
-        .fold(e => sys.error(e.message), identity)
-      for ((lo, hi) <- Seq((100L, 300L), (300L, 1000L), (1000L, Long.MaxValue)))
-        ix = new KVIndex(store, ix.execute(Seq(Command.Insert(slice(lo, hi)))).orThrow)
+      fragmentedOrders(s, d, store, "svord")
       val cat = regCatalog(s, "sqlvac", d, store.root)
       val c = s.sql(s"COMPACT $cat.svord").collect()
       require(c.length == 1 && c.head.getBoolean(0) &&
@@ -722,8 +718,7 @@ object SparkEntry {
     */
   private val rdResults = scala.collection.concurrent.TrieMap[String, Long]()
 
-  /** Fragmented 4-file index (same bootstrap + three out-of-range appends
-    * as [[compactStore]]: one file per commit at these data sizes), then
+  /** The [[fragmentedOrders]] 4-file index, then
     * `removeRange([150, 1200])`: the interior file [300,1000) is dropped
     * from the manifest with ZERO IO, only the two boundary files are read
     * and rewritten, [0,100) is untouched — 3 files after. Backs the
@@ -731,14 +726,7 @@ object SparkEntry {
     */
   private def rangeDelStore(s: SparkSession, d: String): (SnapshotStore, KVIndex) =
     cachedIndex("kv-rangedel", s, d) { store =>
-      val ord = t(s, d, "orders").select("o_orderkey", "o_totalprice")
-      def slice(lo: Long, hi: Long) =
-        ord.filter(col("o_orderkey") >= lo && col("o_orderkey") < hi)
-      var ix = KVIndex.bootstrap(store, "rord", slice(0L, 100L), Seq("o_orderkey"))
-        .fold(e => sys.error(e.message), identity)
-      for ((lo, hi) <- Seq((100L, 300L), (300L, 1000L), (1000L, Long.MaxValue)))
-        ix = new KVIndex(store, ix.execute(Seq(Command.Insert(slice(lo, hi)))).orThrow)
-      val res = ix.removeRange(Seq(150L), Seq(1200L))
+      val res = fragmentedOrders(s, d, store, "rord").removeRange(Seq(150L), Seq(1200L))
       rdResults(s"kv-rangedel|$d") = res.commandRowCounts.headOption.getOrElse(0L)
       new KVIndex(store, res.orThrow)
     }
@@ -1016,17 +1004,19 @@ object SparkEntry {
     * compact are shared fixtures, not per-query work), and (b) one pass of
     * every query at the smallest SF, which compiles the same codegen'd
     * kernels (the fused HOF expressions alone cost ~7 s on first use) and
-    * exercises every plan shape against sf0.001-sized inputs.
+    * exercises every plan shape against sf0.001-sized inputs. A fixture
+    * build that fails throws; the queries whose warm pass failed are
+    * returned, name -> error.
     */
   def warmup(s: SparkSession, d: String,
-             warmSf: String = "/root/testdata/sf0.001"): Unit = {
-    try { liStore(s, d); bytesStore(s, d); ckStore(s, d)
-          compactStore(s, d); vacuumStore(s, d); rangeDelStore(s, d)
-          liAggStore(s, d) }
-    catch { case _: Throwable => () }
-    queries.foreach { case (_, fn) =>
-      try fn(s, warmSf).count() catch { case _: Throwable => () }
-    }
+             warmSf: String = "/root/testdata/sf0.001"): Map[String, Throwable] = {
+    liStore(s, d); bytesStore(s, d); ckStore(s, d)
+    compactStore(s, d); vacuumStore(s, d); rangeDelStore(s, d)
+    liAggStore(s, d)
+    queries.toSeq.flatMap { case (name, fn) =>
+      try { fn(s, warmSf).count(); None }
+      catch { case scala.util.control.NonFatal(e) => Some(name -> e) }
+    }.toMap
   }
 
   // =====================================================================

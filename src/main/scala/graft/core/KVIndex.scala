@@ -1426,7 +1426,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     graft.plans.OrderedPlans.unfused(bounded.coalesce(1))
   }
 
-  /** Single-side leg construction for the PROBE joins ([[asOfProbe]]):
+  /** Single-side leg construction for the PROBE joins ([[routeProbeLegs]])
+    * and the prefix-cluster rewrite:
     * boundaries cut from THIS manifest alone at `kl`-prefix grain, one
     * plan partition per half-open range. The ranges cover (-inf, +inf),
     * so a caller can route EVERY probe row to exactly one leg index and
@@ -1567,38 +1568,26 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     nodeOut.filter(a => side.output.exists(_.exprId == a.exprId))
       .map(a => a.name -> a).toMap
 
-  /** The probe set's [min, max] LEADING-key bounds for file pruning —
-    * one cheap aggregate over the (small) probe side. Costs the probe
-    * plan one extra execution; persist an expensive probe frame first,
-    * or pass `pruneFiles = false`. A NONDETERMINISTIC probe frame (rand,
-    * uncheckpointed sampling) MUST be persisted by the caller: the
-    * bounds pass and the routing pass would otherwise see different
-    * rows, and stale bounds could prune a live match's file. Null keys
-    * are ignored by min/max (they never match anything); an
-    * all-null probe set prunes nothing and the join result is
-    * empty/unmatched anyway (an EMPTY probe set is answered without
-    * touching the snapshot — the callers short-circuit on count 0).
-    *
-    * `enabled = false` ALSO disables the ≥256-probe bloom prefilter
-    * (nProbes comes back -1, below its threshold) — deliberately: the
-    * bloom build is the same kind of extra probe-side pass, with the
-    * same unsoundness on an unpersisted nondeterministic frame, so the
-    * one opt-out covers both.
+  /** The probe set's [min, max] LEADING-key bounds and its row count —
+    * one cheap aggregate over the (small) probe side. Null keys are
+    * ignored by min/max (they never match anything), so an all-null
+    * probe set prunes nothing.
     */
-  private def probeBounds(probes: DataFrame, leadingCol: String,
-                          enabled: Boolean): (Option[Any], Option[Any], Long) =
-    if (!enabled) (None, None, -1L)
-    else {
-      val r = probes.agg(min(col(leadingCol)), max(col(leadingCol)),
-        org.apache.spark.sql.functions.count(lit(1))).head()
-      // collected under datetime.java8API these are Instant/LocalDate;
-      // canonicalize to the manifest's literal types before KeyOrd sees
-      // them in the file prune (KeyOrd also self-normalizes — belt and
-      // braces for a silent-row-drop class of bug)
-      if (r.isNullAt(0)) (None, None, r.getLong(2))
-      else (Some(KeyOrd.normLiteral(r.get(0))),
-            Some(KeyOrd.normLiteral(r.get(1))), r.getLong(2))
-    }
+  private def probeBoundsPlan(
+      probe: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      leadingKey: org.apache.spark.sql.catalyst.expressions.Attribute)
+      : (Option[Any], Option[Any], Long) = {
+    val c = org.apache.spark.sql.graft.Shim.col(leadingKey)
+    val r = org.apache.spark.sql.graft.Shim.ofRows(spark, probe)
+      .agg(min(c), max(c), org.apache.spark.sql.functions.count(lit(1))).head()
+    // collected under datetime.java8API these are Instant/LocalDate;
+    // canonicalize to the manifest's literal types before KeyOrd sees
+    // them in the file prune (KeyOrd also self-normalizes — belt and
+    // braces for a silent-row-drop class of bug)
+    if (r.isNullAt(0)) (None, None, r.getLong(2))
+    else (Some(KeyOrd.normLiteral(r.get(0))),
+          Some(KeyOrd.normLiteral(r.get(1))), r.getLong(2))
+  }
 
   /** Bloom-prefilter the snapshot-side leg plan by the probe set's
     * equi-prefix keys (>= 256 probes, the [[getAll]] threshold): a
@@ -1612,75 +1601,88 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * must share the probe's equi prefix). One extra pass over the
     * (small) probe side; skipped below the threshold.
     */
-  private def bloomFilteredLegs(probes: DataFrame, probeKeyCols: Seq[String],
-      nProbes: Long,
-      rPlan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    if (nProbes < 256) return rPlan
-    val el = probeKeyCols.length
-    val pKey = if (el == 1) col(probeKeyCols.head)
-               else struct(probeKeyCols.map(col): _*)
-    bloomFilteredLegsKey(probes, pKey, el, nProbes, rPlan)
-  }
-
-  /** Plan-level [[bloomFilteredLegs]] for the SQL rewrites
-    * ([[graft.sources.GraftCoRangeJoin]]'s conf-gated eager-bounds path):
-    * the probe side arrives as a LogicalPlan whose key columns are
-    * ATTRIBUTES (names may repeat across an arbitrary SQL side). Same
-    * semantics and soundness (probe-non-preserved snapshot rows only).
-    */
-  private[graft] def bloomFilteredLegsPlan(
+  private def bloomFilteredLegsPlan(
       probe: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       keyAttrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
       nProbes: Long,
-      rPlan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+      legs: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    if (nProbes < 256) return rPlan
-    val pdf = org.apache.spark.sql.graft.Shim.ofRows(spark, probe)
-    val cols = keyAttrs.map(org.apache.spark.sql.graft.Shim.col)
-    val pKey = if (cols.length == 1) cols.head else struct(cols: _*)
-    bloomFilteredLegsKey(pdf, pKey, keyAttrs.length, nProbes, rPlan)
-  }
-
-  private def bloomFilteredLegsKey(probes: DataFrame, pKey: Column, el: Int,
-      nProbes: Long,
-      rPlan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    val bf = graft.operators.BloomJoin.keyFilterBytes(probes, pKey, nProbes)
-    if (bf == null) return rPlan
-    val rdf = org.apache.spark.sql.graft.Shim.ofRows(spark, rPlan)
-    val rKey = if (el == 1) col(key.cols.head)
-               else struct(key.cols.take(el).map(col): _*)
-    rdf.filter(graft.operators.BloomJoin.mightContain(bf, rKey))
+    if (nProbes < 256) return legs
+    def keyOf(cs: Seq[Column]) = if (cs.length == 1) cs.head else struct(cs: _*)
+    val bf = graft.operators.BloomJoin.keyFilterBytes(
+      org.apache.spark.sql.graft.Shim.ofRows(spark, probe),
+      keyOf(keyAttrs.map(org.apache.spark.sql.graft.Shim.col)), nProbes)
+    if (bf == null) legs
+    else org.apache.spark.sql.graft.Shim.ofRows(spark, legs)
+      .filter(graft.operators.BloomJoin.mightContain(bf,
+        keyOf(key.cols.take(keyAttrs.length).map(col))))
       .queryExecution.analyzed
   }
 
-  /** Layout precondition of every probe-leg construction — cheap (no job);
-    * the SQL rewrites check it BEFORE paying the eager bounds job so a
-    * fixed-point optimizer pass over an unzippable layout never runs one.
-    */
+  /** Layout precondition of every probe-leg construction — cheap (no job). */
   private[graft] def zipLayoutOk: Boolean = !manifest.isEmpty && filesDisjoint
 
-  /** Plan-level [[probeBounds]] for the SQL rewrites' conf-gated eager
-    * bounds job (`spark.graft.probe.sqlEagerBounds`): one min/max/count
-    * aggregate over the probe side's LogicalPlan, keyed by the leading
-    * equi ATTRIBUTE. Returns manifest-normalized bounds + the probe count.
-    * The caller owns the soundness gates: the probe subtree must be
-    * deterministic (the bounds pass and the routed execution must see the
-    * same rows) and the join type must not preserve the snapshot side
-    * (pruned files drop snapshot rows).
+  /** Intersect two optional single-component key bounds (takeMax = lower
+    * bounds, !takeMax = upper bounds) under the engine's literal ordering.
     */
-  private[graft] def probeBoundsPlan(
+  private def tighterBound(a: Option[Any], b: Option[Any], takeMax: Boolean): Option[Any] =
+    (a, b) match {
+      case (Some(x), Some(y)) =>
+        val c = KeyOrd.compare(Seq(x), Seq(y))
+        Some(if ((c >= 0) == takeMax) x else y)
+      case _ => a.orElse(b)
+    }
+
+  /** Sends a batch of probe rows to this snapshot's legs — the one
+    * routing path behind [[probeJoin]], [[asOfProbe]], the SQL probe
+    * rewrites and MERGE's probe join. `keyAttrs` (attributes of `probe`)
+    * map positionally onto the leading key columns. In order:
+    *  - the layout check (free): [[ProbeRoute.Unzippable]] before any
+    *    probe-side job runs;
+    *  - with `pruneByProbes`, ONE min/max/count job over the probe side:
+    *    an empty probe set is [[ProbeRoute.NoProbes]], and the probes'
+    *    leading-key range, intersected with `ownBounds` (the snapshot's
+    *    own pushed leading-key bounds), prunes the legs' files —
+    *    [[ProbeRoute.AllPruned]] when no file is left;
+    *  - the legs ([[probeLegPlans]]), bloom-filtered by the probe keys at
+    *    256 probes or more (a second probe-side job), and the probes
+    *    routed onto them ([[routeProbePlan]]) under `probe`'s own
+    *    exprIds: [[ProbeRoute.Routed]].
+    *
+    * The bounds and bloom passes re-execute `probe`: a nondeterministic
+    * or expensive probe frame must be persisted by the caller (otherwise
+    * the passes could see different rows, and stale bounds could prune a
+    * live match's file), or `pruneByProbes = false` skips both. Pruning
+    * and the bloom filter drop snapshot rows no probe can match, so a
+    * join type that emits unmatched SNAPSHOT rows must not ask for them.
+    */
+  private[graft] def routeProbeLegs(
       probe: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      leadingKey: org.apache.spark.sql.catalyst.expressions.Attribute)
-      : (Option[Any], Option[Any], Long) = {
-    val pdf = org.apache.spark.sql.graft.Shim.ofRows(spark, probe)
-    val c = org.apache.spark.sql.graft.Shim.col(leadingKey)
-    val r = pdf.agg(min(c), max(c),
-      org.apache.spark.sql.functions.count(lit(1))).head()
-    if (r.isNullAt(0)) (None, None, r.getLong(2))
-    else (Some(KeyOrd.normLiteral(r.get(0))),
-          Some(KeyOrd.normLiteral(r.get(1))), r.getLong(2))
+      keyAttrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
+      rowsPerLeg: Long, pruneByProbes: Boolean,
+      ownBounds: (Option[Seq[Any]], Option[Seq[Any]]) = (None, None)): ProbeRoute = {
+    import org.apache.spark.sql.catalyst.expressions.Alias
+    if (!zipLayoutOk) return ProbeRoute.Unzippable
+    val (pLo, pHi, nProbes) =
+      if (pruneByProbes) probeBoundsPlan(probe, keyAttrs.head) else (None, None, -1L)
+    // an empty probe set (the idle-stream micro-batch) never builds leg
+    // plans that would scan + sort the whole snapshot against zero probes
+    if (nProbes == 0L) return ProbeRoute.NoProbes
+    def lead(b: Option[Seq[Any]]) = b.filter(_.nonEmpty).map(_.head)
+    probeLegPlans(keyAttrs.length, rowsPerLeg,
+        tighterBound(lead(ownBounds._1), pLo, takeMax = true),
+        tighterBound(lead(ownBounds._2), pHi, takeMax = false)) match {
+      case ProbeLegs.Unzippable => ProbeRoute.Unzippable
+      case ProbeLegs.AllPruned => ProbeRoute.AllPruned
+      case ProbeLegs.Legs(bounds, legs) =>
+        val filtered = bloomFilteredLegsPlan(probe, keyAttrs, nProbes, legs)
+        val routed = routeProbePlan(probe, keyAttrs, bounds)
+        ProbeRoute.Routed(
+          org.apache.spark.sql.catalyst.plans.logical.Project(
+            probe.output.zip(routed.output).map {
+              case (o, n) => Alias(n, o.name)(exprId = o.exprId) }, routed),
+          filtered)
+    }
   }
 
   /** Routes each probe row to its leg index — a binary search of the
@@ -1690,25 +1692,13 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * count of boundaries <= key, so a probe equal to a boundary goes
     * ABOVE it like the legs' half-open ranges) — then ONE partitioner
     * shuffle of the probe side alone. Returns the routed frame's analyzed
-    * plan, partition i = leg i.
+    * plan, partition i = leg i. Key columns arrive as ATTRIBUTES of the
+    * probe plan (an arbitrary SQL join side may repeat names across
+    * relations, so name lookup is unsafe there). Output attributes are
+    * FRESH (a LogicalRDD over the routed rows) and align POSITIONALLY
+    * with `probe.output`.
     */
-  private def routeProbes(probes: DataFrame, probeKeyCols: Seq[String],
-                          bounds: Vector[Seq[Any]])
-      : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
-    val p = probes.queryExecution.analyzed
-    routeProbePlan(p, probeKeyCols.map(c => p.output.find(_.name == c)
-      .getOrElse(sys.error(s"routeProbes: missing probe column $c"))), bounds)
-  }
-
-  /** Plan-level [[routeProbes]] — the SQL rewrite's entry
-    * ([[graft.sources.GraftCoRangeJoin]]): key columns arrive as
-    * ATTRIBUTES of the probe plan (an arbitrary SQL join side may repeat
-    * names across relations, so name lookup is unsafe there). Output
-    * attributes are FRESH (a LogicalRDD over the routed rows) and align
-    * POSITIONALLY with `probe.output` — the caller restores its exprIds
-    * with a positional alias Project.
-    */
-  private[graft] def routeProbePlan(
+  private def routeProbePlan(
       probe: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       keyAttrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
       bounds: Vector[Seq[Any]])
@@ -1768,7 +1758,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * this snapshot on its leading key column(s) — [[coRangeJoin]] for a
     * non-snapshot left side, the general "enrich facts against a
     * snapshot dimension" shape. Probes are routed onto the snapshot's
-    * leg boundaries ([[routeProbes]] — ONE partitioner shuffle of the
+    * leg boundaries ([[routeProbeLegs]] — ONE partitioner shuffle of the
     * probes alone; the snapshot never moves and the SQL plan stays
     * exchange-free) and each leg runs the equi streaming merge, so a
     * key-PREFIX join (fewer probe key columns than the snapshot's key
@@ -1786,7 +1776,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * `pruneFiles = false` skips BOTH extra probe-side passes — the
     * [min,max] file-prune aggregate AND the ≥256-probe bloom prefilter
     * (they share the unsoundness on unpersisted nondeterministic probe
-    * frames, so one opt-out covers both; see [[probeBounds]]).
+    * frames, so one opt-out covers both; see [[routeProbeLegs]]).
     */
   def probeJoin(probes: DataFrame, probeKeyCols: Seq[String],
                 joinType: String = "inner", rowsPerLeg: Long = -1L,
@@ -1845,20 +1835,13 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         else base
     }
 
-    // layout checks are free; the bounds pass is a probe-side JOB — never
-    // pay it when the zip path is impossible
-    if (manifest.isEmpty || !filesDisjoint) return stockJoin()
-    val pb = probeBounds(probes, probeKeyCols.head, pruneFiles)
-    // empty probe set (common idle-stream micro-batch): the result is
-    // empty for every probe-preserving type — never build leg plans that
-    // would scan + sort the whole snapshot against zero probes
-    if (pb._3 == 0L) return noMatch(probes.limit(0))
-    probeLegPlans(el, rowsPerLeg, pb._1, pb._2) match {
-      case ProbeLegs.Unzippable => stockJoin()
-      case ProbeLegs.AllPruned => noMatch(probes)
-      case ProbeLegs.Legs(bounds, rPlan0) =>
-        val rPlan = bloomFilteredLegs(probes, probeKeyCols, pb._3, rPlan0)
-        val lPlan = routeProbes(probes, probeKeyCols, bounds)
+    val probe = probes.queryExecution.analyzed
+    routeProbeLegs(probe, probeKeyCols.map(planAttr(probe, _, "probeJoin")),
+        rowsPerLeg, pruneFiles) match {
+      case ProbeRoute.Unzippable => stockJoin()
+      case ProbeRoute.NoProbes => noMatch(probes.limit(0))
+      case ProbeRoute.AllPruned => noMatch(probes)
+      case ProbeRoute.Routed(lPlan, rPlan) =>
         def attrOf(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
                    n: String) = planAttr(p, n, "probeJoin")
         val node = graft.plans.ZipPartitionsJoin(lPlan, rPlan,
@@ -1899,7 +1882,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * shuffled join + window pick when the layout cannot guarantee
     * disjoint ranges. `pruneFiles = false` skips BOTH extra probe-side
     * passes — the [min,max] file-prune aggregate AND the ≥256-probe
-    * bloom prefilter (see [[probeBounds]]).
+    * bloom prefilter (see [[routeProbeLegs]]).
     */
   def asOfProbe(probes: DataFrame, probeKeyCols: Seq[String], probeTsCol: String,
                 rightTsCol: String = null, joinType: String = "inner",
@@ -1976,18 +1959,15 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         rightVals.map(c => lit(null).cast(rs(c).dataType).as(c))): _*)
     }
 
-    if (manifest.isEmpty || !filesDisjoint) return stockProbe()
-    val pb = probeBounds(probes, probeKeyCols.head, pruneFiles)
-    // empty probe batch (idle stream): answer without leg plans — an idle
-    // micro-batch must not pay a full-snapshot scan+sort ("cost follows
-    // the stream's rate")
-    if (pb._3 == 0L) return noMatch(probes.limit(0))
-    probeLegPlans(el, rowsPerLeg, pb._1, pb._2) match {
-      case ProbeLegs.Unzippable => stockProbe()
-      case ProbeLegs.AllPruned => noMatch(probes)
-      case ProbeLegs.Legs(bounds, rPlan0) =>
-        val rPlan = bloomFilteredLegs(probes, probeKeyCols, pb._3, rPlan0)
-        val lPlan = routeProbes(probes, probeKeyCols, bounds)
+    val probe = probes.queryExecution.analyzed
+    routeProbeLegs(probe, probeKeyCols.map(planAttr(probe, _, "asOfProbe")),
+        rowsPerLeg, pruneFiles) match {
+      case ProbeRoute.Unzippable => stockProbe()
+      // an empty probe batch (idle stream) pays no snapshot scan: "cost
+      // follows the stream's rate"
+      case ProbeRoute.NoProbes => noMatch(probes.limit(0))
+      case ProbeRoute.AllPruned => noMatch(probes)
+      case ProbeRoute.Routed(lPlan, rPlan) =>
         def attrOf(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
                    n: String) = planAttr(p, n, "asOfProbe")
         val node = graft.plans.AsOfZipJoin(lPlan, rPlan,
@@ -2216,6 +2196,26 @@ private[graft] object ProbeLegs {
   final case class Legs(bounds: Vector[Seq[Any]],
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
     extends ProbeLegs
+}
+
+/** Result of [[KVIndex.routeProbeLegs]]. Each caller maps it onto its own
+  * answer: the zero-match shape for `NoProbes`/`AllPruned` (which differs
+  * by join type), the stock join for `Unzippable`.
+  */
+private[graft] sealed trait ProbeRoute
+private[graft] object ProbeRoute {
+  /** the bounds pass counted zero probe rows */
+  case object NoProbes extends ProbeRoute
+  /** layout cannot guarantee disjoint leg ranges — stock join */
+  case object Unzippable extends ProbeRoute
+  /** the probe and pushed bounds pruned every file — zero possible matches */
+  case object AllPruned extends ProbeRoute
+  /** `probe`: the routed probes, partition i = leg i, under the probe
+    * plan's own exprIds; `legs`: the snapshot's leg-union plan
+    */
+  final case class Routed(probe: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      legs: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+    extends ProbeRoute
 }
 
 object KVIndex {

@@ -2,11 +2,11 @@ package graft.sources
 
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Descending, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, NullsLast, RowNumber, SortOrder, WindowExpression}
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftOuter}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LogicalPlan, Project, Union, Window, WindowGroupLimit}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Join, LocalRelation, LogicalPlan, Project, Union, Window, WindowGroupLimit}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.types.IntegerType
 
-import graft.core.KVIndex
+import graft.core.{KVIndex, ProbeRoute}
 import graft.plans.AsOfZipJoin
 
 /** Recognizes the classic AS-OF SQL idiom over two graft snapshots and
@@ -341,45 +341,25 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
     // so left_outer needs no extra branch.
     def probe(): Option[LogicalPlan] = {
       if (j.left.isStreaming) return None
-      val (bLo, bHi) = rg.pushedKeyBounds
-      val sLo = bLo.filter(_.nonEmpty).map(_.head)
-      val sHi = bHi.filter(_.nonEmpty).map(_.head)
-      // EAGER probe bounds (conf-gated, `spark.graft.probe.sqlEagerBounds`,
-      // shared gate+job in [[GraftCoRangeJoin.eagerProbeBounds]]) — ALWAYS
-      // type-sound here: the snapshot is the right side of an
-      // inner/left_outer as-of, never preserved, so pruning its files /
-      // bloom-filtering its leg scans by the probe set drops only rows
-      // that could never be a floor candidate. Rerun-stability and probe
-      // size are gated in the helper (the job runs up to three times).
-      val eagerPb = GraftCoRangeJoin.eagerProbeBounds(rIx, j.left, lEqui.head)
-      val eager = eagerPb.isDefined
-      val (pLo, pHi, nProbes): (Option[Any], Option[Any], Long) =
-        eagerPb.getOrElse((None, None, -1L))
-      /** Zero possible matches: inner → empty; left_outer → every probe
-        * row with the right side null-extended (the empty-probe case is
-        * empty for both — the left side IS the probe side).
-        */
-      def noMatch(left: LogicalPlan): LogicalPlan = finish(
-        if (leftOuter && nProbes > 0L)
-          Project(left.output ++ j.right.output.map(a =>
-            Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)), left)
-        else org.apache.spark.sql.catalyst.plans.logical.LocalRelation(j.output))
-      if (nProbes == 0L) return Some(noMatch(j.left))
-      rIx.probeLegPlans(m, GraftCoRangeJoin.rowsPerLegConf(),
-          GraftCoRangeJoin.tighterBound(sLo, pLo, takeMax = true),
-          GraftCoRangeJoin.tighterBound(sHi, pHi, takeMax = false)) match {
-        case graft.core.ProbeLegs.Legs(bounds, legPlan0) =>
-          val legPlan =
-            if (eager) rIx.bloomFilteredLegsPlan(j.left, lEqui, nProbes, legPlan0)
-            else legPlan0
-          val routed = rIx.routeProbePlan(j.left, lEqui, bounds)
-          val pStack = Project(j.left.output.zip(routed.output).map {
-            case (o, n) => Alias(n, o.name)(exprId = o.exprId) }, routed)
+      // the snapshot is the right side of an inner/left_outer as-of, never
+      // preserved: pruning its files / bloom-filtering its leg scans by
+      // the probe set drops only rows that could never be a floor
+      // candidate, so the eager probe bounds are always type-sound here
+      GraftCoRangeJoin.routeProbe(rIx, rg, j.left, lEqui, pruneSound = true) match {
+        case ProbeRoute.Routed(pStack, legPlan) =>
           val rStack = rRebuild(GraftCoRangeJoin.aliasTo(rrel.output, legPlan))
           Some(finish(AsOfZipJoin(pStack, rStack, lEqui, rEqui, lTs, rTs,
             Nil, rRestAttrs, leftOuter, strict, tolerance)))
-        case graft.core.ProbeLegs.AllPruned if eager => Some(noMatch(j.left))
-        case _ => None // Unzippable, or the snapshot's own WHERE pruned all
+        // no probes: empty for both types (the left side IS the probe side)
+        case ProbeRoute.NoProbes => Some(finish(LocalRelation(j.output)))
+        // zero possible matches: inner → empty; left_outer → every probe
+        // row with the right side null-extended
+        case ProbeRoute.AllPruned => Some(finish(
+          if (leftOuter)
+            Project(j.left.output ++ j.right.output.map(a =>
+              Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)), j.left)
+          else LocalRelation(j.output)))
+        case ProbeRoute.Unzippable => None
       }
     }
 

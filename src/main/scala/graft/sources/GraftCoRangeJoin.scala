@@ -1,12 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, EqualTo, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
-import graft.core.KVIndex
+import graft.core.{KVIndex, ProbeRoute}
 import graft.plans.ZipPartitionsJoin
 
 /** Exchange-free key-equi-joins through the DSV2 path: `SELECT ... FROM
@@ -107,6 +107,23 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
     case other => Seq(other)
   }
 
+  /** The strict equi-join match: every conjunct of `cond` is an equality
+    * of two plain attributes, one from `left` and one from `right`
+    * (either order). Returns the (left, right) pair per conjunct, or None
+    * when any conjunct is anything else.
+    */
+  private[sources] def equiPairs(cond: Expression, left: AttributeSet, right: AttributeSet)
+      : Option[Seq[(AttributeReference, AttributeReference)]] = {
+    val cs = conjuncts(cond)
+    val pairs = cs.collect {
+      case EqualTo(a: AttributeReference, b: AttributeReference)
+          if left.contains(a) && right.contains(b) => (a, b)
+      case EqualTo(b: AttributeReference, a: AttributeReference)
+          if left.contains(a) && right.contains(b) => (a, b)
+    }
+    if (pairs.size == cs.size) Some(pairs) else None
+  }
+
   /** Restore `out`'s exprIds over a replacement plan by NAME (snapshot
     * schemas have unique names) — the stacks replay above this.
     */
@@ -200,37 +217,27 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
           org.apache.spark.sql.catalyst.expressions.PlanExpression[_]]))
     }.isEmpty
 
-  /** The shared eager-bounds gate + job for the SQL probe rewrites:
-    * Some(bounds + probe count) when the conf is on, the snapshot layout
-    * can zip, the probe subtree is rerun-stable, and its estimated size
-    * sits under the ceiling; None = run the unpruned rewrite. The CALLER
-    * owns join-type soundness (only graft-non-preserving types may use
-    * the result to prune). The layout pre-check keeps a fixed-point
-    * optimizer pass from paying the job on a plan that then declines.
+  /** The SQL probe rewrites' routing: [[graft.core.KVIndex.routeProbeLegs]]
+    * over the snapshot's own pushed leading-key bounds, with the eager
+    * probe-bounds prune allowed when the join type may drop unmatched
+    * snapshot rows (`pruneSound`), the conf is on, the probe subtree is
+    * rerun-stable, and its estimated size sits under the ceiling. Without
+    * the eager pass, AllPruned means the snapshot's own WHERE pruned every
+    * file — the stock plan scans zero files then, so it declines
+    * (Unzippable) rather than answer.
     */
-  private[sources] def eagerProbeBounds(ix: KVIndex, probe: LogicalPlan,
-      leadingKey: Attribute): Option[(Option[Any], Option[Any], Long)] = {
-    val allowed = eagerBoundsConf() match {
+  private[sources] def routeProbe(ix: KVIndex, g: GraftScan, probe: LogicalPlan,
+      probeKeys: Seq[Attribute], pruneSound: Boolean): ProbeRoute = {
+    val eager = pruneSound && (eagerBoundsConf() match {
       case "true" => true
       case "false" => false
       case _ => autoEagerPlan(probe) // "auto"
+    }) && eagerSafePlan(probe) && probe.stats.sizeInBytes <= BigInt(eagerMaxBytesConf())
+    ix.routeProbeLegs(probe, probeKeys, rowsPerLegConf(), eager, g.pushedKeyBounds) match {
+      case ProbeRoute.AllPruned if !eager => ProbeRoute.Unzippable
+      case r => r
     }
-    if (!allowed || !ix.zipLayoutOk || !eagerSafePlan(probe) ||
-        probe.stats.sizeInBytes > BigInt(eagerMaxBytesConf())) None
-    else Some(ix.probeBoundsPlan(probe, leadingKey))
   }
-
-  /** Intersect two optional single-component key bounds (takeMax = lower
-    * bounds, !takeMax = upper bounds) under the engine's literal ordering.
-    */
-  private[sources] def tighterBound(a: Option[Any], b: Option[Any],
-                                    takeMax: Boolean): Option[Any] =
-    (a, b) match {
-      case (Some(x), Some(y)) =>
-        val c = graft.core.KeyOrd.compare(Seq(x), Seq(y))
-        Some(if ((c >= 0) == takeMax) x else y)
-      case _ => a.orElse(b)
-    }
 
   /** per-leg row target from session conf (e.g. for wider tasks on a
     * scan-heavy join); ≤ 0 = the index's maxRowsPerFile convention
@@ -252,16 +259,8 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
     // over the RELATIONS' own attributes (a computed/aliased key declines:
     // its exprId is not the relation's, and leg boundaries were cut on the
     // stored key, not the computed one)
-    val lIds = lrel.output.map(_.exprId).toSet
-    val rIds = rrel.output.map(_.exprId).toSet
-    val pairs: Seq[(AttributeReference, AttributeReference)] =
-      conjuncts(cond).map {
-        case EqualTo(a: AttributeReference, b: AttributeReference)
-            if lIds.contains(a.exprId) && rIds.contains(b.exprId) => (a, b)
-        case EqualTo(b: AttributeReference, a: AttributeReference)
-            if lIds.contains(a.exprId) && rIds.contains(b.exprId) => (a, b)
-        case _ => return None
-      }
+    val pairs = equiPairs(cond, AttributeSet(lrel.output), AttributeSet(rrel.output))
+      .getOrElse(return None)
     // the equalities must cover a LEADING PREFIX of both sides' key
     // column lists positionally (possibly the full lists): legs are then
     // cut at prefix-group boundaries, so `a JOIN b ON a.k1 = b.k1` over
@@ -371,17 +370,9 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
     val gSize = gg.estimateStatistics().sizeInBytes
     if (thr >= 0 && gSize.isPresent && gSize.getAsLong <= thr) return None
 
-    val gIds = grel.output.map(_.exprId).toSet
-    val pIds = probe.outputSet
     // (probeAttr, graftAttr) pairs; anything else in the condition declines
-    val pairs: Seq[(AttributeReference, AttributeReference)] =
-      conjuncts(cond).map {
-        case EqualTo(a: AttributeReference, b: AttributeReference)
-            if pIds.contains(a) && gIds.contains(b.exprId) => (a, b)
-        case EqualTo(b: AttributeReference, a: AttributeReference)
-            if pIds.contains(a) && gIds.contains(b.exprId) => (a, b)
-        case _ => return None
-      }.distinct
+    val pairs = equiPairs(cond, probe.outputSet, AttributeSet(grel.output))
+      .getOrElse(return None).distinct
     val gKeyCols = gg.manifestRef.keyCols
     val byKey = pairs.groupBy(_._2.name)
     // two DIFFERENT probe attributes equated to one key column cannot be
@@ -393,44 +384,23 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
     val probeKeys: Seq[Attribute] = gKeyCols.take(m).map(c => byKey(c).head._1)
     val graftKeys: Seq[Attribute] = gKeyCols.take(m).map(c => byKey(c).head._2)
 
-    val ix = new KVIndex(gg.storeRef, gg.manifestRef)
     // the snapshot's OWN pushed leading-key bounds prune its legs — always
     // sound (rows outside them are dropped by the replayed stack anyway,
-    // for every join type)
-    val (bLo, bHi) = gg.pushedKeyBounds
-    val sLo = bLo.filter(_.nonEmpty).map(_.head)
-    val sHi = bHi.filter(_.nonEmpty).map(_.head)
-
-    // EAGER probe bounds (conf-gated, [[eagerProbeBounds]]): buy the API
-    // path's probe-derived file prune + typed empty answers + ≥256-probe
-    // bloom prefilter for SQL text. Sound ONLY when the join type never
-    // emits an UNMATCHED snapshot row (pruning/bloom drop snapshot rows
-    // outside the probe set) — the rerun-stability and size gates live in
-    // the shared helper.
+    // for every join type). The EAGER probe bounds ([[routeProbe]]) buy the
+    // API path's probe-derived file prune, typed empty answers and
+    // ≥256-probe bloom prefilter for SQL text — sound ONLY when the join
+    // type never emits an UNMATCHED snapshot row.
     val graftNeedsUnmatched = jt match {
       case FullOuter => true
       case LeftOuter | LeftAnti => graftOnLeft
       case RightOuter => !graftOnLeft
       case _ => false // Inner, LeftSemi: unmatched snapshot rows never emit
     }
-    val eagerPb =
-      if (graftNeedsUnmatched) None
-      else eagerProbeBounds(ix, probe, probeKeys.head)
-    val eager = eagerPb.isDefined
-    val (pLo, pHi, nProbes): (Option[Any], Option[Any], Long) =
-      eagerPb.getOrElse((None, None, -1L))
-    // empty probe set: the result is empty for every graft-non-preserving
-    // type (probe-preserving sides are empty too)
-    if (nProbes == 0L) return Some(LocalRelation(j.output))
-    val legLo = tighterBound(sLo, pLo, takeMax = true)
-    val legHi = tighterBound(sHi, pHi, takeMax = false)
 
     /** All files pruned under the probe bounds: no snapshot row can match
       * any probe, so answer without touching the snapshot — empty for
       * inner/semi, pass-through for anti (probe is the left side there),
-      * null-extension for the probe-preserving outer types. Only reached
-      * when `eager` (the non-eager AllPruned means the snapshot's own
-      * WHERE pruned everything — the stock plan scans zero files anyway).
+      * null-extension for the probe-preserving outer types.
       */
     def prunedAnswer(): LogicalPlan = jt match {
       case LeftAnti => probe // sound set => probe IS the left side
@@ -444,24 +414,21 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
       case _ => LocalRelation(j.output) // Inner, LeftSemi
     }
 
-    ix.probeLegPlans(m, rowsPerLegConf(), legLo, legHi) match {
-      case graft.core.ProbeLegs.Legs(bounds, legPlan0) =>
-        val legPlan =
-          if (eager) ix.bloomFilteredLegsPlan(probe, probeKeys, nProbes, legPlan0)
-          else legPlan0
+    routeProbe(new KVIndex(gg.storeRef, gg.manifestRef), gg, probe, probeKeys,
+        pruneSound = !graftNeedsUnmatched) match {
+      case ProbeRoute.Routed(pStack, legPlan) =>
+        // the WHOLE probe side (filters and all) routes, evaluated once at
+        // execution, under its own exprIds
         val gStack = gRebuild(aliasTo(grel.output, legPlan))
-        // route the WHOLE probe side (filters and all, evaluated once at
-        // execution), then restore its output exprIds POSITIONALLY — an
-        // arbitrary SQL side may repeat names across relations
-        val routed = ix.routeProbePlan(probe, probeKeys, bounds)
-        val pStack = Project(probe.output.zip(routed.output).map {
-          case (o, n) => Alias(n, o.name)(exprId = o.exprId) }, routed)
         Some(if (graftOnLeft)
           ZipPartitionsJoin(gStack, pStack, graftKeys, probeKeys, jt)
         else
           ZipPartitionsJoin(pStack, gStack, probeKeys, graftKeys, jt))
-      case graft.core.ProbeLegs.AllPruned if eager => Some(prunedAnswer())
-      case _ => None // Unzippable, or the snapshot's own WHERE pruned all
+      // empty probe set: the result is empty for every graft-non-preserving
+      // type (probe-preserving sides are empty too)
+      case ProbeRoute.NoProbes => Some(LocalRelation(j.output))
+      case ProbeRoute.AllPruned => Some(prunedAnswer())
+      case ProbeRoute.Unzippable => None
     }
   }
 }

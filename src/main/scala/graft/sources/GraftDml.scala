@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction, Filter, InsertAction, LogicalPlan, MergeAction, MergeIntoTable, Project, UpdateAction, UpdateTable}
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
@@ -309,18 +309,8 @@ private[graft] object GraftDml {
     val tKeys = ix.manifest.keyCols
     val sKeys = srcIx.manifest.keyCols
     if (tKeys.size != sKeys.size) return None
-    val outIds = out.map(_.exprId).toSet
-    val srcIds = srcRelOut.map(_.exprId).toSet
-    val pairs: Seq[(AttributeReference, AttributeReference)] =
-      GraftCoRangeJoin.conjuncts(m.mergeCondition).map {
-        case org.apache.spark.sql.catalyst.expressions.EqualTo(
-            a: AttributeReference, b: AttributeReference)
-            if outIds.contains(a.exprId) && srcIds.contains(b.exprId) => (a, b)
-        case org.apache.spark.sql.catalyst.expressions.EqualTo(
-            b: AttributeReference, a: AttributeReference)
-            if outIds.contains(a.exprId) && srcIds.contains(b.exprId) => (a, b)
-        case _ => return None
-      }
+    val pairs = GraftCoRangeJoin.equiPairs(m.mergeCondition,
+      AttributeSet(out), AttributeSet(srcRelOut)).getOrElse(return None)
     val names = pairs.map(p => (p._1.name, p._2.name)).distinct
     // full positional key equality only: MERGE semantics pair one target
     // row per source key (the cardinality rule), which is the full key
@@ -403,18 +393,8 @@ private[graft] object GraftDml {
       math.max(8, schema.defaultSize)
     if (thr >= 0 && estBytes <= thr) return None
     val tKeys = ix.manifest.keyCols
-    val outIds = out.map(_.exprId).toSet
-    val srcOut = src.outputSet
-    val pairs: Seq[(AttributeReference, AttributeReference)] =
-      GraftCoRangeJoin.conjuncts(m.mergeCondition).map {
-        case org.apache.spark.sql.catalyst.expressions.EqualTo(
-            a: AttributeReference, b: AttributeReference)
-            if outIds.contains(a.exprId) && srcOut.contains(b) => (a, b)
-        case org.apache.spark.sql.catalyst.expressions.EqualTo(
-            b: AttributeReference, a: AttributeReference)
-            if outIds.contains(a.exprId) && srcOut.contains(b) => (a, b)
-        case _ => return None
-      }.distinct
+    val pairs = GraftCoRangeJoin.equiPairs(m.mergeCondition, AttributeSet(out), src.outputSet)
+      .getOrElse(return None).distinct
     // full positional key equality only (MERGE's cardinality unit), one
     // source attribute per key column
     val byKey = pairs.groupBy(_._1.name)
@@ -424,17 +404,15 @@ private[graft] object GraftDml {
     val tKeyAttrs: Seq[Attribute] = tKeys.map(c => byKey(c).head._1)
     val sKeyAttrs: Seq[Attribute] = tKeys.map(c => byKey(c).head._2)
 
-    ix.probeLegPlans(tKeys.size, GraftCoRangeJoin.rowsPerLegConf()) match {
-      case graft.core.ProbeLegs.Legs(bounds, legPlan) =>
+    // FULL OUTER preserves the snapshot's unmatched rows: no probe prune
+    ix.routeProbeLegs(src, sKeyAttrs, GraftCoRangeJoin.rowsPerLegConf(),
+        pruneByProbes = false) match {
+      case graft.core.ProbeRoute.Routed(sRouted, legPlan) =>
         def mark(p: LogicalPlan, name: String): LogicalPlan =
           Project(p.output :+ Alias(Literal(true), name)(), p)
-        val tSide = mark(GraftCoRangeJoin.aliasTo(out, legPlan), "__graft_t")
-        val routed = ix.routeProbePlan(src, sKeyAttrs, bounds)
-        val sAliased = Project(src.output.zip(routed.output).map {
-          case (o, n) => Alias(n, o.name)(exprId = o.exprId) }, routed)
-        val sSide = mark(sAliased, "__graft_s")
         Some(Shim.ofRows(spark, graft.plans.ZipPartitionsJoin(
-          tSide, sSide, tKeyAttrs, sKeyAttrs, FullOuter)))
+          mark(GraftCoRangeJoin.aliasTo(out, legPlan), "__graft_t"),
+          mark(sRouted, "__graft_s"), tKeyAttrs, sKeyAttrs, FullOuter)))
       case _ => None
     }
   }
