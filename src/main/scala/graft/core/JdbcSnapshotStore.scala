@@ -406,6 +406,9 @@ class JdbcSnapshotStore(val url: String, val spark: SparkSession,
   override def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame =
     readParquet(paths.map(materialize), m)
 
+  override private[graft] def localParquet(paths: Seq[String]): Option[Seq[String]] =
+    Some(paths.map(materialize))
+
   /** Blobs are immutable — cache each at most once for Spark's reader. */
   private def materialize(logical: String): String = cacheDir.synchronized {
     val f = cacheDir.resolve(logical.replace('/', '_') + ".parquet")

@@ -18,6 +18,18 @@ import org.apache.spark.sql.functions._
   * Validation is one keyed fold of the whole batch against the (pruned)
   * current state ([[BatchFold]]), so a 1000-executor cluster validates a
   * batch of any command count with one scan of the touched files only.
+  *
+  * Small reads run no Spark job. When the files a read covers hold at most
+  * [[LocalScan.BudgetBytes]] (manifest rows × the schema's default row
+  * size, 4 MiB), `get`, `getAll`, `range`, `gt`/`lt`, `prefix`, `nextKey`,
+  * `previousKey`, `headOrdered` and `countRange`'s boundary count decode
+  * those files on the driver while the call runs (an eager read, not a
+  * lazy plan) and return a local relation — the reference's one-leaf read
+  * (`Index.scala:813-818`). Ordered reads take this tier only on the
+  * disjoint layout, and their answer carries no declared ordering: rows
+  * arrive in key order, but a downstream `orderBy` sorts them again.
+  * Larger reads, legacy manifests without `colTypes` and the memory store
+  * keep the Spark plans below.
   */
 final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
                     private val maxRowsPerFile: Long = 1L << 19) {
@@ -128,14 +140,17 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * matter how large the index; Catalyst/parquet row-group stats take it
     * from there inside each file.
     */
-  def tableForRange(from: Seq[Any], to: Seq[Any]): OrderedTable = {
-    val covering = filesWhere(f =>
-      KeyOrd.compare(f.min, to) <= 0 && KeyOrd.compare(f.max, from) >= 0)
-    val df0 =
-      if (covering.isEmpty) emptyScan()
-      else store.readFiles(covering.map(_.path), manifest)
-    OrderedTable(df0, key)
-  }
+  def tableForRange(from: Seq[Any], to: Seq[Any]): OrderedTable =
+    tableOver(coveringRange(from, to))
+
+  private def coveringRange(from: Seq[Any], to: Seq[Any]): Seq[FileEntry] =
+    filesWhere(f => KeyOrd.compare(f.min, to) <= 0 && KeyOrd.compare(f.max, from) >= 0)
+
+  private def tableOver(fs: Seq[FileEntry]): OrderedTable =
+    OrderedTable(if (fs.isEmpty) emptyScan() else store.readFiles(fs.map(_.path), manifest), key)
+
+  /** The driver-local tier over `fs` (in manifest order), when it serves them. */
+  private def local(fs: Seq[FileEntry]): Option[LocalScan] = LocalScan(store, manifest, fs)
 
   /** Manifest-pruned read bounded on the LEADING key component only —
     * the prefix-safe variant of [[tableForRange]]: file bounds compare by
@@ -145,15 +160,15 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * prefix). Used by the changed-key-envelope reads of the materialized
     * view refreshes.
     */
-  def tableForHeadRange(lo: Any, hi: Any): OrderedTable = {
-    val covering = filesWhere(LegPlanner.covering(Some(Seq(lo)), Some(Seq(hi))))
-    OrderedTable(
-      if (covering.isEmpty) emptyScan()
-      else store.readFiles(covering.map(_.path), manifest), key)
-  }
+  def tableForHeadRange(lo: Any, hi: Any): OrderedTable =
+    tableOver(filesWhere(LegPlanner.covering(Some(Seq(lo)), Some(Seq(hi)))))
 
   /** Point lookup through the pruned read path. */
-  def get(k: Seq[Any]): DataFrame = tableForRange(k, k).get(k)
+  def get(k: Seq[Any]): DataFrame = {
+    val fs = coveringRange(k, k)
+    if (fs.isEmpty) emptyScan()
+    else local(fs).fold(tableOver(fs).get(k))(_.where(key.eqKey(k)))
+  }
 
   /** P4/P5 successor/predecessor through the pruned read path: on the
     * disjoint layout the answer lives in exactly the file
@@ -167,7 +182,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     else nextKeyFile(k) match {
       case None => emptyScan()
       case Some(f) =>
-        OrderedTable(store.readFiles(Seq(f.path), manifest), key).nextKey(k)
+        local(Seq(f)).fold(tableOver(Seq(f)).nextKey(k))(_.where(key.gtKey(k), limit = 1))
     }
 
   def previousKey(k: Seq[Any]): DataFrame =
@@ -175,7 +190,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     else previousKeyFile(k) match {
       case None => emptyScan()
       case Some(f) =>
-        OrderedTable(store.readFiles(Seq(f.path), manifest), key).previousKey(k)
+        local(Seq(f)).fold(tableOver(Seq(f)).previousKey(k))(
+          _.where(key.ltKey(k), limit = 1, reverse = true))
     }
 
   /** Sorted multi-get through the pruned read path — one manifest pass
@@ -196,17 +212,17 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       }
       lo < sorted.length && KeyOrd.compare(sorted(lo), f.max) <= 0
     }
+    val tier = local(touched)
+    if (tier.isDefined) return tier.get.getAll(key.cols, keys, mustFindAll)
     val base =
       if (touched.isEmpty) emptyScan()
       else store.readFiles(touched.map(_.path), manifest)
     val schema = org.apache.spark.sql.types.StructType(
       key.cols.map(c => base.schema(c)))
-    val keysDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        keys.map(k => org.apache.spark.sql.Row(k: _*)), 1), schema)
+    val keysDf = localRows(keys, schema)
     // Huge key batches additionally bloom-prefilter the SCAN side: a
     // ~10-bits/key sketch of the batch (one tiny job over the
-    // single-partition keysDf) rides the covering-file scans as a plan
+    // local keysDf) rides the covering-file scans as a plan
     // literal, so corpus rows that CANNOT match any batch key drop inside
     // the scan's codegen stage before the semi-join shuffle — the
     // q_bloom_join fact×dim move applied to multi-get. No false negatives,
@@ -222,6 +238,13 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         base.filter(graft.operators.BloomJoin.mightContain(bf, keyExpr))
       }
     OrderedTable(base2, key).getAll(keysDf, mustFindAll)
+  }
+
+  /** A key batch as a local relation: the semi-join broadcasts it without a job. */
+  private def localRows(keys: Seq[Seq[Any]],
+                        schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(keys.map(k => Row(k: _*)).asJava, schema)
   }
 
   /** Sorted multi-PREFIX get: every row whose leading `prefixes.head.length`
@@ -253,9 +276,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     val base = store.readFiles(touched.map(_.path), manifest)
     val pcols = key.cols.take(plen)
     val schema = org.apache.spark.sql.types.StructType(pcols.map(c => base.schema(c)))
-    val probesDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        prefixes.map(k => org.apache.spark.sql.Row(k: _*)), 1), schema)
+    val probesDf = localRows(prefixes, schema)
     val base2 =
       if (prefixes.size < 256) base
       else {
@@ -295,9 +316,9 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     if (!filesDisjoint) return fallback
     val kept = filesWhere(filePred)
     if (kept.isEmpty) return emptyScan()
-    graft.plans.OrderedPlans.declareOrdered(
+    local(kept).fold(graft.plans.OrderedPlans.declareOrdered(
       orderedUnion(if (reverse) kept.reverse else kept, reverse).filter(rowPred),
-      key.cols, reverse)
+      key.cols, reverse))(_.where(rowPred, reverse = reverse))
   }
 
   /** S5 one-sided ranges over the snapshot: manifest prunes the files on
@@ -531,8 +552,10 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       return if (reverse) table.tail(n) else table.head(n)
     val prefix = LegPlanner.prefix(if (reverse) files.reverse else files, n)
     if (prefix.isEmpty) emptyScan()
-    else orderedUnion(prefix, reverse).limit(n)
-      .coalesce(1).sortWithinPartitions(key.sortCols(reverse): _*)
+    else local(if (reverse) prefix.reverse else prefix).fold(
+      orderedUnion(prefix, reverse).limit(n)
+        .coalesce(1).sortWithinPartitions(key.sortCols(reverse): _*))(
+      _.where(lit(true), limit = n, reverse = reverse))
   }
 
   /** Iterator pull over the snapshot — the reference's
@@ -783,11 +806,12 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         (incTo && KeyOrd.compare(f.max, to) == 0)
       loIn && hiIn
     }
+    val inRange = key.gtKey(from, orEq = incFrom) && key.ltKey(to, orEq = incTo)
     val boundaryN =
       if (boundary.isEmpty) 0L
-      else store.readFiles(boundary.map(_.path), manifest)
-        .filter(key.gtKey(from, orEq = incFrom) && key.ltKey(to, orEq = incTo))
-        .count()
+      else local(boundary).fold(
+        store.readFiles(boundary.map(_.path), manifest).filter(inRange).count())(
+        _.count(inRange))
     covered.map(_.rows).sum + boundaryN
   }
 

@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   * (replacing meta-block binary search `Meta.scala:43-53`), and
   * `TakeOrderedAndProject` top-k (replacing the iterator `stop` flag).
   * Nothing here collects to the driver; every result is a DataFrame that
-  * scales to arbitrarily many executors.
+  * scales to arbitrarily many executors. (The snapshot reads of [[KVIndex]]
+  * answer small reads — covering files within [[LocalScan.BudgetBytes]] —
+  * from a driver-side decode instead of these transforms.)
   */
 final case class OrderedTable(df: DataFrame, key: KeySpec) {
 
@@ -28,7 +30,8 @@ final case class OrderedTable(df: DataFrame, key: KeySpec) {
 
   /** P2 `getAll` — sorted multi-get via semi-join (reference
     * `Index.scala:820-883`); `mustFindAll` reports missing keys via the
-    * anti-join count, error KEY_NOT_FOUND (`GetMultipleKeysSpec.scala:203`).
+    * anti-join count, error KEY_NOT_FOUND (`GetMultipleKeysSpec.scala:203`)
+    * listing the first five missing keys in key order.
     */
   def getAll(keys: DataFrame, mustFindAll: Boolean = false): GetResult = {
     val found = df.join(keys, key.cols, "left_semi")
@@ -38,7 +41,7 @@ final case class OrderedTable(df: DataFrame, key: KeySpec) {
       val n = missing.count()
       if (n == 0) GetResult(found, 0L, success = true, None)
       else GetResult(found, n, success = false, Some(GraftError.KeyNotFound(
-        missing.limit(5).collect().map(_.mkString("/")).toSeq)))
+        missing.orderBy(key.sortCols(): _*).limit(5).collect().map(_.mkString("/")).toSeq)))
     }
   }
 

@@ -360,6 +360,12 @@ trait SnapshotStore {
     */
   def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame
 
+  /** `paths` as parquet files the driver can open itself, for the
+    * driver-local read tier ([[LocalScan]]); None when this backend's
+    * files are not parquet on a driver-visible filesystem.
+    */
+  private[graft] def localParquet(paths: Seq[String]): Option[Seq[String]] = None
+
   /** [[readFiles]] over parquet files — shared by every parquet-reading
     * backend.
     */
@@ -1084,6 +1090,9 @@ class FsSnapshotStore(val root: String, val spark: SparkSession)
 
   override def readFiles(paths: Seq[String], m: SnapshotManifest): DataFrame =
     readParquet(paths, m)
+
+  override private[graft] def localParquet(paths: Seq[String]): Option[Seq[String]] =
+    Some(paths)
 
   override protected def listDataFiles(id: String): Seq[String] = {
     val dataDir = p(id).resolve("data")

@@ -51,6 +51,10 @@ object Shim {
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
   def col(e: Expression): Column = ExpressionUtils.column(e)
 
+  /** `e` with NaN and -0.0 folded the way join and grouping keys are. */
+  def normalizeFloats(e: Expression): Expression =
+    org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
   /** Build a DataFrame over a custom logical plan (`Dataset.ofRows` is
     * `private[sql]` in Spark 4's classic module).
     */

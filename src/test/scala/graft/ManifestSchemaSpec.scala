@@ -170,14 +170,23 @@ abstract class ManifestSchemaSpecBase extends SparkSuite {
     assert(buildJobs == 0)
     assert(built.schema == m.readSchema.get)
     val reader = new KVIndex(store, m)
-    val (got, getJobs) = jobsOf(reader.get(Seq("k100")).collect())
-    assert(got.map(_.getInt(1)).toSeq == Seq(50))
-    val (ranged, rangeJobs) = jobsOf(reader.range(Seq("k100"), Seq("k110"), true, true).collect())
-    assert(ranged.length == 6)
-    val (next, nextJobs) = jobsOf(reader.nextKey(Seq("k100")).collect())
-    assert(next.map(_.getString(0)).toSeq == Seq("k102"))
-    assert((getJobs, rangeJobs, nextJobs) == (1, 1, 1),
-      s"jobs: get $getJobs, range $rangeJobs, nextKey $nextJobs")
+    def readJobs(): (Int, Int, Int) = {
+      val (got, getJobs) = jobsOf(reader.get(Seq("k100")).collect())
+      assert(got.map(_.getInt(1)).toSeq == Seq(50))
+      val (ranged, rangeJobs) = jobsOf(reader.range(Seq("k100"), Seq("k110"), true, true).collect())
+      assert(ranged.length == 6)
+      val (next, nextJobs) = jobsOf(reader.nextKey(Seq("k100")).collect())
+      assert(next.map(_.getString(0)).toSeq == Seq("k102"))
+      (getJobs, rangeJobs, nextJobs)
+    }
+    // the Spark path: one job each, none of them for the schema
+    val sparkJobs = LocalScan.withBudget(0L)(readJobs())
+    assert(sparkJobs == ((1, 1, 1)), s"jobs (get, range, nextKey) on the Spark path: $sparkJobs")
+    // below the default budget the filesystem and JDBC stores read on the
+    // driver; the memory store's frames always cost a job
+    val expected = if (store.isInstanceOf[MemorySnapshotStore]) (1, 1, 1) else (0, 0, 0)
+    val defaultJobs = readJobs()
+    assert(defaultJobs == expected, s"jobs (get, range, nextKey) at the default budget: $defaultJobs")
   }
 }
 

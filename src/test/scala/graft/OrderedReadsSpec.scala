@@ -114,7 +114,9 @@ class OrderedReadsSpec extends SparkSuite {
     val miss = Seq(Seq[Any]("zz999"), Seq[Any]("k0000x"))
     val keys = (hit ++ miss)
     assert(keys.size >= 256, "test must cross the bloom threshold")
-    val res = ix.getAll(keys)
+    // the Spark path (this snapshot is small enough for the driver-local
+    // tier, which answers the same keys without a plan)
+    val res = LocalScan.withBudget(0L)(ix.getAll(keys))
     assert(res.success)
     val got = pairs(res.found)
     assert(got.map(_._1).sorted == hit.map(_.head.toString).sorted)
@@ -123,9 +125,11 @@ class OrderedReadsSpec extends SparkSuite {
     val plan = res.found.queryExecution.executedPlan.toString
     assert(plan.contains("might_contain"), s"expected bloom predicate in:\n$plan")
     // small batches skip the sketch job entirely
-    val small = ix.getAll(hit.take(10))
+    val small = LocalScan.withBudget(0L)(ix.getAll(hit.take(10)))
     assert(!small.found.queryExecution.executedPlan.toString.contains("might_contain"))
     assert(pairs(small.found).map(_._1).sorted == hit.take(10).map(_.head.toString).sorted)
+    val local = ix.getAll(keys)
+    assert(local.found.isLocal && pairs(local.found).sorted == got.sorted)
   }
 
   test("overlapping manifest: every entry point falls back and stays correct") {
@@ -169,7 +173,10 @@ class OrderedReadsSpec extends SparkSuite {
       assert(got == want, s"range($incF,$incT,rev=$rev)")
     }
 
-    val q = ix.range(from, to, incFrom = true, incTo = true)
+    // the Spark path's plan (below the driver-local tier's budget the
+    // answer is a local relation)
+    assert(ix.range(from, to, incFrom = true, incTo = true).isLocal)
+    val q = LocalScan.withBudget(0L)(ix.range(from, to, incFrom = true, incTo = true))
     val plan = q.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"range must not shuffle:\n$plan")
     // inclusive bound compiles to (k > b) OR (k <=> b); both legs push down
@@ -202,7 +209,10 @@ class OrderedReadsSpec extends SparkSuite {
     for (rev <- Seq(false, true))
       assert(trip(ix.prefix(Seq[Any](7L), rev)) == trip(table.prefix(Seq[Any](7L), rev)), s"prefix($rev)")
 
-    val p = ix.prefix(Seq[Any](7L)).queryExecution.executedPlan.toString
+    // the Spark path's plan (below the driver-local tier's budget the
+    // answer is a local relation)
+    assert(ix.prefix(Seq[Any](7L)).isLocal)
+    val p = LocalScan.withBudget(0L)(ix.prefix(Seq[Any](7L))).queryExecution.executedPlan.toString
     assert(!p.contains("Exchange"), s"prefix must not shuffle:\n$p")
     // prefix prunes: only the files whose [min,max] can hold g=7
     val nScans = p.sliding("FileScan".length).count(_ == "FileScan")
