@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{Command, FsSnapshotStore, KVIndex, KeySpec, MaterializedAgg, OrderedTable, SnapshotStore}
+import graft.core.{Command, FsSnapshotStore, KVIndex, KeySpec, LocalScan, MaterializedAgg, OrderedTable, SnapshotStore}
 import graft.dedup.Dedup
 import graft.functions.{functions => gf}
 import graft.similarity.Similarity
@@ -2095,7 +2095,7 @@ object SparkEntry {
         .orderBy("idA", "idB")
     }),
     // connected components through the DISTRIBUTED min-label-propagation
-    // path (driverLimit=0 disables the driver union-find shortcut). Edges
+    // path (a driver budget of 0 disables the union-find shortcut). Edges
     // are consecutive-id chains inside fixed-size id blocks, so components
     // have diameter 7 at EVERY scale factor and the cluster label is
     // SQL-expressible: min(doc_id) of the block
@@ -2105,7 +2105,7 @@ object SparkEntry {
         .withColumn("prev", lag(col("doc_id"), 1).over(w))
         .filter(col("prev").isNotNull)
         .select(col("prev").as("idA"), col("doc_id").as("idB"))
-      Dedup.clusters(edges, driverLimit = 0L)
+      LocalScan.withBudget(0L)(Dedup.clusters(edges))
         .select(col("id").cast("long").as("id"), col("label").cast("long").as("label"))
         .orderBy("id")
     }),

@@ -21,15 +21,17 @@ import org.apache.spark.sql.functions._
   *
   * Small reads run no Spark job. When the files a read covers hold at most
   * [[LocalScan.BudgetBytes]] (manifest rows × the schema's default row
-  * size, 4 MiB), `get`, `getAll`, `range`, `gt`/`lt`, `prefix`, `nextKey`,
-  * `previousKey`, `headOrdered` and `countRange`'s boundary count decode
-  * those files on the driver while the call runs (an eager read, not a
-  * lazy plan) and return a local relation — the reference's one-leaf read
-  * (`Index.scala:813-818`). Ordered reads take this tier only on the
-  * disjoint layout, and their answer carries no declared ordering: rows
-  * arrive in key order, but a downstream `orderBy` sorts them again.
-  * Larger reads, legacy manifests without `colTypes` and the memory store
-  * keep the Spark plans below.
+  * size, 4 MiB), `get`, `getAll`, `getAllPrefix`, `range`, `gt`/`lt`,
+  * `prefix`, `nextKey`, `previousKey`, `headOrdered` and `countRange`'s
+  * boundary count decode those files on the driver while the call runs
+  * (an eager read, not a lazy plan) and return a local relation — the
+  * reference's one-leaf read (`Index.scala:813-818`). Ordered reads take
+  * this tier only on the disjoint layout, and their answer carries no
+  * declared ordering: rows arrive in key order, but a downstream
+  * `orderBy` sorts them again. Larger reads, legacy manifests without
+  * `colTypes` and the memory store keep the Spark plans below. The same
+  * budget bounds the key batch a commit collects for exact file pruning
+  * ([[LocalScan.collectBelow]]); a bigger batch prunes by its hull.
   */
 final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
                     private val maxRowsPerFile: Long = 1L << 19) {
@@ -200,94 +202,55 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * the same leaf, `Index.scala:303-306,844-845`), then a single
     * semi-join over just those files.
     */
-  def getAll(keys: Seq[Seq[Any]], mustFindAll: Boolean = false): GetResult = {
-    if (keys.isEmpty)
-      return GetResult(emptyScan(), 0L, success = true, None)
-    val sorted = keys.sorted(KeyOrd)
-    val touched = filesWhere { f =>
-      var lo = 0; var hi = sorted.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (KeyOrd.compare(sorted(mid), f.min) < 0) lo = mid + 1 else hi = mid
-      }
-      lo < sorted.length && KeyOrd.compare(sorted(lo), f.max) <= 0
-    }
-    val tier = local(touched)
-    if (tier.isDefined) return tier.get.getAll(key.cols, keys, mustFindAll)
-    val base =
-      if (touched.isEmpty) emptyScan()
-      else store.readFiles(touched.map(_.path), manifest)
-    val schema = org.apache.spark.sql.types.StructType(
-      key.cols.map(c => base.schema(c)))
-    val keysDf = localRows(keys, schema)
-    // Huge key batches additionally bloom-prefilter the SCAN side: a
-    // ~10-bits/key sketch of the batch (one tiny job over the
-    // local keysDf) rides the covering-file scans as a plan
-    // literal, so corpus rows that CANNOT match any batch key drop inside
-    // the scan's codegen stage before the semi-join shuffle — the
-    // q_bloom_join fact×dim move applied to multi-get. No false negatives,
-    // so the result is identical; small batches skip the extra job.
-    val base2 =
-      if (keys.size < 256 || touched.isEmpty) base
-      else {
-        val keyExpr =
-          if (key.cols.length == 1) col(key.cols.head)
-          else org.apache.spark.sql.functions.struct(key.cols.map(col): _*)
-        val bf = graft.operators.BloomJoin.keyFilterBytes(
-          keysDf, keyExpr, keys.size.toLong)
-        base.filter(graft.operators.BloomJoin.mightContain(bf, keyExpr))
-      }
-    OrderedTable(base2, key).getAll(keysDf, mustFindAll)
-  }
-
-  /** A key batch as a local relation: the semi-join broadcasts it without a job. */
-  private def localRows(keys: Seq[Seq[Any]],
-                        schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(keys.map(k => Row(k: _*)).asJava, schema)
-  }
+  def getAll(keys: Seq[Seq[Any]], mustFindAll: Boolean = false): GetResult =
+    keyBatch(keys, key.cols.length, mustFindAll)
 
   /** Sorted multi-PREFIX get: every row whose leading `prefixes.head.length`
     * key columns equal ANY of the probe prefixes — the bucket-probe shape
     * (e.g. LSH band lookups: thousands of (band, bucket) probes against a
-    * corpus-sized index keyed (band, bucket, id)). Manifest-pruned like
-    * [[getAll]]: one pass over sorted probes assigns the batch to its
-    * covering files (prefix-truncated file bounds, the [[prefix]]
-    * comparator convention), so cost is O(touched files + probes), never
-    * O(index). Huge probe batches bloom-prefilter the kept scans the same
-    * way [[getAll]] does.
+    * corpus-sized index keyed (band, bucket, id)). The same read as
+    * [[getAll]] over that prefix of the key, so cost is O(touched files +
+    * probes), never O(index).
     */
   def getAllPrefix(prefixes: Seq[Seq[Any]]): DataFrame = {
-    if (prefixes.isEmpty) return emptyScan()
-    val plen = prefixes.head.length
+    val plen = prefixes.headOption.fold(key.cols.length)(_.length)
     require(plen > 0 && plen <= key.cols.length, s"prefix length $plen out of range")
     require(prefixes.forall(_.length == plen), "mixed prefix lengths")
-    val sorted = prefixes.sorted(KeyOrd)
-    val touched = filesWhere { f =>
-      val fmin = f.min.take(plen); val fmax = f.max.take(plen)
-      var lo = 0; var hi = sorted.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (KeyOrd.compare(sorted(mid), fmin) < 0) lo = mid + 1 else hi = mid
-      }
-      lo < sorted.length && KeyOrd.compare(sorted(lo), fmax) <= 0
-    }
-    if (touched.isEmpty) return emptyScan()
-    val base = store.readFiles(touched.map(_.path), manifest)
-    val pcols = key.cols.take(plen)
-    val schema = org.apache.spark.sql.types.StructType(pcols.map(c => base.schema(c)))
-    val probesDf = localRows(prefixes, schema)
-    val base2 =
-      if (prefixes.size < 256) base
-      else {
-        val keyExpr =
-          if (plen == 1) col(pcols.head)
-          else org.apache.spark.sql.functions.struct(pcols.map(col): _*)
-        val bf = graft.operators.BloomJoin.keyFilterBytes(
-          probesDf, keyExpr, prefixes.size.toLong)
-        base.filter(graft.operators.BloomJoin.mightContain(bf, keyExpr))
-      }
-    base2.join(probesDf, pcols, "left_semi")
+    keyBatch(prefixes, plen, mustFindAll = false).found
+  }
+
+  /** Rows whose leading `plen` key columns equal one of `keys`: the files
+    * no batch tuple can fall in are pruned on manifest stats
+    * ([[LegPlanner.anyOf]]), the rest decode on the driver below the
+    * budget ([[LocalScan.getAll]]) or meet the batch, a local relation, in
+    * one Spark semi-join. Batches of 256 keys and more also bloom-prefilter
+    * the scans: a ~10-bits/key sketch of the batch (one tiny job) rides
+    * them as a plan literal, so rows that cannot match drop inside the
+    * scan's codegen stage before the join. No false negatives, so the
+    * answer is the same; small batches skip the extra job.
+    */
+  private def keyBatch(keys: Seq[Seq[Any]], plen: Int, mustFindAll: Boolean): GetResult = {
+    if (keys.isEmpty)
+      return GetResult(emptyScan(), 0L, success = true, None)
+    val cols = key.cols.take(plen)
+    val touched = filesWhere(LegPlanner.anyOf(keys))
+    local(touched).fold {
+      val base =
+        if (touched.isEmpty) emptyScan()
+        else store.readFiles(touched.map(_.path), manifest)
+      import scala.jdk.CollectionConverters._
+      // a local relation: the semi-join broadcasts it without a job
+      val keysDf = spark.createDataFrame(keys.map(k => Row(k: _*)).asJava,
+        org.apache.spark.sql.types.StructType(cols.map(c => base.schema(c))))
+      val kept =
+        if (keys.size < 256 || touched.isEmpty) base
+        else {
+          val keyExpr = if (plen == 1) col(cols.head) else struct(cols.map(col): _*)
+          val bf = graft.operators.BloomJoin.keyFilterBytes(keysDf, keyExpr, keys.size.toLong)
+          base.filter(graft.operators.BloomJoin.mightContain(bf, keyExpr))
+        }
+      OrderedTable(kept, KeySpec(cols)).getAll(keysDf, mustFindAll)
+    }(_.getAll(cols, keys, mustFindAll))
   }
 
   /** Range scan through the pruned read path. On the normal disjoint
@@ -656,8 +619,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     // exactly like the key set, and the distinct cost an exchange +
     // aggregate job on EVERY commit (streaming micro-batches pay it per
     // batch; a MemoryStream batch is otherwise a local scan whose take
-    // launches no shuffle). Duplicate-heavy batches above the 100k take
-    // cap fall to the min/max hull sooner — the hull is the documented
+    // launches no shuffle). Duplicate-heavy batches above the driver
+    // bound fall to the min/max hull sooner — the hull is the documented
     // conservative path for large batches either way.
     val allBatchKeys = cmds.map(c => c.rows.select(key.cols.map(col): _*))
       .reduce(_ unionByName _)
@@ -688,50 +651,59 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         val next = BatchFold.lastWriters(cmds, cur, key, manifest.valueCols, txVersion,
           manifest.readSchema)
         val (_, newFiles) = store.writeData(manifest.id, next, key, nParts)
-        val untouchedRows = untouched.map(_.rows).sum
-        val m2 = manifest.copy(
-          version = manifest.version + 1,
-          snapshotId = UUID.randomUUID().toString,
-          numElements = untouchedRows + newFiles.map(_.rows).sum,
-          lastChangeVersion = txVersion,
-          files = (untouched ++ newFiles).sortBy(_.min)(KeyOrd),
-          filesRef = None, disjointHint = None)
-        try BatchResult(success = true, None,
-          Some(store.commit(m2, manifest.version, recordHistory)), counts)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          BatchResult(success = false, Some(GraftError.ContextAlreadyUsed(manifest.id)), None)
-        }
+        commitNext(untouched ++ newFiles, counts, recordHistory,
+          untouched.map(_.rows).sum + newFiles.map(_.rows).sum, txVersion)
     }
   }
 
+  /** Commit `files` as version `parent+1` under the CREATE_NEW
+    * single-writer CAS — a lost CAS is CONTEXT_ALREADY_USED — reporting
+    * `counts` as the batch's row counts. The element count and change
+    * version stay the parent's unless given.
+    */
+  private def commitNext(files: Seq[FileEntry], counts: Seq[Long], recordHistory: Boolean,
+                         numElements: Long = manifest.numElements,
+                         txVersion: String = manifest.lastChangeVersion): BatchResult = {
+    val m2 = manifest.copy(
+      version = manifest.version + 1,
+      snapshotId = UUID.randomUUID().toString,
+      numElements = numElements,
+      lastChangeVersion = txVersion,
+      files = files.sortBy(_.min)(KeyOrd),
+      filesRef = None, disjointHint = None)
+    try BatchResult(success = true, None,
+      Some(store.commit(m2, manifest.version, recordHistory)), counts)
+    catch { case _: java.nio.file.FileAlreadyExistsException =>
+      BatchResult(success = false, Some(GraftError.ContextAlreadyUsed(manifest.id)), None)
+    }
+  }
+
+  /** `fs` split into the files lying wholly inside the range (every row
+    * passes it, bound inclusivity honoured) and the boundary files.
+    */
+  private def insideRange(fs: Seq[FileEntry], from: Seq[Any], to: Seq[Any],
+                          incFrom: Boolean, incTo: Boolean): (Seq[FileEntry], Seq[FileEntry]) =
+    fs.partition { f =>
+      val lo = KeyOrd.compare(from, f.min); val hi = KeyOrd.compare(f.max, to)
+      (lo < 0 || (incFrom && lo == 0)) && (hi < 0 || (incTo && hi == 0))
+    }
+
   /** Manifest-pruned file set: a file is touched iff some batch key falls in
     * its [min,max] — the findPath descent (reference `Index.scala:85-99`)
-    * done on manifest stats. Small batches are decided driver-side exactly;
-    * big batches fall back to the batch hull.
+    * done on manifest stats. A batch the driver may hold
+    * ([[LocalScan.collectBelow]]: one early-stopping take decides AND
+    * fetches the keys) is decided exactly; a bigger one falls back to the
+    * batch hull.
     */
   private def pruneFiles(batchKeys: DataFrame): (Seq[FileEntry], Seq[FileEntry]) = {
     if (files.isEmpty) return (Nil, Nil)
-    // one early-stopping take decides small-vs-hull AND fetches the keys
-    // (the previous limit+count probe plus full collect was two jobs)
-    val taken = batchKeys.take(100001)
-    if (taken.length <= 100000) {
-      val keys = taken.map(_.toSeq).sortBy(identity)(KeyOrd)
-      def containsAny(f: FileEntry): Boolean = {
-        // binary search for first key >= f.min; touched iff it's <= f.max
-        var lo = 0; var hi = keys.length
-        while (lo < hi) {
-          val mid = (lo + hi) >>> 1
-          if (KeyOrd.compare(keys(mid), f.min) < 0) lo = mid + 1 else hi = mid
-        }
-        lo < keys.length && KeyOrd.compare(keys(lo), f.max) <= 0
-      }
-      files.partition(containsAny)
-    } else {
-      val hull = batchKeys.agg(
-        min(struct(key.cols.map(col): _*)), max(struct(key.cols.map(col): _*))).head()
-      val lo = hull.getStruct(0).toSeq; val hi = hull.getStruct(1).toSeq
-      files.partition(f =>
-        KeyOrd.compare(f.min, hi) <= 0 && KeyOrd.compare(f.max, lo) >= 0)
+    LocalScan.collectBelow(batchKeys) match {
+      case Some(taken) => files.partition(LegPlanner.anyOf(taken.map(_.toSeq).toSeq))
+      case None =>
+        val hull = batchKeys.agg(
+          min(struct(key.cols.map(col): _*)), max(struct(key.cols.map(col): _*))).head()
+        files.partition(LegPlanner.covering(Some(hull.getStruct(0).toSeq),
+          Some(hull.getStruct(1).toSeq)))
     }
   }
 
@@ -773,16 +745,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     val rows = small.map(_.rows).sum
     val nParts = math.max(1, math.ceil(rows.toDouble / targetRowsPerFile).toInt)
     val (_, newFiles) = store.writeData(manifest.id, df, key, nParts)
-    val m2 = manifest.copy(
-      version = manifest.version + 1,
-      snapshotId = UUID.randomUUID().toString,
-      files = (big ++ newFiles).sortBy(_.min)(KeyOrd),
-      filesRef = None, disjointHint = None)
-    try BatchResult(success = true, None,
-      Some(store.commit(m2, manifest.version, recordHistory)))
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      BatchResult(success = false, Some(GraftError.ContextAlreadyUsed(manifest.id)), None)
-    }
+    commitNext(big ++ newFiles, Nil, recordHistory)
   }
 
   /** Exact range count at manifest cost — the aggregate twin of the A1
@@ -799,13 +762,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     val overlap = filesWhere(f =>
       KeyOrd.compare(f.min, to) <= 0 && KeyOrd.compare(f.max, from) >= 0)
     if (overlap.isEmpty) return 0L
-    val (covered, boundary) = overlap.partition { f =>
-      val loIn = KeyOrd.compare(from, f.min) < 0 ||
-        (incFrom && KeyOrd.compare(from, f.min) == 0)
-      val hiIn = KeyOrd.compare(f.max, to) < 0 ||
-        (incTo && KeyOrd.compare(f.max, to) == 0)
-      loIn && hiIn
-    }
+    val (covered, boundary) = insideRange(overlap, from, to, incFrom, incTo)
     val inRange = key.gtKey(from, orEq = incFrom) && key.ltKey(to, orEq = incTo)
     val boundaryN =
       if (boundary.isEmpty) 0L
@@ -839,13 +796,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     if (overlap.isEmpty)
       return BatchResult(success = true, None, Some(manifest))
     // fully-covered files are dropped without being read
-    val (dropped, boundary) = overlap.partition { f =>
-      val loIn = KeyOrd.compare(from, f.min) < 0 ||
-        (incFrom && KeyOrd.compare(from, f.min) == 0)
-      val hiIn = KeyOrd.compare(f.max, to) < 0 ||
-        (incTo && KeyOrd.compare(f.max, to) == 0)
-      loIn && hiIn
-    }
+    val (dropped, boundary) = insideRange(overlap, from, to, incFrom, incTo)
     val rewritten: Seq[FileEntry] =
       if (boundary.isEmpty) Nil
       else {
@@ -871,18 +822,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       }
     val removed = dropped.map(_.rows).sum +
       boundary.map(_.rows).sum - rewritten.map(_.rows).sum
-    val m2 = manifest.copy(
-      version = manifest.version + 1,
-      snapshotId = UUID.randomUUID().toString,
-      numElements = manifest.numElements - removed,
-      lastChangeVersion = txVersion,
-      files = (keep ++ rewritten).sortBy(_.min)(KeyOrd),
-      filesRef = None, disjointHint = None)
-    try BatchResult(success = true, None, Some(store.commit(m2, manifest.version)),
-      Seq(removed))
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      BatchResult(success = false, Some(GraftError.ContextAlreadyUsed(manifest.id)), None)
-    }
+    commitNext(keep ++ rewritten, Seq(removed), recordHistory = false,
+      manifest.numElements - removed, txVersion)
   }
 
   /** Exact [min, max] key-tuple bounds of the snapshot from manifest file
@@ -904,19 +845,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * catalog surface land here. Same CREATE_NEW single-writer CAS as
     * [[execute]].
     */
-  def truncate(txVersion: String = UUID.randomUUID().toString): BatchResult = {
-    val m2 = manifest.copy(
-      version = manifest.version + 1,
-      snapshotId = UUID.randomUUID().toString,
-      numElements = 0L,
-      lastChangeVersion = txVersion,
-      files = Nil, filesRef = None, disjointHint = None)
-    try BatchResult(success = true, None, Some(store.commit(m2, manifest.version)),
-      Seq(manifest.numElements))
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      BatchResult(success = false, Some(GraftError.ContextAlreadyUsed(manifest.id)), None)
-    }
-  }
+  def truncate(txVersion: String = UUID.randomUUID().toString): BatchResult =
+    commitNext(Nil, Seq(manifest.numElements), recordHistory = false, 0L, txVersion)
 
   /** Export this snapshot into a hash-BUCKETED table on the session
     * catalog — the one-time layout conversion that makes every subsequent

@@ -28,6 +28,26 @@ private[graft] object LegPlanner {
   /** Files that may hold keys starting with `p`. */
   def prefix(p: Seq[Any]): FileEntry => Boolean = covering(Some(p), Some(p))
 
+  /** Files that may hold a key starting with one of `keys` (tuples of one
+    * length, a full key or a leading prefix): a binary search over the
+    * sorted batch for the first tuple at or above the file's truncated
+    * min, kept when it is at or below the truncated max. A plain
+    * serializable function, like [[covering]].
+    */
+  def anyOf(keys: Seq[Seq[Any]]): FileEntry => Boolean = {
+    val sorted = keys.sorted(KeyOrd).toVector
+    val len = sorted.headOption.fold(0)(_.length)
+    f => {
+      val fmin = f.min.take(len)
+      var lo = 0; var hi = sorted.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (KeyOrd.compare(sorted(mid), fmin) < 0) lo = mid + 1 else hi = mid
+      }
+      lo < sorted.length && KeyOrd.compare(sorted(lo), f.max.take(len)) <= 0
+    }
+  }
+
   /** Files lying STRICTLY inside the bounds: no row of theirs can fail an
     * inclusive or strict predicate on either bound.
     */

@@ -40,21 +40,40 @@ import org.apache.spark.sql.types.StructType
   * has a typed manifest, and the store can hand the files to the driver as
   * local parquet ([[SnapshotStore.localParquet]]: the filesystem and JDBC
   * stores; the memory store's frames cost a job to read anyway).
+  *
+  * The same budget is the one driver bound of the library: every "is this
+  * input small enough to hold on the driver?" decision goes through
+  * [[collectBelow]] — the driver folds of `WordPiece.train`,
+  * `Unigram.train` and `Dedup.clusters`, the churn keys of `Scd2.refresh`,
+  * the band probes of `EventStreams.streamNearDupIngest` and the exact
+  * file pruning of a commit's key batch in `KVIndex.execute`.
   */
 private[graft] object LocalScan {
-  /** Largest covering read the tier decodes, in estimated bytes
-    * (manifest rows × `readSchema.defaultSize`). Set from the measured
-    * crossover between a driver decode and one Spark job over the same
-    * files (CHANGES.md has the table).
+  /** Largest input the driver holds, in estimated bytes: rows ×
+    * `schema.defaultSize`, manifest rows for a covering read and collected
+    * rows for [[collectBelow]]. Set from the measured crossover between a
+    * driver decode and one Spark job over the same files (CHANGES.md has
+    * the table).
     */
   val BudgetBytes: Long = 4L << 20
 
   private val budget = new scala.util.DynamicVariable[Long](BudgetBytes)
 
-  /** Run `f` with the tier's budget at `bytes` (0 = always Spark,
-    * `Long.MaxValue` = always local): the seam specs compare both tiers by.
+  /** Run `f` with the budget at `bytes` (0 = always Spark, `Long.MaxValue`
+    * = always the driver): the seam specs compare both sides by. A thread
+    * started inside `f` (a streaming query) inherits it.
     */
   private[graft] def withBudget[A](bytes: Long)(f: => A): A = budget.withValue(bytes)(f)
+
+  /** All rows of `df` when at most `budget / df.schema.defaultSize` of
+    * them exist, else None — one bounded `limit(n + 1).collect()`, so the
+    * driver never holds more than one row past the bound.
+    */
+  def collectBelow(df: DataFrame): Option[Array[Row]] = {
+    val n = math.min(budget.value / math.max(1, df.schema.defaultSize), Int.MaxValue - 1L).toInt
+    if (n <= 0) None
+    else Some(df.limit(n + 1).collect()).filter(_.length <= n)
+  }
 
   /** The tier over `fs` (in manifest order) of `m`, when it serves them. */
   def apply(store: SnapshotStore, m: SnapshotManifest, fs: Seq[FileEntry]): Option[LocalScan] =
@@ -140,10 +159,11 @@ private[graft] final class LocalScan(spark: SparkSession, schema: StructType,
     n
   }
 
-  /** Multi-get: rows whose key is one of `keys`, by membership of the key
-    * projection in a hash set of the batch keys (nulls never match, as in
-    * the semi-join of the Spark path). With `mustFindAll`, the missing
-    * batch keys are counted and the first five in key order listed.
+  /** Multi-get: rows whose `keyCols` (the key or a leading prefix of it)
+    * equal one of `keys`, by membership of that projection in a hash set
+    * of the batch (nulls never match, as in the semi-join of the Spark
+    * path). With `mustFindAll`, the missing batch keys are counted and the
+    * first five in key order listed.
     */
   def getAll(keyCols: Seq[String], keys: Seq[Seq[Any]], mustFindAll: Boolean): GetResult = {
     val keyIdx = keyCols.map(schema.fieldIndex)

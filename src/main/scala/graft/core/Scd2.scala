@@ -139,14 +139,13 @@ object Scd2 {
     * the new span: the new-step diffs are churn-sized, the view read is
     * PRUNED to the files covering the churned keys (their leading-key
     * prefix of the view's own (key…, valid_from) layout — full-scan
-    * fallback only past `maxDriverChurnKeys` distinct keys),
+    * fallback only past the driver bound, [[LocalScan.collectBelow]]),
     * the interval re-assembly windows only seed+churn events, and the
     * whole replacement commits as ONE Remove+Insert batch — untouched
     * keys' files ride COW unchanged. No-op (same index) when already
     * current.
     */
-  def refresh(store: SnapshotStore, viewId: String,
-              maxDriverChurnKeys: Int = 1 << 16): Either[GraftError, KVIndex] =
+  def refresh(store: SnapshotStore, viewId: String): Either[GraftError, KVIndex] =
     KVIndex.open(store, viewId).map { view =>
       val (srcId, v0) = sourceOf(view.manifest)
       val newVs = store.historyLog(srcId).map(_._2).distinct.sorted.filter(_ > v0)
@@ -169,15 +168,11 @@ object Scd2 {
           // LEADING-KEY PREFIX of its layout: when the churn batch is
           // driver-safe, [[KVIndex.getAllPrefix]] prunes the read to the
           // covering view FILES — a tiny churn against a 100-TB history
-          // reads O(churn) files, never the whole view. Bigger churn
-          // (> maxDriverChurnKeys distinct keys) falls back to the full
-          // scan + semi-shaped join, which is amortized precisely when
-          // churn is corpus-scale.
-          val churnRows = churnKeys.limit(maxDriverChurnKeys + 1).collect()
-          val openRows =
-            if (churnRows.length <= maxDriverChurnKeys)
-              view.getAllPrefix(churnRows.toSeq.map(_.toSeq))
-            else view.df.join(churnKeys, kcols)
+          // reads O(churn) files, never the whole view. Churn past the
+          // driver bound falls back to the full scan + semi-shaped join,
+          // which is amortized precisely when churn is corpus-scale.
+          val openRows = LocalScan.collectBelow(churnKeys).fold(
+            view.df.join(churnKeys, kcols))(rs => view.getAllPrefix(rs.toSeq.map(_.toSeq)))
           // seed is consumed by the assembly AND the Remove command —
           // persisting it is what makes "the view is read ONCE" true
           val seed = openRows.filter(col("valid_to").isNull)

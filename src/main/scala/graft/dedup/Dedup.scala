@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.core.LocalScan
 import graft.functions.{functions => gf}
 
 /** Deduplication operators for a training-data pipeline. Five strategies,
@@ -242,25 +243,25 @@ object Dedup {
     * diameters near 2^10, far beyond adversarial near-dup chains.
     * If the loop still exits hot it THROWS rather than silently returning
     * partially-propagated labels (wrong clusters are worse than no
-    * clusters at 100 TB).
+    * clusters at 100 TB). Pairs within the driver bound
+    * ([[LocalScan.collectBelow]]) skip the loop: one bounded take feeds a
+    * driver union-find, and a budget of 0 forces the distributed path.
     * Returns (id, cluster); nodes absent from any pair are not returned
     * (they are their own singleton cluster).
     */
   def clusters(pairs: DataFrame, idACol: String = "idA", idBCol: String = "idB",
-               maxIter: Int = 10, driverLimit: Long = 1000000L): DataFrame = {
-    // near-dup candidate pairs are tiny relative to the corpus: below
-    // `driverLimit` run union-find on the driver (one job) instead of
-    // paying per-iteration job overhead; the distributed label
-    // propagation below is the >10^6-pairs path.
+               maxIter: Int = 10): DataFrame = {
+    // near-dup candidate pairs are tiny relative to the corpus: a driver
+    // union-find saves the loop's per-iteration job overhead
     val spark = pairs.sparkSession
-    // the pair plan is usually an LSH self-join — persist so the size probe
-    // and the subsequent consumption don't run it twice
+    // the pair plan is usually an LSH self-join — persist so the bounded
+    // take and a distributed fallback don't run it twice
     val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nPairs = p.limit((driverLimit + 1).toInt).count()
-    if (nPairs <= driverLimit) {
+    val small = LocalScan.collectBelow(
+      p.select(col(idACol).cast("long"), col(idBCol).cast("long")))
+    if (small.isDefined) {
       import spark.implicits._
-      val es = p.select(col(idACol).cast("long"), col(idBCol).cast("long"))
-        .as[(Long, Long)].collect()
+      val es = small.get.map(r => (r.getLong(0), r.getLong(1)))
       p.unpersist()
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {

@@ -417,8 +417,8 @@ object Similarity {
     * brute-force batch): its rows are collected to rank cells per query on
     * the driver — nQueries × nCells cosine ops. The contract is ENFORCED:
     * more than `maxQueries` rows raise [[BatchTooLargeException]] instead
-    * of silently OOMing the driver (same stance as `streamNearDupIngest`'s
-    * `maxDriverProbes`); split a bigger batch or raise the bound knowingly.
+    * of silently OOMing the driver; split a bigger batch or raise the bound
+    * knowingly (it rejects: there is no distributed path to fall back to).
     */
   final class BatchTooLargeException(n: Int)
     extends IllegalArgumentException(

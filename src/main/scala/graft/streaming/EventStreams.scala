@@ -351,15 +351,13 @@ object EventStreams {
     * costs only re-derivable band rows). Identical signatures match at
     * rate 1.0, so near-dup ingest subsumes exact dedup.
     *
-    * Batches whose distinct band keys exceed `maxDriverProbes` fall back
-    * to scanning the band snapshot with the bucket join (correct, just
-    * not file-pruned) — the documented bound on driver-side probe
-    * collection, same trade as `getAll`'s key batch.
+    * Batches whose distinct band keys exceed the driver bound
+    * ([[graft.core.LocalScan.collectBelow]]) fall back to scanning the
+    * band snapshot with the bucket join (correct, just not file-pruned).
     */
   def streamNearDupIngest(stream: DataFrame, store: graft.core.SnapshotStore,
                           docsId: String, bandsId: String, keyCols: Seq[String],
                           textCol: String = "text", threshold: Double = 0.5,
-                          maxDriverProbes: Int = 200000,
                           compactAboveFiles: Int = 16,
                           stats: IngestStats = new IngestStats): org.apache.spark.sql.streaming.StreamingQuery =
     stream.writeStream
@@ -384,12 +382,9 @@ object EventStreams {
             } else {
               val docsIx = KVIndex.open(store, docsId).fold(e => sys.error(e.message), identity)
               val bandsIx = KVIndex.open(store, bandsId).fold(e => sys.error(e.message), identity)
-              val probeRows = bandsOf(withinBatch).select("band", "bucket")
-                .distinct().limit(maxDriverProbes + 1).collect()
-              val corpusSlice =
-                if (probeRows.length > maxDriverProbes) bandsIx.df // fallback: full band scan
-                else bandsIx.getAllPrefix(
-                  probeRows.map(r => Seq[Any](r.get(0), r.get(1))).toSeq)
+              val corpusSlice = LocalScan.collectBelow(
+                  bandsOf(withinBatch).select("band", "bucket").distinct())
+                .fold(bandsIx.df)(rs => bandsIx.getAllPrefix(rs.toSeq.map(_.toSeq)))
               val news = Dedup.incrementalNearDupSurvivors(
                   withinBatch, corpusSlice, keyCols.head, textCol, threshold = threshold)
                 .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

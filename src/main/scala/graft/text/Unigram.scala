@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.core.LocalScan
 import graft.functions.{functions => gf}
 
 /** Unigram-LM subword tokenizer (SentencePiece's unigram model, Kudo
@@ -63,63 +64,60 @@ object Unigram {
     */
   def train(df: DataFrame, textCol: String = "text", vocabSize: Int = 1000,
             maxPieceLen: Int = 8, seedFactor: Int = 4, shrink: Double = 0.75,
-            maxRounds: Int = 16, finalRounds: Int = 2,
-            driverLimit: Int = 100000): Model = {
+            maxRounds: Int = 16, finalRounds: Int = 2): Model = {
     require(vocabSize >= 1 && maxPieceLen >= 1 && seedFactor >= 1)
     require(shrink > 0 && shrink < 1 && maxRounds >= 1 && finalRounds >= 0)
     val wordsBase = df
       .select(explode(gf.ws_tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cnt"))
     // DRIVER-LOCAL EM when the word table is bounded: every round's
-    // quantity is a function of (word, count) rows, so below `driverLimit`
-    // rows ONE bounded take replaces the seed aggregate plus maxRounds
-    // per-round jobs. The local counts provider calls the SAME kernel
-    // instances (CodePointPieces / UnigramEncode.encodeWord) the
-    // distributed explode evaluates, so the two paths are the same
-    // function (UnigramSpec pins them bit-identical). Above the limit the
-    // distributed loop runs unchanged; driverLimit = 0 forces it (the
-    // Dedup.clusters / WordPiece.train driverLimit stance).
-    if (driverLimit > 0) {
-      val take = wordsBase.limit(driverLimit + 1).collect()
-      if (take.length <= driverLimit) {
-        val local = take.map(r => (r.getString(0), r.getLong(1)))
-        val gen = CodePointPieces(Shim.expr(lit("")), maxPieceLen)
-        def seed(): Seq[(String, Long)] = {
-          val acc = scala.collection.mutable.HashMap.empty[String, Long]
-          for ((w, cnt) <- local) {
-            val arr = gen.nullSafeEval(UTF8String.fromString(w))
-              .asInstanceOf[GenericArrayData]
-            var i = 0
-            while (i < arr.numElements()) {
-              val p = arr.getUTF8String(i).toString
-              acc.update(p, acc.getOrElse(p, 0L) + cnt)
-              i += 1
-            }
-          }
-          acc.toSeq
-        }
-        def counts(model: Model): Map[String, Long] = {
-          val enc = UnigramEncode(Shim.expr(lit("")), model)
-          val acc = scala.collection.mutable.HashMap.empty[String, Long]
-          for ((w, cnt) <- local; p <- enc.encodeWord(w))
+    // quantity is a function of (word, count) rows, so below the driver
+    // bound ([[LocalScan.collectBelow]]) ONE bounded take replaces the
+    // seed aggregate plus maxRounds per-round jobs. The local counts
+    // provider calls the SAME kernel instances (CodePointPieces /
+    // UnigramEncode.encodeWord) the distributed explode evaluates, so the
+    // two paths are the same function (UnigramSpec pins them
+    // bit-identical). Above the bound the distributed loop runs
+    // unchanged; a budget of 0 forces it.
+    val small = LocalScan.collectBelow(wordsBase)
+    if (small.isDefined) {
+      val local = small.get.map(r => (r.getString(0), r.getLong(1)))
+      val gen = CodePointPieces(Shim.expr(lit("")), maxPieceLen)
+      def seed(): Seq[(String, Long)] = {
+        val acc = scala.collection.mutable.HashMap.empty[String, Long]
+        for ((w, cnt) <- local) {
+          val arr = gen.nullSafeEval(UTF8String.fromString(w))
+            .asInstanceOf[GenericArrayData]
+          var i = 0
+          while (i < arr.numElements()) {
+            val p = arr.getUTF8String(i).toString
             acc.update(p, acc.getOrElse(p, 0L) + cnt)
-          acc.toMap
+            i += 1
+          }
         }
-        // top-seedSize by (n desc, p asc in UTF8 binary order — exactly
-        // what the distributed orderBy(desc("n"), asc("p")) compares) +
-        // the single-code-point coverage floor
-        val seedCounts = seed()
-        val seedSize =
-          math.max(vocabSize.toLong * seedFactor, vocabSize + 1L).toInt
-        val top = seedCounts.sortWith { (u, v) =>
-          if (u._2 != v._2) u._2 > v._2
-          else UTF8String.fromString(u._1).compareTo(UTF8String.fromString(v._1)) < 0
-        }.take(seedSize)
-        val singles = seedCounts.filter { case (p, _) =>
-          p.length == Character.charCount(p.codePointAt(0)) }
-        return trainRounds(combineSeed(top, singles), counts, vocabSize,
-          maxPieceLen, shrink, maxRounds, finalRounds)
+        acc.toSeq
       }
+      def counts(model: Model): Map[String, Long] = {
+        val enc = UnigramEncode(Shim.expr(lit("")), model)
+        val acc = scala.collection.mutable.HashMap.empty[String, Long]
+        for ((w, cnt) <- local; p <- enc.encodeWord(w))
+          acc.update(p, acc.getOrElse(p, 0L) + cnt)
+        acc.toMap
+      }
+      // top-seedSize by (n desc, p asc in UTF8 binary order — exactly
+      // what the distributed orderBy(desc("n"), asc("p")) compares) +
+      // the single-code-point coverage floor
+      val seedCounts = seed()
+      val seedSize =
+        math.max(vocabSize.toLong * seedFactor, vocabSize + 1L).toInt
+      val top = seedCounts.sortWith { (u, v) =>
+        if (u._2 != v._2) u._2 > v._2
+        else UTF8String.fromString(u._1).compareTo(UTF8String.fromString(v._1)) < 0
+      }.take(seedSize)
+      val singles = seedCounts.filter { case (p, _) =>
+        p.length == Character.charCount(p.codePointAt(0)) }
+      return trainRounds(combineSeed(top, singles), counts, vocabSize,
+        maxPieceLen, shrink, maxRounds, finalRounds)
     }
     val words = wordsBase
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -8,6 +8,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graft.Shim
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+import graft.core.LocalScan
 import graft.functions.{functions => gf}
 
 /** WordPiece subword tokenizer — the third member of the tokenizer trio
@@ -55,7 +56,7 @@ object WordPiece {
     */
   def train(df: DataFrame, textCol: String = "text", numMerges: Int = 60,
             minCount: Long = 2L, sampleFraction: Double = 1.0,
-            seed: Long = 42L, driverLimit: Int = 100000): Seq[String] = {
+            seed: Long = 42L): Seq[String] = {
     require(numMerges >= 0 && minCount >= 1)
     require(sampleFraction > 0.0 && sampleFraction <= 1.0, "sampleFraction in (0, 1]")
     val spark = df.sparkSession
@@ -73,21 +74,19 @@ object WordPiece {
         col("cnt"))
     // DRIVER-LOCAL fold when the word-shape table is bounded: every
     // per-round quantity is a function of (symbol array, count) rows —
-    // ≤ |distinct words| of them, corpus-size-independent — so below
-    // `driverLimit` rows ONE bounded take replaces the alphabet job plus
-    // numMerges per-round aggregate jobs (each a full scheduler round
-    // trip for a tiny scan). Same counting, same argmax total order, same
-    // FusePair fold — WordPieceSpec pins the two paths bit-identical.
-    // Above the limit (real web corpora have unbounded distinct-word
-    // counts; the Dedup.clusters driverLimit stance) the distributed
-    // loop below runs unchanged; driverLimit = 0 forces it.
-    if (driverLimit > 0) {
-      val take = curBase.limit(driverLimit + 1).collect()
-      if (take.length <= driverLimit)
-        return trainLocal(
-          take.map(r => (r.getSeq[String](0).toArray, r.getLong(1))),
-          numMerges, minCount)
-    }
+    // ≤ |distinct words| of them, corpus-size-independent — so below the
+    // driver bound ([[LocalScan.collectBelow]]) ONE bounded take replaces
+    // the alphabet job plus numMerges per-round aggregate jobs (each a
+    // full scheduler round trip for a tiny scan). Same counting, same
+    // argmax total order, same FusePair fold — WordPieceSpec pins the two
+    // paths bit-identical. Above the bound (real web corpora have
+    // unbounded distinct-word counts) the distributed loop below runs
+    // unchanged; a budget of 0 forces it.
+    val small = LocalScan.collectBelow(curBase)
+    if (small.isDefined)
+      return trainLocal(
+        small.get.map(r => (r.getSeq[String](0).toArray, r.getLong(1))),
+        numMerges, minCount)
     var cur = curBase.localCheckpoint(true)
     val alphabet = cur.select(explode(col("sym")).as("s")).distinct()
       .orderBy("s").as[String].collect().toSeq
@@ -139,8 +138,8 @@ object WordPiece {
     vocab.result()
   }
 
-  /** Driver-local twin of the distributed training loop, used below
-    * `driverLimit` word shapes: identical uni/pair counting (Long sums),
+  /** Driver-local twin of the distributed training loop, used below the
+    * driver bound: identical uni/pair counting (Long sums),
     * identical score arithmetic and argmax total order, and [[fuseLocal]]
     * is [[FusePair]]'s scan verbatim — the two paths produce the same
     * vocabulary bit for bit (spec-pinned).

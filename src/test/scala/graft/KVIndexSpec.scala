@@ -252,6 +252,31 @@ abstract class KVIndexSpecBase extends SparkSuite {
     assert(narrow.found.collect().length == 2)
   }
 
+  test("commit pruning: the batch hull (budget 0) and the exact key set commit the same snapshot") {
+    val store = newStore()
+    // keys at both ends and one in the middle: the hull spans every file
+    // between them, the exact set touches three
+    def commit(id: String, budget: Long) = {
+      val ix = boot(store, id)
+      val res = LocalScan.withBudget(budget)(ix.execute(Seq(
+        Command.Insert(kv(Seq("k0003" -> "a", "k0090" -> "b", "k0050x" -> "c")), upsert = true),
+        Command.Remove(Seq("k0042").toDF("k")))))
+      assert(res.success, s"budget $budget")
+      val m = res.snapshot.get
+      val (kept, touched) = ix.manifest.files.partition(f => m.files.exists(_.path == f.path))
+      // commandRowCounts are touched-range row counts: compared net of the
+      // range each path touched, they are the per-command deltas
+      (dump(new KVIndex(store, m)), m.numElements,
+        res.commandRowCounts.map(_ - touched.map(_.rows).sum), kept.size)
+    }
+    val (hull, hullN, hullDeltas, hullKept) = commit("hull", 0L)
+    val (exact, exactN, exactDeltas, exactKept) = commit("exact", LocalScan.BudgetBytes)
+    assert(hull == exact && hullN == exactN && hullDeltas == exactDeltas)
+    assert(exactDeltas == Seq(1L, 0L))
+    assert(exact.size == 100 && exact("k0090") == "b" && !exact.contains("k0042"))
+    assert(hullKept < exactKept, s"hull kept $hullKept files, exact $exactKept")
+  }
+
   test("findFile / nextKeyFile / previousKeyFile locate blocks via manifest stats") {
     val store = newStore()
     val ix = boot(store, "tf") // 100 rows, files of ≤32, sorted by min

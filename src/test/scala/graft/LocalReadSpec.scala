@@ -13,9 +13,9 @@ import graft.core._
   * read decodes its covering files on the driver and returns a local
   * relation, so `collect()` runs no Spark job. Every read must answer
   * exactly as the Spark path does (budget 0 against budget ∞) — rows and
-  * their order, counts, missing keys — across types, null key components,
-  * reverse reads, empty answers, the overlapping layout, a legacy manifest
-  * and both parquet reader modes.
+  * their order, counts, missing keys, prefix batches — across types, null
+  * key components, reverse reads, empty answers, the overlapping layout, a
+  * legacy manifest and both parquet reader modes.
   */
 abstract class LocalReadSpecBase extends SparkSuite {
   import spark.implicits._
@@ -80,7 +80,7 @@ abstract class LocalReadSpecBase extends SparkSuite {
       val r = ix.getAll(batch, mustFindAll = must)
       s"getAll $must" -> ((rows(r.found).map(_.toString).sorted, r.missing, r.success,
         r.error.map(_.message)))
-    }
+    } :+ ("getAllPrefix" -> rows(ix.getAllPrefix(prefixes)).map(_.toString).sorted)
   }
 
   /** Both tiers give identical answers, in both reader modes. */

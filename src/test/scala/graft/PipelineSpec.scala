@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.LocalScan
 import graft.dedup.Dedup
 import graft.similarity.Similarity
 import graft.text.TextAnalysis
@@ -60,13 +61,31 @@ class PipelineSpec extends SparkSuite {
 
   test("clusters: transitive closure over chained pairs (both paths)") {
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (10L, 11L)).toDF("idA", "idB")
-    for (limit <- Seq(1000000L, 0L)) { // driver union-find AND distributed
-      val labeled = Dedup.clusters(pairs, driverLimit = limit)
+    for (budget <- Seq(LocalScan.BudgetBytes, 0L)) { // driver union-find AND distributed
+      val labeled = LocalScan.withBudget(budget)(Dedup.clusters(pairs))
         .as[(Long, Long)].collect().toMap
       assert(labeled(1L) == 1L && labeled(2L) == 1L && labeled(3L) == 1L && labeled(4L) == 1L,
-        s"path limit=$limit")
+        s"path budget=$budget")
       assert(labeled(10L) == 10L && labeled(11L) == 10L)
     }
+  }
+
+  test("clusters: the driver path is one Spark job, the bounded take of the pairs") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // one partition, as AQE leaves a small pair set after its coalescing
+    // (a take over more partitions scans 1, then up to 4x more per job)
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("idA", "idB").coalesce(1)
+    Thread.sleep(300) // the listener bus is async: let earlier jobs drain
+    spark.sparkContext.addSparkListener(listener)
+    val labeled =
+      try { val l = Dedup.clusters(pairs).as[(Long, Long)].collect().toMap; Thread.sleep(300); l }
+      finally spark.sparkContext.removeSparkListener(listener)
+    assert(labeled == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+    assert(jobs.get == 1, s"driver path ran ${jobs.get} jobs")
   }
 
   test("nearDupSurvivors keeps one doc per near-dup cluster") {

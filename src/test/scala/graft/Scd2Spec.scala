@@ -190,13 +190,19 @@ class Scd2Spec extends SparkSuite {
     }
   }
 
-  /** FS store double recording which data files each readFiles call opens. */
+  /** FS store double recording which data files each read opens, on
+    * Spark (readFiles) and on the driver (localParquet).
+    */
   private class RecordingFsStore(root0: String) extends FsSnapshotStore(root0, spark) {
     val reads = scala.collection.mutable.ArrayBuffer.empty[Seq[String]]
     override def readFiles(paths: Seq[String],
                            m: SnapshotManifest): org.apache.spark.sql.DataFrame = {
       reads += paths
       super.readFiles(paths, m)
+    }
+    override private[graft] def localParquet(paths: Seq[String]): Option[Seq[String]] = {
+      reads += paths
+      super.localParquet(paths)
     }
   }
 
@@ -232,12 +238,12 @@ class Scd2Spec extends SparkSuite {
           if (r.isNullAt(3)) None else Some(r.getLong(3)))).toSet
     assert(content(v1) == rebuilt(), "pruned refresh")
 
-    // corpus-scale churn path: maxDriverChurnKeys = 0 forces the
+    // corpus-scale churn path: a driver budget of 0 forces the
     // full-scan + semi-join fallback — same converged view
     val m3 = new KVIndex(store, m2).execute(Seq(Command.Insert(
       Seq(9L -> 7770L, 123L -> 6660L).toDF("k", "x"), upsert = true))).orThrow
     store.recordSnapshot("p", m3.version, 20L)
-    val v2 = Scd2.refresh(store, "pview", maxDriverChurnKeys = 0)
+    val v2 = LocalScan.withBudget(0L)(Scd2.refresh(store, "pview"))
       .fold(e => fail(e.message), identity)
     assert(content(v2) == rebuilt(), "fallback refresh")
   }

@@ -265,6 +265,40 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("near-dup ingest: the pruned band probe and the full band-scan fallback keep the same survivors") {
+    import graft.core._
+    def longText(i: Int): String =
+      (0 until 12).map(j => s"w${(i * 31 + j * 7) % 997}x$j").mkString(" ")
+    // new docs, exact clones (always dropped) and near-clones (one token
+    // appended) of earlier batches
+    val batches = Seq(
+      (1 to 20).map(i => (i.toLong, longText(i))),
+      (21 to 30).map(i => (i.toLong, longText(i))) ++
+        (1 to 5).map(i => (100L + i, longText(i))) ++
+        (6 to 10).map(i => (150L + i, longText(i) + " zz")),
+      (31 to 35).map(i => (i.toLong, longText(i))) ++
+        (21 to 23).map(i => (200L + i, longText(i))))
+    def ingest(budget: Long) = {
+      val store = new FsSnapshotStore(tmpDir("graft-neardup-stream"), spark)
+      val input = MemoryStream[(Long, String)](spark)
+      // started inside the scope, so the stream thread inherits the budget
+      val q = LocalScan.withBudget(budget)(EventStreams.streamNearDupIngest(
+        input.toDF().toDF("doc_id", "text"), store, "docs", "bands", Seq("doc_id")))
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      (KVIndex.open(store, "docs").toOption.get.df.select("doc_id").as[Long].collect().toSet,
+        store.historyLog("docs").map(_._2), store.historyLog("bands").map(_._2))
+    }
+    val fullScan = ingest(0L)
+    val pruned = ingest(LocalScan.BudgetBytes)
+    assert(pruned == fullScan)
+    val (survivors, docVersions, bandVersions) = pruned
+    assert((1L to 35L).toSet.subsetOf(survivors))
+    assert(survivors.intersect((101L to 105L).toSet ++ (221L to 223L).toSet).isEmpty,
+      "exact clones must drop")
+    assert(docVersions.size == 3 && bandVersions.size == 3)
+  }
+
   test("dedup ingest is O(batch) steady-state: no per-batch corpus scan, all-new batches skip the verify join") {
     import graft.core._
     val store = new FsSnapshotStore(tmpDir("graft-incr-flat"), spark)

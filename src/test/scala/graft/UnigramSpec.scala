@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.core.LocalScan
 import graft.text.{Unigram, UnigramEncode, CodePointPieces}
 import org.apache.spark.sql.graft.Shim
 
@@ -192,12 +193,13 @@ class UnigramSpec extends SparkSuite {
     assert(a == b)
   }
 
+  // the name keeps the deleted parameter's wording: it is the test's id
   test("driver-local EM == distributed loop (driverLimit=0 forces the " +
        "distributed path) incl. astral code points") {
     val astralCorpus = classic ++ Seq("a😀b a😀b ab😀", "😀😀 a😀 b😀b")
     val df = docsDf(astralCorpus)
     val local = Unigram.train(df, vocabSize = 30, maxPieceLen = 4)
-    val dist = Unigram.train(df, vocabSize = 30, maxPieceLen = 4, driverLimit = 0)
+    val dist = LocalScan.withBudget(0L)(Unigram.train(df, vocabSize = 30, maxPieceLen = 4))
     assert(local == dist)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.LocalScan
 import graft.text.{WordPiece, WordPieceEncode}
 
 /** WordPiece tokenizer gates, the BpeSpec pattern: the distributed
@@ -113,6 +114,7 @@ class WordPieceSpec extends SparkSuite {
     }
   }
 
+  // the name keeps the deleted parameter's wording: it is the test's id
   test("driver-local fold == distributed loop (driverLimit=0 forces the " +
        "distributed path) incl. ties and astral symbols") {
     val rnd = new scala.util.Random(31)
@@ -124,7 +126,7 @@ class WordPieceSpec extends SparkSuite {
     }
     val df = corpus.toDF("text")
     val local = WordPiece.train(df, numMerges = 12, minCount = 2)
-    val dist = WordPiece.train(df, numMerges = 12, minCount = 2, driverLimit = 0)
+    val dist = LocalScan.withBudget(0L)(WordPiece.train(df, numMerges = 12, minCount = 2))
     assert(local == dist)
   }
 
