@@ -1576,17 +1576,6 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
   /** Layout precondition of every probe-leg construction — cheap (no job). */
   private[graft] def zipLayoutOk: Boolean = !manifest.isEmpty && filesDisjoint
 
-  /** Intersect two optional single-component key bounds (takeMax = lower
-    * bounds, !takeMax = upper bounds) under the engine's literal ordering.
-    */
-  private def tighterBound(a: Option[Any], b: Option[Any], takeMax: Boolean): Option[Any] =
-    (a, b) match {
-      case (Some(x), Some(y)) =>
-        val c = KeyOrd.compare(Seq(x), Seq(y))
-        Some(if ((c >= 0) == takeMax) x else y)
-      case _ => a.orElse(b)
-    }
-
   /** Sends a batch of probe rows to this snapshot's legs — the one
     * routing path behind [[probeJoin]], [[asOfProbe]], the SQL probe
     * rewrites and MERGE's probe join. `keyAttrs` (attributes of `probe`)
@@ -1622,10 +1611,12 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     // an empty probe set (the idle-stream micro-batch) never builds leg
     // plans that would scan + sort the whole snapshot against zero probes
     if (nProbes == 0L) return ProbeRoute.NoProbes
-    def lead(b: Option[Seq[Any]]) = b.filter(_.nonEmpty).map(_.head)
+    def both(own: Option[Seq[Any]], probes: Option[Any], lower: Boolean) =
+      KeyRange.intersect(own.filter(_.nonEmpty).map(b => (b.head, true)),
+        probes.map((_, true)), lower).map(_._1)
     probeLegPlans(keyAttrs.length, rowsPerLeg,
-        tighterBound(lead(ownBounds._1), pLo, takeMax = true),
-        tighterBound(lead(ownBounds._2), pHi, takeMax = false)) match {
+        both(ownBounds._1, pLo, lower = true),
+        both(ownBounds._2, pHi, lower = false)) match {
       case ProbeLegs.Unzippable => ProbeRoute.Unzippable
       case ProbeLegs.AllPruned => ProbeRoute.AllPruned
       case ProbeLegs.Legs(bounds, legs) =>
@@ -2297,21 +2288,28 @@ object KVIndex {
                        maxAttempts: Int = 5,
                        recordHistory: Boolean = false,
                        maxRowsPerFile: Long = 1L << 19,
-                       txVersion: String = UUID.randomUUID().toString): BatchResult = {
+                       txVersion: String = UUID.randomUUID().toString): BatchResult =
+    // one txVersion across attempts: the committed version carries the
+    // SAME lastChangeVersion whichever attempt lands, so callers (e.g. the
+    // streaming sink's replay check) can dedupe on it
+    executeWithRetry(store, id, maxAttempts)(m => Some(new KVIndex(store, m, maxRowsPerFile)
+      .execute(cmds, txVersion, recordHistory = recordHistory))).get
+
+  /** The retry loop itself, for any commit `body` makes against the
+    * re-opened LATEST manifest; a None body means "nothing to commit at
+    * this version" and ends the loop. A missing index is a failed result.
+    */
+  def executeWithRetry(store: SnapshotStore, id: String, maxAttempts: Int)
+                      (body: SnapshotManifest => Option[BatchResult]): Option[BatchResult] = {
     require(maxAttempts >= 1, "executeWithRetry: maxAttempts must be >= 1")
-    var last: BatchResult =
-      BatchResult(success = false, Some(GraftError.IndexNotFound(id)), None)
+    var last: Option[BatchResult] = None
     var attempt = 0
     while (attempt < maxAttempts) {
       store.loadLatestLazy(id) match {
-        case Left(e) => return BatchResult(success = false, Some(e), None)
+        case Left(e) => return Some(BatchResult(success = false, Some(e), None))
         case Right(m) =>
-          // one txVersion across attempts: the committed version carries
-          // the SAME lastChangeVersion whichever attempt lands, so callers
-          // (e.g. the streaming sink's replay check) can dedupe on it
-          last = new KVIndex(store, m, maxRowsPerFile)
-            .execute(cmds, txVersion, recordHistory = recordHistory)
-          val casLoss = last.error.exists(_.isInstanceOf[GraftError.ContextAlreadyUsed])
+          last = body(m)
+          val casLoss = last.exists(_.error.exists(_.isInstanceOf[GraftError.ContextAlreadyUsed]))
           if (!casLoss) return last
       }
       attempt += 1

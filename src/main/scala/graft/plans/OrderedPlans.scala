@@ -3,8 +3,8 @@ package graft.plans
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, Attribute, Descending, SortOrder}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, Descending, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.catalyst.plans.physical.{Distribution, OrderedDistribution, Partitioning}
 import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
 import org.apache.spark.sql.graft.Shim
@@ -346,14 +346,8 @@ object PushThroughDeclareOrdered
     // row to "latest match" — a right filter above the join removes rows,
     // below the join it rewrites matches.
     case f @ Filter(cond, AsOfZipJoin(l, r, le, re, lt, rt, lrs, rrs, lo, st, tol)) =>
-      def conjs(e: org.apache.spark.sql.catalyst.expressions.Expression)
-          : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-        case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
-          conjs(a) ++ conjs(b)
-        case other => Seq(other)
-      }
       val lset = org.apache.spark.sql.catalyst.expressions.AttributeSet(l.output)
-      val (lPush, rest) = conjs(cond).partition(c =>
+      val (lPush, rest) = graft.core.KeyRange.conjuncts(cond).partition(c =>
         c.deterministic && c.references.nonEmpty && c.references.subsetOf(lset))
       if (lPush.isEmpty) f
       else {
@@ -372,15 +366,9 @@ object PushThroughDeclareOrdered
     // (and semi/anti outputs carry no right columns to reference).
     case f @ Filter(cond, ZipPartitionsJoin(l, r, lk, rk, jt, cl, cr)) =>
       val coal = cl.zip(cr)
-      def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression)
-          : Seq[org.apache.spark.sql.catalyst.expressions.Expression] = e match {
-        case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
-          conjuncts(a) ++ conjuncts(b)
-        case other => Seq(other)
-      }
       val lset = org.apache.spark.sql.catalyst.expressions.AttributeSet(l.output)
       val rset = org.apache.spark.sql.catalyst.expressions.AttributeSet(r.output)
-      val cs = conjuncts(cond)
+      val cs = graft.core.KeyRange.conjuncts(cond)
       // a conjunct referencing ONLY coalesced KEY slots pushes to BOTH
       // sides (the partner substituted on the right): pair rows carry
       // equal keys, one-sided rows exactly the surviving side's — so
@@ -449,54 +437,33 @@ final case class SnapshotFilePrune(
 
 object PruneSnapshotFiles
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.CatalystTypeConverters
-  import org.apache.spark.sql.catalyst.expressions._
-  import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-
-  private def conjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => conjuncts(l) ++ conjuncts(r)
-    case other => Seq(other)
-  }
+  import org.apache.spark.sql.catalyst.plans.logical.Filter
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case Filter(cond, SnapshotFilePrune(child, leading, prune)) if cond.deterministic =>
-      def isKey(e: Expression): Boolean = e match {
-        case a: Attribute => a.name == leading
-        case _ => false
-      }
-      def ext(l: Literal): Option[Any] =
-        Option(CatalystTypeConverters.convertToScala(l.value, l.dataType))
-      var lo: Option[Any] = None
-      var hi: Option[Any] = None
-      conjuncts(cond).foreach {
-        case EqualTo(a, l: Literal) if isKey(a) => lo = ext(l); hi = ext(l)
-        case EqualTo(l: Literal, a) if isKey(a) => lo = ext(l); hi = ext(l)
-        case GreaterThan(a, l: Literal) if isKey(a) => lo = ext(l)
-        case GreaterThanOrEqual(a, l: Literal) if isKey(a) => lo = ext(l)
-        case LessThan(a, l: Literal) if isKey(a) => hi = ext(l)
-        case LessThanOrEqual(a, l: Literal) if isKey(a) => hi = ext(l)
-        case GreaterThan(l: Literal, a) if isKey(a) => hi = ext(l)
-        case GreaterThanOrEqual(l: Literal, a) if isKey(a) => hi = ext(l)
-        case LessThan(l: Literal, a) if isKey(a) => lo = ext(l)
-        case LessThanOrEqual(l: Literal, a) if isKey(a) => lo = ext(l)
-        case _ => ()
-      }
+      val (lo, hi) = graft.core.KeyRange.of(Seq(cond), 1) {
+        case a: Attribute if a.name == leading => Some(0)
+        case _ => None
+      }.lead
+      // the pruned plan keeps the original output exprIds, so cond and
+      // everything above keep resolving against the swapped-in child
       val replacement =
         if (lo.isEmpty && hi.isEmpty) None
-        else prune(lo, hi).map { pruned =>
-          // restore the original output exprIds so cond and everything
-          // above keep resolving against the swapped-in child
-          val byName = pruned.output.map(a => a.name -> a).toMap
-          val aliases = child.output.map(o =>
-            Alias(byName(o.name), o.name)(exprId = o.exprId))
-          Project(aliases, pruned)
-        }
+        else prune(lo, hi).map(OrderedPlans.aliasTo(child.output, _))
       // every branch erases the marker, so the fixed point terminates
       Filter(cond, replacement.getOrElse(child))
   }
 }
 
 object OrderedPlans {
+  /** Restore `out`'s exprIds over a replacement plan by NAME (snapshot
+    * schemas have unique names) — the stacks replay above this.
+    */
+  private[graft] def aliasTo(out: Seq[Attribute], legs: LogicalPlan): LogicalPlan = {
+    val byName = legs.output.map(a => a.name -> a).toMap
+    Project(out.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)), legs)
+  }
+
   /** Wrap `df` in the manifest-prune marker (see [[SnapshotFilePrune]]). */
   def snapshotPrunable(df: DataFrame, leadingKey: String,
                        prune: (Option[Any], Option[Any]) => Option[LogicalPlan]): DataFrame =

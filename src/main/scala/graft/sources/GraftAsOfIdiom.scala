@@ -89,7 +89,7 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
       case Seq(a @ Alias(WindowExpression(_: RowNumber, _), _)) => a.toAttribute
       case _ => return None
     }
-    val fConjuncts = GraftCoRangeJoin.conjuncts(f.condition)
+    val fConjuncts = graft.core.KeyRange.conjuncts(f.condition)
     val (rankConj, restConj) = fConjuncts.partition(isRankOne(_, rnAttr))
     if (rankConj.isEmpty) return None
     // the leftover filter conjuncts replay above; they may reference rn
@@ -173,7 +173,7 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
     var equi = Vector.empty[(AttributeReference, AttributeReference)]
     var ts: Option[(AttributeReference, AttributeReference, Boolean)] = None // (lTs, rTs, strict)
     var tolCand: Option[(AttributeReference, AttributeReference, Long)] = None
-    GraftCoRangeJoin.conjuncts(cond).foreach {
+    graft.core.KeyRange.conjuncts(cond).foreach {
       case EqualTo(a: AttributeReference, b: AttributeReference)
           if lOut.contains(a) && rIds.contains(b.exprId) => equi :+= ((a, b))
       case EqualTo(b: AttributeReference, a: AttributeReference)
@@ -313,15 +313,15 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
           case (zipOpt, leftOnlyOpt, _) =>
             val zip = zipOpt.map { case (lPlan, rPlan, _, _) =>
               AsOfZipJoin(
-                lRebuild(GraftCoRangeJoin.aliasTo(lrel.output, lPlan)),
-                rRebuild(GraftCoRangeJoin.aliasTo(rrel.output, rPlan)),
+                lRebuild(graft.plans.OrderedPlans.aliasTo(lrel.output, lPlan)),
+                rRebuild(graft.plans.OrderedPlans.aliasTo(rrel.output, rPlan)),
                 lEqui, rEqui, lTs, rTs,
                 Nil, rRestAttrs, leftOuter, strict, tolerance)
             }
             // equi ranges only the left covers: null-extend (left_outer
             // only; inner construction returns no left-only branch)
             val leftOnly = leftOnlyOpt.map { lp =>
-              val stack = lRebuild(GraftCoRangeJoin.aliasTo(lrel.output, lp))
+              val stack = lRebuild(graft.plans.OrderedPlans.aliasTo(lrel.output, lp))
               Project(stack.output ++ j.right.output.map(a =>
                 Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)), stack)
             }
@@ -347,7 +347,7 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
       // candidate, so the eager probe bounds are always type-sound here
       GraftCoRangeJoin.routeProbe(rIx, rg, j.left, lEqui, pruneSound = true) match {
         case ProbeRoute.Routed(pStack, legPlan) =>
-          val rStack = rRebuild(GraftCoRangeJoin.aliasTo(rrel.output, legPlan))
+          val rStack = rRebuild(graft.plans.OrderedPlans.aliasTo(rrel.output, legPlan))
           Some(finish(AsOfZipJoin(pStack, rStack, lEqui, rEqui, lTs, rTs,
             Nil, rRestAttrs, leftOuter, strict, tolerance)))
         // no probes: empty for both types (the left side IS the probe side)

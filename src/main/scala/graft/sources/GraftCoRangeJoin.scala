@@ -6,8 +6,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation,
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
-import graft.core.{KVIndex, ProbeRoute}
+import graft.core.{KVIndex, KeyRange, ProbeRoute}
 import graft.plans.ZipPartitionsJoin
+import graft.plans.OrderedPlans.aliasTo
 
 /** Exchange-free key-equi-joins through the DSV2 path: `SELECT ... FROM
   * cat.a JOIN cat.b ON a.<keys> = b.<keys>` plans the co-range zip join
@@ -92,19 +93,8 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
       side(child).map { case (rel, g, rb) =>
         (rel, g, (nl: LogicalPlan) => Project(ps, rb(nl)))
       }
-    case rel: DataSourceV2ScanRelation => rel.scan match {
-      case org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper(g: GraftScan, _, _)
-          if g.plainScan => Some((rel, g, identity[LogicalPlan] _))
-      case g: GraftScan if g.plainScan => Some((rel, g, identity[LogicalPlan] _))
-      case _ => None
-    }
+    case PlainGraftScan(rel, g) => Some((rel, g, identity[LogicalPlan] _))
     case _ => None
-  }
-
-  private[sources] def conjuncts(e: Expression): Seq[Expression] = e match {
-    case org.apache.spark.sql.catalyst.expressions.And(a, b) =>
-      conjuncts(a) ++ conjuncts(b)
-    case other => Seq(other)
   }
 
   /** The strict equi-join match: every conjunct of `cond` is an equality
@@ -114,7 +104,7 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
     */
   private[sources] def equiPairs(cond: Expression, left: AttributeSet, right: AttributeSet)
       : Option[Seq[(AttributeReference, AttributeReference)]] = {
-    val cs = conjuncts(cond)
+    val cs = KeyRange.conjuncts(cond)
     val pairs = cs.collect {
       case EqualTo(a: AttributeReference, b: AttributeReference)
           if left.contains(a) && right.contains(b) => (a, b)
@@ -122,14 +112,6 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
           if left.contains(a) && right.contains(b) => (a, b)
     }
     if (pairs.size == cs.size) Some(pairs) else None
-  }
-
-  /** Restore `out`'s exprIds over a replacement plan by NAME (snapshot
-    * schemas have unique names) — the stacks replay above this.
-    */
-  private[sources] def aliasTo(out: Seq[Attribute], legs: LogicalPlan): LogicalPlan = {
-    val byName = legs.output.map(a => a.name -> a).toMap
-    Project(out.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)), legs)
   }
 
   /** `spark.graft.probe.sqlEagerBounds` (default `auto`): allow the SQL

@@ -1,15 +1,14 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Coalesce, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, IsNotNull, LessThan, LessThanOrEqual, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, Coalesce, Expression, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
-import graft.core.{KeyOrd, KVIndex}
+import graft.core.{KeyOrd, KeyRange, KVIndex}
 
 /** Serves `SELECT count(*) / min(k) / max(k) FROM cat.t WHERE
   * <leading-key range>` at MANIFEST cost — the SQL twin of
@@ -104,9 +103,6 @@ object GraftCountRange extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** Inclusive-flagged bound: (value in EXTERNAL form, inclusive). */
-  private type Bound = (Any, Boolean)
-
   private def rewrite(agg: Aggregate, aggExprs: Seq[NamedExpression],
                       child0: LogicalPlan): Option[LogicalPlan] = {
     if (aggExprs.isEmpty) return None
@@ -118,21 +114,11 @@ object GraftCountRange extends Rule[LogicalPlan] {
       case _ => false
     }) ()
     val (cond, rel, g) = child match {
-      case Filter(c, r: DataSourceV2ScanRelation) => r.scan match {
-        case org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper(gs: GraftScan, _, _)
-            if gs.plainScan => (c, r, gs)
-        case gs: GraftScan if gs.plainScan => (c, r, gs)
-        case _ => return None
-      }
+      case Filter(c, PlainGraftScan(r, gs)) => (c, r, gs)
       case _ => return None
     }
     val keyCols = g.manifestRef.keyCols
 
-    // fold every conjunct into PER-COLUMN (lo, hi) bounds with
-    // inclusivity, values in external form; non-key / non-literal /
-    // null-literal conjuncts decline
-    def ext(l: Literal): Any =
-      KeyOrd.normLiteral(CatalystTypeConverters.convertToScala(l.value, l.dataType))
     // column pruning may have dropped UNCONSTRAINED key columns from the
     // scan output — only positions the predicate (or a served aggregate)
     // references are guaranteed present, and only those are looked up
@@ -141,93 +127,20 @@ object GraftCountRange extends Rule[LogicalPlan] {
     def keyAttrAt(p: Int): Attribute = keyAttrOpts(p).get // constrained => present
     val posOf: Map[org.apache.spark.sql.catalyst.expressions.ExprId, Int] =
       keyAttrOpts.zipWithIndex.collect { case (Some(a), i) => a.exprId -> i }.toMap
-    val lo = Array.fill[Option[Bound]](keyCols.size)(None)
-    val hi = Array.fill[Option[Bound]](keyCols.size)(None)
-    val notNull = Array.fill(keyCols.size)(false)
-    def tightenLo(p: Int, v: Any, inc: Boolean): Unit = lo(p) match {
-      case None => lo(p) = Some((v, inc))
-      case Some((v0, _)) =>
-        val c = KeyOrd.compare(Seq(v), Seq(v0))
-        if (c > 0) lo(p) = Some((v, inc))
-        else if (c == 0 && !inc) lo(p) = Some((v, false))
-    }
-    def tightenHi(p: Int, v: Any, inc: Boolean): Unit = hi(p) match {
-      case None => hi(p) = Some((v, inc))
-      case Some((v0, _)) =>
-        val c = KeyOrd.compare(Seq(v), Seq(v0))
-        if (c < 0) hi(p) = Some((v, inc))
-        else if (c == 0 && !inc) hi(p) = Some((v, false))
-    }
-    // position extractor: evaluates the attr -> key-position lookup ONCE
-    // per match (the 12-way fold below would otherwise repeat it in every
-    // guard + body, a copy-paste surface for lo/hi transpositions)
-    object KeyPos {
-      def unapply(e: Expression): Option[Int] = e match {
-        case ar: AttributeReference => posOf.get(ar.exprId)
-        case _ => None
-      }
-    }
-    object Lit {
-      def unapply(e: Expression): Option[Literal] = e match {
-        case l: Literal if l.value != null => Some(l)
-        case _ => None
-      }
-    }
-    GraftCoRangeJoin.conjuncts(cond).foreach {
-      case EqualTo(KeyPos(p), Lit(l)) =>
-        tightenLo(p, ext(l), inc = true); tightenHi(p, ext(l), inc = true)
-      case EqualTo(Lit(l), KeyPos(p)) =>
-        tightenLo(p, ext(l), inc = true); tightenHi(p, ext(l), inc = true)
-      case GreaterThanOrEqual(KeyPos(p), Lit(l)) => tightenLo(p, ext(l), inc = true)
-      case LessThanOrEqual(Lit(l), KeyPos(p)) => tightenLo(p, ext(l), inc = true)
-      case GreaterThan(KeyPos(p), Lit(l)) => tightenLo(p, ext(l), inc = false)
-      case LessThan(Lit(l), KeyPos(p)) => tightenLo(p, ext(l), inc = false)
-      case LessThanOrEqual(KeyPos(p), Lit(l)) => tightenHi(p, ext(l), inc = true)
-      case GreaterThanOrEqual(Lit(l), KeyPos(p)) => tightenHi(p, ext(l), inc = true)
-      case LessThan(KeyPos(p), Lit(l)) => tightenHi(p, ext(l), inc = false)
-      case GreaterThan(Lit(l), KeyPos(p)) => tightenHi(p, ext(l), inc = false)
-      case IsNotNull(KeyPos(p)) => notNull(p) = true
-      case _ => return None
-    }
-
-    // constrained columns (a bound, or a bare IS NOT NULL — the covered
-    // guard's non-null proof makes it exact) must form a CONTIGUOUS
-    // LEADING PREFIX, with every column but the last pinned to a single
-    // point (lo == hi, both inclusive) — the predicate region is then one
-    // order interval of the key ordering
-    def constrained(p: Int): Boolean = lo(p).isDefined || hi(p).isDefined || notNull(p)
-    val m = (0 until keyCols.size).takeWhile(constrained).size
-    if (m == 0) return None
-    if ((m until keyCols.size).exists(constrained)) return None
-    val points: Seq[Any] = (0 until m - 1).map { p =>
-      (lo(p), hi(p)) match {
-        case (Some((lv, true)), Some((hv, true))) if KeyOrd.compare(Seq(lv), Seq(hv)) == 0 => lv
-        case _ => return None // a genuine range on a non-last position
-      }
-    }
-    // tuple bounds: points ++ the last column's own bound (absent bound =
-    // the points alone, inclusive — every longer key sorts above/below)
-    val loT: Option[(Seq[Any], Boolean)] = lo(m - 1) match {
-      case Some((v, inc)) => Some((points :+ v, inc))
-      case None => if (m == 1) None else Some((points, true))
-    }
-    val hiT: Option[(Seq[Any], Boolean)] = hi(m - 1) match {
-      case Some((v, inc)) => Some((points :+ v, inc))
-      case None => if (m == 1) None else Some((points, true))
-    }
+    // every conjunct must be an exact key bound (or IS NOT NULL), and the
+    // constrained columns one order interval of the key ordering: a
+    // contiguous leading prefix, every column but the last pinned
+    val interval = KeyRange.of(Seq(cond), keyCols.size) {
+      case ar: AttributeReference => posOf.get(ar.exprId)
+      case _ => None
+    }.interval.getOrElse(return None)
+    val m = interval.m
     val servedPosOf = posOf.filter(_._2 < m)
     val shapes = aggExprs.map(e => served(e, servedPosOf).getOrElse(return None))
 
     val ix = new KVIndex(g.storeRef, g.manifestRef)
     val files = ix.manifestFiles
-    // order-interval membership at TRUNCATED-TUPLE grain: a full key k is
-    // inside iff its first |bound| components clear each bound (ties at
-    // the cut honor inclusivity — a longer key prefix-equal to the bound
-    // shares the bound's last column value, so strict bounds exclude it)
-    def aboveLo(k: Seq[Any]): Boolean = loT.forall { case (vs, inc) =>
-      val c = KeyOrd.compare(k.take(vs.length), vs); c > 0 || (inc && c == 0) }
-    def belowHi(k: Seq[Any]): Boolean = hiT.forall { case (vs, inc) =>
-      val c = KeyOrd.compare(k.take(vs.length), vs); c < 0 || (inc && c == 0) }
+    import interval.{aboveLo, belowHi}
     // predicate rows always lie INSIDE the interval, so a file whose
     // bounds miss it holds no match (null-keyed rows sort below every
     // non-null bound literal and prune with it). A null MAX HEAD means
@@ -300,7 +213,7 @@ object GraftCountRange extends Rule[LogicalPlan] {
         // exactly (its attr exprIds restored over the bounded read)
         val bScan = g.storeRef.readFiles(boundary.map(_.path), g.manifestRef)
           .queryExecution.analyzed
-        val bAliased = GraftCoRangeJoin.aliasTo(rel.output, bScan)
+        val bAliased = graft.plans.OrderedPlans.aliasTo(rel.output, bScan)
         val bRows = Project(
           servedPos.map(p => Alias(keyAttrAt(p), outAttrs(p).name)(
             exprId = outAttrs(p).exprId): NamedExpression) :+

@@ -15,13 +15,15 @@ import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, Suppo
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
 import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, InsertableRelation, StreamSinkProvider, StreamSourceProvider, TableScan}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex, KeyOrd, LegPlanner, SnapshotManifest, SnapshotStore}
+import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex, KeyOrd, KeyRange, LegPlanner, SnapshotManifest, SnapshotStore}
 
 /** DataSource V2 surface for snapshot indexes: `spark.read.format("graft")
   * .option("root", storeRoot).load(indexId)` opens LATEST (or
@@ -277,9 +279,9 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
       throw new UnsupportedOperationException(
         s"graft: unsupported DELETE condition ${filters.mkString(", ")} — " +
           s"only leading-key range conjunctions on '$keyCol' delete at file grain"))
-    GraftDelete.retrying(store, manifest.id) { ix =>
+    GraftDelete.retrying(store, manifest.id) { (ix, tx) =>
       plan match {
-        case GraftDelete.All => Some(ix.truncate())
+        case GraftDelete.All => Some(ix.truncate(tx))
         case GraftDelete.Range(lo, hi) =>
           ix.keyBounds match {
             case None => None // empty snapshot: nothing to delete
@@ -293,7 +295,7 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
               val (to, incT) = hi.getOrElse((gmax.head, true))
               val cmp = KeyOrd.compare(Seq(from), Seq(to))
               if (cmp > 0 || (cmp == 0 && !(incF && incT))) None // empty range
-              else Some(ix.removeRange(Seq(from), Seq(to), incF, incT))
+              else Some(ix.removeRange(Seq(from), Seq(to), incF, incT, tx))
           }
       }
     }
@@ -302,17 +304,18 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
   override def truncateTable(): Boolean = {
     if (pinned) throw new UnsupportedOperationException(
       "graft: cannot truncate a VERSION AS OF table — write to LATEST")
-    GraftDelete.retrying(store, manifest.id)(ix => Some(ix.truncate()))
+    GraftDelete.retrying(store, manifest.id)((ix, tx) => Some(ix.truncate(tx)))
     true
   }
 }
 
-/** DELETE-condition translation + the commit-CAS retry loop shared by
-  * delete and truncate. A condition is deletable iff it is a conjunction
-  * of exact range shapes on the leading key — the translation keeps
-  * INCLUSIVITY (unlike the scan-side [[GraftScan.boundsOf]], whose bounds
-  * are a conservative over-approximation: fine for pruning, data loss for
-  * deletion).
+/** DELETE-condition translation + the commit-CAS retry shared by delete
+  * and truncate. A condition is deletable iff every conjunct is an exact
+  * range shape on the leading key (an empty [[KeyRange]] residual) — the
+  * translation keeps INCLUSIVITY, where the scan-side prune only needs an
+  * inclusive over-approximation (fine for pruning, data loss for
+  * deletion). An `IS NOT NULL` alone is a range with both sides open, so
+  * the null guard in `deleteWhere` applies to it.
   */
 private[sources] object GraftDelete {
   sealed trait Plan
@@ -321,67 +324,22 @@ private[sources] object GraftDelete {
   final case class Range(lo: Option[(Any, Boolean)],
                          hi: Option[(Any, Boolean)]) extends Plan
 
-  def plan(filters: Array[Filter], keyCol: String): Option[Plan] =
-    if (filters.isEmpty) Some(All)
-    else filters.map(one(_, keyCol)).reduce((a, b) =>
-      for { ra <- a; rb <- b } yield merge(ra, rb)) match {
-      case Some(Range(None, None)) => Some(All)
-      case other => other
-    }
-
-  private def one(f: Filter, keyCol: String): Option[Range] = f match {
-    case sources.AlwaysTrue() => Some(Range(None, None))
-    // IsNotNull(key) is implied by every bounded range (null sorts below
-    // any non-null bound and a SQL range predicate is NULL on null keys)
-    case sources.IsNotNull(c) if c == keyCol => Some(Range(None, None))
-    case sources.EqualTo(c, v) if c == keyCol && v != null =>
-      Some(Range(Some((v, true)), Some((v, true))))
-    case sources.GreaterThan(c, v) if c == keyCol && v != null =>
-      Some(Range(Some((v, false)), None))
-    case sources.GreaterThanOrEqual(c, v) if c == keyCol && v != null =>
-      Some(Range(Some((v, true)), None))
-    case sources.LessThan(c, v) if c == keyCol && v != null =>
-      Some(Range(None, Some((v, false))))
-    case sources.LessThanOrEqual(c, v) if c == keyCol && v != null =>
-      Some(Range(None, Some((v, true))))
-    case sources.And(a, b) =>
-      for { ra <- one(a, keyCol); rb <- one(b, keyCol) } yield merge(ra, rb)
-    case _ => None
+  def plan(filters: Array[Filter], keyCol: String): Option[Plan] = {
+    val r = KeyRange.ofFilters(filters.toSeq, Seq(keyCol))
+    if (r.residual.nonEmpty) None
+    else if (!r.notNull(0)) Some(All)
+    else Some(Range(r.lo(0), r.hi(0)))
   }
 
-  private def merge(a: Range, b: Range): Range =
-    Range(tighter(a.lo, b.lo, wantHigh = true), tighter(a.hi, b.hi, wantHigh = false))
-
-  // lower bounds tighten UPWARD, upper bounds DOWNWARD; on equal values
-  // the EXCLUSIVE bound is the tighter one
-  private def tighter(a: Option[(Any, Boolean)], b: Option[(Any, Boolean)],
-                      wantHigh: Boolean): Option[(Any, Boolean)] = (a, b) match {
-    case (Some((va, ia)), Some((vb, ib))) =>
-      val c = KeyOrd.compare(Seq(va), Seq(vb))
-      if (c == 0) Some((va, ia && ib))
-      else if ((c > 0) == wantHigh) a else b
-    case _ => a.orElse(b)
-  }
-
-  /** Re-open LATEST and re-apply on a lost commit CAS — the DELETE twin of
-    * [[graft.core.KVIndex.executeWithRetry]]. The thunk returns None for
+  /** [[graft.core.KVIndex.executeWithRetry]] over LATEST with one
+    * txVersion; a failed commit throws. The body returns None for
     * "nothing to do at this version" (success without a commit).
     */
-  def retrying(store: SnapshotStore, id: String, maxAttempts: Int = 5)
-              (body: KVIndex => Option[graft.core.BatchResult]): Unit = {
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      val m = store.loadLatestLazy(id).fold(e => throw GraftException(e), identity)
-      body(new KVIndex(store, m)) match {
-        case None => return
-        case Some(r) if r.success => return
-        case Some(r) =>
-          if (!r.error.exists(_.isInstanceOf[GraftError.ContextAlreadyUsed]))
-            throw GraftException(r.error.get)
-      }
-      attempt += 1
-    }
-    throw GraftException(GraftError.ContextAlreadyUsed(id))
+  def retrying(store: SnapshotStore, id: String)
+              (body: (KVIndex, String) => Option[graft.core.BatchResult]): Unit = {
+    val tx = java.util.UUID.randomUUID().toString
+    KVIndex.executeWithRetry(store, id, 5)(m => body(new KVIndex(store, m), tx))
+      .filterNot(_.success).foreach(r => throw GraftException(r.error.get))
   }
 }
 
@@ -438,7 +396,7 @@ final class GraftScanBuilder(store: SnapshotStore, manifest: SnapshotManifest,
   private var limit: Option[Int] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    usable = filters.filter(f => GraftScan.boundsOf(f, keyCol).isDefined)
+    usable = filters.filter(f => KeyRange.ofFilters(Seq(f), Seq(keyCol)).bounded(0))
     filters // all residual: the file prune is conservative by design
   }
 
@@ -544,9 +502,7 @@ final class GraftScan(store: SnapshotStore, manifest: SnapshotManifest,
     aggRow.fold(required)(s => StructType(s.map(_._1)))
 
   // intersect all bounds; None = unbounded on that side
-  private lazy val bounds = filters.flatMap(GraftScan.boundsOf(_, keyCol))
-  private lazy val lo = bounds.flatMap(_._1).reduceOption(KeyOrd.max(_, _))
-  private lazy val hi = bounds.flatMap(_._2).reduceOption(KeyOrd.min(_, _))
+  private lazy val (lo, hi) = KeyRange.ofFilters(filters.toSeq, Seq(keyCol)).pruneTuple
 
   // compare LEADING components only: on composite keys a full-tuple
   // compare would drop a file whose leading key equals the bound
@@ -568,7 +524,7 @@ final class GraftScan(store: SnapshotStore, manifest: SnapshotManifest,
   override def estimateStatistics(): Statistics = {
     val rows =
       if (aggRow.isDefined) 1L
-      else if (bounds.isEmpty && limit.isEmpty) manifest.numElements
+      else if (filters.isEmpty && limit.isEmpty) manifest.numElements
       else covering.map(_.rows).sum
     new Statistics {
       override def sizeInBytes: OptionalLong =
@@ -609,30 +565,20 @@ object GraftScan {
     * metrics from the outer plan, so tests pin pruning through this).
     */
   @volatile var lastPlannedFiles: Int = -1
+}
 
-  /** (lo, hi) INCLUSIVE over-approximation of a filter on the leading key
-    * column; None = the filter does not constrain that side. Returns None
-    * overall when the filter cannot bound the leading key at all.
-    */
-  private[sources] def boundsOf(f: Filter, keyCol: String)
-      : Option[(Option[Seq[Any]], Option[Seq[Any]])] = f match {
-    case sources.EqualTo(c, v) if c == keyCol => Some((Some(Seq(v)), Some(Seq(v))))
-    case sources.EqualNullSafe(c, v) if c == keyCol && v != null =>
-      Some((Some(Seq(v)), Some(Seq(v))))
-    case sources.GreaterThan(c, v) if c == keyCol => Some((Some(Seq(v)), None))
-    case sources.GreaterThanOrEqual(c, v) if c == keyCol => Some((Some(Seq(v)), None))
-    case sources.LessThan(c, v) if c == keyCol => Some((None, Some(Seq(v))))
-    case sources.LessThanOrEqual(c, v) if c == keyCol => Some((None, Some(Seq(v))))
-    case sources.In(c, vs) if c == keyCol && vs.nonEmpty && !vs.contains(null) =>
-      Some((Some(Seq(vs.min(KeyOrd.on[Any](Seq(_))))), Some(Seq(vs.max(KeyOrd.on[Any](Seq(_)))))))
-    case sources.And(a, b) =>
-      (boundsOf(a, keyCol), boundsOf(b, keyCol)) match {
-        case (Some((lo1, hi1)), Some((lo2, hi2))) =>
-          Some(((lo1 ++ lo2).reduceOption(KeyOrd.max(_, _)),
-            (hi1 ++ hi2).reduceOption(KeyOrd.min(_, _))))
-        case (one @ Some(_), None) => one
-        case (None, one) => one
-      }
+/** A plain [[GraftScan]] relation — no aggregate row or limit prefix
+  * pushed into it, so it still reads every covering row — the shape every
+  * snapshot rewrite starts from.
+  */
+private[sources] object PlainGraftScan {
+  def unapply(p: LogicalPlan): Option[(DataSourceV2ScanRelation, GraftScan)] = p match {
+    case rel: DataSourceV2ScanRelation => rel.scan match {
+      // V2ScanRelationPushDown wraps every V1Scan before planning
+      case V1ScanWrapper(g: GraftScan, _, _) if g.plainScan => Some((rel, g))
+      case g: GraftScan if g.plainScan => Some((rel, g))
+      case _ => None
+    }
     case _ => None
   }
 }

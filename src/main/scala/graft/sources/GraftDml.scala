@@ -143,12 +143,12 @@ private[graft] object GraftDml {
                 assignments: Seq[Assignment], condition: Option[Expression]): Unit = {
     val (store, id) = writable(tbl, "UPDATE")
     val spark = SparkSession.active
-    GraftDelete.retrying(store, id) { ix =>
+    GraftDelete.retrying(store, id) { (ix, tx) =>
       val tgt = targetPlan(spark, ix, out)
       val matched = Shim.ofRows(spark,
         condition.fold(tgt)(c => Filter(c, tgt)))
       if (matched.isEmpty) None
-      else Some(ix.execute(updateCommands(ix, out, matched, assignments)))
+      else Some(ix.execute(updateCommands(ix, out, matched, assignments), tx))
     }
   }
 
@@ -158,7 +158,7 @@ private[graft] object GraftDml {
       "graft: MERGE WITH SCHEMA EVOLUTION is not supported — snapshot " +
         "schemas are fixed at bootstrap")
     val spark = SparkSession.active
-    GraftDelete.retrying(store, id) { ix =>
+    GraftDelete.retrying(store, id) { (ix, tx) =>
       // target columns are referenced BY BOUND ATTRIBUTE everywhere below:
       // the joined frame carries both sides' columns under the same names,
       // so name-based resolution would be ambiguous
@@ -243,7 +243,7 @@ private[graft] object GraftDml {
           removes.result().filterNot(_.isEmpty).map(Command.Remove(_)) ++
             updates.result().filterNot(_.isEmpty).map(Command.Update(_)) ++
             inserts.result().filterNot(_.isEmpty).map(Command.Insert(_))
-        if (cmds.isEmpty) None else Some(ix.execute(cmds))
+        if (cmds.isEmpty) None else Some(ix.execute(cmds, tx))
       } finally joined.unpersist()
     }
   }
@@ -275,14 +275,8 @@ private[graft] object GraftDml {
     case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] =>
       val t = r.table.asInstanceOf[GraftTable]
       Some((r.output, t.storeRef, t.manifestRef, identity[LogicalPlan] _))
-    case s: DataSourceV2ScanRelation => s.scan match {
-      case org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper(g: GraftScan, _, _)
-          if g.plainScan =>
-        Some((s.output, g.storeRef, g.manifestRef, identity[LogicalPlan] _))
-      case g: GraftScan if g.plainScan =>
-        Some((s.output, g.storeRef, g.manifestRef, identity[LogicalPlan] _))
-      case _ => None
-    }
+    case PlainGraftScan(s, g) =>
+      Some((s.output, g.storeRef, g.manifestRef, identity[LogicalPlan] _))
     case _ => None
   }
 
@@ -320,7 +314,7 @@ private[graft] object GraftDml {
 
     ix.coRangeLegPlans(srcIx, joinType = FullOuter).flatMap {
       case (zipOpt, leftOnlyOpt, rightOnlyOpt) =>
-        import GraftCoRangeJoin.aliasTo
+        import graft.plans.OrderedPlans.aliasTo
         def mark(p: LogicalPlan, name: String): LogicalPlan =
           Project(p.output :+ Alias(Literal(true), name)(), p)
         val srcOut = m.sourceTable.output
@@ -411,7 +405,7 @@ private[graft] object GraftDml {
         def mark(p: LogicalPlan, name: String): LogicalPlan =
           Project(p.output :+ Alias(Literal(true), name)(), p)
         Some(Shim.ofRows(spark, graft.plans.ZipPartitionsJoin(
-          mark(GraftCoRangeJoin.aliasTo(out, legPlan), "__graft_t"),
+          mark(graft.plans.OrderedPlans.aliasTo(out, legPlan), "__graft_t"),
           mark(sRouted, "__graft_s"), tKeyAttrs, sKeyAttrs, FullOuter)))
       case _ => None
     }

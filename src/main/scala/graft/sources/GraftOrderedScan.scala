@@ -1,12 +1,13 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, AttributeReference, Descending, IntegerLiteral, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, IntegerLiteral, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
-import graft.core.KVIndex
+import graft.core.{KVIndex, KeyRange}
 import graft.plans.DeclareOrdered
+import graft.plans.OrderedPlans.aliasTo
 
 /** Ordering through the DSV2 path: `SELECT ... FROM cat.indexId ORDER BY
   * key` plans the exchange-free manifest stitch instead of a global sort.
@@ -110,15 +111,8 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
       rewriteThrough(child, sortAttrs, reverse).map(n => f.copy(child = n))
     case pr @ Project(exprs, child) if exprs.forall(_.deterministic) =>
       rewriteThrough(child, sortAttrs, reverse).map(n => pr.copy(child = n))
-    case rel: DataSourceV2ScanRelation => rel.scan match {
-      // V2ScanRelationPushDown wraps every V1Scan before planning
-      case org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper(g: GraftScan, _, _)
-          if g.plainScan =>
-        rewriteRelation(rel, g, sortAttrs, reverse, _.orderedStitchFrame(reverse))
-      case g: GraftScan if g.plainScan =>
-        rewriteRelation(rel, g, sortAttrs, reverse, _.orderedStitchFrame(reverse))
-      case _ => None
-    }
+    case PlainGraftScan(rel, g) =>
+      rewriteRelation(rel, g, sortAttrs, reverse, _.orderedStitchFrame(reverse))
     case _ => None
   }
 
@@ -142,14 +136,7 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     case f @ Filter(cond, child) if cond.deterministic =>
       topKThrough(child, sortAttrs, reverse, n, conds :+ cond)
         .map(nc => f.copy(child = nc))
-    case rel: DataSourceV2ScanRelation => rel.scan match {
-      case org.apache.spark.sql.execution.datasources.v2.V1ScanWrapper(g: GraftScan, _, _)
-          if g.plainScan =>
-        topKRelation(rel, g, sortAttrs, reverse, n, conds)
-      case g: GraftScan if g.plainScan =>
-        topKRelation(rel, g, sortAttrs, reverse, n, conds)
-      case _ => None
-    }
+    case PlainGraftScan(rel, g) => topKRelation(rel, g, sortAttrs, reverse, n, conds)
     // the VIEW path (r18 symmetry, the DeclareOrdered source tag): a
     // registered snapshot's ordered stitch gets the same file-prefix
     // cut. Interior pushed-below Filters join the key-range validation
@@ -202,20 +189,13 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     // order (how far PushDownPredicates sank it before this rule ran),
     // which must never change the chosen plan.
     val dLead = outByName(leadName)
-    def isLeadEither(e: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-      e match {
-        case a: AttributeReference =>
-          a.exprId == lead.exprId || a.exprId == dLead.exprId
-        case _ => false
-      }
-    val extConjs = conds.flatMap(GraftCoRangeJoin.conjuncts)
-    val intConjs = interior.flatMap(GraftCoRangeJoin.conjuncts)
-    def isKr(c: org.apache.spark.sql.catalyst.expressions.Expression): Boolean =
-      keyRangeBounds(Seq(c), isLeadEither).isDefined
-    val planResidual = (extConjs ++ intConjs).filterNot(isKr)
-    val (loP, hiP) =
-      keyRangeBounds((extConjs ++ intConjs).filter(isKr), isLeadEither)
-        .getOrElse((None, None))
+    val extConjs = conds.flatMap(KeyRange.conjuncts)
+    val intConjs = interior.flatMap(KeyRange.conjuncts)
+    val planRange = KeyRange.of(extConjs ++ intConjs, 1) {
+      case a: AttributeReference
+          if a.exprId == lead.exprId || a.exprId == dLead.exprId => Some(0)
+      case _ => None
+    }
     // the push-through rules may have carried predicates INTO the stitch
     // (per-leg Filters inside the union) by a later fixed-point
     // iteration — rows they drop would RESURRECT if the leaf were
@@ -225,16 +205,14 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     // leaf-internal conjunct joins the residual set and forces the grow
     // rung, reproduced on the new leaf by the same by-name remap (their
     // per-leg exprIds cannot replay across the swap).
-    val isLeafName: org.apache.spark.sql.catalyst.expressions.Expression => Boolean = {
-      case a: AttributeReference => a.name == leadName
-      case _ => false
-    }
     val leafConjs = leaf.collect { case f: Filter => f.condition }
-      .flatMap(GraftCoRangeJoin.conjuncts)
-    val (leafRanges, leafResidual) =
-      leafConjs.partition(c => keyRangeBounds(Seq(c), isLeafName).isDefined)
-    val (loL, hiL) = keyRangeBounds(leafRanges, isLeafName).getOrElse((None, None))
-    val grow = planResidual.nonEmpty || leafResidual.nonEmpty
+      .flatMap(KeyRange.conjuncts)
+    val leafRange = KeyRange.of(leafConjs, 1) {
+      case a: AttributeReference if a.name == leadName => Some(0)
+      case _ => None
+    }
+    val leafResidual = leafRange.residual
+    val grow = planRange.residual.nonEmpty || leafResidual.nonEmpty
     if (grow) {
       // exterior conjuncts re-evaluate inside the node (survivor
       // counting) and need d-output-resolvable references; leaf-internal
@@ -251,43 +229,22 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
           !leafResidual.forall(_.references.forall(r => leafNames.contains(r.name))))
         return None
     }
-    def merge(a: Option[(Any, Boolean)], b: Option[(Any, Boolean)],
-              lower: Boolean): Option[(Any, Boolean)] = (a, b) match {
-      case (Some((av, ai)), Some((bv, bi))) =>
-        val c = graft.core.KeyOrd.compare(Seq(av), Seq(bv))
-        if (c == 0) Some((av, ai && bi))
-        else if ((c > 0) == lower) Some((av, ai)) else Some((bv, bi))
-      case _ => a.orElse(b)
-    }
-    val lo = merge(loP, loL, lower = true)
-    val hi = merge(hiP, hiL, lower = false)
+    val lo = KeyRange.intersect(planRange.lo(0), leafRange.lo(0), lower = true)
+    val hi = KeyRange.intersect(planRange.hi(0), leafRange.hi(0), lower = false)
     val ix = new KVIndex(src.store, src.manifest)
     val frame =
       if (grow) ix.growCoveringStitch(reverse,
         lo.map(v => Seq(v._1)), hi.map(v => Seq(v._1)))
       else ix.topKStitchFrame(n, reverse, lo.map(_._1), hi.map(_._1))
     frame.map { stitched =>
-      import org.apache.spark.sql.catalyst.expressions.{And, Expression, Literal}
-      val aliased = GraftCoRangeJoin.aliasTo(
-        leaf.output, stitched.queryExecution.analyzed)
-      // reproduce the leaf-internal drops on the new leaf: ranges from
-      // loL/hiL, residuals (grow only) by by-name remap, deduped across
-      // the per-leg copies (plan-level filters replay through rbIn and
-      // the exterior stack instead)
+      import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+      val aliased = aliasTo(leaf.output, stitched.queryExecution.analyzed)
+      // reproduce the leaf-internal drops on the new leaf: its key ranges
+      // as synthesized predicates, residuals (grow only) by by-name
+      // remap, deduped across the per-leg copies (plan-level filters
+      // replay through rbIn and the exterior stack instead)
       val aliasByName = aliased.output.map(a => a.name -> a).toMap
-      val leadNew = aliasByName(leadName)
-      val synth: Seq[Expression] =
-        loL.map { case (v, inc) =>
-          val l = Literal.create(v, lead.dataType)
-          if (inc) org.apache.spark.sql.catalyst.expressions
-            .GreaterThanOrEqual(leadNew, l)
-          else org.apache.spark.sql.catalyst.expressions.GreaterThan(leadNew, l)
-        }.toSeq ++ hiL.map { case (v, inc) =>
-          val l = Literal.create(v, lead.dataType)
-          if (inc) org.apache.spark.sql.catalyst.expressions
-            .LessThanOrEqual(leadNew, l)
-          else org.apache.spark.sql.catalyst.expressions.LessThan(leadNew, l)
-        }.toSeq
+      val synth = leafRange.predicates(0, aliasByName(leadName))
       val remapped: Seq[Expression] =
         if (!grow) Nil
         else leafResidual.map(_.transform {
@@ -321,9 +278,9 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     }
   }
 
-  /** Validate the collected Filter conditions as pure leading-key ranges
-    * and extract the (inclusive over-approximate) bounds; conditions with
-    * any OTHER conjunct shape fall to the r19 grow-the-prefix EXEC rung
+  /** Pure leading-key range conditions take the exact file-prefix cut
+    * with their (inclusive over-approximate) bounds; conditions with any
+    * OTHER conjunct shape fall to the r19 grow-the-prefix EXEC rung
     * ([[growPrefixRelation]]) instead of declining outright.
     */
   private def topKRelation(rel: DataSourceV2ScanRelation, g: GraftScan,
@@ -333,12 +290,14 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
       : Option[LogicalPlan] = {
     val leadName = g.manifestRef.keyCols.head
     val lead = rel.output.find(_.name == leadName).getOrElse(return None)
-    keyRangeBounds(conds, byId(lead)) match {
-      case Some((lo, hi)) =>
-        rewriteRelation(rel, g, sortAttrs, reverse,
-          _.topKStitchFrame(n, reverse, lo.map(_._1), hi.map(_._1)))
-      case None => growPrefixRelation(rel, g, sortAttrs, reverse, n, conds, lead)
+    val r = KeyRange.of(conds, 1) {
+      case a: AttributeReference if a.exprId == lead.exprId => Some(0)
+      case _ => None
     }
+    if (r.residual.isEmpty)
+      rewriteRelation(rel, g, sortAttrs, reverse,
+        _.topKStitchFrame(n, reverse, r.lead._1, r.lead._2))
+    else growPrefixRelation(rel, g, sortAttrs, reverse, n, conds)
   }
 
   /** `spark.graft.sql.topk.growPrefix` (default true) gates the exec-time
@@ -378,41 +337,28 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
   private def growPrefixRelation(rel: DataSourceV2ScanRelation, g: GraftScan,
                                  sortAttrs: Seq[AttributeReference],
                                  reverse: Boolean, n: Int,
-                                 conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-                                 lead: org.apache.spark.sql.catalyst.expressions.Attribute)
+                                 conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
       : Option[LogicalPlan] = {
     import org.apache.spark.sql.catalyst.expressions.{And, PlanExpression}
     if (!growPrefixEnabled || n > growMaxRows) return None
-    if (conds.isEmpty) return None
     val relIds = rel.output.map(_.exprId).toSet
     if (!conds.forall(c => c.deterministic &&
         c.references.forall(r => relIds.contains(r.exprId)) &&
         !c.exists(_.isInstanceOf[PlanExpression[_]]))) return None
-    // leading-key range conjuncts prune the covering set; the rest are
-    // the residual whose survivors the exec counts
-    val conjs = conds.flatMap(GraftCoRangeJoin.conjuncts)
-    val (kr, residual) = conjs.partition(c =>
-      keyRangeBounds(Seq(c), byId(lead)).isDefined)
-    if (residual.isEmpty) return None // pure key ranges — the exact rung's case
     // COMPOSITE prune bounds (r20): per-column ranges over the key-PREFIX
     // columns tighten the covering prune with full-tuple compares — a
     // `lead = x AND second >= y` predicate drops boundary files a
     // lead-only cut must keep (growCoveringStitch documents why the
-    // conjunctive bounds imply the lexicographic ones). The tuple extends
-    // only over CONSECUTIVE bounded columns from the lead (a bound on k2
-    // without one on k1 prunes nothing); the bound conjuncts stay in the
-    // residual replay regardless (the prune is an inclusive over-approx).
+    // conjunctive bounds imply the lexicographic ones); every conjunct
+    // replays regardless (the prune is an inclusive over-approx)
     val keyAttrs = g.manifestRef.keyCols
       .map(c => rel.output.find(_.name == c))
       .takeWhile(_.isDefined).map(_.get)
-    val perCol = keyAttrs.map { a =>
-      val mine = conjs.filter(c => keyRangeBounds(Seq(c), byId(a)).isDefined)
-      keyRangeBounds(mine, byId(a)).getOrElse((None, None))
-    }
-    val loVals = perCol.map(_._1).takeWhile(_.isDefined).map(_.get._1)
-    val hiVals = perCol.map(_._2).takeWhile(_.isDefined).map(_.get._1)
-    val lo = if (loVals.isEmpty) None else Some(loVals)
-    val hi = if (hiVals.isEmpty) None else Some(hiVals)
+    val (lo, hi) = KeyRange.of(conds, keyAttrs.size) {
+      case a: AttributeReference =>
+        Some(keyAttrs.indexWhere(_.exprId == a.exprId)).filter(_ >= 0)
+      case _ => None
+    }.pruneTuple
     val keyCols = g.manifestRef.keyCols
     val outByName = rel.output.map(a => a.name -> a).toMap
     val declared = keyCols.takeWhile(outByName.contains)
@@ -422,82 +368,14 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     if (!eligible) return None
     val ix = new KVIndex(g.storeRef, g.manifestRef)
     ix.growCoveringStitch(reverse, lo, hi).map { stitched =>
-      val src = stitched.queryExecution.analyzed
-      val srcByName = src.output.map(a => a.name -> a).toMap
-      val aliases = rel.output.map(o =>
-        Alias(srcByName(o.name), o.name)(exprId = o.exprId))
-      val filtered = Filter(conds.reduce(And(_, _)), Project(aliases, src))
+      val filtered = Filter(conds.reduce(And(_, _)),
+        aliasTo(rel.output, stitched.queryExecution.analyzed))
       val dir = if (reverse) Descending else Ascending
       val ordering = declared.map(c => SortOrder(outByName(c), dir))
       // source = None: the cut is done (the topKView convergence rule)
       DeclareOrdered(graft.plans.GrowPrefixTopK(n, filtered), ordering,
         source = None)
     }
-  }
-
-  /** Validate `conds` as pure leading-key ranges (the `isLead` matcher
-    * decides what counts as the leading key — exprId for plan-level
-    * filters, name for stitch-internal ones) and intersect to one
-    * [lo, hi] with INCLUSIVITY per bound; None on any other conjunct
-    * shape (unknown selectivity — the caller declines).
-    */
-  private[sources] def keyRangeBounds(
-      conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
-      isLead: org.apache.spark.sql.catalyst.expressions.Expression => Boolean)
-      : Option[(Option[(Any, Boolean)], Option[(Any, Boolean)])] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    def lv(l: Literal): Any =
-      graft.core.KeyOrd.normLiteral(
-        org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .convertToScala(l.value, l.dataType))
-    var lo: Option[(Any, Boolean)] = None
-    var hi: Option[(Any, Boolean)] = None
-    def tighten(v: Any, inc: Boolean, lower: Boolean): Unit = {
-      val cur = if (lower) lo else hi
-      val next = cur match {
-        case None => Some((v, inc))
-        case Some((cv, cinc)) =>
-          val c = graft.core.KeyOrd.compare(Seq(v), Seq(cv))
-          if (c == 0) Some((cv, cinc && inc)) // tie: strict is tighter
-          else if ((c > 0) == lower) Some((v, inc)) // tighter value wins
-          else Some((cv, cinc))
-      }
-      if (lower) lo = next else hi = next
-    }
-    val conjuncts = conds.flatMap(GraftCoRangeJoin.conjuncts)
-    val allKeyRanges = conjuncts.forall {
-      case EqualTo(a, l: Literal) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = true, lower = true)
-        tighten(lv(l), inc = true, lower = false); true
-      case EqualTo(l: Literal, a) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = true, lower = true)
-        tighten(lv(l), inc = true, lower = false); true
-      case GreaterThan(a, l: Literal) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = false, lower = true); true
-      case GreaterThanOrEqual(a, l: Literal) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = true, lower = true); true
-      case LessThan(a, l: Literal) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = false, lower = false); true
-      case LessThanOrEqual(a, l: Literal) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = true, lower = false); true
-      case GreaterThan(l: Literal, a) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = false, lower = false); true
-      case GreaterThanOrEqual(l: Literal, a) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = true, lower = false); true
-      case LessThan(l: Literal, a) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = false, lower = true); true
-      case LessThanOrEqual(l: Literal, a) if isLead(a) && l.value != null =>
-        tighten(lv(l), inc = true, lower = true); true
-      case IsNotNull(a) if isLead(a) => true // keys are non-null by contract
-      case _ => false
-    }
-    if (allKeyRanges) Some((lo, hi)) else None
-  }
-
-  private def byId(lead: org.apache.spark.sql.catalyst.expressions.Attribute)
-      : org.apache.spark.sql.catalyst.expressions.Expression => Boolean = {
-    case a: AttributeReference => a.exprId == lead.exprId
-    case _ => false
   }
 
   private def rewriteRelation(rel: DataSourceV2ScanRelation, g: GraftScan,
@@ -519,15 +397,12 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     if (!eligible) return None
     val ix = new KVIndex(g.storeRef, g.manifestRef)
     frame(ix).map { stitched =>
-      val src = stitched.queryExecution.analyzed
-      val srcByName = src.output.map(a => a.name -> a).toMap
       // project the full-schema stitch down to the relation's (possibly
       // pruned) output, keeping the relation's exprIds so everything
-      // above keeps resolving (the PruneSnapshotFiles pattern)
-      val aliases = rel.output.map(o => Alias(srcByName(o.name), o.name)(exprId = o.exprId))
+      // above keeps resolving
       val dir = if (reverse) Descending else Ascending
       val ordering = declared.map(c => SortOrder(outByName(c), dir))
-      DeclareOrdered(Project(aliases, src), ordering,
+      DeclareOrdered(aliasTo(rel.output, stitched.queryExecution.analyzed), ordering,
         Some(new graft.plans.SnapshotSource(g.storeRef, g.manifestRef)))
     }
   }

@@ -215,31 +215,19 @@ object GraftPrefixCluster extends Rule[LogicalPlan] {
         case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
       }
       val leadName = src.manifest.keyCols.head
-      if (leafConds.isEmpty)
-        Some((leaf.output, src.store, src.manifest, (None, None), rbIn))
-      else {
-        import org.apache.spark.sql.catalyst.expressions._
-        val lead = leaf.output.find(_.name == leadName).getOrElse(return None)
-        GraftOrderedScan.keyRangeBounds(leafConds, {
-          case a: AttributeReference => a.name == leadName
-          case _ => false
-        }).map { case (lo, hi) =>
-          val synth: Seq[Expression] =
-            lo.map { case (v, inc) =>
-              val l = Literal.create(v, lead.dataType)
-              if (inc) GreaterThanOrEqual(lead, l) else GreaterThan(lead, l)
-            }.toSeq ++ hi.map { case (v, inc) =>
-              val l = Literal.create(v, lead.dataType)
-              if (inc) LessThanOrEqual(lead, l) else LessThan(lead, l)
-            }.toSeq
-          val rb2 = (nl: LogicalPlan) => rbIn(
-            if (synth.isEmpty) nl
-            else org.apache.spark.sql.catalyst.plans.logical.Filter(
-              synth.reduce(And(_, _)), nl))
-          (leaf.output, src.store, src.manifest,
-            (lo.map(_._1), hi.map(_._1)), rb2)
-        }
+      val r = graft.core.KeyRange.of(leafConds, 1) {
+        case a: AttributeReference if a.name == leadName => Some(0)
+        case _ => None
       }
+      if (r.residual.nonEmpty) return None
+      val synth =
+        if (!r.bounded(0)) Nil
+        else r.predicates(0, leaf.output.find(_.name == leadName).getOrElse(return None))
+      val rb2 = (nl: LogicalPlan) => rbIn(
+        if (synth.isEmpty) nl
+        else org.apache.spark.sql.catalyst.plans.logical.Filter(
+          synth.reduce(org.apache.spark.sql.catalyst.expressions.And(_, _)), nl))
+      Some((leaf.output, src.store, src.manifest, r.lead, rb2))
     case _ => None
   }
 
@@ -272,7 +260,7 @@ object GraftPrefixCluster extends Rule[LogicalPlan] {
     if (forAggregate && stockAggWins(ix, m, leadLo, leadHi)) return None
     ix.probeLegPlans(m, GraftCoRangeJoin.rowsPerLegConf(), leadLo, leadHi) match {
       case graft.core.ProbeLegs.Legs(_, legPlan) =>
-        val aliased = GraftCoRangeJoin.aliasTo(relOut, legPlan)
+        val aliased = graft.plans.OrderedPlans.aliasTo(relOut, legPlan)
         val co = prefixAttrs.map(SortOrder(_, Ascending))
         val ro = rangeAttrs.map(SortOrder(_, Ascending))
         // the marker's exec claims NO intra-partition order (leg scans
