@@ -890,9 +890,8 @@ object SparkEntry {
       val ix = KVIndex.bootstrap(store, "lilines", li,
         Seq("l_orderkey", "l_linenumber"), maxRowsPerFile = 2048)
         .fold(e => sys.error(e.message), identity)
-      // registered ONCE per (jvm, sf): analyzing the multi-hundred-leg
-      // stitch costs real driver time, and re-registering per query call
-      // was kv_sql_view_prefix's whole bench cost
+      // registered once per (jvm, sf) with the index it serves; the view
+      // is the pinned catalog relation, so registering plans no stitch
       ix.createOrReplaceView("graft_vpfx")
       ix
     }._2
@@ -1258,7 +1257,7 @@ object SparkEntry {
     // VIEW-path TIME TRAVEL (r20, plans/ViewTimeTravel + GraftSqlParser):
     // the same three wall-clock instants through a REGISTERED SNAPSHOT
     // VIEW — Spark's analyzer refuses time travel on temp views, so the
-    // clause is spliced at parse time into a fresh ordered stitch over
+    // clause is spliced at parse time into the pinned catalog relation of
     // the floored snapshot (findIndexAtWall, a manifest-log lookup that
     // reads no data files). Same oracle replay as the catalog row.
     "kv_view_asof" -> ((s, d) => {
@@ -3747,10 +3746,10 @@ object SparkEntry {
           q.queryExecution.executedPlan.toString)
       q
     }),
-    // VIEW-path prefix GROUP BY (r18): the registered-view stitch carries
-    // its SnapshotSource, so GraftPrefixCluster re-cuts the VIEW's legs at
-    // prefix grain — the same zero-exchange aggregate catalog scans get
-    // (the r17 symmetry gap, closed). Plan pinned exchange-free.
+    // VIEW-path prefix GROUP BY (r18): a registered view is the catalog
+    // relation, so GraftPrefixCluster cuts the VIEW's legs at prefix
+    // grain — the same zero-exchange aggregate catalog scans get. Plan
+    // pinned exchange-free.
     "kv_sql_view_prefix" -> ((s, d) => {
       liLinesFineStore(s, d) // registers graft_vpfx once per (jvm, sf)
       val q = s.sql("""

@@ -343,71 +343,38 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * The stitched order is also DECLARED to Catalyst
     * ([[graft.plans.OrderedPlans.declareOrdered]]): a downstream
     * `orderBy` on the key is elided by the stock `RemoveRedundantSorts`
-    * rule instead of re-shuffling already-ordered data.
+    * rule instead of re-shuffling already-ordered data. SQL gets the same
+    * stitch from the catalog table ([[createOrReplaceView]]).
     */
   def inOrdered(reverse: Boolean = false): DataFrame =
     if (manifest.isEmpty || files.isEmpty) df // whole-snapshot scan: full resolve is inherent
     else if (filesDisjoint)
       graft.plans.OrderedPlans.declareOrdered(
         orderedUnion(if (reverse) files.reverse else files, reverse),
-        key.cols, reverse,
-        Some(new graft.plans.SnapshotSource(store, manifest)))
+        key.cols, reverse)
     else if (reverse) table.reverseScan()
     else table.inOrder()
 
-  /** SQL catalog surface: register this snapshot as a temp view over the
-    * exchange-free ordered read path, so pure `spark.sql` text queries the
-    * snapshot like any table — the reference's "embed the library"
-    * ergonomics get a SQL twin. The view is a logical plan, not a copy:
-    * predicates written in SQL still push into the per-file parquet scans,
-    * and the declared ordering lets Catalyst elide redundant ORDER BYs on
-    * the key. Reference analogue: the queryable-index read surface
+  /** SQL catalog surface: register this snapshot as a temp view, so pure
+    * `spark.sql` text queries the snapshot like any table — the
+    * reference's "embed the library" ergonomics get a SQL twin. The view
+    * IS the catalog table pinned at this snapshot
+    * ([[graft.sources.GraftTable.relation]]): a view and `cat.t` plan
+    * identically — key predicates prune manifest files, `ORDER BY` the
+    * key runs the exchange-free stitch, and every graft rewrite (top-k,
+    * count-range, prefix-cluster, co-range and as-of joins, MERGE
+    * sources) applies. The view is read-only; `FOR VERSION/TIMESTAMP AS
+    * OF` on its name re-resolves the index ([[graft.plans.ViewTimeTravel]]).
+    * Reference analogue: the queryable-index read surface
     * (`QueryableIndex.scala:18-40`) exposed to a query language.
     */
-  def createOrReplaceView(name: String): Unit = {
-    val base = viewFrame()
-    base.createOrReplaceTempView(name)
-    // SQL time travel on the view name (r20): FOR VERSION/TIMESTAMP AS OF
-    // re-resolves this index at the floored snapshot through the same
-    // stitch shape (graft.plans.ViewTimeTravel — a parse-time splice,
-    // since Spark's analyzer refuses time travel on temp views)
-    graft.plans.ViewTimeTravel.register(base.sparkSession, name, store,
-      manifest.id)
-  }
+  def createOrReplaceView(name: String): Unit =
+    org.apache.spark.sql.graft.Shim.ofRows(spark,
+      graft.sources.GraftTable.relation(store, manifest)).createOrReplaceTempView(name)
 
-  /** The plan [[createOrReplaceView]] registers, for THIS snapshot —
-    * also cut fresh by [[graft.plans.ViewTimeTravel]] at a time-traveled
-    * version of the same index.
-    */
-  private[graft] def viewFrame(): DataFrame =
-    if (files.isEmpty || !filesDisjoint) inOrdered()
-    else {
-      // the stitch is wrapped in the manifest-prune marker, so a SQL
-      // point/range predicate on the leading key re-plans over ONLY the
-      // covering files (graft.plans.PruneSnapshotFiles) — the view gets
-      // the native tableForRange file prune, not just row-group skipping
-      val prunable = graft.plans.OrderedPlans.snapshotPrunable(
-        orderedUnion(files, reverse = false), key.cols.head, prunedPlanFor)
-      graft.plans.OrderedPlans.declareOrdered(prunable, key.cols, reverse = false,
-        Some(new graft.plans.SnapshotSource(store, manifest)))
-    }
-
-  /** Re-stitch over the files whose leading-key [min,max] intersects the
-    * (inclusive, over-approximate) bounds; None when nothing prunes.
-    */
-  private def prunedPlanFor(lo: Option[Any], hi: Option[Any])
-      : Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan] = {
-    val kept = files.filter(LegPlanner.covering(lo.map(Seq(_)), hi.map(Seq(_))))
-    if (kept.size == files.size) None
-    else {
-      val pdf = if (kept.isEmpty) df.limit(0) else orderedUnion(kept, reverse = false)
-      Some(pdf.queryExecution.analyzed)
-    }
-  }
-
-  /** UN-declared ordered stitch for the DSV2 ordering rung
-    * ([[graft.sources.GraftOrderedScan]]): the [[createOrReplaceView]]
-    * body minus the `DeclareOrdered` wrapper. The caller places the
+  /** UN-declared ordered stitch of the files covering the INCLUSIVE
+    * leading-key bounds `lo`/`hi`, for the DSV2 ordering rung
+    * ([[graft.sources.GraftOrderedScan]]). The caller places the
     * declaration ABOVE its own projection — `ManifestOrderedPartitioning`
     * is not an `Expression`, so Spark's alias-aware projection would pass
     * it through a `ProjectExec` unchanged and strand stale attribute ids
@@ -415,12 +382,13 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * when the layout cannot stitch (overlapping file ranges, empty
     * snapshot) — callers fall back to the plain scan.
     */
-  private[graft] def orderedStitchFrame(reverse: Boolean): Option[DataFrame] =
+  private[graft] def orderedStitchFrame(reverse: Boolean, lo: Option[Seq[Any]],
+                                        hi: Option[Seq[Any]]): Option[DataFrame] =
     if (manifest.isEmpty || files.isEmpty || !filesDisjoint) None
     else {
-      val base = orderedUnion(if (reverse) files.reverse else files, reverse)
-      if (reverse) Some(base) // manifest prune marker is forward-only
-      else Some(graft.plans.OrderedPlans.snapshotPrunable(base, key.cols.head, prunedPlanFor))
+      val covering = files.filter(LegPlanner.covering(lo, hi))
+      if (covering.isEmpty) Some(emptyScan())
+      else Some(orderedUnion(if (reverse) covering.reverse else covering, reverse))
     }
 
   /** File-prefix stitch for SQL top-k (`ORDER BY <key prefix> LIMIT n`,
@@ -894,8 +862,9 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * Design note: Spark's storage-partitioned joins
     * (`SupportsReportPartitioning` + `KeyGroupedPartitioning`) cannot
     * carry this — a key-grouped partition holds ONE key value, while a
-    * range leg holds an interval, and the V1Scan bridge never plans the
-    * `BatchScanExec` that consumes the report. The layout invariant is
+    * range leg holds an interval, and a graft scan never plans the
+    * `BatchScanExec` that consumes the report (it is spliced into a plain
+    * file read, [[graft.sources.SpliceGraftScan]]). The layout invariant is
     * therefore built into the plan directly, the same stance as
     * [[inOrdered]]'s manifest stitch.
     *

@@ -1,14 +1,14 @@
 package graft.core
 
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
-import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, BinaryComparison, Expression, In, InSet, IsNotNull, Literal}
 import org.apache.spark.sql.sources
 
 /** A conjunction folded into one interval per key column: `lo`/`hi` as
   * (value, inclusive), `notNull` (some conjunct rejects a null there) and
   * the `residual` conjuncts the bounds do not decide exactly. The one
   * step from a SQL condition to the key bounds [[LegPlanner]] consumes —
-  * the catalog scan's prune, DELETE, the view prune and every ordered,
+  * the catalog scan's prune, DELETE and every ordered,
   * top-k, prefix-cluster and count rewrite read it.
   *
   * Exact conjuncts: `=`, `<`, `<=`, `>`, `>=` of a key column against a
@@ -63,15 +63,6 @@ final case class KeyRange[C](lo: IndexedSeq[Option[KeyRange.Bound]],
       case None => if (m == 1) None else Some((points, true))
     }
     Some(KeyRange.Interval(m, tuple(lo(m - 1)), tuple(hi(m - 1))))
-  }
-
-  /** Column `i`'s bounds as Catalyst predicates over `attr`. */
-  def predicates(i: Int, attr: Expression): Seq[Expression] = {
-    def lit(v: Any) = Literal.create(v, attr.dataType)
-    lo(i).map { case (v, inc) =>
-      if (inc) GreaterThanOrEqual(attr, lit(v)) else GreaterThan(attr, lit(v)) }.toSeq ++
-      hi(i).map { case (v, inc) =>
-        if (inc) LessThanOrEqual(attr, lit(v)) else LessThan(attr, lit(v)) }.toSeq
   }
 }
 

@@ -29,33 +29,12 @@ import org.apache.spark.sql.graft.Shim
   * file boundaries are not co-partitioned, and claiming otherwise would
   * zip mismatched partitions and corrupt join results.
   */
-final case class DeclareOrdered(child: LogicalPlan, ordering: Seq[SortOrder],
-                                source: Option[SnapshotSource] = None)
+final case class DeclareOrdered(child: LogicalPlan, ordering: Seq[SortOrder])
     extends UnaryNode {
   override def output: Seq[Attribute] = child.output
   override def maxRows: Option[Long] = child.maxRows
   override protected def withNewChildInternal(newChild: LogicalPlan): DeclareOrdered =
     copy(child = newChild)
-}
-
-/** The snapshot a stitched plan was cut from, carried on [[DeclareOrdered]]
-  * so downstream rewrites can RE-CUT the stitch at a different grain —
-  * [[graft.sources.GraftPrefixCluster]] re-plans a GROUP BY/Window over a
-  * registered snapshot VIEW as prefix-grain legs, the same exchange
-  * elision catalog scans get. Compared by snapshot identity (id +
-  * version), not the file list, so plan equality stays cheap.
-  */
-final class SnapshotSource(val store: graft.core.SnapshotStore,
-                           val manifest: graft.core.SnapshotManifest) {
-  override def equals(o: Any): Boolean = o match {
-    case s: SnapshotSource =>
-      s.manifest.id == manifest.id && s.manifest.version == manifest.version &&
-        s.store.root == store.root
-    case _ => false
-  }
-  override def hashCode(): Int =
-    (manifest.id, manifest.version, store.root).hashCode()
-  override def toString: String = s"graft.${manifest.id}@v${manifest.version}"
 }
 
 /** Partition-ordered range layout: partition i holds keys strictly below
@@ -206,9 +185,6 @@ object DeclareOrderedStrategy extends org.apache.spark.sql.execution.SparkStrate
       UnfuseUnionExec(planLater(child)) :: Nil
     case g: GrowPrefixTopK =>
       GrowPrefixTopKExec(g.limit, planLater(g.child)) :: Nil
-    case SnapshotFilePrune(child, _, _) =>
-      // unconsumed marker (no filter ever landed on it): plan the child
-      planLater(child) :: Nil
     case ZipPartitionsJoin(l, r, lk, rk, jt, cl, cr) =>
       ZipPartitionsJoinExec(planLater(l), planLater(r), lk, rk, jt, cl, cr) :: Nil
     case AsOfZipJoin(l, r, le, re, lt, rt, lrs, rrs, lo, st, tol) =>
@@ -220,8 +196,8 @@ object DeclareOrderedStrategy extends org.apache.spark.sql.execution.SparkStrate
 
 /** Filter pushdown THROUGH the ordering declaration. [[DeclareOrdered]] is
   * a custom logical node, so the stock `PushDownPredicates` stops at it —
-  * a `spark.sql` predicate over a registered snapshot view (or any filter
-  * a consumer stacks on `inOrdered()`) would otherwise evaluate ABOVE the
+  * a filter a consumer stacks on `inOrdered()` (or a SQL predicate above
+  * an ordered catalog scan's stitch) would otherwise evaluate ABOVE the
   * scans, reading every snapshot byte. A filter cannot change the
   * per-partition order, so it commutes freely with the declaration; this
   * rule swaps them, and the companion stock `PushDownPredicates` instance
@@ -253,14 +229,14 @@ object PushThroughDeclareOrdered
         DeclareRangeLaid(Project(ps, child), co, ro.takeWhile(survives))
       else Project(ps, child)
     // a filter cannot change partitioning either, so it commutes with the
-    // per-leg union-fusion breaker the same way — without this, a view
+    // per-leg union-fusion breaker the same way — without this, a
     // predicate pushed through the stitch Union would STOP at each leg's
     // marker instead of reaching the parquet scans
     case Filter(cond, UnfuseUnion(child)) if cond.deterministic =>
       UnfuseUnion(Filter(cond, child))
     // PROJECTIONS commute too — the column-pruning twin of the filter
     // cases. The stock ColumnPruning stops at every custom node, so a
-    // `SELECT two, cols FROM <snapshot view>` would otherwise read every
+    // `SELECT two, cols ... ORDER BY k` stitch would otherwise read every
     // column of every leg's parquet scan; pushing the Project below the
     // markers lets the stock rules carry the narrow schema into the
     // scans (`ReadSchema`). Neither marker computes anything, so the
@@ -270,16 +246,6 @@ object PushThroughDeclareOrdered
     // and the declaration is dropped with nothing to elide.
     case Project(ps, UnfuseUnion(child)) if ps.forall(_.deterministic) =>
       UnfuseUnion(Project(ps, child))
-    // attribute-ONLY through the prune marker: PruneSnapshotFiles swaps
-    // the marker's child for a re-stitched plan and restores output
-    // exprIds BY NAME from the replacement's (full) schema — a computed
-    // or renamed projection below the marker would make that lookup miss.
-    // Attribute-only covers the case that matters (the pruning Projects
-    // ColumnPruning inserts); computed projections stay above, where the
-    // stock rules still prune the columns they need below.
-    case Project(ps, SnapshotFilePrune(child, k, pr))
-        if ps.forall(_.isInstanceOf[Attribute]) =>
-      SnapshotFilePrune(Project(ps, child), k, pr)
     case Project(ps, d: DeclareOrdered) if ps.forall(_.deterministic) =>
       val kept = ps.collect { case a: Attribute => a.exprId }.toSet
       def survives(so: SortOrder): Boolean = so.child match {
@@ -290,11 +256,8 @@ object PushThroughDeclareOrdered
       if (surviving.length == d.ordering.length)
         d.copy(child = Project(ps, d.child))
       // a SURVIVING PREFIX is still a valid cross-partition claim (an
-      // ORDER BY g above a (g, k) stitch elides), and a SOURCED marker
-      // must survive narrowing regardless — GraftPrefixCluster re-cuts
-      // the view stitch at prefix grain from the source tag, and a
-      // GROUP BY g plan prunes k away before that rule ever runs
-      else if (surviving.nonEmpty || d.source.isDefined)
+      // ORDER BY g above a (g, k) stitch elides)
+      else if (surviving.nonEmpty)
         d.copy(child = Project(ps, d.child), ordering = surviving)
       else Project(ps, d.child)
     // through the co-range ZIP JOIN as well: the node is custom, so the
@@ -413,48 +376,6 @@ object PushThroughDeclareOrdered
   }
 }
 
-/** Marker carrying a MANIFEST-level file-prune callback for a registered
-  * snapshot view. Spark's stock planning prunes parquet ROW GROUPS via
-  * pushed filters, but it has no idea the snapshot's manifest already
-  * knows each file's [min,max] key range — on a 3M-file snapshot a SQL
-  * point query would still schedule a task per file. [[PruneSnapshotFiles]]
-  * extracts leading-key bounds from a pushed conjunction and asks the
-  * callback for a re-stitched plan over ONLY the covering files — the
-  * SQL twin of the native `tableForRange` prune. The callback returns
-  * None when nothing can be pruned; bounds are inclusive
-  * over-approximations (a kept extra file is correct, a dropped needed
-  * file never happens).
-  */
-final case class SnapshotFilePrune(
-    child: LogicalPlan,
-    leadingKey: String,
-    prune: (Option[Any], Option[Any]) => Option[LogicalPlan]) extends UnaryNode {
-  override def output: Seq[Attribute] = child.output
-  override def maxRows: Option[Long] = child.maxRows
-  override protected def withNewChildInternal(newChild: LogicalPlan): SnapshotFilePrune =
-    copy(child = newChild)
-}
-
-object PruneSnapshotFiles
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.Filter
-
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case Filter(cond, SnapshotFilePrune(child, leading, prune)) if cond.deterministic =>
-      val (lo, hi) = graft.core.KeyRange.of(Seq(cond), 1) {
-        case a: Attribute if a.name == leading => Some(0)
-        case _ => None
-      }.lead
-      // the pruned plan keeps the original output exprIds, so cond and
-      // everything above keep resolving against the swapped-in child
-      val replacement =
-        if (lo.isEmpty && hi.isEmpty) None
-        else prune(lo, hi).map(OrderedPlans.aliasTo(child.output, _))
-      // every branch erases the marker, so the fixed point terminates
-      Filter(cond, replacement.getOrElse(child))
-  }
-}
-
 object OrderedPlans {
   /** Restore `out`'s exprIds over a replacement plan by NAME (snapshot
     * schemas have unique names) — the stacks replay above this.
@@ -463,12 +384,6 @@ object OrderedPlans {
     val byName = legs.output.map(a => a.name -> a).toMap
     Project(out.map(o => Alias(byName(o.name), o.name)(exprId = o.exprId)), legs)
   }
-
-  /** Wrap `df` in the manifest-prune marker (see [[SnapshotFilePrune]]). */
-  def snapshotPrunable(df: DataFrame, leadingKey: String,
-                       prune: (Option[Any], Option[Any]) => Option[LogicalPlan]): DataFrame =
-    Shim.ofRows(df.sparkSession,
-      SnapshotFilePrune(df.queryExecution.analyzed, leadingKey, prune))
 
   /** Wrap one stitched LEG in the union-fusion breaker (see
     * [[UnfuseUnion]]): the enclosing union keeps one task per leg.
@@ -482,8 +397,7 @@ object OrderedPlans {
     * partition index — the caller's contract) in the ordering declaration,
     * installing graft's rules on the session ([[graft.sources.GraftRules]]).
     */
-  def declareOrdered(df: DataFrame, keyCols: Seq[String], reverse: Boolean,
-                     source: Option[SnapshotSource] = None): DataFrame = {
+  def declareOrdered(df: DataFrame, keyCols: Seq[String], reverse: Boolean): DataFrame = {
     val spark = df.sparkSession
     graft.sources.GraftRules.install(spark)
     val child = df.queryExecution.analyzed
@@ -493,6 +407,6 @@ object OrderedPlans {
         .getOrElse(sys.error(s"declareOrdered: missing key column $c"))
       SortOrder(attr, dir)
     }
-    Shim.ofRows(spark, DeclareOrdered(child, ordering, source))
+    Shim.ofRows(spark, DeclareOrdered(child, ordering))
   }
 }

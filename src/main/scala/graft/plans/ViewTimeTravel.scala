@@ -1,12 +1,13 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.{RelationTimeTravel, UnresolvedRelation}
+import org.apache.spark.sql.catalyst.analysis.{EliminateSubqueryAliases, RelationTimeTravel, UnresolvedRelation}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, SubqueryAlias}
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.TimestampType
 
-import graft.core.{KVIndex, SnapshotManifest, SnapshotStore}
+import graft.sources.GraftTable
 
 /** SQL time travel for REGISTERED SNAPSHOT VIEWS (r20) — the
   * [[graft.core.KVIndex.createOrReplaceView]] surface gets the same
@@ -17,149 +18,87 @@ import graft.core.{KVIndex, SnapshotManifest, SnapshotStore}
   * clause can never reach an optimizer rule — instead the statement is
   * intercepted at PARSE time ([[graft.sources.GraftSqlParser]] hands every
   * delegate-parsed plan through [[rewrite]]): a `RelationTimeTravel` whose
-  * single-part name is a graft-registered view still present in the
-  * session's temp-view catalog is replaced by a FRESH ordered-stitch plan
-  * over the floored snapshot — the same plan shape `createOrReplaceView`
-  * registers, cut from the manifest `findIndexAtWall` (T3 wall-clock
-  * floor, `core/SnapshotStore.scala`) or `loadVersionLazy` resolves. The
-  * rewrite is registration-order independent by construction (no
-  * optimizer rule involved; the stitch it splices is the proven view
-  * plan), and a manifest-log floor lookup reads NO data files.
-  *
-  * Caveat (documented contract): the registry tracks names registered via
-  * `createOrReplaceView`; a caller who later rebinds the same temp-view
-  * name to an UNRELATED frame keeps the plain name resolving to their
-  * frame (Spark's own resolution), but a time-travel clause on that name
-  * still answers from the graft snapshot history — re-register or drop
-  * the view to detach it.
+  * single-part name is a temp view whose plan IS a graft table relation
+  * (what `createOrReplaceView` registers) is replaced by the relation of
+  * the same index pinned at the floored snapshot
+  * ([[graft.sources.GraftTable.asOf]], the catalog's own floor). The view
+  * plan is the registry: a name rebound to any other frame keeps Spark's
+  * own refusal, and a manifest-log floor lookup reads NO data files.
   */
 object ViewTimeTravel {
-
-  /** name (lowercased) -> (weak store ref, indexId); sessions are WEAK
-    * keys. The store is held WEAKLY on purpose: a strong value would
-    * reach back to the session (`FsSnapshotStore.spark`) and pin the
-    * weak key forever — the WeakHashMap anti-pattern. The registered
-    * temp view's own plan (SnapshotSource, the prune callback) holds the
-    * store strongly THROUGH the session catalog, so the weak ref stays
-    * live exactly as long as the view it serves; once the view (or
-    * session) is gone, the entry reads as dead and is dropped. (Sole
-    * narrow exception: a view registered over an EMPTY snapshot whose
-    * plan is a bare typed scan — if the caller also drops every store
-    * reference, time travel on that name degrades to Spark's own
-    * temp-view refusal after a GC. Correctly-registered non-empty views
-    * are unaffected.)
-    */
-  private val reg = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String,
-      (java.lang.ref.WeakReference[SnapshotStore], String)]]()
-
-  private def norm(name: String): String = name.toLowerCase(java.util.Locale.ROOT)
-
-  private[graft] def register(spark: SparkSession, name: String,
-                               store: SnapshotStore, indexId: String): Unit =
-    reg.synchronized {
-      var m = reg.get(spark)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty
-        reg.put(spark, m)
-      }
-      m.update(norm(name), (new java.lang.ref.WeakReference(store), indexId))
-    }
-
-  private def lookup(spark: SparkSession, name: String)
-      : Option[(SnapshotStore, String)] = {
-    val m = reg.synchronized(Option(reg.get(spark)))
-    m.flatMap { tm =>
-      tm.get(norm(name)).flatMap { case (ref, id) =>
-        val store = ref.get()
-        if (store == null) { tm.remove(norm(name)); None }
-        else Some((store, id))
-      }
-    }
-  }
-
-  private def isEmpty(spark: SparkSession): Boolean =
-    reg.synchronized(Option(reg.get(spark))).forall(_.isEmpty)
 
   private def fail(msg: String): Nothing =
     throw new UnsupportedOperationException(s"graft view time travel: $msg")
 
-  /** Splice time-traveled view scans into a freshly parsed plan; identity
-    * when the session registered no views or the plan carries no
-    * time-travel clause on one of them.
+  /** The graft table a temp view's plan is, if it is one. */
+  private def viewTable(spark: SparkSession, name: String): Option[GraftTable] =
+    spark.sessionState.catalog.getRawTempView(name).flatMap(_.plan)
+      .map(EliminateSubqueryAliases(_)).collect {
+        case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] =>
+          r.table.asInstanceOf[GraftTable]
+      }
+
+  /** Splice time-traveled view relations into a freshly parsed plan;
+    * identity when the plan carries no time-travel clause on a graft view.
     */
   def rewrite(spark: SparkSession, plan: LogicalPlan): LogicalPlan = {
-    if (spark == null || isEmpty(spark)) return plan
+    if (spark == null) return plan
     // WithSubqueries: a time-traveled view inside IN (SELECT …) / EXISTS
     // lives in a subquery expression a plain transform never visits
     plan.transformUpWithSubqueries {
-      case RelationTimeTravel(u: UnresolvedRelation, tsOpt, verOpt)
-          if u.multipartIdentifier.size == 1 &&
-            lookup(spark, u.multipartIdentifier.head).isDefined &&
-            spark.sessionState.catalog
-              .getTempView(u.multipartIdentifier.head).isDefined =>
+      case tt @ RelationTimeTravel(u: UnresolvedRelation, tsOpt, verOpt)
+          if u.multipartIdentifier.size == 1 =>
         val name = u.multipartIdentifier.head
-        val (store, id) = lookup(spark, name).get
-        val m = resolve(spark, store, id, name, tsOpt, verOpt)
-        SubqueryAlias(name,
-          new KVIndex(store, m).viewFrame().queryExecution.analyzed)
+        viewTable(spark, name).fold(tt: LogicalPlan) { t =>
+          val at = verOpt.map(Left(_)).getOrElse(Right(micros(spark, name,
+            tsOpt.getOrElse(fail(s"no timestamp or version on view '$name'")))))
+          SubqueryAlias(name, DataSourceV2Relation.create(
+            GraftTable.asOf(t.storeRef, t.manifestRef.id, at), None, None))
+        }
     }
   }
 
-  private def resolve(spark: SparkSession, store: SnapshotStore, id: String,
-                      name: String,
-                      tsOpt: Option[org.apache.spark.sql.catalyst.expressions.Expression],
-                      verOpt: Option[String]): SnapshotManifest = verOpt match {
-    case Some(v) =>
-      val ver = try v.toLong catch {
-        case _: NumberFormatException =>
-          fail(s"VERSION AS OF '$v' on view '$name' — snapshot versions are integers")
+  /** The instant of a `TIMESTAMP AS OF` expression, in microseconds. */
+  private def micros(spark: SparkSession, name: String,
+                     e: org.apache.spark.sql.catalyst.expressions.Expression): Long = {
+    // the same evaluation contract as Spark's own TimeTravelSpec: a
+    // foldable expression cast to TIMESTAMP in the session timezone.
+    // An unresolved FUNCTION call (timestamp_millis(...), make_date(...))
+    // resolves through a nested one-row analysis so the view path
+    // accepts the same instants the catalog path does; anything that
+    // still cannot fold-and-evaluate at parse time (current_timestamp()
+    // and friends) gets the literal-spelling refusal instead of
+    // mis-evaluating.
+    val resolved =
+      if (e.resolved) e
+      else try {
+        import org.apache.spark.sql.catalyst.expressions.Alias
+        import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+        spark.sessionState.analyzer.execute(
+          Project(Seq(Alias(e, "__graft_ts")()), OneRowRelation())) match {
+          case Project(Seq(a: Alias), _) => a.child
+          case other => fail(
+            s"TIMESTAMP AS OF on view '$name': '${e.sql}' resolved to an " +
+              s"unexpected shape ($other)")
+        }
+      } catch {
+        case ae: org.apache.spark.sql.AnalysisException => fail(
+          s"TIMESTAMP AS OF on view '$name': '${e.sql}' does not resolve " +
+            s"— ${ae.getMessage}")
       }
-      store.loadVersionLazy(id, ver)
-    case None =>
-      val e = tsOpt.getOrElse(fail(s"no timestamp or version on view '$name'"))
-      // the same evaluation contract as Spark's own TimeTravelSpec: a
-      // foldable expression cast to TIMESTAMP in the session timezone.
-      // An unresolved FUNCTION call (timestamp_millis(...), make_date(...))
-      // resolves through a nested one-row analysis so the view path
-      // accepts the same instants the catalog path does; anything that
-      // still cannot fold-and-evaluate at parse time (current_timestamp()
-      // and friends) gets the literal-spelling refusal instead of
-      // mis-evaluating.
-      val resolved =
-        if (e.resolved) e
-        else try {
-          import org.apache.spark.sql.catalyst.expressions.Alias
-          import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
-          spark.sessionState.analyzer.execute(
-            Project(Seq(Alias(e, "__graft_ts")()), OneRowRelation())) match {
-            case Project(Seq(a: Alias), _) => a.child
-            case other => fail(
-              s"TIMESTAMP AS OF on view '$name': '${e.sql}' resolved to an " +
-                s"unexpected shape ($other)")
-          }
-        } catch {
-          case ae: org.apache.spark.sql.AnalysisException => fail(
-            s"TIMESTAMP AS OF on view '$name': '${e.sql}' does not resolve " +
-              s"— ${ae.getMessage}")
-        }
-      if (!resolved.foldable) fail(
-        s"TIMESTAMP AS OF on view '$name' needs a literal timestamp " +
-          s"expression, got '${e.sql}' — spell the instant out")
-      val tz = spark.sessionState.conf.sessionLocalTimeZone
-      val micros =
-        try Cast(resolved, TimestampType, Some(tz)).eval(null)
-        catch {
-          case _: UnsupportedOperationException => fail(
-            s"TIMESTAMP AS OF on view '$name' needs a literal timestamp " +
-              s"expression, got '${e.sql}' — it cannot evaluate at parse time")
-        }
-      if (micros == null) fail(
-        s"TIMESTAMP AS OF on view '$name': '${e.sql}' does not parse as a timestamp")
-      val ms = Math.floorDiv(micros.asInstanceOf[Long], 1000L)
-      store.findIndexAtWall(id, ms).getOrElse(fail(
-        s"TIMESTAMP AS OF found no recorded history for view '$name' " +
-          s"(index '$id') — record snapshots (execute(recordHistory = true) " +
-          "/ recordSnapshot), or use VERSION AS OF"))
+    if (!resolved.foldable) fail(
+      s"TIMESTAMP AS OF on view '$name' needs a literal timestamp " +
+        s"expression, got '${e.sql}' — spell the instant out")
+    val tz = spark.sessionState.conf.sessionLocalTimeZone
+    val v =
+      try Cast(resolved, TimestampType, Some(tz)).eval(null)
+      catch {
+        case _: UnsupportedOperationException => fail(
+          s"TIMESTAMP AS OF on view '$name' needs a literal timestamp " +
+            s"expression, got '${e.sql}' — it cannot evaluate at parse time")
+      }
+    if (v == null) fail(
+      s"TIMESTAMP AS OF on view '$name': '${e.sql}' does not parse as a timestamp")
+    v.asInstanceOf[Long]
   }
 }

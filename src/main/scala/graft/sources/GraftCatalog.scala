@@ -138,34 +138,19 @@ final class GraftCatalog extends TableCatalog {
       m => new GraftTable(store, m))
 
   /** `FOR VERSION AS OF n` — snapshot version n, lazily resolved. */
-  override def loadTable(ident: Identifier, version: String): Table = {
-    if (!store.exists(ident.name)) throw new NoSuchTableException(ident)
-    new GraftTable(store, store.loadVersionLazy(ident.name, version.toLong),
-      pinned = true)
-  }
+  override def loadTable(ident: Identifier, version: String): Table =
+    asOf(ident, Left(version))
 
   /** `FOR TIMESTAMP AS OF t` — Spark hands the instant in MICROSECONDS
-    * since the epoch; the floor lookup runs on the wall-clock stamps the
-    * commit protocol records alongside the monotonic timeline
-    * ([[graft.core.SnapshotStore.findAtWallClock]], T3 semantics: greatest
-    * entry <= t, clamped to the earliest). Pre-upgrade histories without
-    * wall-clock stamps keep a typed refusal (the monotonic ts timeline is
-    * reference `System.nanoTime`, not wall-clock); indexes with no
-    * recorded history at all get one too — time travel only sees what T2
-    * recorded.
+    * since the epoch; [[GraftTable.asOf]] floors it onto the wall-clock
+    * history.
     */
-  override def loadTable(ident: Identifier, timestamp: Long): Table = {
+  override def loadTable(ident: Identifier, timestamp: Long): Table =
+    asOf(ident, Right(timestamp))
+
+  private def asOf(ident: Identifier, at: Either[String, Long]): Table = {
     if (!store.exists(ident.name)) throw new NoSuchTableException(ident)
-    val ms = Math.floorDiv(timestamp, 1000L)
-    store.findIndexAtWall(ident.name, ms) match {
-      case Some(m) =>
-        new GraftTable(store, store.loadVersionLazy(ident.name, m.version),
-          pinned = true)
-      case None => throw new UnsupportedOperationException(
-        s"graft: TIMESTAMP AS OF found no recorded history for " +
-          s"'${ident.name}' — record snapshots (execute(recordHistory = " +
-          "true) / recordSnapshot), or use VERSION AS OF")
-    }
+    GraftTable.asOf(store, ident.name, at)
   }
 
   override def createTable(ident: Identifier, schema: StructType,

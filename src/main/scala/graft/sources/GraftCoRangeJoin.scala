@@ -347,8 +347,7 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
     val probe = if (graftOnLeft) r else l
     if (probe.isStreaming) return None
     val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    // ask the SCAN for its manifest-stat size — the relation's own stats
-    // don't see through the V1ScanWrapper and default to "huge"
+    // the snapshot's manifest-stat size, the bytes a broadcast would move
     val gSize = gg.estimateStatistics().sizeInBytes
     if (thr >= 0 && gSize.isPresent && gSize.getAsLong <= thr) return None
 

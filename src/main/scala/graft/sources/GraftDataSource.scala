@@ -6,24 +6,26 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, V1ScanWrapper}
+import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LocalRelation, LogicalPlan, MergeIntoTable, Subquery, UpdateTable}
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 import org.apache.spark.sql.execution.streaming.{Sink, Source}
-import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, InsertableRelation, StreamSinkProvider, StreamSourceProvider, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, DataSourceRegister, Filter, InsertableRelation, StreamSinkProvider, StreamSourceProvider}
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex, KeyOrd, KeyRange, LegPlanner, SnapshotManifest, SnapshotStore}
+import graft.plans.OrderedPlans
 
 /** DataSource V2 surface for snapshot indexes: `spark.read.format("graft")
   * .option("root", storeRoot).load(indexId)` opens LATEST (or
@@ -37,18 +39,18 @@ import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex
   * filelist-checkpointed big manifest the prune itself runs Spark-side
   * ([[graft.core.SnapshotStore.resolveFilesWhere]]), so a point predicate
   * over a 3M-file snapshot materializes a handful of entries and scans one
-  * file. Column pruning reaches the parquet scan through the same pruned
-  * read. Execution delegates to the store's parquet read via the V1Scan
-  * bridge (the Delta-lake deployment shape): pruning and pushdown are
-  * decided here, while the actual scan keeps Spark's vectorized,
-  * codegen'd parquet path — no hand-rolled reader to maintain.
+  * file. The scan never executes itself: after graft's rewrites,
+  * [[SpliceGraftScan]] splices the covering files' parquet read into the
+  * outer plan, so stock `FileSourceStrategy` plans ONE file scan with its
+  * own metrics, pushed filters, column pruning and the vectorized reader
+  * — no hand-rolled reader and no second plan to maintain.
   *
-  * Ordered SQL over this path gets the view path's exchange-free stitch
-  * via [[GraftOrderedScan]]: the V1 bridge itself carries no ordering
-  * contract, so a logical rewrite re-plans an eligible `ORDER BY
+  * Ordered SQL over this path gets the exchange-free manifest stitch via
+  * [[GraftOrderedScan]]: a logical rewrite re-plans an eligible `ORDER BY
   * <leading keys>` over the scan as the manifest-ordered stitch with the
-  * ordering DECLARED — the stock rules then elide the sort, exactly like
-  * `createOrReplaceView` readers.
+  * ordering DECLARED — the stock rules then elide the sort. A registered
+  * view (`KVIndex.createOrReplaceView`) is this same table pinned at its
+  * snapshot, so it plans identically.
   */
 final class GraftDataSource extends TableProvider with DataSourceRegister
     with CreatableRelationProvider with StreamSinkProvider with StreamSourceProvider {
@@ -87,8 +89,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
   private def resolve(options: CaseInsensitiveStringMap): GraftTable = {
     val (store, id) = storeAndId(options)
     Option(options.get("version")) match {
-      case Some(v) => new GraftTable(store, store.loadVersionLazy(id, v.toLong),
-        pinned = true)
+      case Some(v) => GraftTable.asOf(store, id, Left(v))
       case None => new GraftTable(store, store.loadLatestLazy(id).fold(
         e => throw new java.util.NoSuchElementException(e.message), identity))
     }
@@ -211,16 +212,18 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
   GraftRules.install(SparkSession.active)
 
   // UPDATE / MERGE INTO compile against the live store (GraftDml)
-  private[sources] def storeRef: SnapshotStore = store
-  private[sources] def manifestRef: SnapshotManifest = manifest
+  private[graft] def storeRef: SnapshotStore = store
+  private[graft] def manifestRef: SnapshotManifest = manifest
   private[sources] def isPinned: Boolean = pinned
 
   override def name(): String = s"graft.${manifest.id}@v${manifest.version}"
 
   override def schema(): StructType = store.emptyTyped(manifest).schema
 
+  // a pinned snapshot (VERSION AS OF, a registered view) takes no writes
   override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE)
+    if (pinned) java.util.EnumSet.of(TableCapability.BATCH_READ)
+    else java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GraftScanBuilder(store, manifest, schema())
@@ -306,6 +309,42 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
       "graft: cannot truncate a VERSION AS OF table — write to LATEST")
     GraftDelete.retrying(store, manifest.id)((ix, tx) => Some(ix.truncate(tx)))
     true
+  }
+}
+
+object GraftTable {
+  /** The relation a registered snapshot view holds: this exact snapshot,
+    * pinned — the catalog table's own plan leaf, so every rewrite a
+    * catalog query gets reaches the view too.
+    */
+  private[graft] def relation(store: SnapshotStore,
+                              manifest: SnapshotManifest): DataSourceV2Relation =
+    DataSourceV2Relation.create(new GraftTable(store, manifest, pinned = true),
+      None, None)
+
+  /** The pinned table of index `id` at a time-travel point — the one floor
+    * behind `VERSION AS OF` / `TIMESTAMP AS OF` on catalog tables and
+    * registered views. `Left(version)` loads that snapshot;
+    * `Right(micros)` floors onto the wall-clock stamps the commit protocol
+    * records ([[graft.core.SnapshotStore.findIndexAtWall]], T3 semantics:
+    * greatest entry <= t, clamped to the earliest). An index with no
+    * recorded history refuses wall-clock travel — time travel only sees
+    * what T2 recorded.
+    */
+  private[graft] def asOf(store: SnapshotStore, id: String,
+                          at: Either[String, Long]): GraftTable = {
+    def refuse(msg: String): Nothing =
+      throw new UnsupportedOperationException(s"graft: $msg")
+    val m = at match {
+      case Left(v) => store.loadVersionLazy(id, v.toLongOption.getOrElse(
+        refuse(s"VERSION AS OF '$v' on '$id' — snapshot versions are integers")))
+      case Right(micros) =>
+        store.findIndexAtWall(id, Math.floorDiv(micros, 1000L)).getOrElse(refuse(
+          s"TIMESTAMP AS OF found no recorded history for '$id' — record " +
+            "snapshots (execute(recordHistory = true) / recordSnapshot), " +
+            "or use VERSION AS OF"))
+    }
+    new GraftTable(store, m, pinned = true)
   }
 }
 
@@ -481,7 +520,7 @@ final class GraftScan(store: SnapshotStore, manifest: SnapshotManifest,
                       required: StructType,
                       aggRow: Option[Seq[(StructField, Any)]] = None,
                       limit: Option[Int] = None)
-    extends V1Scan with SupportsReportStatistics {
+    extends Scan with SupportsReportStatistics {
 
   // the ordered-scan rewrite (GraftOrderedScan) re-plans an ORDER BY over
   // this scan as the exchange-free manifest stitch; it needs the store +
@@ -533,36 +572,30 @@ final class GraftScan(store: SnapshotStore, manifest: SnapshotManifest,
     }
   }
 
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = readSchema()
-      override def needConversion: Boolean = true
-      override def buildScan(): RDD[Row] = aggRow match {
-        case Some(spec) => // the whole aggregate is ONE manifest-stat row
-          GraftScan.lastPlannedFiles = 0
-          context.sparkSession.sparkContext
-            .parallelize(Seq(Row(spec.map(_._2): _*)), 1)
-        case None =>
-          val base =
-            if (covering.isEmpty) store.emptyTyped(manifest)
-            else store.readFiles(covering.map(_.path), manifest)
-          // re-apply the bound predicates INSIDE the read so parquet
-          // row-group stats skip within the kept files too
-          val keyed = (lo.map(l => col(keyCol) >= l.head) ++
-            hi.map(h => col(keyCol) <= h.head))
-            .foldLeft(base)((d, p) => d.filter(p))
-          val cols = required.fieldNames
-          (if (cols.isEmpty) keyed else keyed.select(cols.map(col).toSeq: _*)).rdd
-      }
-    }.asInstanceOf[T]
+  /** This scan as a plain logical plan exposing `out` (the scan
+    * relation's output ids): the pushed aggregate's one manifest-stat
+    * row, or the covering files' parquet read with the bound predicates
+    * re-applied inside it (parquet row-group stats then skip within the
+    * kept files too).
+    */
+  private[sources] def logicalPlan(out: Seq[Attribute]): LogicalPlan = aggRow match {
+    case Some(spec) =>
+      GraftScan.lastPlannedFiles = 0
+      LocalRelation.fromExternalRows(out, Seq(Row(spec.map(_._2): _*)))
+    case None =>
+      val base =
+        if (covering.isEmpty) store.emptyTyped(manifest)
+        else store.readFiles(covering.map(_.path), manifest)
+      val keyed = (lo.map(l => col(keyCol) >= l.head) ++
+        hi.map(h => col(keyCol) <= h.head)).foldLeft(base)(_.filter(_))
+      OrderedPlans.aliasTo(out, keyed.queryExecution.analyzed)
+  }
 }
 
 object GraftScan {
   /** Covering-file count of the most recent scan planning on this driver —
-    * plan-shape telemetry (the V1 bridge hides the inner parquet scan's
-    * metrics from the outer plan, so tests pin pruning through this).
+    * plan-shape telemetry that tests and the KV benchmark pin pruning
+    * through.
     */
   @volatile var lastPlannedFiles: Int = -1
 }
@@ -574,11 +607,30 @@ object GraftScan {
 private[sources] object PlainGraftScan {
   def unapply(p: LogicalPlan): Option[(DataSourceV2ScanRelation, GraftScan)] = p match {
     case rel: DataSourceV2ScanRelation => rel.scan match {
-      // V2ScanRelationPushDown wraps every V1Scan before planning
-      case V1ScanWrapper(g: GraftScan, _, _) if g.plainScan => Some((rel, g))
       case g: GraftScan if g.plainScan => Some((rel, g))
       case _ => None
     }
     case _ => None
+  }
+}
+
+/** Splices every [[GraftScan]] the rewrites above left in the plan into
+  * the outer plan as its [[GraftScan.logicalPlan]], so the stock
+  * `FileSourceStrategy` plans one file scan with its own metrics, pushed
+  * filters and vectorized reader. Last in [[GraftRules.optimizations]]:
+  * every rewrite that matches a scan relation sees it first. A subquery
+  * optimized on its own keeps its relations: the outer plan splices them
+  * after `EXISTS`/`IN` become joins the join rewrites must still see.
+  * Row-level commands keep theirs too: Spark plans DELETE from its table,
+  * and [[GraftDmlStrategy]] compiles UPDATE and MERGE and re-plans every
+  * frame it reads.
+  */
+object SpliceGraftScan extends Rule[LogicalPlan] {
+  override def apply(plan: LogicalPlan): LogicalPlan = plan match {
+    case _: Subquery | _: DeleteFromTable | _: UpdateTable | _: MergeIntoTable => plan
+    case _ => plan.transformUpWithSubqueries {
+      case rel: DataSourceV2ScanRelation if rel.scan.isInstanceOf[GraftScan] =>
+        rel.scan.asInstanceOf[GraftScan].logicalPlan(rel.output)
+    }
   }
 }

@@ -10,21 +10,22 @@ import graft.plans.DeclareOrdered
 import graft.plans.OrderedPlans.aliasTo
 
 /** Ordering through the DSV2 path: `SELECT ... FROM cat.indexId ORDER BY
-  * key` plans the exchange-free manifest stitch instead of a global sort.
+  * key` (or a registered view, the same relation) plans the exchange-free
+  * manifest stitch instead of a global sort.
   *
-  * The V1Scan bridge carries no ordering contract (`SupportsReportOrdering`
-  * reports are consumed by `BatchScanExec`, which the bridge never plans),
-  * so the report is made at the LOGICAL level instead: when a global
-  * `Sort` on a leading-key prefix sits (through deterministic filters and
-  * projections) over a [[GraftScan]] whose snapshot layout
-  * is disjoint-ordered, the scan relation is replaced by the same
-  * ordered-stitch plan the view path uses, wrapped in
+  * A graft scan never plans as a `BatchScanExec` — [[SpliceGraftScan]]
+  * turns it into a plain file read — so a `SupportsReportOrdering` report
+  * would reach nothing, and the report is made at the LOGICAL level
+  * instead: when a global `Sort` on a leading-key prefix sits (through
+  * deterministic filters and projections) over a [[GraftScan]] whose
+  * snapshot layout is disjoint-ordered, the scan relation is replaced by
+  * the ordered stitch of the scan's own covering files (its pushed
+  * leading-key bounds, [[GraftScan.pushedKeyBounds]]), wrapped in
   * [[graft.plans.DeclareOrdered]] — whose physical twin satisfies
   * `OrderedDistribution`, so the stock `EnsureRequirements` plans no
-  * exchange and `RemoveRedundantSorts` elides the sort. SQL predicates
-  * still prune manifest files: the stitch carries the
-  * `SnapshotFilePrune` marker and the companion push rules move filters
-  * into it.
+  * exchange and `RemoveRedundantSorts` elides the sort. Every filter
+  * stays above the stitch (the scan returns them all as residual) and
+  * the stock rules push it into the leg scans.
   *
   * The rewrite declines (leaving the stock sort) when the scan already
   * collapsed to an aggregate row or limit prefix, when file ranges
@@ -112,7 +113,8 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     case pr @ Project(exprs, child) if exprs.forall(_.deterministic) =>
       rewriteThrough(child, sortAttrs, reverse).map(n => pr.copy(child = n))
     case PlainGraftScan(rel, g) =>
-      rewriteRelation(rel, g, sortAttrs, reverse, _.orderedStitchFrame(reverse))
+      val (lo, hi) = g.pushedKeyBounds
+      rewriteRelation(rel, g, sortAttrs, reverse, _.orderedStitchFrame(reverse, lo, hi))
     case _ => None
   }
 
@@ -137,145 +139,7 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
       topKThrough(child, sortAttrs, reverse, n, conds :+ cond)
         .map(nc => f.copy(child = nc))
     case PlainGraftScan(rel, g) => topKRelation(rel, g, sortAttrs, reverse, n, conds)
-    // the VIEW path (r18 symmetry, the DeclareOrdered source tag): a
-    // registered snapshot's ordered stitch gets the same file-prefix
-    // cut. Interior pushed-below Filters join the key-range validation
-    // (they replay above the new prefix stitch), interior Projects
-    // replay, the prune marker drops — the GraftPrefixCluster pattern.
-    case d: graft.plans.DeclareOrdered if d.source.isDefined =>
-      topKView(d, sortAttrs, reverse, n, conds)
     case _ => None
-  }
-
-  private def topKView(d: graft.plans.DeclareOrdered,
-                       sortAttrs: Seq[AttributeReference], reverse: Boolean,
-                       n: Int,
-                       conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Option[LogicalPlan] = {
-    import org.apache.spark.sql.catalyst.expressions.PlanExpression
-    val src = d.source.get
-    var interior = Seq.empty[org.apache.spark.sql.catalyst.expressions.Expression]
-    def dig(q: LogicalPlan): (LogicalPlan, LogicalPlan => LogicalPlan) = q match {
-      case f: Filter if f.condition.deterministic =>
-        interior :+= f.condition
-        val (leaf, rb) = dig(f.child)
-        (leaf, (nl: LogicalPlan) => f.copy(child = rb(nl)))
-      case pr: Project if pr.projectList.forall(_.deterministic) =>
-        val (leaf, rb) = dig(pr.child)
-        (leaf, (nl: LogicalPlan) => pr.copy(child = rb(nl)))
-      case sp: graft.plans.SnapshotFilePrune => dig(sp.child)
-      case leaf => (leaf, identity[LogicalPlan] _)
-    }
-    val (leaf, rbIn) = dig(d.child)
-    val keyCols = src.manifest.keyCols
-    val outByName = d.output.map(a => a.name -> a).toMap
-    val declared = keyCols.takeWhile(outByName.contains)
-    val sortNames = sortAttrs.map(_.name)
-    val eligible = sortNames == declared.take(sortNames.size) &&
-      sortAttrs.forall(a => outByName.get(a.name).exists(_.exprId == a.exprId))
-    if (!eligible) return None
-    val leadName = keyCols.head
-    val lead = leaf.output.find(_.name == leadName).getOrElse(return None)
-    // split plan-level conjuncts (exterior = between the Limit and `d`,
-    // interior = inside d's replayed stack) into leading-key ranges
-    // (bounds: they prune the covering set) and RESIDUALS. No residual →
-    // the exact n-row file-prefix cut; residuals → the grow-the-prefix
-    // exec rung (r19), same as the catalog path. A leading-key conjunct
-    // matches by the LEAF's exprId OR d's own output exprId for the key
-    // name: exterior predicates reference d.output while the stitch's
-    // alias Project carries a different leaf id for the same column —
-    // both are the key by construction (the stitch never renames), and
-    // which one a predicate holds depends only on rule-registration
-    // order (how far PushDownPredicates sank it before this rule ran),
-    // which must never change the chosen plan.
-    val dLead = outByName(leadName)
-    val extConjs = conds.flatMap(KeyRange.conjuncts)
-    val intConjs = interior.flatMap(KeyRange.conjuncts)
-    val planRange = KeyRange.of(extConjs ++ intConjs, 1) {
-      case a: AttributeReference
-          if a.exprId == lead.exprId || a.exprId == dLead.exprId => Some(0)
-      case _ => None
-    }
-    // the push-through rules may have carried predicates INTO the stitch
-    // (per-leg Filters inside the union) by a later fixed-point
-    // iteration — rows they drop would RESURRECT if the leaf were
-    // swapped for a fresh stitch. Leading-key ranges (matched by NAME —
-    // inside the stitch only our own scans live, no renames) are
-    // SYNTHESIZED as an equivalent range above the new leaf; any OTHER
-    // leaf-internal conjunct joins the residual set and forces the grow
-    // rung, reproduced on the new leaf by the same by-name remap (their
-    // per-leg exprIds cannot replay across the swap).
-    val leafConjs = leaf.collect { case f: Filter => f.condition }
-      .flatMap(KeyRange.conjuncts)
-    val leafRange = KeyRange.of(leafConjs, 1) {
-      case a: AttributeReference if a.name == leadName => Some(0)
-      case _ => None
-    }
-    val leafResidual = leafRange.residual
-    val grow = planRange.residual.nonEmpty || leafResidual.nonEmpty
-    if (grow) {
-      // exterior conjuncts re-evaluate inside the node (survivor
-      // counting) and need d-output-resolvable references; leaf-internal
-      // residuals remap by name onto the fresh stitch; subquery
-      // predicates decline (they would execute inside AND above);
-      // leaf-internal predicates never passed dig's determinism check,
-      // so require it here
-      val dIds = d.output.map(_.exprId).toSet
-      val leafNames = leaf.output.map(_.name).toSet
-      if (!growPrefixEnabled || n > growMaxRows ||
-          (extConjs ++ intConjs ++ leafConjs).exists(c => !c.deterministic ||
-            c.exists(_.isInstanceOf[PlanExpression[_]])) ||
-          !extConjs.forall(_.references.forall(r => dIds.contains(r.exprId))) ||
-          !leafResidual.forall(_.references.forall(r => leafNames.contains(r.name))))
-        return None
-    }
-    val lo = KeyRange.intersect(planRange.lo(0), leafRange.lo(0), lower = true)
-    val hi = KeyRange.intersect(planRange.hi(0), leafRange.hi(0), lower = false)
-    val ix = new KVIndex(src.store, src.manifest)
-    val frame =
-      if (grow) ix.growCoveringStitch(reverse,
-        lo.map(v => Seq(v._1)), hi.map(v => Seq(v._1)))
-      else ix.topKStitchFrame(n, reverse, lo.map(_._1), hi.map(_._1))
-    frame.map { stitched =>
-      import org.apache.spark.sql.catalyst.expressions.{And, Expression}
-      val aliased = aliasTo(leaf.output, stitched.queryExecution.analyzed)
-      // reproduce the leaf-internal drops on the new leaf: its key ranges
-      // as synthesized predicates, residuals (grow only) by by-name
-      // remap, deduped across the per-leg copies (plan-level filters
-      // replay through rbIn and the exterior stack instead)
-      val aliasByName = aliased.output.map(a => a.name -> a).toMap
-      val synth = leafRange.predicates(0, aliasByName(leadName))
-      val remapped: Seq[Expression] =
-        if (!grow) Nil
-        else leafResidual.map(_.transform {
-          case a: AttributeReference => aliasByName(a.name)
-        }).distinctBy(_.canonicalized)
-      val drops = synth ++ remapped
-      val newLeaf =
-        if (drops.isEmpty) aliased
-        else Filter(drops.reduce(And(_, _)), aliased)
-      val dir = if (reverse) Descending else Ascending
-      val ordering = declared.map(c => SortOrder(outByName(c), dir))
-      // source = None on the REPLACEMENT: the cut is done — a sourced
-      // marker under the same Limit(Sort) would re-fire this rule every
-      // fixed-point iteration (fresh exprIds each time, so the batch
-      // never converges — observed as a wedged optimizer)
-      if (!grow) DeclareOrdered(rbIn(newLeaf), ordering, source = None)
-      else {
-        // grow-the-prefix: interior conjuncts replay at their original
-        // positions via rbIn; EXTERIOR ones (key ranges included — the
-        // covering prune is over-approximate at the boundary files) are
-        // re-evaluated on top so the node counts exactly the rows the
-        // whole filtered subtree emits. They replay again above the
-        // node, harmlessly (deterministic).
-        val inNode = rbIn(newLeaf)
-        val counted =
-          if (extConjs.isEmpty) inNode
-          else Filter(extConjs.reduce(And(_, _)), inNode)
-        DeclareOrdered(graft.plans.GrowPrefixTopK(n, counted), ordering,
-          source = None)
-      }
-    }
   }
 
   /** Pure leading-key range conditions take the exact file-prefix cut
@@ -372,9 +236,7 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
         aliasTo(rel.output, stitched.queryExecution.analyzed))
       val dir = if (reverse) Descending else Ascending
       val ordering = declared.map(c => SortOrder(outByName(c), dir))
-      // source = None: the cut is done (the topKView convergence rule)
-      DeclareOrdered(graft.plans.GrowPrefixTopK(n, filtered), ordering,
-        source = None)
+      DeclareOrdered(graft.plans.GrowPrefixTopK(n, filtered), ordering)
     }
   }
 
@@ -402,8 +264,7 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
       // above keeps resolving
       val dir = if (reverse) Descending else Ascending
       val ordering = declared.map(c => SortOrder(outByName(c), dir))
-      DeclareOrdered(aliasTo(rel.output, stitched.queryExecution.analyzed), ordering,
-        Some(new graft.plans.SnapshotSource(g.storeRef, g.manifestRef)))
+      DeclareOrdered(aliasTo(rel.output, stitched.queryExecution.analyzed), ordering)
     }
   }
 }

@@ -141,104 +141,18 @@ object GraftPrefixCluster extends Rule[LogicalPlan] {
       : Set[org.apache.spark.sql.catalyst.expressions.ExprId] =
     es.collect { case a: AttributeReference => a.exprId }.toSet
 
-  /** A rewritable snapshot under `child`: a plain catalog/DSV2 scan
-    * (through deterministic Filters/Projects — [[GraftCoRangeJoin.side]]),
-    * or the registered-VIEW stitch (r18): a [[DeclareOrdered]] marker
-    * carrying its [[graft.plans.SnapshotSource]], reached through the
-    * same node walk. Returns the node whose output anchors the rewrite,
-    * the snapshot, its pushed leading bounds (catalog path only — the
-    * view path replays its Filters above the legs instead), and the
-    * replay stack.
-    */
-  private def snapshotUnder(child: LogicalPlan)
-      : Option[(Seq[Attribute], graft.core.SnapshotStore,
-                graft.core.SnapshotManifest, (Option[Any], Option[Any]),
-                LogicalPlan => LogicalPlan)] =
-    GraftCoRangeJoin.side(child) match {
-      case Some((rel, g, rebuild)) =>
-        val (bLo, bHi) = g.pushedKeyBounds
-        Some((rel.output, g.storeRef, g.manifestRef,
-          (bLo.filter(_.nonEmpty).map(_.head), bHi.filter(_.nonEmpty).map(_.head)),
-          rebuild))
-      case None => viewSide(child)
-    }
-
-  private def viewSide(p: LogicalPlan)
-      : Option[(Seq[Attribute], graft.core.SnapshotStore,
-                graft.core.SnapshotManifest, (Option[Any], Option[Any]),
-                LogicalPlan => LogicalPlan)] = p match {
-    case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-        if f.condition.deterministic =>
-      viewSide(f.child).map { case (o, s, m, b, rb) =>
-        (o, s, m, b, (nl: LogicalPlan) => f.copy(child = rb(nl)))
-      }
-    case pr: org.apache.spark.sql.catalyst.plans.logical.Project
-        if pr.projectList.forall(_.deterministic) =>
-      viewSide(pr.child).map { case (o, s, m, b, rb) =>
-        (o, s, m, b, (nl: LogicalPlan) => pr.copy(child = rb(nl)))
-      }
-    case d: graft.plans.DeclareOrdered if d.source.isDefined =>
-      // the marker's INTERIOR may hold Filters/Projects our push-through
-      // rules moved below it (and the file-prune marker, or its consumed
-      // Project+pruned-stitch shape). Replay every interior node above
-      // the legs and anchor the swap at the interior LEAF — its exprIds
-      // are what the replayed stack resolves against. Row-dropping
-      // predicates always survive as Filter nodes (the prune only ever
-      // REMOVES files a filter already excluded), so replacing a pruned
-      // leaf with full-coverage legs stays exact.
-      def dig(q: LogicalPlan): (LogicalPlan, LogicalPlan => LogicalPlan) = q match {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-            if f.condition.deterministic =>
-          val (leaf, rb) = dig(f.child)
-          (leaf, (nl: LogicalPlan) => f.copy(child = rb(nl)))
-        case pr: org.apache.spark.sql.catalyst.plans.logical.Project
-            if pr.projectList.forall(_.deterministic) =>
-          val (leaf, rb) = dig(pr.child)
-          (leaf, (nl: LogicalPlan) => pr.copy(child = rb(nl)))
-        case sp: graft.plans.SnapshotFilePrune =>
-          dig(sp.child) // marker dropped: the legs replace the stitch wholesale
-        case leaf => (leaf, identity[LogicalPlan] _)
-      }
-      val src = d.source.get
-      val (leaf, rbIn) = dig(d.child)
-      // the push-through rules may have carried predicates INTO the leaf
-      // (per-leg Filters inside the stitch union) by a later fixed-point
-      // iteration — rows they drop would RESURRECT if the leaf were
-      // swapped for full-coverage legs. Accept them only when every one
-      // is itself a leading-key range (matched by NAME — inside the
-      // stitch only our own scans live, no renames), and SYNTHESIZE an
-      // equivalent range predicate above the legs so the drop is
-      // reproduced exactly (their per-leg exprIds cannot replay across
-      // the swap) — the topKView pattern in [[GraftOrderedScan]].
-      // Anything else declines.
-      val leafConds = leaf.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-      }
-      val leadName = src.manifest.keyCols.head
-      val r = graft.core.KeyRange.of(leafConds, 1) {
-        case a: AttributeReference if a.name == leadName => Some(0)
-        case _ => None
-      }
-      if (r.residual.nonEmpty) return None
-      val synth =
-        if (!r.bounded(0)) Nil
-        else r.predicates(0, leaf.output.find(_.name == leadName).getOrElse(return None))
-      val rb2 = (nl: LogicalPlan) => rbIn(
-        if (synth.isEmpty) nl
-        else org.apache.spark.sql.catalyst.plans.logical.Filter(
-          synth.reduce(org.apache.spark.sql.catalyst.expressions.And(_, _)), nl))
-      Some((leaf.output, src.store, src.manifest, r.lead, rb2))
-    case _ => None
-  }
-
   private def rewriteChild(child: LogicalPlan,
       cluster: Set[org.apache.spark.sql.catalyst.expressions.ExprId],
       forAggregate: Boolean)
       : Option[LogicalPlan] = {
     if (cluster.isEmpty) return None
-    val (relOut, store, manifest, (leadLo, leadHi), rebuild) =
-      snapshotUnder(child).getOrElse(return None)
-    val keyCols = manifest.keyCols
+    // a plain scan (a registered view is the same relation) under
+    // deterministic Filters/Projects, replayed above the legs
+    val (rel, g, rebuild) = GraftCoRangeJoin.side(child).getOrElse(return None)
+    val relOut = rel.output
+    val (bLo, bHi) = g.pushedKeyBounds
+    val (leadLo, leadHi) = (bLo.flatMap(_.headOption), bHi.flatMap(_.headOption))
+    val keyCols = g.manifestRef.keyCols
     val relByName = relOut.map(a => a.name -> a).toMap
     // the longest leading prefix whose attrs survive column pruning AND
     // sit in the clustering set (key columns beyond the prefix may have
@@ -255,7 +169,7 @@ object GraftPrefixCluster extends Rule[LogicalPlan] {
     val rangeAttrs: Seq[Attribute] = keyCols.iterator
       .map(relByName.get).takeWhile(_.isDefined).map(_.get).toSeq
 
-    val ix = new KVIndex(store, manifest)
+    val ix = new KVIndex(g.storeRef, g.manifestRef)
     if (!ix.zipLayoutOk) return None
     if (forAggregate && stockAggWins(ix, m, leadLo, leadHi)) return None
     ix.probeLegPlans(m, GraftCoRangeJoin.rowsPerLegConf(), leadLo, leadHi) match {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.SparkStrategy
 
-import graft.plans.{DeclareOrderedStrategy, PruneSnapshotFiles, PushThroughDeclareOrdered}
+import graft.plans.{DeclareOrderedStrategy, PushThroughDeclareOrdered}
 
 /** The one installation path of graft's Catalyst rules and planner
   * strategies. Every entry point — a library read that declares an order
@@ -18,7 +18,8 @@ import graft.plans.{DeclareOrderedStrategy, PruneSnapshotFiles, PushThroughDecla
   * that list as the "User Provided Optimizers" batch, the only
   * fixed-point batch after V2 scan push-down, and the rewrites match
   * `DataSourceV2ScanRelation`, which `injectOptimizerRule`'s batch never
-  * sees.
+  * sees. [[SpliceGraftScan]] runs last and turns every scan relation the
+  * rewrites left into a plain file read.
   */
 object GraftRules {
 
@@ -43,7 +44,8 @@ object GraftRules {
     PushDownPredicates,
     ColumnPruning,
     CollapseProject,
-    PruneSnapshotFiles)
+    // last: every rewrite above matches the scan relation this replaces
+    SpliceGraftScan)
 
   /** Idempotent: appends graft's lists after any entries of other
     * libraries, once.

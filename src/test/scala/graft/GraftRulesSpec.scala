@@ -50,6 +50,7 @@ class GraftRulesSpec extends SparkSuite {
     assert(strategies.distinct == strategies && optimizations.distinct == optimizations)
     val names = optimizations.map(_.ruleName.split('.').last.stripSuffix("$"))
     assert(names.indexOf("GraftCountRange") < names.indexOf("GraftPrefixCluster"))
+    assert(names.last == "SpliceGraftScan")
     // installing again changes nothing
     GraftRules.install(catFirst)
     assert(lists(catFirst) == ((strategies, optimizations)))

@@ -188,6 +188,24 @@ class SqlSurfaceSpec extends SparkSuite {
       s"ORDER BY non-key must keep its global sort:\n$nonKey")
   }
 
+  test("catalog DESC range ORDER BY reads only the covering files") {
+    import graft.core._
+    val store = new FsSnapshotStore(tmpDir("graft-descrange"), spark)
+    val rows = (1L to 4000L).map(i => (i, i * 3)).toDF("k", "x")
+    val ix = KVIndex.bootstrap(store, "dr", rows, Seq("k"), maxRowsPerFile = 512)
+      .fold(e => sys.error(e.message), identity)
+    spark.conf.set("spark.sql.catalog.drcat", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.drcat.root", store.root)
+    val (a, b) = (1000L, 1600L)
+    val covering = ix.manifestFiles.count(f =>
+      f.max.head.asInstanceOf[Long] >= a && f.min.head.asInstanceOf[Long] <= b)
+    assert(covering < ix.numFiles, "need files outside the range")
+    val q = spark.sql(s"SELECT k, x FROM drcat.dr WHERE k BETWEEN $a AND $b ORDER BY k DESC")
+    assert(q.as[(Long, Long)].collect().toSeq == (a to b).reverse.map(i => (i, i * 3)))
+    assert(q.inputFiles.length == covering,
+      s"DESC range read ${q.inputFiles.length} files, $covering cover the range")
+  }
+
   test("catalog plugin: snapshot indexes are SQL tables with VERSION AS OF, INSERT, CREATE, DROP") {
     import graft.core._
     val store = new FsSnapshotStore(tmpDir("graft-catalog"), spark)
@@ -288,7 +306,7 @@ class SqlSurfaceSpec extends SparkSuite {
         .map(_.metrics("numFiles").value).sum
     }
     // point: exactly the one covering file (the native tableForRange prune,
-    // via graft.plans.PruneSnapshotFiles on the pushed predicate)
+    // via the scan's manifest prune on the pushed predicate)
     val point = spark.sql("SELECT x FROM svp_view WHERE k = 1234")
     assert(point.as[Long].collect().toSeq == Seq(3702L))
     assert(scannedFiles(point) == 1,

@@ -155,6 +155,15 @@ class SqlViewAsOfSpec extends SparkSuite {
       "SELECT * FROM vasof FOR TIMESTAMP AS OF 'not-a-time'").collect())
     assert(e3.getMessage.contains("does not parse") ||
       e3.getMessage.contains("CAST_INVALID_INPUT"), e3.getMessage)
+    // a registered name REBOUND to an unrelated frame answers from that
+    // frame only: time travel on it gets Spark's own refusal
+    KVIndex.bootstrap(st2, "rb", Seq((1L, 1L)).toDF("k", "v"), Seq("k"))
+      .fold(e => sys.error(e.message), identity)
+      .createOrReplaceView("vasof_rebound")
+    Seq((7L, 7L)).toDF("k", "v").createOrReplaceTempView("vasof_rebound")
+    val e5 = intercept[Exception](spark.sql(
+      "SELECT * FROM vasof_rebound FOR VERSION AS OF 1").collect())
+    assert(!e5.getMessage.contains("graft"), e5.getMessage)
     // an unregistered temp view keeps Spark's own refusal
     Seq((1L, 1L)).toDF("k", "v").createOrReplaceTempView("plain_tv")
     val e4 = intercept[Exception](spark.sql(
