@@ -879,6 +879,14 @@ object SparkEntry {
         .fold(e => sys.error(e.message), identity)
     }._2
 
+  /** Files the Spark plan of `df` reads, planned afresh with the driver-
+    * local tier off: below the driver bound the statement itself answers
+    * on the driver and plans no file scan.
+    */
+  private def sparkPlanFiles(s: SparkSession, df: DataFrame): Int =
+    LocalScan.withBudget(0L)(
+      org.apache.spark.sql.graft.Shim.ofRows(s, df.queryExecution.logical).inputFiles.length)
+
   /** lineitem at LINE grain with DELIBERATELY FINE files (2048 rows) so
     * the eager-bounds demo (kv_sql_probe_prune) has a multi-file manifest
     * to prune even at small scale factors.
@@ -3776,15 +3784,15 @@ object SparkEntry {
       val asc = s.sql("""
         SELECT 'head' AS tag, l_orderkey, l_linenumber, CAST(qty AS BIGINT) AS qty
         FROM graft_tk.lilines ORDER BY l_orderkey, l_linenumber LIMIT 50""")
-      require(asc.inputFiles.length == 1,
+      require(sparkPlanFiles(s, asc) == 1,
         s"kv_sql_topk: ASC LIMIT 50 over 2048-row files must read ONE file, " +
-          s"got ${asc.inputFiles.length}")
+          s"got ${sparkPlanFiles(s, asc)}")
       val desc = s.sql("""
         SELECT 'tail' AS tag, l_orderkey, l_linenumber, CAST(qty AS BIGINT) AS qty
         FROM graft_tk.lilines ORDER BY l_orderkey DESC, l_linenumber DESC LIMIT 50""")
-      require(desc.inputFiles.length == 1,
+      require(sparkPlanFiles(s, desc) == 1,
         s"kv_sql_topk: DESC LIMIT 50 must read the single tail file, " +
-          s"got ${desc.inputFiles.length}")
+          s"got ${sparkPlanFiles(s, desc)}")
       asc.unionAll(desc)
     }),
     // FILTERED SQL top-k (r19, GrowPrefixTopK): `WHERE <non-key residual>
@@ -3832,9 +3840,9 @@ object SparkEntry {
           SELECT l_orderkey, l_linenumber, CAST(qty AS BIGINT) AS qty
           FROM graft_kp.lilines WHERE l_orderkey > $last
           ORDER BY l_orderkey, l_linenumber LIMIT 40""")
-        require(q.inputFiles.length <= 2,
+        require(sparkPlanFiles(s, q) <= 2,
           s"kv_sql_keyset_page: page $i after $last must read <= 2 files " +
-            s"(boundary + guarantee), got ${q.inputFiles.length}")
+            s"(boundary + guarantee), got ${sparkPlanFiles(s, q)}")
         val rows = q.collect()
         require(rows.nonEmpty,
           s"kv_sql_keyset_page: page $i after l_orderkey=$last came back " +

@@ -29,8 +29,13 @@ import org.apache.spark.sql.functions._
   * this tier only on the disjoint layout, and their answer carries no
   * declared ordering: rows arrive in key order, but a downstream
   * `orderBy` sorts them again. Larger reads, legacy manifests without
-  * `colTypes` and the memory store keep the Spark plans below. The same
-  * budget bounds the key batch a commit collects for exact file pruning
+  * `colTypes` and the memory store keep the Spark plans below. Catalog
+  * SQL over a snapshot ([[createOrReplaceView]], `cat.t`) takes the same
+  * tier under the same budget: its ordered and top-k rewrites read
+  * through [[orderedStitchFrame]]/[[topKStitchFrame]], count-range counts
+  * its boundary files, and a single-scan statement folds on the driver,
+  * group-less aggregates included — 0 jobs. The same budget bounds the
+  * key batch a commit collects for exact file pruning
   * ([[LocalScan.collectBelow]]); a bigger batch prunes by its hull.
   */
 final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
@@ -279,9 +284,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     if (!filesDisjoint) return fallback
     val kept = filesWhere(filePred)
     if (kept.isEmpty) return emptyScan()
-    local(kept).fold(graft.plans.OrderedPlans.declareOrdered(
-      orderedUnion(if (reverse) kept.reverse else kept, reverse).filter(rowPred),
-      key.cols, reverse))(_.where(rowPred, reverse = reverse))
+    orderedRead(kept, reverse).fold(_.where(rowPred, reverse = reverse),
+      stitch => graft.plans.OrderedPlans.declareOrdered(stitch.filter(rowPred), key.cols, reverse))
   }
 
   /** S5 one-sided ranges over the snapshot: manifest prunes the files on
@@ -372,24 +376,31 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     org.apache.spark.sql.graft.Shim.ofRows(spark,
       graft.sources.GraftTable.relation(store, manifest)).createOrReplaceTempView(name)
 
-  /** UN-declared ordered stitch of the files covering the INCLUSIVE
-    * leading-key bounds `lo`/`hi`, for the DSV2 ordering rung
-    * ([[graft.sources.GraftOrderedScan]]). The caller places the
-    * declaration ABOVE its own projection — `ManifestOrderedPartitioning`
-    * is not an `Expression`, so Spark's alias-aware projection would pass
-    * it through a `ProjectExec` unchanged and strand stale attribute ids
-    * inside it, silently un-satisfying the ordered distribution. `None`
-    * when the layout cannot stitch (overlapping file ranges, empty
-    * snapshot) — callers fall back to the plain scan.
+  /** The ordered read of the files covering the INCLUSIVE leading-key
+    * bounds `lo`/`hi`, for the DSV2 ordering rung
+    * ([[graft.sources.GraftOrderedScan]]): Left, the driver-local tier over
+    * them when it serves them (the caller reads it in key order or
+    * reversed, so no sort remains); Right, their UN-declared ordered
+    * stitch. The caller places the declaration ABOVE its own projection —
+    * `ManifestOrderedPartitioning` is not an `Expression`, so Spark's
+    * alias-aware projection would pass it through a `ProjectExec`
+    * unchanged and strand stale attribute ids inside it, silently
+    * un-satisfying the ordered distribution. `None` when the layout
+    * cannot stitch (overlapping file ranges, empty snapshot) — callers
+    * fall back to the plain scan.
     */
   private[graft] def orderedStitchFrame(reverse: Boolean, lo: Option[Seq[Any]],
-                                        hi: Option[Seq[Any]]): Option[DataFrame] =
+      hi: Option[Seq[Any]]): Option[Either[LocalScan, DataFrame]] =
     if (manifest.isEmpty || files.isEmpty || !filesDisjoint) None
-    else {
-      val covering = files.filter(LegPlanner.covering(lo, hi))
-      if (covering.isEmpty) Some(emptyScan())
-      else Some(orderedUnion(if (reverse) covering.reverse else covering, reverse))
-    }
+    else Some(orderedRead(files.filter(LegPlanner.covering(lo, hi)), reverse))
+
+  /** `fs` (in manifest order) read in (reverse?) key order: the driver-local
+    * tier when it serves them, else their un-declared ordered stitch — the
+    * one such choice of every ordered read, library and SQL.
+    */
+  private def orderedRead(fs: Seq[FileEntry], reverse: Boolean): Either[LocalScan, DataFrame] =
+    local(fs).toLeft(
+      if (fs.isEmpty) emptyScan() else orderedUnion(if (reverse) fs.reverse else fs, reverse))
 
   /** File-prefix stitch for SQL top-k (`ORDER BY <key prefix> LIMIT n`,
     * [[graft.sources.GraftOrderedScan]]): the manifest prefix of files
@@ -401,12 +412,12 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * file. Sound ONLY when no predicate can drop rows between the scan
     * and the limit (the caller enforces: no Filter nodes, no pushed scan
     * bounds) — a filtered prefix might not hold n surviving rows while
-    * later files do. Same un-declared contract as [[orderedStitchFrame]]:
-    * the caller wraps [[graft.plans.DeclareOrdered]] above its own
-    * projection.
+    * later files do. Same contract as [[orderedStitchFrame]]: a local
+    * read, or a stitch the caller wraps in [[graft.plans.DeclareOrdered]]
+    * above its own projection.
     */
   private[graft] def topKStitchFrame(n: Long, reverse: Boolean,
-      lo: Option[Any] = None, hi: Option[Any] = None): Option[DataFrame] =
+      lo: Option[Any] = None, hi: Option[Any] = None): Option[Either[LocalScan, DataFrame]] =
     if (manifest.isEmpty || files.isEmpty || !filesDisjoint || n <= 0) None
     else {
       // keyset pagination (`WHERE k > last ORDER BY k LIMIT page`): the
@@ -418,11 +429,10 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       // either inclusivity)
       val (l, h) = (lo.map(Seq(_)), hi.map(Seq(_)))
       val covering = files.filter(LegPlanner.covering(l, h))
-      if (covering.isEmpty) return Some(emptyScan())
       val inside = LegPlanner.inside(l, h)
-      Some(orderedUnion(LegPlanner.prefix(
-        if (reverse) covering.reverse else covering, n,
-        f => if (inside(f)) f.rows else 0L), reverse))
+      val prefix = LegPlanner.prefix(if (reverse) covering.reverse else covering, n,
+        f => if (inside(f)) f.rows else 0L)
+      Some(orderedRead(if (reverse) prefix.reverse else prefix, reverse))
     }
 
   /** FULL covering stitch for grow-the-prefix filtered top-k
@@ -483,10 +493,9 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       return if (reverse) table.tail(n) else table.head(n)
     val prefix = LegPlanner.prefix(if (reverse) files.reverse else files, n)
     if (prefix.isEmpty) emptyScan()
-    else local(if (reverse) prefix.reverse else prefix).fold(
-      orderedUnion(prefix, reverse).limit(n)
-        .coalesce(1).sortWithinPartitions(key.sortCols(reverse): _*))(
-      _.where(lit(true), limit = n, reverse = reverse))
+    else orderedRead(if (reverse) prefix.reverse else prefix, reverse).fold(
+      _.where(lit(true), limit = n, reverse = reverse),
+      _.limit(n).coalesce(1).sortWithinPartitions(key.sortCols(reverse): _*))
   }
 
   /** Iterator pull over the snapshot — the reference's
@@ -751,7 +760,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * new snapshot version under the same CREATE_NEW single-writer CAS as
     * [[execute]]. Reference analogue: the per-key `remove` loop
     * (`Index.scala:1010-1036`) — the reference has no bulk delete; this
-    * is the file-grain form a 100-TB corpus needs.
+    * is the file-grain form a 100-TB corpus needs. `from = Seq(null)`,
+    * exclusive, starts the range just past the null keys.
     */
   def removeRange(from: Seq[Any], to: Seq[Any],
                   incFrom: Boolean = true, incTo: Boolean = true,

@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.collection.mutable
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.hadoop.fs.Path
@@ -30,10 +31,14 @@ import org.apache.spark.sql.types.StructType
   * order and each file's own order, which on the disjoint layout is key
   * order; a reverse read reverses both.
   *
-  * The answer is a bare `LocalRelation`: a caller's filter, projection and
-  * limit fold into it (`ConvertToLocalRelation`), but a sort, repartition
-  * or aggregate above it still runs jobs, so ordered answers arrive
-  * already ordered and counts are summed here.
+  * The answer is a bare `LocalRelation`: a library caller's filter,
+  * projection and limit fold into it (`ConvertToLocalRelation`), but a
+  * sort, repartition or aggregate above it still runs jobs, so ordered
+  * answers arrive already ordered and counts are summed here. Catalog SQL
+  * goes further: a statement whose only leaf is such a read folds whole on
+  * the driver, group-less aggregates included, and runs no job at all
+  * (`graft.sources.LocalFold`); its ordered and top-k rewrites read in
+  * key order or reversed, so no sort remains.
   *
   * A read takes the tier only when its covering files' manifest rows times
   * the schema's default row size fit under [[BudgetBytes]], the snapshot
@@ -88,6 +93,8 @@ private[graft] final class LocalScan(spark: SparkSession, schema: StructType,
                                      paths: Seq[String]) {
   private val attrs = DataTypeUtils.toAttributes(schema)
 
+  def numFiles: Int = paths.size
+
   private def frame(rows: Seq[InternalRow]): DataFrame =
     Shim.ofRows(spark, LocalRelation(attrs, rows))
 
@@ -135,7 +142,12 @@ private[graft] final class LocalScan(spark: SparkSession, schema: StructType,
   /** Rows passing `pred`, at most `limit`, in file order — or, `reverse`,
     * in reversed file order with each file's rows reversed.
     */
-  def where(pred: Column, limit: Int = Int.MaxValue, reverse: Boolean = false): DataFrame = {
+  def where(pred: Column, limit: Int = Int.MaxValue, reverse: Boolean = false): DataFrame =
+    Shim.ofRows(spark, relation(pred, limit, reverse))
+
+  /** [[where]] as a bare `LocalRelation` over the snapshot schema. */
+  def relation(pred: Column, limit: Int = Int.MaxValue,
+               reverse: Boolean = false): LocalRelation = {
     val keep = test(pred)
     val toUnsafe = UnsafeProjection.create(schema)
     val out = ArrayBuffer.empty[InternalRow]
@@ -144,11 +156,19 @@ private[graft] final class LocalScan(spark: SparkSession, schema: StructType,
       out.size < limit
     }
     else paths.reverseIterator.takeWhile(_ => out.size < limit).foreach { p =>
-      val fileRows = ArrayBuffer.empty[InternalRow]
-      decode(Seq(p)) { r => if (keep(r)) fileRows += toUnsafe(r).copy(); true }
-      out ++= fileRows.reverseIterator.take(limit - out.size)
+      // a file decodes forward: keep only its last `want` matches
+      val want = limit - out.size
+      val last = mutable.ArrayDeque.empty[InternalRow]
+      decode(Seq(p)) { r =>
+        if (keep(r)) {
+          if (last.size == want) last.removeHead()
+          last += toUnsafe(r).copy()
+        }
+        true
+      }
+      out ++= last.reverseIterator
     }
-    frame(out.toSeq)
+    LocalRelation(attrs, out.toSeq)
   }
 
   /** Number of rows passing `pred`. */

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.LongType
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 
-import graft.core.{KeyOrd, KeyRange, KVIndex}
+import graft.core.{KeyOrd, KeyRange, KVIndex, LocalScan}
 
 /** Serves `SELECT count(*) / min(k) / max(k) FROM cat.t WHERE
   * <leading-key range>` at MANIFEST cost — the SQL twin of
@@ -35,6 +35,9 @@ import graft.core.{KeyOrd, KeyRange, KVIndex}
   * at most two on a disjoint NULL-FREE layout — are the only files
   * scanned. A range spanning terabytes of interior files answers by
   * reading at most two; an edge-aligned or all-pruned range reads none.
+  * Below the driver bound the boundary files decode on the driver
+  * ([[graft.core.LocalScan]], as `KVIndex.countRange` does) and the whole
+  * aggregate folds to its one row ([[LocalFold]]): no Spark job.
   * On null-bearing data the bound loosens: every file whose truncated
   * min/max carries a null at a constrained position is DEMOTED to a
   * boundary scan too (such a file may mix null-headed non-matches with
@@ -205,14 +208,16 @@ object GraftCountRange extends Rule[LogicalPlan] {
             toInternal(p)(narrow(t(p), keyAttrAt(p).dataType))) :+ (cnt: Any))
         Seq(row(minTuple, interior), row(maxTuple, 0L))
       }
-    val statsRel = LocalRelation(servedPos.map(outAttrs) :+ cOut, statRows)
+    val statsRel = LocalFold.mark(LocalRelation(servedPos.map(outAttrs) :+ cOut, statRows))
     val branches: Seq[LogicalPlan] =
       if (boundary.isEmpty) Seq(statsRel)
       else {
-        // scan ONLY the boundary files, re-apply the ORIGINAL predicate
-        // exactly (its attr exprIds restored over the bounded read)
-        val bScan = g.storeRef.readFiles(boundary.map(_.path), g.manifestRef)
-          .queryExecution.analyzed
+        // read ONLY the boundary files — on the driver when the tier
+        // serves them — and re-apply the ORIGINAL predicate exactly (its
+        // attr exprIds restored over the bounded read)
+        val bScan = LocalScan(g.storeRef, g.manifestRef, boundary).fold(
+          g.storeRef.readFiles(boundary.map(_.path), g.manifestRef).queryExecution.analyzed)(
+          ls => LocalFold.mark(ls.relation(LocalFold.onSnapshot(Seq(cond)))))
         val bAliased = graft.plans.OrderedPlans.aliasTo(rel.output, bScan)
         val bRows = Project(
           servedPos.map(p => Alias(keyAttrAt(p), outAttrs(p).name)(
@@ -235,6 +240,7 @@ object GraftCountRange extends Rule[LogicalPlan] {
       }
       Alias(expr, a.name)(exprId = a.exprId)
     }
-    Some(Aggregate(Nil, outExprs, src, None))
+    // with every branch on the driver the aggregate folds to its one row
+    Some(LocalFold(Aggregate(Nil, outExprs, src, None)))
   }
 }

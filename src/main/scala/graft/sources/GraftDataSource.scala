@@ -6,14 +6,14 @@ import java.util.OptionalLong
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SQLContext, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SQLContext, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, Statistics, SupportsPushDownAggregates, SupportsPushDownFilters, SupportsPushDownLimit, SupportsPushDownRequiredColumns, SupportsReportStatistics}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.catalyst.plans.logical.{DeleteFromTable, LocalRelation, LogicalPlan, MergeIntoTable, Subquery, UpdateTable}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -24,7 +24,7 @@ import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex, KeyOrd, KeyRange, LegPlanner, SnapshotManifest, SnapshotStore}
+import graft.core.{Command, FsSnapshotStore, GraftError, GraftException, KVIndex, KeyOrd, KeyRange, LegPlanner, LocalScan, SnapshotManifest, SnapshotStore}
 import graft.plans.OrderedPlans
 
 /** DataSource V2 surface for snapshot indexes: `spark.read.format("graft")
@@ -43,7 +43,11 @@ import graft.plans.OrderedPlans
   * [[SpliceGraftScan]] splices the covering files' parquet read into the
   * outer plan, so stock `FileSourceStrategy` plans ONE file scan with its
   * own metrics, pushed filters, column pruning and the vectorized reader
-  * — no hand-rolled reader and no second plan to maintain.
+  * — no hand-rolled reader and no second plan to maintain. Below the
+  * driver bound ([[graft.core.LocalScan]]) a statement whose only leaf is
+  * the scan is instead answered on the driver during optimization: the
+  * covering files decode there and the plan above folds into one local
+  * relation ([[LocalFold]]), so it runs no Spark job.
   *
   * Ordered SQL over this path gets the exchange-free manifest stitch via
   * [[GraftOrderedScan]]: a logical rewrite re-plans an eligible `ORDER BY
@@ -266,8 +270,9 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
   // are conjunctions of =, <, <=, >, >= on the SINGLE key column (the
   // exact shapes `removeRange` can honor precisely — no over-delete, no
   // under-delete); anything else reports `canDeleteWhere = false` and
-  // Spark raises its standard "cannot delete" analysis error. Unbounded
-  // sides close over the manifest's exact key bounds. An unconditioned
+  // Spark raises its standard "cannot delete" analysis error. An open
+  // upper side closes at the manifest's max key, an open lower side just
+  // past the null keys (no SQL range matches NULL). An unconditioned
   // DELETE / TRUNCATE TABLE commits an EMPTY file list
   // ([[graft.core.KVIndex.truncate]]) without reading anything.
 
@@ -288,13 +293,10 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
         case GraftDelete.Range(lo, hi) =>
           ix.keyBounds match {
             case None => None // empty snapshot: nothing to delete
-            case Some((gmin, gmax)) =>
-              if (lo.isEmpty && gmin.head == null)
-                throw new UnsupportedOperationException(
-                  "graft: DELETE with an open lower bound over null leading " +
-                    "keys — a SQL predicate never matches NULL; bound the " +
-                    "range or use the library removeRange")
-              val (from, incF) = lo.getOrElse((gmin.head, true))
+            case Some((_, gmax)) =>
+              // a range rejects nulls, so an open lower side starts just
+              // past them: null, exclusive (`removeRange` keeps null keys)
+              val (from, incF) = lo.getOrElse((null, false))
               val (to, incT) = hi.getOrElse((gmax.head, true))
               val cmp = KeyOrd.compare(Seq(from), Seq(to))
               if (cmp > 0 || (cmp == 0 && !(incF && incT))) None // empty range
@@ -353,8 +355,8 @@ object GraftTable {
   * range shape on the leading key (an empty [[KeyRange]] residual) — the
   * translation keeps INCLUSIVITY, where the scan-side prune only needs an
   * inclusive over-approximation (fine for pruning, data loss for
-  * deletion). An `IS NOT NULL` alone is a range with both sides open, so
-  * the null guard in `deleteWhere` applies to it.
+  * deletion). An `IS NOT NULL` alone is a range with both sides open: it
+  * deletes every non-null key.
   */
 private[sources] object GraftDelete {
   sealed trait Plan
@@ -579,17 +581,34 @@ final class GraftScan(store: SnapshotStore, manifest: SnapshotManifest,
     * kept files too).
     */
   private[sources] def logicalPlan(out: Seq[Attribute]): LogicalPlan = aggRow match {
-    case Some(spec) =>
-      GraftScan.lastPlannedFiles = 0
-      LocalRelation.fromExternalRows(out, Seq(Row(spec.map(_._2): _*)))
+    case Some(spec) => aggRelation(out, spec)
     case None =>
       val base =
         if (covering.isEmpty) store.emptyTyped(manifest)
         else store.readFiles(covering.map(_.path), manifest)
-      val keyed = (lo.map(l => col(keyCol) >= l.head) ++
-        hi.map(h => col(keyCol) <= h.head)).foldLeft(base)(_.filter(_))
-      OrderedPlans.aliasTo(out, keyed.queryExecution.analyzed)
+      OrderedPlans.aliasTo(out, bound.fold(base)(base.filter).queryExecution.analyzed)
   }
+
+  /** [[logicalPlan]] answered on the driver: the pushed aggregate's row,
+    * or the covering files decoded there with the bound predicate
+    * ([[graft.core.LocalScan]]), marked for [[LocalFold]]. None when the
+    * driver tier does not serve the covering files.
+    */
+  private[sources] def localPlan(out: Seq[Attribute]): Option[LogicalPlan] = aggRow match {
+    case Some(spec) => Some(LocalFold.mark(aggRelation(out, spec)))
+    case None => LocalScan(store, manifest, covering).map(ls =>
+      OrderedPlans.aliasTo(out, LocalFold.mark(ls.relation(bound.getOrElse(lit(true))))))
+  }
+
+  private def aggRelation(out: Seq[Attribute], spec: Seq[(StructField, Any)]): LocalRelation = {
+    GraftScan.lastPlannedFiles = 0
+    LocalRelation.fromExternalRows(out, Seq(Row(spec.map(_._2): _*)))
+  }
+
+  /** The pushed leading-key bounds as one row predicate, if any. */
+  private[sources] def bound: Option[Column] =
+    (lo.map(l => col(keyCol) >= l.head) ++ hi.map(h => col(keyCol) <= h.head))
+      .reduceOption(_ && _)
 }
 
 object GraftScan {
@@ -617,7 +636,9 @@ private[sources] object PlainGraftScan {
 /** Splices every [[GraftScan]] the rewrites above left in the plan into
   * the outer plan as its [[GraftScan.logicalPlan]], so the stock
   * `FileSourceStrategy` plans one file scan with its own metrics, pushed
-  * filters and vectorized reader. Last in [[GraftRules.optimizations]]:
+  * filters and vectorized reader — or, for a single-scan statement below
+  * the driver bound, folds the whole statement on the driver
+  * ([[GraftScan.localPlan]], [[LocalFold]]). Last in [[GraftRules.optimizations]]:
   * every rewrite that matches a scan relation sees it first. A subquery
   * optimized on its own keeps its relations: the outer plan splices them
   * after `EXISTS`/`IN` become joins the join rewrites must still see.
@@ -628,9 +649,29 @@ private[sources] object PlainGraftScan {
 object SpliceGraftScan extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan = plan match {
     case _: Subquery | _: DeleteFromTable | _: UpdateTable | _: MergeIntoTable => plan
-    case _ => plan.transformUpWithSubqueries {
+    case _ => onDriver(plan).getOrElse(plan.transformUpWithSubqueries {
       case rel: DataSourceV2ScanRelation if rel.scan.isInstanceOf[GraftScan] =>
         rel.scan.asInstanceOf[GraftScan].logicalPlan(rel.output)
-    }
+    })
   }
+
+  /** The whole statement as one `LocalRelation`, when its only leaf is a
+    * graft scan the driver tier serves ([[GraftScan.localPlan]]) or rows
+    * a rewrite already decoded there, no subquery hangs off it, and every
+    * node above folds ([[LocalFold]]). A statement that would keep a
+    * node above local rows — a join, union, window, sort or grouped
+    * aggregate — keeps the file read, which plans fewer jobs for them.
+    */
+  private def onDriver(plan: LogicalPlan): Option[LogicalPlan] =
+    if (plan.exists(_.subqueries.nonEmpty)) None
+    else plan.collectLeaves() match {
+      case Seq(rel: DataSourceV2ScanRelation) => rel.scan match {
+        case g: GraftScan if !plan.exists(n => !(n eq rel) && !LocalFold.folds(n)) =>
+          g.localPlan(rel.output).map(local =>
+            LocalFold(plan.transformUp { case `rel` => local })).filter(LocalFold.marked)
+        case _ => None
+      }
+      case Seq(leaf) if LocalFold.marked(leaf) && !(plan eq leaf) => Some(LocalFold(plan))
+      case _ => None
+    }
 }

@@ -1,11 +1,13 @@
 package graft.sources
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending, IntegerLiteral, SortOrder}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 
-import graft.core.{KVIndex, KeyRange}
+import graft.core.{KVIndex, KeyRange, LocalScan}
 import graft.plans.DeclareOrdered
 import graft.plans.OrderedPlans.aliasTo
 
@@ -26,6 +28,13 @@ import graft.plans.OrderedPlans.aliasTo
   * exchange and `RemoveRedundantSorts` elides the sort. Every filter
   * stays above the stitch (the scan returns them all as residual) and
   * the stock rules push it into the leg scans.
+  *
+  * Below the driver bound the covering files decode on the driver
+  * instead ([[graft.core.LocalScan]], the library's `range`/`headOrdered`
+  * tier), forward or reversed, so the rows already arrive in the sort's
+  * order: the `Sort` itself goes, no [[graft.plans.DeclareOrdered]] is
+  * emitted, and the filters, projections and limit above fold into the
+  * rows ([[LocalFold]]) — the statement runs no Spark job.
   *
   * The rewrite declines (leaving the stock sort) when the scan already
   * collapsed to an aggregate row or limit prefix, when file ranges
@@ -55,6 +64,8 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     // TakeOrderedAndProject scans every covering file. The Sort node
     // stays and elides via the DeclareOrdered claim exactly like the
     // bare-sort rung; the Limit above trims the prefix's surplus rows.
+    // When the driver tier reads the prefix, its rows already arrive in
+    // key order: the Sort goes and the limit folds into them.
     // STRICTER eligibility than the bare sort: any predicate between the
     // limit and the scan (a Filter node, or bounds pushed INTO the scan)
     // could drop prefix rows while later files still hold survivors, so
@@ -69,20 +80,33 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     // must not silently under-read — it declines to the bare-sort rung
     case gl @ GlobalLimit(IntegerLiteral(n), ll @ LocalLimit(IntegerLiteral(localN), s: Sort))
         if s.global && n > 0 && localN == n =>
-      sortShape(s.order) match {
-        case Some((sortAttrs, reverse)) =>
-          topKThrough(s.child, sortAttrs, reverse, n)
-            .map(nc => gl.copy(child = ll.copy(child = s.copy(child = nc))))
-            .getOrElse(gl)
+      sortShape(s.order).flatMap { case (sortAttrs, reverse) =>
+        topKThrough(s.child, sortAttrs, reverse, n)
+      } match {
+        case Some(Left(local)) => LocalFold(gl.copy(child = ll.copy(child = local)))
+        case Some(Right(nc)) => gl.copy(child = ll.copy(child = s.copy(child = nc)))
         case None => gl
       }
     case s: Sort if s.global =>
-      sortShape(s.order) match {
-        case Some((sortAttrs, reverse)) =>
-          rewriteThrough(s.child, sortAttrs, reverse)
-            .map(n => s.copy(child = n)).getOrElse(s)
+      sortShape(s.order).flatMap { case (sortAttrs, reverse) =>
+        rewriteThrough(s.child, sortAttrs, reverse)
+      } match {
+        case Some(Left(local)) => LocalFold(local)
+        case Some(Right(nc)) => s.copy(child = nc)
         case None => s
       }
+  }
+
+  /** A rewritten sort input: Left, rows the driver decoded in the sort's
+    * order (the sort goes); Right, the declared ordered stitch (the sort
+    * stays and elides).
+    */
+  private type Read = Either[LogicalPlan, LogicalPlan]
+
+  /** `r` under the unary `node`, on whichever side it is. */
+  private def under(node: LogicalPlan)(r: Read): Read = {
+    def wrap(c: LogicalPlan) = node.withNewChildren(Seq(c))
+    r.fold(c => Left(wrap(c)), c => Right(wrap(c)))
   }
 
   /** The sort must be plain attributes, one uniform direction, default
@@ -107,14 +131,15 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     * id lookup and the rewrite declines).
     */
   private def rewriteThrough(p: LogicalPlan, sortAttrs: Seq[AttributeReference],
-                             reverse: Boolean): Option[LogicalPlan] = p match {
+                             reverse: Boolean): Option[Read] = p match {
     case f @ Filter(cond, child) if cond.deterministic =>
-      rewriteThrough(child, sortAttrs, reverse).map(n => f.copy(child = n))
+      rewriteThrough(child, sortAttrs, reverse).map(under(f))
     case pr @ Project(exprs, child) if exprs.forall(_.deterministic) =>
-      rewriteThrough(child, sortAttrs, reverse).map(n => pr.copy(child = n))
+      rewriteThrough(child, sortAttrs, reverse).map(under(pr))
     case PlainGraftScan(rel, g) =>
       val (lo, hi) = g.pushedKeyBounds
-      rewriteRelation(rel, g, sortAttrs, reverse, _.orderedStitchFrame(reverse, lo, hi))
+      rewriteRelation(rel, g, sortAttrs, reverse, g.bound.getOrElse(lit(true)), Int.MaxValue)(
+        _.orderedStitchFrame(reverse, lo, hi))
     case _ => None
   }
 
@@ -132,26 +157,27 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
   private def topKThrough(p: LogicalPlan, sortAttrs: Seq[AttributeReference],
                           reverse: Boolean, n: Int,
                           conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil)
-      : Option[LogicalPlan] = p match {
+      : Option[Read] = p match {
     case pr @ Project(exprs, child) if exprs.forall(_.deterministic) =>
-      topKThrough(child, sortAttrs, reverse, n, conds).map(nc => pr.copy(child = nc))
+      topKThrough(child, sortAttrs, reverse, n, conds).map(under(pr))
     case f @ Filter(cond, child) if cond.deterministic =>
-      topKThrough(child, sortAttrs, reverse, n, conds :+ cond)
-        .map(nc => f.copy(child = nc))
+      topKThrough(child, sortAttrs, reverse, n, conds :+ cond).map(under(f))
     case PlainGraftScan(rel, g) => topKRelation(rel, g, sortAttrs, reverse, n, conds)
     case _ => None
   }
 
   /** Pure leading-key range conditions take the exact file-prefix cut
-    * with their (inclusive over-approximate) bounds; conditions with any
-    * OTHER conjunct shape fall to the r19 grow-the-prefix EXEC rung
-    * ([[growPrefixRelation]]) instead of declining outright.
+    * with their (inclusive over-approximate) bounds; read on the driver,
+    * the conditions themselves are the decode's row test, so it stops at
+    * n matches. Conditions with any OTHER conjunct shape fall to the r19
+    * grow-the-prefix EXEC rung ([[growPrefixRelation]]) instead of
+    * declining outright.
     */
   private def topKRelation(rel: DataSourceV2ScanRelation, g: GraftScan,
                            sortAttrs: Seq[AttributeReference], reverse: Boolean,
                            n: Int,
                            conds: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
-      : Option[LogicalPlan] = {
+      : Option[Read] = {
     val leadName = g.manifestRef.keyCols.head
     val lead = rel.output.find(_.name == leadName).getOrElse(return None)
     val r = KeyRange.of(conds, 1) {
@@ -159,9 +185,9 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
       case _ => None
     }
     if (r.residual.isEmpty)
-      rewriteRelation(rel, g, sortAttrs, reverse,
+      rewriteRelation(rel, g, sortAttrs, reverse, LocalFold.onSnapshot(conds), n)(
         _.topKStitchFrame(n, reverse, r.lead._1, r.lead._2))
-    else growPrefixRelation(rel, g, sortAttrs, reverse, n, conds)
+    else growPrefixRelation(rel, g, sortAttrs, reverse, n, conds).map(Right(_))
   }
 
   /** `spark.graft.sql.topk.growPrefix` (default true) gates the exec-time
@@ -240,11 +266,15 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     }
   }
 
+  /** The sort input `read` picks for the scan relation `rel`, when the
+    * sort is a prefix of the declarable key ordering: a local read of the
+    * rows passing `pred` (at most `limit`), or the declared stitch.
+    */
   private def rewriteRelation(rel: DataSourceV2ScanRelation, g: GraftScan,
-                              sortAttrs: Seq[AttributeReference],
-                              reverse: Boolean,
-                              frame: KVIndex => Option[org.apache.spark.sql.DataFrame])
-      : Option[LogicalPlan] = {
+                              sortAttrs: Seq[AttributeReference], reverse: Boolean,
+                              pred: Column, limit: Int)(
+                              read: KVIndex => Option[Either[LocalScan, DataFrame]])
+      : Option[Read] = {
     val keyCols = g.manifestRef.keyCols
     val outByName = rel.output.map(a => a.name -> a).toMap
     // the declarable ordering: the longest keyCols prefix present in the
@@ -257,14 +287,17 @@ object GraftOrderedScan extends Rule[LogicalPlan] {
     val eligible = sortNames == declared.take(sortNames.size) &&
       sortAttrs.forall(a => outByName.get(a.name).exists(_.exprId == a.exprId))
     if (!eligible) return None
-    val ix = new KVIndex(g.storeRef, g.manifestRef)
-    frame(ix).map { stitched =>
-      // project the full-schema stitch down to the relation's (possibly
-      // pruned) output, keeping the relation's exprIds so everything
-      // above keeps resolving
-      val dir = if (reverse) Descending else Ascending
-      val ordering = declared.map(c => SortOrder(outByName(c), dir))
-      DeclareOrdered(aliasTo(rel.output, stitched.queryExecution.analyzed), ordering)
+    // either side is projected down to the relation's (possibly pruned)
+    // output, keeping the relation's exprIds so everything above keeps
+    // resolving
+    read(new KVIndex(g.storeRef, g.manifestRef)).map {
+      case Left(local) =>
+        GraftScan.lastPlannedFiles = local.numFiles
+        Left(aliasTo(rel.output, LocalFold.mark(local.relation(pred, limit, reverse))))
+      case Right(stitched) =>
+        val dir = if (reverse) Descending else Ascending
+        val ordering = declared.map(c => SortOrder(outByName(c), dir))
+        Right(DeclareOrdered(aliasTo(rel.output, stitched.queryExecution.analyzed), ordering))
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for the whole test run (reference test style:
@@ -26,4 +26,14 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.spark
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** `df` planned afresh with the driver-local read tier off: the Spark
+    * plan (file scans, exchanges, jobs) a catalog statement runs above
+    * the driver bound. Below it the same statement answers on the driver.
+    */
+  def sparkPlanned(df: DataFrame): DataFrame = graft.core.LocalScan.withBudget(0L) {
+    val fresh = org.apache.spark.sql.graft.Shim.ofRows(spark, df.queryExecution.logical)
+    fresh.queryExecution.executedPlan
+    fresh
+  }
 }

@@ -280,9 +280,9 @@ class SqlPrefixAggSpec extends SparkSuite with AdaptiveSparkPlanHelper {
   }
 
   test("VIEW path: GROUP BY the leading key over a registered view runs exchange-free") {
-    // the r18 symmetry fix: the DeclareOrdered stitch carries its
-    // SnapshotSource, so the prefix-cluster rule re-cuts the VIEW's legs
-    // at prefix grain exactly like a catalog scan's
+    // a registered view is the catalog table pinned at its snapshot, so
+    // the prefix-cluster rule matches the VIEW's scan relation and cuts
+    // its legs at prefix grain exactly like a catalog scan's
     val st = new FsSnapshotStore(tmpDir("graft-pfxview") + "/store", spark)
     val rs = (1L to 3500L).filter(_ % 5 != 0).map(i => (i / 70, i, i % 13))
     val ix = KVIndex.bootstrap(st, "pv", rs.toDF("g", "k", "v").repartition(1),
@@ -325,10 +325,12 @@ class SqlPrefixAggSpec extends SparkSuite with AdaptiveSparkPlanHelper {
     assert(exchanges(nv) >= 1, "view-path non-key grouping must shuffle")
 
     // ORDER BY the key over the view still elides (the DeclareOrdered
-    // claim survives column narrowing with its trimmed prefix)
+    // claim survives column narrowing with its trimmed prefix) in the
+    // Spark plan; below the driver bound it answers on the driver
     val qo = spark.sql("SELECT g, k FROM pfx_view ORDER BY g, k")
-    assert(exchanges(qo) == 0,
-      s"view ORDER BY key must stay exchange-free:\n${qo.queryExecution.executedPlan}")
+    val qoSpark = sparkPlanned(qo)
+    assert(exchanges(qoSpark) == 0,
+      s"view ORDER BY key must stay exchange-free:\n${qoSpark.queryExecution.executedPlan}")
     assert(qo.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       rs.map(x => (x._1, x._2)))
   }

@@ -127,6 +127,8 @@ class SqlSurfaceSpec extends SparkSuite {
     // a global SortExec prints as "Sort [...], true, 0"; the stitch's
     // per-leg local sorts print ", false," and are expected
     val globalSort = """Sort \[[^\]]*\], true""".r
+    // the Spark plans (below the driver bound these answer on the driver)
+    LocalScan.withBudget(0L) {
 
     // ORDER BY key: the GraftOrderedScan rewrite swaps in the declared
     // stitch — no global sort, no exchange, rows still in key order
@@ -186,6 +188,13 @@ class SqlSurfaceSpec extends SparkSuite {
     val nonKey = load().orderBy("x").queryExecution.executedPlan.toString
     assert(globalSort.findFirstIn(nonKey).isDefined,
       s"ORDER BY non-key must keep its global sort:\n$nonKey")
+    }
+    // the same answers at the default budget
+    assert(load().orderBy($"k".desc).select("k").as[Long].collect().toSeq ==
+      (1L to 4000L).reverse)
+    assert(load().select("k", "x").filter($"k".between(100L, 110L)).orderBy("k")
+      .as[(Long, Long)].collect().toSeq == (100L to 110L).map(i => (i, i * 3)))
+    assert(spark.sql("SELECT k FROM osv_sql ORDER BY k").as[Long].collect().toSeq == (1L to 4000L))
   }
 
   test("catalog DESC range ORDER BY reads only the covering files") {
@@ -200,10 +209,15 @@ class SqlSurfaceSpec extends SparkSuite {
     val covering = ix.manifestFiles.count(f =>
       f.max.head.asInstanceOf[Long] >= a && f.min.head.asInstanceOf[Long] <= b)
     assert(covering < ix.numFiles, "need files outside the range")
-    val q = spark.sql(s"SELECT k, x FROM drcat.dr WHERE k BETWEEN $a AND $b ORDER BY k DESC")
-    assert(q.as[(Long, Long)].collect().toSeq == (a to b).reverse.map(i => (i, i * 3)))
-    assert(q.inputFiles.length == covering,
-      s"DESC range read ${q.inputFiles.length} files, $covering cover the range")
+    def q = spark.sql(s"SELECT k, x FROM drcat.dr WHERE k BETWEEN $a AND $b ORDER BY k DESC")
+    val want = (a to b).reverse.map(i => (i, i * 3))
+    LocalScan.withBudget(0L) { // the Spark plan's file scans
+      val onSpark = q
+      assert(onSpark.as[(Long, Long)].collect().toSeq == want)
+      assert(onSpark.inputFiles.length == covering,
+        s"DESC range read ${onSpark.inputFiles.length} files, $covering cover the range")
+    }
+    assert(q.as[(Long, Long)].collect().toSeq == want)
   }
 
   test("catalog plugin: snapshot indexes are SQL tables with VERSION AS OF, INSERT, CREATE, DROP") {
@@ -281,11 +295,14 @@ class SqlSurfaceSpec extends SparkSuite {
       "SELECT k, x FROM sv_view WHERE k BETWEEN 100 AND 110 ORDER BY k")
       .as[(Long, Long)].collect().toSeq
     assert(got == (100L to 110L).map(i => (i, i * 3)))
-    // the SQL predicate reaches the parquet scans (no full-snapshot read)
-    val plan = spark.sql("SELECT k FROM sv_view WHERE k > 1990")
-      .queryExecution.executedPlan.toString
+    // the SQL predicate reaches the parquet scans of the Spark plan (no
+    // full-snapshot read); below the bound the driver answers the same
+    val plan = LocalScan.withBudget(0L)(spark.sql("SELECT k FROM sv_view WHERE k > 1990")
+      .queryExecution.executedPlan.toString)
     assert(plan.contains("PushedFilters: [") && plan.contains("GreaterThan(k,1990)"),
       s"expected pushed filter in:\n$plan")
+    assert(spark.sql("SELECT k FROM sv_view WHERE k > 1990").as[Long].collect().sorted.toSeq ==
+      (1991L to 2000L))
     // aggregation through the view matches the direct frame
     val n = spark.sql("SELECT count(*) AS n FROM sv_view").as[Long].head()
     assert(n == 2000L)
@@ -300,19 +317,20 @@ class SqlSurfaceSpec extends SparkSuite {
       .fold(e => sys.error(e.message), identity)
     assert(ix.numFiles >= 4, "need a multi-file snapshot to observe pruning")
     ix.createOrReplaceView("svp_view")
-    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = {
+    // files the Spark plan scans (below the bound the driver reads them)
+    def scannedFiles(df: org.apache.spark.sql.DataFrame): Long = LocalScan.withBudget(0L) {
       df.collect()
       df.queryExecution.executedPlan.collect { case f: FileSourceScanExec => f }
         .map(_.metrics("numFiles").value).sum
     }
     // point: exactly the one covering file (the native tableForRange prune,
     // via the scan's manifest prune on the pushed predicate)
-    val point = spark.sql("SELECT x FROM svp_view WHERE k = 1234")
+    def point = spark.sql("SELECT x FROM svp_view WHERE k = 1234")
     assert(point.as[Long].collect().toSeq == Seq(3702L))
     assert(scannedFiles(point) == 1,
       s"point query must open 1 covering file of ${ix.numFiles}")
     // range: only the covering suffix of files
-    val range = spark.sql("SELECT k FROM svp_view WHERE k > 3900")
+    def range = spark.sql("SELECT k FROM svp_view WHERE k > 3900")
     assert(range.as[Long].collect().length == 100)
     assert(scannedFiles(range) < ix.numFiles,
       "range query must not enumerate the whole snapshot")
@@ -399,16 +417,21 @@ class SqlSurfaceSpec extends SparkSuite {
     KVIndex.bootstrap(store, "dn", rows, Seq("k")).fold(e => sys.error(e.message), identity)
     spark.conf.set("spark.sql.catalog.gdn", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.gdn.root", store.root)
-    def keys() = spark.read.format("graft").option("root", store.root).load("dn")
-      .select("k").as[Option[Long]].collect().toSeq.sorted
-    // open below, removeRange cannot leave the null key behind: refused,
-    // nothing committed
-    intercept[Exception](spark.sql("DELETE FROM gdn.dn WHERE k IS NOT NULL"))
-    assert(keys() == Seq(None, Some(1L), Some(2L), Some(3L)))
-    // bounded below, the same condition deletes exactly its range
+    def keys(id: String = "dn") = spark.read.format("graft").option("root", store.root)
+      .load(id).select("k").as[Option[Long]].collect().toSeq.sorted
+    // bounded below, the condition deletes exactly its range
     spark.sql("DELETE FROM gdn.dn WHERE k IS NOT NULL AND k >= 2")
     assert(keys() == Seq(None, Some(1L)))
+    // open below, the range starts just past the null key: every non-null
+    // key goes, the null key stays
+    spark.sql("DELETE FROM gdn.dn WHERE k IS NOT NULL")
+    assert(keys() == Seq(None))
+    // a bare upper bound is open below as well
+    KVIndex.bootstrap(store, "dn2", rows, Seq("k")).fold(e => sys.error(e.message), identity)
+    spark.sql("DELETE FROM gdn.dn2 WHERE k < 3")
+    assert(keys("dn2") == Seq(None, Some(3L)))
     spark.sql("DROP TABLE gdn.dn")
+    spark.sql("DROP TABLE gdn.dn2")
   }
 
   test("approx_count_distinct tracks exact within its error bound") {

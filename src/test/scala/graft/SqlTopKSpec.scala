@@ -11,7 +11,9 @@ import graft.core._
   * file. Content parity with a full sort is the correctness contract; the
   * inputFiles bound and the strict declines (filters, pushed bounds,
   * non-key sorts) are the scale contract — at 100× snapshot size the file
-  * count read stays ⌈n/rowsPerFile⌉.
+  * count read stays ⌈n/rowsPerFile⌉. Files are counted on the Spark plan
+  * ([[SparkSuite.sparkPlanned]]); the answers are checked at the default
+  * budget, where these small snapshots answer on the driver.
   */
 class SqlTopKSpec extends SparkSuite {
   import spark.implicits._
@@ -40,22 +42,22 @@ class SqlTopKSpec extends SparkSuite {
 
   test("ORDER BY key LIMIT n reads only the covering manifest prefix") {
     val q = load().orderBy("k").limit(10)
-    assert(q.inputFiles.length == 1,
-      s"LIMIT 10 must read ONE file, got ${q.inputFiles.length} of ${ix.numFiles}")
+    assert(sparkPlanned(q).inputFiles.length == 1,
+      s"LIMIT 10 must read ONE file, got ${sparkPlanned(q).inputFiles.length} of ${ix.numFiles}")
     assert(q.select("k").as[Long].collect().toSeq.sorted == (1L to 10L))
 
     // a limit spanning files takes exactly the covering prefix
     val n2 = (ix.manifestFiles.head.rows + 1).toInt
     val q2 = load().orderBy("k").limit(n2)
-    assert(q2.inputFiles.length == expectFiles(n2, desc = false),
-      s"LIMIT $n2 must read the exact covering prefix, got ${q2.inputFiles.length}")
+    assert(sparkPlanned(q2).inputFiles.length == expectFiles(n2, desc = false),
+      s"LIMIT $n2 must read the exact covering prefix, got ${sparkPlanned(q2).inputFiles.length}")
     assert(q2.select("k").as[Long].collect().toSeq.sorted == (1L to n2))
   }
 
   test("DESC limit reads the TAIL file prefix (reverse stitch)") {
     val q = load().orderBy($"k".desc).limit(10)
-    assert(q.inputFiles.length == 1,
-      s"DESC LIMIT 10 must read the single tail file, got ${q.inputFiles.length}")
+    assert(sparkPlanned(q).inputFiles.length == 1,
+      s"DESC LIMIT 10 must read the single tail file, got ${sparkPlanned(q).inputFiles.length}")
     assert(q.select("k").as[Long].collect().toSeq.sorted == (3991L to 4000L))
   }
 
@@ -63,15 +65,15 @@ class SqlTopKSpec extends SparkSuite {
     spark.conf.set("spark.sql.catalog.tkc", "graft.sources.GraftCatalog")
     spark.conf.set("spark.sql.catalog.tkc.root", store.root)
     val q = spark.sql("SELECT k, x FROM tkc.tk ORDER BY k LIMIT 7")
-    assert(q.inputFiles.length == 1,
-      s"SQL LIMIT 7 must read one file, got ${q.inputFiles.length}")
+    assert(sparkPlanned(q).inputFiles.length == 1,
+      s"SQL LIMIT 7 must read one file, got ${sparkPlanned(q).inputFiles.length}")
     assert(q.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq ==
       (1L to 7L).map(i => (i, i * 3)))
   }
 
   test("limit beyond the snapshot reads everything and returns everything") {
     val q = load().orderBy("k").limit(5000)
-    assert(q.inputFiles.length == ix.numFiles)
+    assert(sparkPlanned(q).inputFiles.length == ix.numFiles)
     assert(q.count() == 4000L)
   }
 
@@ -82,7 +84,7 @@ class SqlTopKSpec extends SparkSuite {
     // rung instead (plan-level inputFiles still lists every covering
     // file; execution pulls only what the survivor count needs)
     val q = load().filter($"x" % 6 === 0).orderBy("k").limit(10)
-    assert(q.inputFiles.length > 1,
+    assert(sparkPlanned(q).inputFiles.length > 1,
       "a filtered top-k must NOT trust the file-prefix row counts")
     assert(q.select("k").as[Long].collect().toSeq.sorted ==
       (1L to 20L).filter(k => (k * 3) % 6 == 0))
@@ -198,9 +200,9 @@ class SqlTopKSpec extends SparkSuite {
       val rows = page.select("k").as[Long].collect().sorted.toSeq
       assert(rows == (last + 1 to math.min(last + 100, 4000L)),
         s"page after $last mismatch")
-      assert(page.inputFiles.length <= 2,
+      assert(sparkPlanned(page).inputFiles.length <= 2,
         s"a 100-row page must read at most 2 files (boundary + guarantee), " +
-          s"got ${page.inputFiles.length} after k=$last")
+          s"got ${sparkPlanned(page).inputFiles.length} after k=$last")
       last = rows.last
       pages += 1
     }
@@ -209,36 +211,36 @@ class SqlTopKSpec extends SparkSuite {
     // bounded range + DESC page
     val q2 = load().filter($"k" >= 600L && $"k" < 700L).orderBy($"k".desc).limit(10)
     assert(q2.select("k").as[Long].collect().toSeq.sorted == (690L to 699L))
-    assert(q2.inputFiles.length <= 2,
-      s"bounded DESC page must stay file-bounded, got ${q2.inputFiles.length}")
+    assert(sparkPlanned(q2).inputFiles.length <= 2,
+      s"bounded DESC page must stay file-bounded, got ${sparkPlanned(q2).inputFiles.length}")
 
     // equality on the key: reads only the covering file(s)
     val q3 = load().filter($"k" === 2000L).orderBy("k").limit(5)
     assert(q3.select("k").as[Long].collect().toSeq == Seq(2000L))
-    assert(q3.inputFiles.length <= 2)
+    assert(sparkPlanned(q3).inputFiles.length <= 2)
   }
 
   test("VIEW path: ORDER BY key LIMIT n over a registered view reads the file prefix") {
-    // r18 symmetry: the DeclareOrdered source tag gives the view stitch
-    // the same manifest top-k cut catalog scans get
+    // a view is the catalog table pinned at its snapshot: the same
+    // manifest top-k cut catalog scans get
     ix.createOrReplaceView("topk_view")
     val q = spark.sql("SELECT k, x FROM topk_view ORDER BY k LIMIT 10")
-    assert(q.inputFiles.length == 1,
-      s"view LIMIT 10 must read ONE file, got ${q.inputFiles.length} of ${ix.numFiles}")
+    assert(sparkPlanned(q).inputFiles.length == 1,
+      s"view LIMIT 10 must read ONE file, got ${sparkPlanned(q).inputFiles.length} of ${ix.numFiles}")
     assert(q.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq ==
       (1L to 10L).map(i => (i, i * 3)))
 
     // DESC tail page over the view
     val qd = spark.sql("SELECT k FROM topk_view ORDER BY k DESC LIMIT 10")
-    assert(qd.inputFiles.length == 1,
-      s"view DESC LIMIT 10 must read the tail file, got ${qd.inputFiles.length}")
+    assert(sparkPlanned(qd).inputFiles.length == 1,
+      s"view DESC LIMIT 10 must read the tail file, got ${sparkPlanned(qd).inputFiles.length}")
     assert(qd.collect().map(_.getLong(0)).sorted.toSeq == (3991L to 4000L))
 
     // keyset page through the view (the WHERE replays above the stitch)
     val qp = spark.sql(
       "SELECT k FROM topk_view WHERE k > 1500 ORDER BY k LIMIT 100")
-    assert(qp.inputFiles.length <= 2,
-      s"view keyset page must stay file-bounded, got ${qp.inputFiles.length}")
+    assert(sparkPlanned(qp).inputFiles.length <= 2,
+      s"view keyset page must stay file-bounded, got ${sparkPlanned(qp).inputFiles.length}")
     assert(qp.collect().map(_.getLong(0)).sorted.toSeq == (1501L to 1600L))
 
     // a non-key filter over the view takes the grow-the-prefix exec
@@ -365,7 +367,7 @@ class SqlTopKSpec extends SparkSuite {
       val all = (1L to 4000L).map(i => (i, i * 3))
       val want = (if (desc) all.reverse else all).take(n).sortBy(_._1)
       assert(got == want, s"round $round: n=$n desc=$desc mismatch")
-      val files = load().orderBy(ord).limit(n).inputFiles.length
+      val files = sparkPlanned(load().orderBy(ord).limit(n)).inputFiles.length
       assert(files == expectFiles(n, desc),
         s"round $round: n=$n desc=$desc must read the exact prefix, got $files")
     }

@@ -4,9 +4,12 @@ import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import graft.core._
 
-/** Column pruning THROUGH the stitched view path: the marker nodes
-  * (`DeclareOrdered`, `SnapshotFilePrune`, `UnfuseUnion`) are custom, so
-  * the stock `ColumnPruning` stops at each — without the Project
+/** Column pruning through a snapshot view: the view is the catalog table
+  * pinned at its snapshot, whose scan splices into the outer plan as its
+  * covering files' parquet read (`SpliceGraftScan`), so the stock
+  * `ColumnPruning` narrows that read. An ordered stitch adds marker nodes
+  * (`DeclareOrdered`, `UnfuseUnion`) that are custom, so the stock
+  * `ColumnPruning` stops at each — without the Project
   * commutes in `PushThroughDeclareOrdered` (+ re-instantiated stock
   * rules in the same batch), a two-column SELECT over a wide snapshot
   * view would read EVERY column of every leg's parquet scan. At 100 TB
@@ -26,7 +29,8 @@ class ViewColumnPruningSpec extends SparkSuite {
     val q = spark.sql("SELECT k, v4 FROM vp_view WHERE k >= 100 AND k <= 200")
     val got = q.as[(Long, Long)].collect().sortBy(_._1)
     assert(got.toSeq == (100L to 200L).map(k => (k, k * 2)))
-    val scans = q.queryExecution.executedPlan.collect {
+    // the Spark plan's scans (this small view answers on the driver)
+    val scans = sparkPlanned(q).queryExecution.executedPlan.collect {
       case f: FileSourceScanExec => f
     }
     assert(scans.nonEmpty && scans.size < ix.numFiles,
@@ -43,28 +47,26 @@ class ViewColumnPruningSpec extends SparkSuite {
     val ordered = spark.sql("SELECT k, v4 FROM vp_view ORDER BY k")
     assert(ordered.as[(Long, Long)].collect().map(_._1).toSeq ==
       (1L to 2000L).toSeq)
-    val topSorts = ordered.queryExecution.executedPlan.collect {
+    val orderedPlan = sparkPlanned(ordered).queryExecution.executedPlan
+    val topSorts = orderedPlan.collect {
       case s: org.apache.spark.sql.execution.SortExec if s.global => s
     }
-    assert(topSorts.isEmpty,
-      s"declared ordering must elide the global sort:\n${ordered.queryExecution.executedPlan}")
+    assert(topSorts.isEmpty, s"declared ordering must elide the global sort:\n$orderedPlan")
 
     // a projection DROPPING the key still answers correctly (the
     // ordering declaration is dropped, never dangles)
     val noKey = spark.sql("SELECT v1 FROM vp_view WHERE k = 1500")
     assert(noKey.collect().map(_.getString(0)).toSeq == Seq("a1500"))
 
-    // COMPUTED projections must not break the prune-marker swap: the
-    // marker's exprId restoration is name-based over the replacement's
-    // schema, so only attribute-only Projects commute below it — a
-    // computed/renamed SELECT above a key filter must still prune files
-    // and answer correctly (regression: unrestricted commute made
-    // PruneSnapshotFiles miss the computed name)
+    // COMPUTED projections above a key filter: the splice restores the
+    // scan relation's exprIds by name over the file read's schema
+    // (`OrderedPlans.aliasTo`), so a computed/renamed SELECT must still
+    // prune files by the scan's pushed key bounds and answer correctly
     val computed = spark.sql(
       "SELECT concat(v1, '!') AS bang, k + 1 AS k2 FROM vp_view WHERE k >= 100 AND k <= 110")
     assert(computed.as[(String, Long)].collect().sortBy(_._2).toSeq ==
       (100L to 110L).map(k => (s"a$k!", k + 1)))
-    val cScans = computed.queryExecution.executedPlan.collect {
+    val cScans = sparkPlanned(computed).queryExecution.executedPlan.collect {
       case f: FileSourceScanExec => f
     }
     assert(cScans.nonEmpty && cScans.size < ix.numFiles,

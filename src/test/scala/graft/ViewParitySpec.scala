@@ -71,12 +71,20 @@ class ViewParitySpec extends SparkSuite with AdaptiveSparkPlanHelper {
     (rows, jobs, files)
   }
 
+  /** Parity of the Spark plans (budget 0: below the driver bound a
+    * single-scan statement runs no job and scans no file), and of the
+    * answers at the default budget.
+    */
   private def assertParity(template: String): Unit = {
     store
-    val onView = profile(template.replace("$t", "vpar_t").replace("$u", "vpar_u"))
-    val onCat = profile(template.replace("$t", s"$Cat.t").replace("$u", s"$Cat.u"))
+    val view = template.replace("$t", "vpar_t").replace("$u", "vpar_u")
+    val cat = template.replace("$t", s"$Cat.t").replace("$u", s"$Cat.u")
+    val onView = LocalScan.withBudget(0L)(profile(view))
+    val onCat = LocalScan.withBudget(0L)(profile(cat))
     assert(onView._1.nonEmpty, s"empty answer: $template")
     assert(onView == onCat, s"view vs catalog (rows, jobs, files) differ for: $template")
+    assert(profile(view)._1 == onView._1 && profile(cat)._1 == onView._1,
+      s"default-budget answer differs for: $template")
   }
 
   private val Cols = "tenant, seq, amount"
@@ -99,12 +107,14 @@ class ViewParitySpec extends SparkSuite with AdaptiveSparkPlanHelper {
 
   test("count-range over a view reads at most the two boundary files") {
     store
-    GraftScan.lastPlannedFiles = -1
-    val n = spark.sql("SELECT count(*) FROM vpar_t WHERE tenant >= 2 AND tenant <= 4")
-      .head.getLong(0)
-    assert(n == 1500L)
-    val planned = GraftScan.lastPlannedFiles
-    assert(planned >= 0 && planned <= 2, s"count-range over a view planned $planned files")
+    for (budget <- Seq(0L, LocalScan.BudgetBytes)) {
+      GraftScan.lastPlannedFiles = -1
+      val n = LocalScan.withBudget(budget)(
+        spark.sql("SELECT count(*) FROM vpar_t WHERE tenant >= 2 AND tenant <= 4").head.getLong(0))
+      assert(n == 1500L)
+      val planned = GraftScan.lastPlannedFiles
+      assert(planned >= 0 && planned <= 2, s"count-range over a view planned $planned files")
+    }
   }
 
   test("a view-to-view key join plans zero exchanges") {
