@@ -2351,7 +2351,8 @@ object SparkEntry {
     }),
     "txt_tokens" -> ((s, d) =>
       TextAnalysis.tokenStats(t(s, d, "documents"))
-        .select("doc_id", "n_ws_tokens", "n_bpe_tokens").orderBy("doc_id")),
+        .select(col("doc_id"), col("n_ws_tokens").cast("long").as("n_ws_tokens"),
+          col("n_bpe_tokens")).orderBy("doc_id")),
     "txt_quality" -> ((s, d) =>
       TextAnalysis.qualityScore(t(s, d, "documents"))
         .select("doc_id", "n_tokens", "punct_ratio", "stopword_ratio",

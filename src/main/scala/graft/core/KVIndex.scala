@@ -3,7 +3,11 @@ package graft.core
 import java.util.UUID
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shim
 
 /** Snapshot-backed ordered KV index — the `QueryableIndex[K, V]` equivalent
   * (reference `QueryableIndex.scala`). Opened from a manifest (the
@@ -19,24 +23,27 @@ import org.apache.spark.sql.functions._
   * current state ([[BatchFold]]), so a 1000-executor cluster validates a
   * batch of any command count with one scan of the touched files only.
   *
-  * Small reads run no Spark job. When the files a read covers hold at most
-  * [[LocalScan.BudgetBytes]] (manifest rows × the schema's default row
-  * size, 4 MiB), `get`, `getAll`, `getAllPrefix`, `range`, `gt`/`lt`,
-  * `prefix`, `nextKey`, `previousKey`, `headOrdered` and `countRange`'s
-  * boundary count decode those files on the driver while the call runs
-  * (an eager read, not a lazy plan) and return a local relation — the
-  * reference's one-leaf read (`Index.scala:813-818`). Ordered reads take
-  * this tier only on the disjoint layout, and their answer carries no
-  * declared ordering: rows arrive in key order, but a downstream
-  * `orderBy` sorts them again. Larger reads, legacy manifests without
-  * `colTypes` and the memory store keep the Spark plans below. Catalog
-  * SQL over a snapshot ([[createOrReplaceView]], `cat.t`) takes the same
-  * tier under the same budget: its ordered and top-k rewrites read
-  * through [[orderedStitchFrame]]/[[topKStitchFrame]], count-range counts
-  * its boundary files, and a single-scan statement folds on the driver,
-  * group-less aggregates included — 0 jobs. The same budget bounds the
-  * key batch a commit collects for exact file pruning
-  * ([[LocalScan.collectBelow]]); a bigger batch prunes by its hull.
+  * Small reads and small commits run no Spark job. When the files a read
+  * covers hold at most [[LocalScan.BudgetBytes]] (manifest rows × the
+  * schema's default row size, 4 MiB), `get`, `getAll`, `getAllPrefix`,
+  * `range`, `gt`/`lt`, `prefix`, `nextKey`, `previousKey`, `headOrdered`
+  * and `countRange`'s boundary count decode those files on the driver
+  * while the call runs (an eager read, not a lazy plan) and return a local
+  * relation — the reference's one-leaf read (`Index.scala:813-818`).
+  * Ordered reads take this tier only on the disjoint layout, and their
+  * answer carries no declared ordering: rows arrive in key order, but a
+  * downstream `orderBy` sorts them again. Catalog SQL over a snapshot
+  * ([[createOrReplaceView]], `cat.t`) takes the same tier under the same
+  * budget: its ordered and top-k rewrites read through
+  * [[orderedStitchFrame]]/[[topKStitchFrame]], count-range counts its
+  * boundary files, and a single-scan statement folds on the driver,
+  * group-less aggregates included — 0 jobs. A commit ([[execute]]) whose
+  * batch, touched files and new state each fit the same budget validates,
+  * folds and writes on the driver: an in-memory batch commits in 0 jobs,
+  * and a batch computed by Spark (a view refresh's deltas) pays only its
+  * collects (the reference's `save` of one copy-on-write path,
+  * `Context.scala:142-174`). Larger reads and commits, legacy manifests
+  * without `colTypes` and the memory store keep the Spark plans below.
   */
 final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
                     private val maxRowsPerFile: Long = 1L << 19) {
@@ -548,10 +555,13 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * commits nothing in that case (reference `Index.scala:1010-1036`,
     * all-or-nothing discard `QueriesRandomSpec.scala:211-239`).
     *
-    * The whole batch costs a fixed number of Spark jobs, whatever its
-    * command count: one keyed fold validates every command (and derives
-    * the per-command row counts), then one write rewrites the touched
-    * range with each key's last writer — see [[executePinned]].
+    * One keyed fold validates every command (and derives the per-command
+    * row counts), then one write rewrites the touched range with each
+    * key's last writer — see [[executePinned]]. Below the driver bound
+    * both run on the driver: an in-memory batch costs no Spark job, a
+    * batch Spark computes only its collects, and [[BatchResult.writeTier]]
+    * says which tier wrote. Above it the batch costs a fixed number of
+    * Spark jobs, whatever its command count.
     *
     * One batch per opened snapshot: committing creates manifest version
     * `parent+1` with CREATE_NEW semantics, so a second `execute` from the
@@ -579,57 +589,83 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
 
   /** The batch as one keyed pass (the reference's single `save` of the
     * copy-on-write path, `Context.scala:142-174`):
-    *  1. file pruning — one `take` of the batch keys;
-    *  2. validation — every command's key and `expectedVersion` columns,
-    *     tagged with the command index, meet the touched rows' (key,
-    *     version) in ONE keyed aggregate; a per-key fold in command order
-    *     yields the reference-ordered error and each command's row-count
-    *     delta, and only that bounded summary reaches the driver;
+    *  1. the batch's validation tags ([[BatchFold.tags]]: key and
+    *     `expectedVersion` columns) reach the driver in one bounded take
+    *     when they fit [[LocalScan.BudgetBytes]] — no job for an in-memory
+    *     batch — and prune the manifest's files exactly;
+    *  2. validation — the tags meet the touched rows' (key, version) in
+    *     one keyed fold; per key, a replay in command order yields the
+    *     reference-ordered error and each command's row-count delta;
     *  3. the write — touched rows minus batch keys plus, per key, the rows
     *     of the command that writes it last, in one `writeData` call.
-    * Nothing here scales with the command count but plan size.
+    * When the tags fit, the touched files fit the driver tier
+    * ([[LocalScan]]) and the keys have the manifest's types, steps 2 and 3
+    * run on the driver with the same kernel ([[BatchFold.OnDriver]]): the
+    * writing commands' key and value columns are collected only after
+    * validation passed, and `writeData` writes the new state, a local
+    * relation, without a job. Otherwise the fold is one Spark aggregate
+    * ([[BatchFold.run]]) and the write Spark's. Nothing here scales with
+    * the command count but plan size.
     */
   private def executePinned(cmds: Seq[Command], txVersion: String,
                             recordHistory: Boolean): BatchResult = {
-    // ---- file pruning: which files can a batch key live in? ----
-    // NO .distinct(): containsAny over a key multiset partitions files
-    // exactly like the key set, and the distinct cost an exchange +
-    // aggregate job on EVERY commit (streaming micro-batches pay it per
-    // batch; a MemoryStream batch is otherwise a local scan whose take
-    // launches no shuffle). Duplicate-heavy batches above the driver
-    // bound fall to the min/max hull sooner — the hull is the documented
-    // conservative path for large batches either way.
-    val allBatchKeys = cmds.map(c => c.rows.select(key.cols.map(col): _*))
-      .reduce(_ unionByName _)
-    val (touched, untouched) = pruneFiles(allBatchKeys)
-    val cur: DataFrame =
-      if (touched.isEmpty) emptyLike(cmds)
-      else store.readFiles(touched.map(_.path), manifest)
-
-    // ---- validation: one keyed fold over the whole batch ----
-    // PRECEDENCE CAVEAT: the fold reads only key and `expectedVersion`
+    // PRECEDENCE CAVEAT: the tags read only key and `expectedVersion`
     // columns, and value columns are evaluated only by the write, after
     // validation passed — a runtime error in a value expression (cast
     // overflow, malformed input) of a batch that fails validation never
     // surfaces. What still surfaces ahead of the reference-ordered
     // GraftError is a throwing expression in a KEY or `expectedVersion`
-    // column: the pruning `take` above evaluates every key column of
-    // every command before any validation, as it always has. Inputs that
-    // `execute` pins evaluate ALL their columns when that take fills the
-    // pin.
-    BatchFold.run(cmds, cur, key, txVersion) match {
-      case Left(e) => BatchResult(success = false, Some(e), None)
-      case Right(deltas) =>
-        // ---- COW commit: rewrite touched range only ----
-        // row counts from the manifest plus the fold's deltas: no count job
-        val counts = deltas.scanLeft(touched.map(_.rows).sum)(_ + _).tail
-        val nParts = math.max(1, math.ceil(
-          math.max(counts.last, 1L).toDouble / maxRowsPerFile).toInt)
-        val next = BatchFold.lastWriters(cmds, cur, key, manifest.valueCols, txVersion,
-          manifest.readSchema)
-        val (_, newFiles) = store.writeData(manifest.id, next, key, nParts)
-        commitNext(untouched ++ newFiles, counts, recordHistory,
-          untouched.map(_.rows).sum + newFiles.map(_.rows).sum, txVersion)
+    // column: the take below evaluates them for every command before any
+    // validation. Inputs that `execute` pins evaluate ALL their columns
+    // when that take fills the pin.
+    val tagged = BatchFold.tags(cmds, key).reduce(_ unionByName _)
+    val tags = LocalScan.collectLocal(tagged)
+    val (touched, untouched) = pruneFiles(tags, cmds)
+    // rows the driver folds must carry the manifest's key types: Spark
+    // compares keys of other types in their widened type
+    val nk = key.cols.size
+    def keyTyped(r: LocalRelation): Boolean = manifest.readSchema.exists(s =>
+      r.schema.take(nk).zip(s.take(nk)).forall { case (a, b) =>
+        DataTypeUtils.sameType(a.dataType, b.dataType) })
+    val onDriver = for {
+      t <- tags
+      if keyTyped(t)
+      scan <- LocalScan(store, manifest, touched)
+    } yield new BatchFold.OnDriver(cmds, t, scan.relation(lit(true)), key, txVersion)
+
+    def write(deltas: Seq[Long], next: DataFrame): BatchResult = {
+      // row counts from the manifest plus the fold's deltas: no count job
+      val counts = deltas.scanLeft(touched.map(_.rows).sum)(_ + _).tail
+      val nParts = math.max(1, math.ceil(
+        math.max(counts.last, 1L).toDouble / maxRowsPerFile).toInt)
+      val local = LocalScan.localInput(next)
+      val (_, newFiles) = store.writeData(manifest.id,
+        local.fold(next)(Shim.ofRows(spark, _)), key, nParts)
+      commitNext(untouched ++ newFiles, counts, recordHistory,
+        untouched.map(_.rows).sum + newFiles.map(_.rows).sum, txVersion)
+        .copy(writeTier = if (local.isDefined) WriteTier.Driver else WriteTier.Spark)
+    }
+
+    onDriver match {
+      case Some(fold) => fold.outcome match {
+        case Left(e) => BatchResult(success = false, Some(e), None)
+        case Right(deltas) =>
+          val written = BatchFold.written(cmds, key, manifest.valueCols).map(LocalScan.collectLocal)
+          write(deltas,
+            if (written.exists(!_.exists(keyTyped))) // above the bound, or widened keys
+              BatchFold.lastWriters(cmds, Shim.ofRows(spark, fold.cur), key, manifest.valueCols,
+                txVersion, manifest.readSchema)
+            else fold.next(spark, written.flatten, manifest.valueCols, manifest.readSchema.get))
+      }
+      case None =>
+        val cur: DataFrame =
+          if (touched.isEmpty) emptyLike(cmds)
+          else store.readFiles(touched.map(_.path), manifest)
+        BatchFold.run(cmds, tags.fold(tagged)(Shim.ofRows(spark, _)), cur, key, txVersion) match {
+          case Left(e) => BatchResult(success = false, Some(e), None)
+          case Right(deltas) => write(deltas, BatchFold.lastWriters(cmds, cur, key,
+            manifest.valueCols, txVersion, manifest.readSchema))
+        }
     }
   }
 
@@ -667,15 +703,26 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
 
   /** Manifest-pruned file set: a file is touched iff some batch key falls in
     * its [min,max] — the findPath descent (reference `Index.scala:85-99`)
-    * done on manifest stats. A batch the driver may hold
-    * ([[LocalScan.collectBelow]]: one early-stopping take decides AND
-    * fetches the keys) is decided exactly; a bigger one falls back to the
-    * batch hull.
+    * done on manifest stats. A batch the driver holds (its `tags`, or else
+    * one more bounded take of its keys alone, [[LocalScan.collectBelow]])
+    * is decided exactly; a bigger one falls back to the batch hull.
     */
-  private def pruneFiles(batchKeys: DataFrame): (Seq[FileEntry], Seq[FileEntry]) = {
+  private def pruneFiles(tags: Option[LocalRelation],
+                         cmds: Seq[Command]): (Seq[FileEntry], Seq[FileEntry]) = {
     if (files.isEmpty) return (Nil, Nil)
-    LocalScan.collectBelow(batchKeys) match {
-      case Some(taken) => files.partition(LegPlanner.anyOf(taken.map(_.toSeq).toSeq))
+    val nk = key.cols.size
+    // NO .distinct(): containsAny over a key multiset partitions files
+    // exactly like the key set, and a distinct costs an exchange and an
+    // aggregate job on every commit
+    val batchKeys = cmds.map(c => c.rows.select(key.cols.map(col): _*)).reduce(_ unionByName _)
+    val taken = tags match {
+      case Some(t) =>
+        val toScala = CatalystTypeConverters.createToScalaConverter(t.schema)
+        Some(t.data.map(r => toScala(r).asInstanceOf[Row].toSeq.take(nk)))
+      case None => LocalScan.collectBelow(batchKeys).map(_.map(_.toSeq).toSeq)
+    }
+    taken match {
+      case Some(keys) => files.partition(LegPlanner.anyOf(keys))
       case None =>
         val hull = batchKeys.agg(
           min(struct(key.cols.map(col): _*)), max(struct(key.cols.map(col): _*))).head()

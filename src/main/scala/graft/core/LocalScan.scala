@@ -8,7 +8,7 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Ascending, BindReferences, BoundReference, InterpretedOrdering, Predicate, SortOrder, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, Union}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -48,10 +48,14 @@ import org.apache.spark.sql.types.StructType
   *
   * The same budget is the one driver bound of the library: every "is this
   * input small enough to hold on the driver?" decision goes through
-  * [[collectBelow]] — the driver folds of `WordPiece.train`,
-  * `Unigram.train` and `Dedup.clusters`, the churn keys of `Scd2.refresh`,
-  * the band probes of `EventStreams.streamNearDupIngest` and the exact
-  * file pruning of a commit's key batch in `KVIndex.execute`.
+  * [[collectBelow]]/[[collectLocal]] or [[localInput]] — the driver folds
+  * of `WordPiece.train`, `Unigram.train` and `Dedup.clusters`, the churn
+  * keys of `Scd2.refresh`, the band probes of
+  * `EventStreams.streamNearDupIngest`, a commit's batch in
+  * `KVIndex.execute` (its validation tags, which also prune its files
+  * exactly, and its written rows), the commit's touched-file read (this
+  * tier), and `SnapshotStore.writeData`, which writes a local input on the
+  * driver.
   */
 private[graft] object LocalScan {
   /** Largest input the driver holds, in estimated bytes: rows ×
@@ -70,14 +74,55 @@ private[graft] object LocalScan {
     */
   private[graft] def withBudget[A](bytes: Long)(f: => A): A = budget.withValue(bytes)(f)
 
-  /** All rows of `df` when at most `budget / df.schema.defaultSize` of
-    * them exist, else None — one bounded `limit(n + 1).collect()`, so the
-    * driver never holds more than one row past the bound.
+  /** Rows of `schema` the budget admits. */
+  private def rowBound(schema: StructType): Int =
+    math.min(budget.value / math.max(1, schema.defaultSize), Int.MaxValue - 1L).toInt
+
+  /** `df`'s rows as one local relation when its optimized plan is one, or
+    * a union of them (a batch of in-memory commands: Spark folds each
+    * child's projection but not the union) — the rows are already on the
+    * driver, so no job runs. Only a plan whose leaves are all local
+    * relations is optimized here.
     */
-  def collectBelow(df: DataFrame): Option[Array[Row]] = {
-    val n = math.min(budget.value / math.max(1, df.schema.defaultSize), Int.MaxValue - 1L).toInt
+  def local(df: DataFrame): Option[LocalRelation] =
+    if (!df.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else df.queryExecution.optimizedPlan match {
+      case l: LocalRelation => Some(l)
+      case u: Union if u.children.forall(_.isInstanceOf[LocalRelation]) =>
+        Some(LocalRelation(u.output, u.children.flatMap(_.asInstanceOf[LocalRelation].data)))
+      case _ => None
+    }
+
+  /** All rows of `df` as a local relation when at most
+    * `budget / df.schema.defaultSize` of them exist, else None: a
+    * [[local]] input as it is (no job), anything else through one bounded
+    * `limit(n + 1).collect()`, so the driver never holds more than one row
+    * past the bound.
+    */
+  def collectLocal(df: DataFrame): Option[LocalRelation] = {
+    val n = rowBound(df.schema)
     if (n <= 0) None
-    else Some(df.limit(n + 1).collect()).filter(_.length <= n)
+    else local(df) match {
+      case Some(l) => Some(l).filter(_.data.size <= n)
+      case None =>
+        val rows = df.limit(n + 1).collect()
+        val toCatalyst = CatalystTypeConverters.createToCatalystConverter(df.schema)
+        if (rows.length > n) None
+        else Some(LocalRelation(DataTypeUtils.toAttributes(df.schema),
+          rows.map(toCatalyst(_).asInstanceOf[InternalRow]).toSeq))
+    }
+  }
+
+  /** [[collectLocal]] as rows. */
+  def collectBelow(df: DataFrame): Option[Array[Row]] =
+    collectLocal(df).map(l => Shim.ofRows(df.sparkSession, l).collect())
+
+  /** `df` as a [[local]] relation whose rows × `schema.defaultSize` fit
+    * the budget: an input `SnapshotStore.writeData` writes on the driver.
+    */
+  def localInput(df: DataFrame): Option[LocalRelation] = {
+    val n = rowBound(df.schema)
+    if (n <= 0) None else local(df).filter(_.data.size <= n)
   }
 
   /** The tier over `fs` (in manifest order) of `m`, when it serves them. */

@@ -6,6 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.OutputWriter
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, StructField, StructType, StringType}
 import org.apache.spark.storage.StorageLevel
@@ -374,19 +379,30 @@ trait SnapshotStore {
     m.readSchema.fold(spark.read)(spark.read.schema).parquet(paths: _*).select(cols: _*)
   }
 
-  /** Range-partition + sort `df` by key, write it as parquet under
-    * `dir`, and return the per-file stats — shared by every
-    * parquet-writing backend. SINGLE-file writes (the common incremental
-    * commit: one small COW delta) collect count/min/max DURING the write
-    * job via `observe`, eliminating the parquet read-back job
-    * [[fileStats]] costs; multi-file writes keep the exact per-file
-    * stats aggregate. The observed min/max pass through the same
-    * [[KeyOrd.normKey]] canonicalization as the read-back path, and the
+  /** Write `df` sorted by key as parquet under `dir`, cut into `nParts`
+    * key-range files, and return the per-file stats — shared by every
+    * parquet-writing backend.
+    *
+    * An input the driver already holds ([[LocalScan.localInput]]: a local
+    * relation, such as a commit's new state below the driver bound) is
+    * written on the driver with no Spark job ([[writeOnDriver]]). Any other
+    * input is range-partitioned and sorted by Spark. There, SINGLE-file
+    * writes (the common incremental commit: one small COW delta) collect
+    * count/min/max DURING the write job via `observe`, eliminating the
+    * parquet read-back job [[fileStats]] costs; multi-file writes keep the
+    * exact per-file stats aggregate. Every path passes min/max through the
+    * same [[KeyOrd.normKey]] canonicalization as the read-back path, and the
     * values are identical: parquet round-trips Spark's logical values
     * losslessly, so pre-write and post-read extrema agree.
     */
   protected def writeParquetWithStats(dir: String, df: DataFrame,
-                                      keySpec: KeySpec, nParts: Int): Seq[FileEntry] = {
+                                      keySpec: KeySpec, nParts: Int): Seq[FileEntry] =
+    LocalScan.localInput(df).fold(writeOnSpark(dir, df, keySpec, nParts))(
+      writeOnDriver(dir, _, keySpec, nParts))
+
+  /** [[writeParquetWithStats]] through Spark's range partitioning. */
+  private def writeOnSpark(dir: String, df: DataFrame,
+                           keySpec: KeySpec, nParts: Int): Seq[FileEntry] = {
     val keyCols = keySpec.cols.map(col)
     val part = df.repartitionByRange(nParts, keyCols: _*)
       .sortWithinPartitions(keyCols: _*)
@@ -438,6 +454,55 @@ trait SnapshotStore {
     Seq(FileEntry(partFile.toUri.toString, rows,
       KeyOrd.normKey(mn.toSeq), KeyOrd.normKey(mx.toSeq)))
   }
+
+  /** [[writeParquetWithStats]] for rows the driver holds: sorted with
+    * Spark's ascending key ordering (nulls first), cut into `nParts`
+    * contiguous files (a cut never splits equal keys), each written through
+    * Spark's parquet `OutputWriter` with the session's write confs. A
+    * file's count, min and max are its row count and its first and last
+    * keys, so no observation or listing follows.
+    */
+  private def writeOnDriver(dir: String, rel: LocalRelation, keySpec: KeySpec,
+                            nParts: Int): Seq[FileEntry] = {
+    val schema = SnapshotManifest.nullable(rel.schema).asInstanceOf[StructType]
+    val keyRefs = keySpec.cols.map { c =>
+      val i = schema.fieldIndex(c)
+      BoundReference(i, schema(i).dataType, nullable = true)
+    }
+    val ord = new InterpretedOrdering(keyRefs.map(SortOrder(_, Ascending)))
+    val rows = rel.data.sorted(ord).toIndexedSeq
+    val keyOf = UnsafeProjection.create(keyRefs)
+    val toKey = CatalystTypeConverters.createToScalaConverter(
+      StructType(keySpec.cols.map(schema(_))))
+    def key(r: InternalRow): Seq[Any] =
+      KeyOrd.normKey(toKey(keyOf(r)).asInstanceOf[Row].toSeq)
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(spark.sessionState.newHadoopConf())
+    val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val task = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(job.getConfiguration,
+      new org.apache.hadoop.mapreduce.TaskAttemptID(new org.apache.hadoop.mapreduce.TaskID(
+        new org.apache.hadoop.mapreduce.JobID(), org.apache.hadoop.mapreduce.TaskType.MAP, 0), 0))
+    val name = s"${UUID.randomUUID()}-c000${factory.getFileExtension(task)}"
+    val per = math.max(1, math.ceil(rows.size.toDouble / math.max(1, nParts)).toInt)
+    val out = Seq.newBuilder[FileEntry]
+    var from = 0
+    var part = 0
+    while (from < rows.size) {
+      var until = math.min(rows.size, from + per)
+      while (until < rows.size && ord.compare(rows(until - 1), rows(until)) == 0) until += 1
+      val path = Paths.get(dir).resolve(f"part-$part%05d-$name").toUri.toString
+      writeParquetFile(factory.newInstance(path, schema, task), rows.view.slice(from, until).iterator)
+      out += FileEntry(path, (until - from).toLong, key(rows(from)), key(rows(until - 1)))
+      from = until
+      part += 1
+    }
+    out.result()
+  }
+
+  /** Write `rows` through `writer` and close it: the driver tier's one
+    * data-file write, a hook that fault-injection tests override.
+    */
+  protected def writeParquetFile(writer: OutputWriter, rows: Iterator[InternalRow]): Unit =
+    try rows.foreach(writer.write) finally writer.close()
 
   /** Per-file stats via one small aggregate over freshly written parquet
     * (struct min/max = lexicographic composite-key min/max in Spark) —

@@ -131,14 +131,26 @@ object Command {
   * the touched-range row count after each command, the analogue of the
   * reference's per-command result counts. `execute` derives it without a
   * count job: the touched files' manifest row counts plus the running sum
-  * of the per-command deltas its validation fold returns.
+  * of the per-command deltas its validation fold returns. `writeTier`
+  * names where the batch's files were written: [[WriteTier.Driver]] when
+  * the batch, its touched files and the new state fit
+  * `LocalScan.BudgetBytes` (no Spark job), else [[WriteTier.Spark]],
+  * which is also what a batch that wrote nothing reports.
   */
 final case class BatchResult(success: Boolean, error: Option[GraftError],
                              snapshot: Option[SnapshotManifest],
-                             commandRowCounts: Seq[Long] = Nil) {
+                             commandRowCounts: Seq[Long] = Nil,
+                             writeTier: WriteTier = WriteTier.Spark) {
   def orThrow: SnapshotManifest =
     if (success) snapshot.get
     else throw new IllegalStateException(error.map(e => s"${e.code}: ${e.message}").getOrElse("failed"))
+}
+
+/** Where a commit ran: in Spark jobs, or on the driver. */
+sealed abstract class WriteTier(val name: String)
+object WriteTier {
+  case object Driver extends WriteTier("driver")
+  case object Spark extends WriteTier("spark")
 }
 
 final case class GetResult(found: DataFrame, missing: Long,

@@ -466,9 +466,8 @@ class KVIndexSpec extends KVIndexSpecBase {
     val kvRows = (1 to 400).map(i => (f"k$i%04d", s"v$i"))
     // cycles upsert, versioned update, remove and plain insert, each on
     // its own five keys, spread over the index's files. The rows are a
-    // computed plan, not an in-memory Seq: the pruning take of a LONE
-    // in-memory batch runs on the driver, so a 1-command batch of that
-    // kind is one job cheaper than every larger one.
+    // computed plan, not an in-memory Seq, so even the driver tier spends
+    // jobs on them: its bounded collects of the tags and the written rows.
     def keys(i: Int, prefix: String) =
       spark.range(1, 6).select(format_string(s"$prefix%04d", col("id") + i * 47).as("k"))
     def batch(n: Int): Seq[Command] = (0 until n).map { i =>
@@ -485,28 +484,33 @@ class KVIndexSpec extends KVIndexSpecBase {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    val perBatch = Seq(1, 2, 4, 8).map { n =>
-      val id = s"tjobs$n"
-      KVIndex.bootstrap(store, id, kvRows.toDF("k", "v"), Seq("k"),
-        txVersion = "tx0", maxRowsPerFile = 32).fold(e => fail(e.message), identity)
-      // reopened with the default file size: every batch writes one file
-      val ix = KVIndex.open(store, id).toOption.get
-      assert(ix.numFiles >= 10)
-      val cmds = batch(n)
-      Thread.sleep(500) // listener bus is async: let bootstrap's jobs drain
-      spark.sparkContext.addSparkListener(listener)
-      jobs.set(0)
-      val res =
-        try { val r = ix.execute(cmds); Thread.sleep(500); r }
-        finally spark.sparkContext.removeSparkListener(listener)
-      assert(res.success, s"$n commands: ${res.error}")
-      val removed = (0 until n).count(_ % 4 == 2) * 5
-      val inserted = (0 until n).count(_ % 4 == 3) * 5
-      assert(KVIndex.open(store, id).toOption.get.count == 400 - removed + inserted)
-      n -> jobs.get()
+    // the Spark fold and write (budget 0), and the driver tier, where only
+    // the bounded collects of the computed batch run jobs
+    for (budget <- Seq(0L, LocalScan.BudgetBytes)) {
+      val perBatch = Seq(1, 2, 4, 8).map { n =>
+        val id = s"tjobs$n-$budget"
+        KVIndex.bootstrap(store, id, kvRows.toDF("k", "v"), Seq("k"),
+          txVersion = "tx0", maxRowsPerFile = 32).fold(e => fail(e.message), identity)
+        // reopened with the default file size: every batch writes one file
+        val ix = KVIndex.open(store, id).toOption.get
+        assert(ix.numFiles >= 10)
+        val cmds = batch(n)
+        Thread.sleep(500) // listener bus is async: let bootstrap's jobs drain
+        spark.sparkContext.addSparkListener(listener)
+        jobs.set(0)
+        val res =
+          try { val r = LocalScan.withBudget(budget)(ix.execute(cmds)); Thread.sleep(500); r }
+          finally spark.sparkContext.removeSparkListener(listener)
+        assert(res.success, s"$n commands: ${res.error}")
+        assert(res.writeTier == (if (budget == 0L) WriteTier.Spark else WriteTier.Driver))
+        val removed = (0 until n).count(_ % 4 == 2) * 5
+        val inserted = (0 until n).count(_ % 4 == 3) * 5
+        assert(KVIndex.open(store, id).toOption.get.count == 400 - removed + inserted)
+        n -> jobs.get()
+      }
+      assert(perBatch.map(_._2).distinct.size == 1, s"jobs per batch size at budget $budget: $perBatch")
+      assert(perBatch.head._2 <= 10, s"jobs per batch size at budget $budget: $perBatch")
     }
-    assert(perBatch.map(_._2).distinct.size == 1, s"jobs per batch size: $perBatch")
-    assert(perBatch.head._2 <= 10, s"jobs per batch size: $perBatch")
   }
 }
 

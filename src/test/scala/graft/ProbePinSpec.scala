@@ -139,16 +139,26 @@ class ProbePinSpec extends SparkSuite {
         "sql_probe_lazy" -> eager("false")(jobsOf(rows(spark.sql(probeSql)))),
         "sql_asof_probe" -> jobsOf(rows(spark.sql(asOfSql))),
         "merge_probe" -> {
-          // a private copy: the MERGE commits
-          ix.copyTo("pin_merge").fold(e => fail(e.message), identity)
+          // private copies: the MERGE commits. The count is the Spark
+          // commit's (budget 0); below the bound the commit runs on the
+          // driver, and both tiers must merge to the same rows
           Seq((3L, 20L, -1L), (9999L, 0L, 7L)).toDF("k", "ts", "rv")
             .createOrReplaceTempView("pin_src")
-          val r = jobsOf(spark.sql(
-            s"""MERGE INTO $cat.pin_merge t USING pin_src s ON t.k = s.k AND t.ts = s.ts
-               |WHEN MATCHED THEN UPDATE SET rv = s.rv
-               |WHEN NOT MATCHED THEN INSERT (k, ts, rv) VALUES (s.k, s.ts, s.rv)
-               |""".stripMargin))
-          assert(graft.sources.GraftDml.lastMergeJoinPath == "probe")
+          Seq("pin_merge", "pin_merge_local").foreach(ix.copyTo(_).fold(e => fail(e.message), identity))
+          def merge(t: String) = {
+            val r = spark.sql(
+              s"""MERGE INTO $cat.$t t USING pin_src s ON t.k = s.k AND t.ts = s.ts
+                 |WHEN MATCHED THEN UPDATE SET rv = s.rv
+                 |WHEN NOT MATCHED THEN INSERT (k, ts, rv) VALUES (s.k, s.ts, s.rv)
+                 |""".stripMargin)
+            assert(graft.sources.GraftDml.lastMergeJoinPath == "probe")
+            r
+          }
+          val r = jobsOf(LocalScan.withBudget(0L)(merge("pin_merge")))
+          merge("pin_merge_local")
+          def merged(t: String) = rows(spark.table(s"$cat.$t").select("k", "ts", "rv"))
+          assert(merged("pin_merge") == merged("pin_merge_local"))
+          assert(Seq("3|20|-1", "9999|0|7").forall(merged("pin_merge_local").contains))
           (Seq.empty[String], r._2)
         }
       ).map { case (k, (got, jobs)) =>

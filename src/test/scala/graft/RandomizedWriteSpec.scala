@@ -22,8 +22,14 @@ class RandomizedWriteSpec extends SparkSuite {
 
   // reference `Repeatable.scala:6-22` reruns each spec N times; two seeds
   // here keep runtime bounded while varying the op mix
-  for (seed <- Seq(23, 77))
-  test(s"random mixed batches vs model, with error injection — seed $seed") {
+  // each seed also runs with the driver bound at 0: the Spark fold and
+  // write, against the same model
+  for (seed <- Seq(23, 77); (budget, tier) <- Seq(LocalScan.BudgetBytes -> "", 0L -> ", Spark tier"))
+  test(s"random mixed batches vs model, with error injection — seed $seed$tier") {
+    LocalScan.withBudget(budget)(randomBatches(seed))
+  }
+
+  private def randomBatches(seed: Int): Unit = {
     rnd = new scala.util.Random(seed)
     val store = new FsSnapshotStore(tmpDir("graft-rand"), spark)
     // model: key -> (value, version)

@@ -340,7 +340,11 @@ class SqlSurfaceSpec extends SparkSuite {
     import graft.core._
     val store = new FsSnapshotStore(tmpDir("graft-del"), spark)
     val rows = (1L to 4000L).map(i => (i, i * 3)).toDF("k", "x")
-    val ix = KVIndex.bootstrap(store, "del1", rows, Seq("k"), maxRowsPerFile = 512)
+    // the file-grain accounting below needs a file inside [1000, 2000]:
+    // Spark's range-partitioned write (budget 0) lays one there, the
+    // driver's equal cuts of a local input would not
+    val ix = LocalScan.withBudget(0L)(
+      KVIndex.bootstrap(store, "del1", rows, Seq("k"), maxRowsPerFile = 512))
       .fold(e => sys.error(e.message), identity)
     assert(ix.numFiles >= 4, "need a multi-file snapshot to observe file-grain deletes")
     spark.conf.set("spark.sql.catalog.gdel", "graft.sources.GraftCatalog")

@@ -243,26 +243,103 @@ class StoreSpec extends SparkSuite {
     }
   }
 
-  /** Crash injection for the commit+history protocol: trips exactly one
-    * simulated crash at a chosen protocol point (before the LATEST swap /
-    * before the history append), then behaves normally — the restart.
+  /** Crash injection for the commit protocol: trips exactly one simulated
+    * crash at a chosen point, then behaves normally — the restart. The
+    * points: inside the driver's data-file write (after part of the file
+    * is written), after `writeData` returned (before the manifest CAS),
+    * before the history append and before the LATEST swap. Mixes into any
+    * backend.
     */
-  private class CrashingStore(root: String) extends FsSnapshotStore(root, spark) {
+  private trait Crashing extends SnapshotStore {
+    @volatile var crashInFileWrite = false
+    @volatile var crashAfterWriteData = false
     @volatile var crashOnLatestSwap = false
     @volatile var crashOnHistoryAppend = false
-    override protected def writeTextAtomic(rel: String, s: String): Unit = {
+    abstract override protected def writeTextAtomic(rel: String, s: String): Unit = {
       if (crashOnLatestSwap && rel.endsWith("/LATEST")) {
         crashOnLatestSwap = false
         throw new RuntimeException("simulated crash before LATEST swap")
       }
       super.writeTextAtomic(rel, s)
     }
-    override protected def appendText(rel: String, s: String): Unit = {
+    abstract override protected def appendText(rel: String, s: String): Unit = {
       if (crashOnHistoryAppend && rel.endsWith("history.jsonl")) {
         crashOnHistoryAppend = false
         throw new RuntimeException("simulated crash before history append")
       }
       super.appendText(rel, s)
+    }
+    override protected def writeParquetFile(writer: org.apache.spark.sql.execution.datasources.OutputWriter,
+                                            rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): Unit =
+      if (!crashInFileWrite) super.writeParquetFile(writer, rows)
+      else {
+        crashInFileWrite = false
+        super.writeParquetFile(writer, rows.zipWithIndex.map { case (r, i) =>
+          if (i == 1) throw new RuntimeException("simulated crash inside a data-file write")
+          r
+        })
+      }
+    abstract override def writeData(id: String, df: org.apache.spark.sql.DataFrame, keySpec: KeySpec,
+                                    targetPartitions: Int): (String, Seq[FileEntry]) = {
+      val written = super.writeData(id, df, keySpec, targetPartitions)
+      if (crashAfterWriteData) {
+        crashAfterWriteData = false
+        throw new RuntimeException("simulated crash after writeData, before the manifest CAS")
+      }
+      written
+    }
+    def dataFiles(id: String): Set[String] = listDataFiles(id).toSet
+  }
+
+  private class CrashingStore(root: String) extends FsSnapshotStore(root, spark) with Crashing
+
+  private def crashingStores(): Seq[(String, () => Crashing)] = Seq(
+    "filesystem" -> (() => new FsSnapshotStore(tmpDir("graft-crash-write"), spark) with Crashing),
+    "jdbc" -> (() => new JdbcSnapshotStore(
+      s"jdbc:derby:memory:graft-crash-${java.util.UUID.randomUUID()};create=true", spark) with Crashing))
+
+  for ((backend, make) <- crashingStores())
+  test(s"crash window: a crash in the driver's data-file write or before the manifest CAS leaves the old snapshot ($backend)") {
+    for (point <- Seq("in the data-file write", "after writeData")) {
+      val store = make()
+      try {
+        val ix = KVIndex.bootstrap(store, "cdw", kv((1 to 64).map(i => (f"k$i%04d", s"v$i"))),
+          Seq("k"), maxRowsPerFile = 32, recordHistory = true).fold(e => fail(e.message), identity)
+        val history = store.historyLog("cdw")
+        val before = store.dataFiles("cdw")
+        val batch = Seq(Command.Insert(kv(Seq("k0005" -> "x", "k0006" -> "y", "zz" -> "z")), upsert = true))
+        if (point == "after writeData") store.crashAfterWriteData = true else store.crashInFileWrite = true
+        val e = intercept[RuntimeException] {
+          LocalScan.withBudget(Long.MaxValue)(ix.execute(batch, txVersion = "tx-crash", recordHistory = true))
+        }
+        assert(e.getMessage.contains("simulated crash"), point)
+        // LATEST and openAt read the old snapshot; no history line was added
+        assert(KVIndex.open(store, "cdw").toOption.get.manifest.version == 1L, point)
+        assert(KVIndex.openAt(store, "cdw", System.nanoTime()).toOption.get.manifest.version == 1L, point)
+        assert(store.historyLog("cdw") == history, point)
+        // the crash orphaned what reached the store: the filesystem keeps the
+        // (partial) file; the JDBC store stages files in a temporary
+        // directory, so only a write that returned left a blob
+        val orphans = store.dataFiles("cdw") -- before
+        assert(orphans.nonEmpty == (backend == "filesystem" || point == "after writeData"), s"$point: $orphans")
+        // the restart lands the batch
+        val r = KVIndex.executeWithRetry(store, "cdw", batch, recordHistory = true, txVersion = "tx-crash")
+        assert(r.success && r.snapshot.get.version == 2L && r.writeTier == WriteTier.Driver, s"$point: $r")
+        assert(store.historyLog("cdw").map(_._2) == Seq(1L, 2L), point)
+        val latest = KVIndex.open(store, "cdw").toOption.get
+        assert(latest.count == 65 && latest.get(Seq("k0005")).select("v").as[String].collect().toSeq == Seq("x"))
+        // VACUUM spares the young orphans, and after its grace window removes
+        // exactly them; DRY RUN lists only them
+        assert(store.vacuum("cdw", retainVersions = 3, dryRun = true) == ((0, 0)), point)
+        assert(store.vacuum("cdw", retainVersions = 3, graceMs = 0L, dryRun = true) == ((0, orphans.size)), point)
+        val live = store.dataFiles("cdw")
+        assert(store.vacuum("cdw", retainVersions = 3, graceMs = 0L) == ((0, orphans.size)), point)
+        assert(store.dataFiles("cdw") == live -- orphans, point)
+        assert(KVIndex.open(store, "cdw").toOption.get.df.count() == 65, point)
+      } finally store match {
+        case j: JdbcSnapshotStore => j.close()
+        case _ =>
+      }
     }
   }
 

@@ -9,18 +9,27 @@ import graft.core._
   * IDENTICAL to the read-back stats the old path computed, on every
   * parquet-writing backend, including composite and timestamp keys
   * (the types where a pre-write vs post-parquet-round-trip divergence
-  * would corrupt manifest pruning silently).
+  * would corrupt manifest pruning silently). A local input below the
+  * driver bound is written on the driver instead, its stats taken from
+  * each file's first and last rows: every case runs on both tiers.
   */
 class WriteStatsSpec extends SparkSuite {
   import spark.implicits._
 
   private def fsStore() = new FsSnapshotStore(tmpDir("graft-wstats"), spark)
 
-  test("single-file write: observed stats equal the parquet read-back stats") {
+  private def tier(budget: Long): String = if (budget == 0L) " (Spark tier)" else ""
+
+  // budget 0: the Spark write and its observed stats; the default budget:
+  // the driver's write of a local input, stats from its first and last rows
+  private val budgets = Seq(0L, LocalScan.BudgetBytes)
+
+  for (budget <- budgets)
+  test(s"single-file write: observed stats equal the parquet read-back stats${tier(budget)}") {
     val store = fsStore()
     val df = Seq((5L, "e", 1.5), (1L, "a", 0.5), (3L, "c", 2.5))
       .toDF("k", "name", "v")
-    val ix = KVIndex.bootstrap(store, "t1", df, Seq("k"))
+    val ix = LocalScan.withBudget(budget)(KVIndex.bootstrap(store, "t1", df, Seq("k")))
       .fold(e => fail(e.message), identity)
     val fs = ix.manifest.files
     assert(fs.size == 1)
@@ -34,14 +43,15 @@ class WriteStatsSpec extends SparkSuite {
     assert(readBack == fs, s"observed $fs != read-back $readBack")
   }
 
-  test("composite + timestamp keys: observed extrema match read-back") {
+  for (budget <- budgets)
+  test(s"composite + timestamp keys: observed extrema match read-back${tier(budget)}") {
     val store = fsStore()
     val df = Seq(
       ("b", java.sql.Timestamp.valueOf("2024-03-01 10:00:00.123456"), 2L),
       ("a", java.sql.Timestamp.valueOf("2024-01-01 00:00:00"), 1L),
       ("b", java.sql.Timestamp.valueOf("2023-12-31 23:59:59.999999"), 3L))
       .toDF("g", "ts", "v")
-    val ix = KVIndex.bootstrap(store, "t2", df, Seq("g", "ts"))
+    val ix = LocalScan.withBudget(budget)(KVIndex.bootstrap(store, "t2", df, Seq("g", "ts")))
       .fold(e => fail(e.message), identity)
     assert(ix.manifest.files.size == 1)
     val f = ix.manifest.files.head
@@ -55,18 +65,21 @@ class WriteStatsSpec extends SparkSuite {
     assert(got == Seq(2L))
   }
 
-  test("empty single-partition write records zero files") {
+  for (budget <- budgets)
+  test(s"empty single-partition write records zero files${tier(budget)}") {
     val store = fsStore()
     val df = Seq((1L, "x")).toDF("k", "v").filter(col("k") < 0L)
-    val ix = KVIndex.bootstrap(store, "t3", df, Seq("k"))
+    val ix = LocalScan.withBudget(budget)(KVIndex.bootstrap(store, "t3", df, Seq("k")))
       .fold(e => fail(e.message), identity)
     assert(ix.manifest.files.isEmpty && ix.manifest.numElements == 0L)
   }
 
-  test("multi-file write keeps exact per-file stats (read-back path)") {
+  for (budget <- budgets)
+  test(s"multi-file write keeps exact per-file stats (read-back path)${tier(budget)}") {
     val store = fsStore()
     val df = (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
-    val ix = KVIndex.bootstrap(store, "t4", df, Seq("k"), maxRowsPerFile = 25)
+    val ix = LocalScan.withBudget(budget)(
+      KVIndex.bootstrap(store, "t4", df, Seq("k"), maxRowsPerFile = 25))
       .fold(e => fail(e.message), identity)
     assert(ix.manifest.files.size > 1)
     assert(ix.manifest.files.map(_.rows).sum == 100L)
