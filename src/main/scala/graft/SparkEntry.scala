@@ -1587,7 +1587,7 @@ object SparkEntry {
           lag(col("o_orderkey"), 1).over(w).as("prev_ok"),
           lead(col("o_orderkey"), 1).over(w).as("next_ok"),
           rank().over(Window.partitionBy(col("o_custkey"))
-            .orderBy(col("o_totalprice").desc, col("o_orderkey"))).as("price_rank"))
+            .orderBy(col("o_totalprice").desc, col("o_orderkey"))).cast("long").as("price_rank"))
         .orderBy("o_custkey", "o_orderkey")
     }),
     "q_json" -> ((s, d) =>
@@ -1631,7 +1631,7 @@ object SparkEntry {
       val w = Window.partitionBy(col("o_custkey")).orderBy(col("o_orderkey"))
       t(s, d, "orders").filter(col("o_custkey") < 10)
         .select(col("o_custkey"), col("o_orderkey"),
-          row_number().over(w).as("rn"),
+          row_number().over(w).cast("long").as("rn"),
           round(sum(col("o_totalprice")).over(
             w.rowsBetween(Window.unboundedPreceding, 0)), 2).as("running_total"))
         .orderBy("o_custkey", "o_orderkey")
@@ -3735,7 +3735,8 @@ object SparkEntry {
       s.conf.set("spark.sql.catalog.graft_spw", "graft.sources.GraftCatalog")
       s.conf.set("spark.sql.catalog.graft_spw.root", liIx.store.root)
       val q = s.sql("""
-        SELECT l_orderkey, l_linenumber, rn, CAST(run_qty AS BIGINT) AS run_qty FROM (
+        SELECT l_orderkey, l_linenumber, CAST(rn AS BIGINT) AS rn,
+               CAST(run_qty AS BIGINT) AS run_qty FROM (
           SELECT l_orderkey, l_linenumber,
                  row_number() OVER (PARTITION BY l_orderkey
                                     ORDER BY l_linenumber) AS rn,

@@ -889,79 +889,38 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       .sortBy(key.cols.head, key.cols.tail: _*)
       .saveAsTable(tableName)
 
-  /** ZERO-EXCHANGE key-equi-join of two snapshots from their RANGE
-    * layouts alone — no bucketed export, no shuffle on either side. The
-    * two manifests' file bounds are cut into one shared, totally ordered
-    * sequence of leg boundaries (each side batched to ≈`rowsPerLeg` rows
-    * per leg — defaulting to the `maxRowsPerFile` batching convention, so
-    * per-TASK data stays one manifest batch at ANY snapshot size: a
-    * bigger snapshot means MORE legs, never bigger ones); each leg reads
-    * each side's covering files as ONE partition with half-open boundary
-    * predicates pushed into the scans, and partition i of the left can
-    * only ever match partition i of the right —
-    * [[graft.plans.ZipPartitionsJoinExec]] zips them with a per-leg
-    * STREAMING MERGE join (spillable local sorts, no build side — task
-    * heap is O(one duplicate-key group) even on an oversized leg). Legs
-    * where either side has no covering files are dropped wholesale
-    * (inner join), so a join of a huge snapshot against a narrow one
-    * reads only the intersecting key ranges of the big side — manifest
-    * pruning applied to a JOIN.
-    *
-    * Read amplification bound: a file whose key range spans m legs is
-    * scanned m times (once per covering leg, with disjoint boundary
-    * predicates). Adjacent legs whose covering file sets are identical
-    * on BOTH sides are merged away, and with `rowsPerLeg ≥` each side's
-    * own file batch size a side's OWN boundaries never split its files —
-    * residual re-reads come only from the OTHER side's boundaries
-    * landing inside a file's range, ≤ ceil(otherRowsInRange/rowsPerLeg)
-    * scans of that file.
-    *
-    * Design note: Spark's storage-partitioned joins
-    * (`SupportsReportPartitioning` + `KeyGroupedPartitioning`) cannot
-    * carry this — a key-grouped partition holds ONE key value, while a
-    * range leg holds an interval, and a graft scan never plans the
-    * `BatchScanExec` that consumes the report (it is spliced into a plain
-    * file read, [[graft.sources.SpliceGraftScan]]). The layout invariant is
-    * therefore built into the plan directly, the same stance as
-    * [[inOrdered]]'s manifest stitch.
+  /** Key-equi-join of this snapshot with `other`: the plain equi-join of
+    * the two snapshots' pinned catalog relations
+    * ([[graft.sources.GraftTable.relation]]) with the USING-join output
+    * shape. The session's [[graft.sources.GraftCoRangeJoin]] plans it as
+    * the zero-exchange co-range zip join when both layouts guarantee
+    * disjoint file ranges (the design and its read-amplification bound
+    * are documented there), and as the stock join otherwise.
     *
     * Join keys are positional: this index's key columns against
-    * `other`'s, which must match in arity and type — or pass `equiLen`
-    * to join on the leading `equiLen` components of both keys (the
-    * key-PREFIX join: legs are cut at prefix-group boundaries, every
-    * matching group row is emitted through the spillable merge, and the
-    * right side's tail key columns ride the output as match detail;
-    * inner/left_outer/left_semi/left_anti only — the coalescing outer
-    * types need the full key). Join types: `inner`
-    * (default), the LEFT-preserving snapshot-diff family —
-    * `left_outer`, `left_semi`, `left_anti` ("which keys are missing /
-    * present on the right") — plus `right_outer` and `full_outer` (the
-    * two-snapshot diff: added / removed / changed in one pass), all with
-    * zero exchanges;
-    * ranges only one side covers ride separate union branches. Output
-    * for inner/left_outer/full_outer = all left columns, then `other`'s
-    * non-key columns (the USING-join shape: full outer COALESCEs the key
-    * and version columns so right-only rows keep their key; non-key
-    * column names must not collide); semi/anti output = the left columns
-    * alone. Falls back to a plain shuffled join when either layout
-    * cannot guarantee disjoint ranges.
+    * `other`'s, which must match in arity and type — or pass `equiLen` to
+    * join on the leading `equiLen` components of both keys (a key-PREFIX
+    * join: inner/left_outer/left_semi/left_anti only, the right side's
+    * tail key columns ride the output as match detail). Join types:
+    * `inner` (default), `left_outer`, `left_semi`, `left_anti`,
+    * `right_outer` and `full_outer`. Output for inner/left_outer =
+    * all left columns, then `other`'s non-key, non-version columns
+    * (names must not collide); full/right outer COALESCE the key and
+    * version columns so right-only rows keep their key (the rule folds
+    * that coalesce into the join, which keeps its key-order claims);
+    * semi/anti output = the left columns alone.
     *
-    * `rowsPerLeg ≤ 0` (the default) means this snapshot's
-    * `maxRowsPerFile` batch target.
+    * `rowsPerLeg ≤ 0` (the default) means the larger of the two handles'
+    * `maxRowsPerFile` batch targets; either way it takes precedence over
+    * the session's rows-per-leg conf for this join.
     */
   def coRangeJoin(other: KVIndex, rowsPerLeg: Long = -1L,
                   joinType: String = "inner", equiLen: Int = -1): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftOuter}
+    import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
     val jt = JoinType(joinType)
     require(graft.plans.ZipPartitionsJoin.supports(jt),
       s"coRangeJoin: unsupported join type '$joinType' " +
         "(inner, left_outer, left_semi, left_anti, right_outer, full_outer)")
-    // `equiLen` joins on the leading equiLen key components of both sides
-    // (the API twin of the SQL rewrite's key-PREFIX joins; legs are cut
-    // at prefix-group boundaries, each left row emits its whole matching
-    // group). Only the types whose output carries each side's own keys
-    // support it — full/right outer COALESCE the key columns, which is
-    // unsound on a partial key (right-only rows would lose their tail).
     val el = if (equiLen > 0) equiLen else {
       require(key.cols.length == other.key.cols.length,
         s"coRangeJoin: key arity ${key.cols.length} != ${other.key.cols.length}" +
@@ -970,26 +929,20 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     }
     require(el <= key.cols.length && el <= other.key.cols.length,
       s"coRangeJoin: equiLen $el exceeds a side's key arity")
+    // full/right outer COALESCE the key columns, which is unsound on a
+    // partial key (right-only rows would lose their tail)
     require(el == key.cols.length && el == other.key.cols.length ||
-      jt == org.apache.spark.sql.catalyst.plans.Inner || jt == LeftOuter ||
-      jt == org.apache.spark.sql.catalyst.plans.LeftSemi || jt == LeftAnti,
+      jt == Inner || jt == LeftOuter || jt == LeftSemi || jt == LeftAnti,
       "coRangeJoin: prefix equiLen supports inner/left_outer/left_semi/left_anti only")
     val ls = store.emptyTyped(manifest).schema
     val rs = other.store.emptyTyped(other.manifest).schema
     require(key.cols.take(el).map(ls(_).dataType) ==
       other.key.cols.take(el).map(rs(_).dataType),
       "coRangeJoin: key column types must match positionally")
-    // full and right outer COALESCE the key/version columns: their
-    // right-only rows carry no left-side values
-    val coalescedKeys = jt == org.apache.spark.sql.catalyst.plans.FullOuter ||
-      jt == org.apache.spark.sql.catalyst.plans.RightOuter
-    val rightInOutput = jt == org.apache.spark.sql.catalyst.plans.Inner ||
-      jt == LeftOuter || coalescedKeys
-    // the engine's own `version` stamp rides every snapshot: keep the
-    // LEFT side's (COALESCEd with the right's for full outer, like the
-    // key columns), drop the right's otherwise
-    // prefix joins keep the right side's TAIL key columns (the match
-    // detail, like probeJoin); the equi prefix itself is redundant
+    val coalescedKeys = jt == FullOuter || jt == RightOuter
+    val rightInOutput = jt == Inner || jt == LeftOuter || coalescedKeys
+    // the right side's version stamp is dropped (coalesced into the left's
+    // for full/right outer); a prefix join keeps its TAIL key columns
     val rightVals = rs.fieldNames.toSeq
       .filterNot(c => other.key.cols.take(el).contains(c) || c == "version")
     if (rightInOutput) {
@@ -998,134 +951,71 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         s"coRangeJoin: right value column(s) ${clash.mkString(",")} collide " +
           "with left columns — rename before joining")
     }
-    val rKeyOf = key.cols.zip(other.key.cols).toMap
-
-    // the USING-join output shape: for full/right outer the key (and
-    // version) columns COALESCE the two sides, so right-only rows keep
-    // their key. `preCoalesced` = the zip exec already folded the
-    // coalesce into its output (the layout-claims path): the left slots
-    // carry the coalesced values and a plain aliased select keeps the
-    // exec's RangePartitioning/ordering alive through Spark's
-    // alias-aware propagation — a Project re-computing coalesce(l, r)
-    // would orphan the claims (the partitioning expression would no
-    // longer appear in the output).
-    def shape(lc: String => Column, rc: Option[String => Column],
-              preCoalesced: Boolean = false): Seq[Column] =
-      ls.fieldNames.toSeq.map { c =>
-        if (coalescedKeys && key.cols.contains(c))
-          (if (preCoalesced) lc(c)
-           else coalesce(lc(c), rc.map(f => f(rKeyOf(c))).getOrElse(lit(null)))).as(c)
-        else if (coalescedKeys && c == "version" && rs.fieldNames.contains("version"))
-          (if (preCoalesced) lc(c)
-           else coalesce(lc(c), rc.map(f => f("version")).getOrElse(lit(null)))).as(c)
-        else if (coalescedKeys) lc(c).as(c)
-        else lc(c)
-      } ++ (if (rightInOutput)
-        rightVals.map(c => rc.map(f => f(c)).getOrElse(lit(null).cast(rs(c).dataType)).as(c))
-      else Nil)
-
-    def plainJoin(): DataFrame = {
-      val l = df.alias("__cl")
-      val r = other.df.alias("__cr")
-      val cond = key.cols.take(el).zip(other.key.cols.take(el))
-        .map { case (a, b) => col(s"__cl.$a") === col(s"__cr.$b") }
-        .reduce(_ && _)
-      l.join(r, cond, joinType)
-        .select(shape(c => col(s"__cl.$c"), Some(c => col(s"__cr.$c"))): _*)
-    }
-
-    coRangeLegPlans(other, rowsPerLeg, joinType = jt, keyLen = el) match {
-      case None => plainJoin()
-      case Some((zipOpt, leftOnlyOpt, rightOnlyOpt)) =>
-        val zipDf = zipOpt.map { case (lPlan, rPlan, lKeys, rKeys) =>
-          // full/right outer: the key (and version) coalesce folds INTO
-          // the exec's output, so the merge's key-ordered emission is a
-          // live RangePartitioning/ordering claim — a GROUP BY / ORDER BY
-          // on the key above a two-snapshot diff plans no exchange
-          val pairs: Seq[(org.apache.spark.sql.catalyst.expressions.Attribute,
-                          org.apache.spark.sql.catalyst.expressions.Attribute)] =
-            if (!coalescedKeys) Nil
-            else lKeys.zip(rKeys) ++ (for {
-              lv <- lPlan.output.find(_.name == "version")
-              rv <- rPlan.output.find(_.name == "version")
-            } yield (lv, rv))
-          val zj = graft.plans.ZipPartitionsJoin(lPlan, rPlan, lKeys, rKeys, jt,
-            pairs.map(_._1), pairs.map(_._2))
-          // resolve by the two sides' own attributes — key NAMES may
-          // repeat across sides, so name-based selection would be
-          // ambiguous for full outer
-          val lByName = zj.output.filter(a =>
-            lPlan.output.exists(_.exprId == a.exprId)).map(a => a.name -> a).toMap
-          val rByName = zj.output.filter(a =>
-            rPlan.output.exists(_.exprId == a.exprId)).map(a => a.name -> a).toMap
-          org.apache.spark.sql.graft.Shim.ofRows(spark, zj)
-            .select(shape(c => org.apache.spark.sql.graft.Shim.col(lByName(c)),
-              if (rightInOutput)
-                Some(c => org.apache.spark.sql.graft.Shim.col(rByName(c)))
-              else None, preCoalesced = coalescedKeys): _*)
-        }
-        // legs only ONE side covers: rows pass through (anti), or
-        // null-extend the other side (outer types) — no join work at all
-        val leftOnlyShaped = leftOnlyOpt.map { lp =>
-          val base = org.apache.spark.sql.graft.Shim.ofRows(spark, lp)
-          if (jt == LeftOuter || coalescedKeys) base.select(shape(col, None): _*)
-          else base.select(ls.fieldNames.toSeq.map(col): _*) // LeftAnti
-        }
-        val rightOnlyShaped = rightOnlyOpt.map { rp =>
-          val base = org.apache.spark.sql.graft.Shim.ofRows(spark, rp)
-          // left columns null except the coalesced key/version slots
-          base.select(ls.fieldNames.toSeq.map { c =>
-            if (key.cols.contains(c)) col(rKeyOf(c)).as(c)
-            else if (c == "version" && rs.fieldNames.contains("version"))
-              col("version").as(c)
-            else lit(null).cast(ls(c).dataType).as(c)
-          } ++ rightVals.map(col): _*)
-        }
-        Seq(zipDf, leftOnlyShaped, rightOnlyShaped).flatten
-          .reduceOption(_ union _)
-          // nothing intersects and nothing is preserved: typed empty
-          .getOrElse(plainJoin().limit(0))
-    }
+    val rKeyOf = key.cols.zip(other.key.cols).toMap + ("version" -> "version")
+    val (l, r) = pinnedPair(other, rowsPerLeg)
+    val cond = key.cols.take(el).zip(other.key.cols.take(el))
+      .map { case (a, b) => l(a) === r(b) }.reduce(_ && _)
+    l.join(r, cond, joinType).select(ls.fieldNames.toSeq.map { c =>
+      if (coalescedKeys && rKeyOf.contains(c) && rs.fieldNames.contains(rKeyOf(c)))
+        coalesce(l(c), r(rKeyOf(c))).as(c)
+      else l(c)
+    } ++ (if (rightInOutput) rightVals.map(r(_)) else Nil): _*)
   }
 
-  /** AS-OF join of two range-laid snapshots with ZERO exchanges — for each
-    * row of THIS index, attach the single row of `other` with the greatest
-    * ts at-or-before (`strict` = strictly-before) the left row's ts within
-    * the same equi-key group. The temporal-lookup generalization of
-    * [[coRangeJoin]]: prices-at-trade-time, config-active-at-event,
-    * latest-reading-before-probe — the query every event pipeline runs,
-    * normally as a shuffled join + window ([[graft.operators.AsOfJoin]]).
-    * Here both snapshots' manifests cut shared leg boundaries at
-    * EQUI-KEY-PREFIX grain (the key-prefix join's leg rule, so an equi
-    * group is never split across legs) and each leg runs an ordered merge
-    * holding ONE candidate row: no shuffle, no join explosion on
-    * many-versions keys, O(1) task heap beyond the local leg sorts.
+  /** This snapshot and `other` as two pinned catalog relations
+    * ([[graft.sources.GraftTable.relation]]) carrying the join's per-leg
+    * row target: `rowsPerLeg`, else the larger `maxRowsPerFile` of the
+    * two handles. `files` restrict a side to a file subset.
+    */
+  private def pinnedPair(other: KVIndex, rowsPerLeg: Long,
+                         files: Option[(Seq[FileEntry], Seq[FileEntry])] = None)
+      : (DataFrame, DataFrame) = {
+    val target = if (rowsPerLeg > 0) rowsPerLeg
+      else math.max(maxRowsPerFile, other.maxRowsPerFile)
+    // the rules that plan the join, on the session that runs it
+    graft.sources.GraftRules.install(spark)
+    def pin(ix: KVIndex, fs: Option[Seq[FileEntry]]): DataFrame = {
+      val m = fs.fold(ix.manifest)(f => ix.manifest.copy(files = f, filesRef = None,
+        numElements = f.iterator.map(_.rows).sum, disjointHint = None))
+      Shim.ofRows(spark, graft.sources.GraftTable.relation(ix.store, m, target))
+    }
+    (pin(this, files.map(_._1)), pin(other, files.map(_._2)))
+  }
+
+  /** AS-OF join of two snapshots — for each row of THIS index, attach the
+    * single row of `other` with the greatest ts at-or-before (`strict` =
+    * strictly-before) the left row's ts within the same equi-key group.
+    * Builds the stock form over the two pinned catalog relations: an
+    * equi-join on the key prefix with the ts bound, then `row_number()`
+    * over the left key ordered by the right ts (and the right key's
+    * remaining columns) descending, keeping rank 1. The session's
+    * [[graft.sources.GraftAsOfIdiom]] plans it as the zero-exchange
+    * ordered merge ([[graft.plans.AsOfZipJoin]]) when both layouts
+    * guarantee disjoint file ranges, and as that stock plan otherwise.
     *
     * Keys are positional: the leading `equiLen` key columns of both sides
     * are the equi key (types must match; default = all but the last of
     * `other`'s key). The ts column defaults to each side's NEXT key column
     * (`key.cols(equiLen)`); pass `leftTsCol`/`rightTsCol` to use any other
-    * column — non-key ts columns are fine, the per-leg local sort orders
-    * them (ties on (equi, ts) break by the side's remaining key columns,
-    * so the pick is deterministic under the engine's key-unique contract).
+    * column (ties on (equi, ts) break by the right side's remaining key
+    * columns, so the pick is deterministic under the engine's key-unique
+    * contract).
     *
     * `tolerance >= 0` additionally requires `leftTs - rightTs <= tolerance`
     * in the ts type's native units (integral value, days for DATE,
-    * microseconds for TIMESTAMP). Join types: `inner` (unmatched left rows
-    * drop) and `left_outer` (null-extended). Output: every left column,
-    * then the matched right ts as `asof_ts`, then `other`'s value columns
-    * (non-key, non-version, non-ts; names must not collide). Falls back to
-    * the equivalent shuffled join + window pick when either layout cannot
-    * guarantee disjoint ranges.
+    * microseconds for TIMESTAMP), spelled as the band `r.ts >= l.ts - K`
+    * the rule reads. Join types: `inner` (unmatched left rows drop) and
+    * `left_outer` (null-extended). Output: every left column, then the
+    * matched right ts as `asof_ts`, then `other`'s value columns (non-key,
+    * non-version, non-ts; names must not collide). `rowsPerLeg` as in
+    * [[coRangeJoin]].
     */
   def asOfJoin(other: KVIndex, equiLen: Int = -1,
                leftTsCol: String = null, rightTsCol: String = null,
                joinType: String = "inner", strict: Boolean = false,
                tolerance: Long = -1L, rowsPerLeg: Long = -1L): DataFrame = {
-    import org.apache.spark.sql.catalyst.plans.{Inner, LeftOuter}
     require(joinType == "inner" || joinType == "left_outer",
       s"asOfJoin: unsupported join type '$joinType' (inner, left_outer)")
-    val leftOuter = joinType == "left_outer"
     val el = if (equiLen > 0) equiLen else other.key.cols.length - 1
     require(el >= 1 && el <= key.cols.length && el <= other.key.cols.length,
       s"asOfJoin: equiLen $el out of range for key arities " +
@@ -1163,74 +1053,45 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         "with left columns — rename before joining")
     val rRestNames = other.key.cols.drop(el).filterNot(_ == rTsName)
 
-    def tsUnits(c: Column): Column = tsUnitsCol(tsType, c)
+    val (l, r) = pinnedPair(other, rowsPerLeg)
+    val equiCond = key.cols.take(el).zip(other.key.cols.take(el))
+      .map { case (a, b) => l(a) === r(b) }.reduce(_ && _)
+    val lT = l(lTsName); val rT = r(rTsName)
+    val tsCond = (if (strict) rT < lT else rT <= lT) +:
+      (if (tolerance >= 0) Seq(rT >= bandFloor(tsType, lT, tolerance)) else Nil)
+    val j = l.join(r, (equiCond +: tsCond).reduce(_ && _), joinType)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(key.cols.map(l(_)): _*)
+      .orderBy((rT.desc_nulls_last +: rRestNames.map(c => r(c).desc_nulls_last)): _*)
+    j.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      .select(ls.fieldNames.toSeq.map(l(_)) ++
+        (rT.as("asof_ts") +: rightVals.map(c => r(c).as(c))): _*)
+  }
 
-    /** Stock fallback: shuffled join on the equi prefix + ts bound, then
-      * one window picks the latest match per left row (left full key is
-      * unique, so the partition is exact).
-      */
-    def stockAsOf(): DataFrame = {
-      val l = df.alias("__al")
-      val r = other.df.alias("__ar")
-      val equiCond = key.cols.take(el).zip(other.key.cols.take(el))
-        .map { case (a, b) => col(s"__al.$a") === col(s"__ar.$b") }
-        .reduce(_ && _)
-      val lT = col(s"__al.$lTsName"); val rT = col(s"__ar.$rTsName")
-      val tsCond0 = if (strict) rT < lT else rT <= lT
-      val tsCond = if (tolerance >= 0)
-        tsCond0 && (tsUnits(lT) - tsUnits(rT) <= tolerance)
-      else tsCond0
-      val j = l.join(r, equiCond && tsCond, if (leftOuter) "left" else "inner")
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(key.cols.map(c => col(s"__al.$c")): _*)
-        .orderBy((rT.desc_nulls_last +:
-          rRestNames.map(c => col(s"__ar.$c").desc_nulls_last)): _*)
-      j.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(ls.fieldNames.toSeq.map(c => col(s"__al.$c")) ++
-          (rT.as("asof_ts") +: rightVals.map(c => col(s"__ar.$c").as(c))): _*)
-    }
-
-    coRangeLegPlans(other, rowsPerLeg,
-        joinType = if (leftOuter) LeftOuter else Inner, keyLen = el) match {
-      case None => stockAsOf()
-      case Some((zipOpt, leftOnlyOpt, _)) =>
-        val zipDf = zipOpt.map { case (lPlan, rPlan, _, _) =>
-          def attrOf(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                     n: String) = planAttr(p, n, "asOfJoin")
-          val node = graft.plans.AsOfZipJoin(lPlan, rPlan,
-            key.cols.take(el).map(attrOf(lPlan, _)),
-            other.key.cols.take(el).map(attrOf(rPlan, _)),
-            attrOf(lPlan, lTsName), attrOf(rPlan, rTsName),
-            key.cols.drop(el).filterNot(_ == lTsName).map(attrOf(lPlan, _)),
-            rRestNames.map(attrOf(rPlan, _)),
-            leftOuter, strict, tolerance)
-          val lByName = sideByName(node.output, lPlan)
-          val rByName = sideByName(node.output, rPlan)
-          org.apache.spark.sql.graft.Shim.ofRows(spark, node).select(
-            ls.fieldNames.toSeq.map(c =>
-              org.apache.spark.sql.graft.Shim.col(lByName(c))) ++
-            (org.apache.spark.sql.graft.Shim.col(rByName(rTsName)).as("asof_ts") +:
-              rightVals.map(c =>
-                org.apache.spark.sql.graft.Shim.col(rByName(c)).as(c))): _*)
-        }
-        // equi-prefix ranges only the left covers: no match exists — rows
-        // null-extend (left_outer reaches here; inner drops these legs in
-        // the construction)
-        val leftOnlyShaped = leftOnlyOpt.map { lp =>
-          org.apache.spark.sql.graft.Shim.ofRows(spark, lp).select(
-            ls.fieldNames.toSeq.map(col) ++
-            (lit(null).cast(tsType).as("asof_ts") +:
-              rightVals.map(c => lit(null).cast(rs(c).dataType).as(c))): _*)
-        }
-        Seq(zipDf, leftOnlyShaped).flatten.reduceOption(_ union _)
-          .getOrElse(stockAsOf().limit(0)) // provably empty, typed
+  /** `lT - k`, the floor of an as-of tolerance band `r.ts >= l.ts - k`,
+    * spelled as [[graft.sources.GraftAsOfIdiom]] reads it: a day-time
+    * interval for TIMESTAMP, `date_sub` for DATE, a literal of the ts
+    * type otherwise (a width past the type's range is clamped to it).
+    */
+  private def bandFloor(tsType: org.apache.spark.sql.types.DataType, lT: Column,
+                        k: Long): Column = {
+    import org.apache.spark.sql.types._
+    tsType match {
+      case TimestampType =>
+        lT - lit(java.time.Duration.of(k, java.time.temporal.ChronoUnit.MICROS))
+      case DateType => date_sub(lT, math.min(k, Int.MaxValue.toLong).toInt)
+      case ByteType => lT - lit(math.min(k, Byte.MaxValue.toLong).toByte)
+      case ShortType => lT - lit(math.min(k, Short.MaxValue.toLong).toShort)
+      case IntegerType => lT - lit(math.min(k, Int.MaxValue.toLong).toInt)
+      case _ => lT - lit(k)
     }
   }
 
-  /** The co-range leg construction under [[coRangeJoin]] and the SQL-join
-    * rewrite ([[graft.sources.GraftCoRangeJoin]]): both sides' leg-union
+  /** The co-range leg construction under the two-snapshot join rewrites
+    * ([[graft.sources.GraftCoRangeJoin]], [[graft.sources.GraftAsOfIdiom]]),
+    * which plan [[coRangeJoin]], [[asOfJoin]] and [[diff]]: both sides' leg-union
     * plans (one partition per leg, boundary predicates pushed, legs
-    * aligned 1:1) plus the key attributes, or None when either layout
+    * aligned 1:1), or None when either layout
     * cannot guarantee disjoint ranges / nothing intersects. Registers the
     * planning strategy for [[graft.plans.ZipPartitionsJoin]] on success.
     *
@@ -1252,7 +1113,7 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * Returns None when either layout cannot guarantee disjoint ranges
     * (caller falls back to the stock join); otherwise
     * `Some((zipLegs, leftOnly, rightOnly))` where `zipLegs` holds both
-    * sides' leg-union plans + key attributes for the ranges BOTH sides
+    * sides' leg-union plans for the ranges BOTH sides
     * cover, `leftOnly` (left_outer/left_anti/full_outer) the left legs
     * whose range the right never intersects, and `rightOnly` (full_outer)
     * the mirror — bypass rows that skip the join entirely. All None =
@@ -1263,13 +1124,9 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       rPrune: (Option[Seq[Any]], Option[Seq[Any]]) = (None, None),
       joinType: org.apache.spark.sql.catalyst.plans.JoinType =
         org.apache.spark.sql.catalyst.plans.Inner,
-      keyLen: Int = -1,
-      lKeep: FileEntry => Boolean = _ => true,
-      rKeep: FileEntry => Boolean = _ => true)
+      keyLen: Int = -1)
       : Option[(Option[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                        Seq[org.apache.spark.sql.catalyst.expressions.Attribute],
-                        Seq[org.apache.spark.sql.catalyst.expressions.Attribute])],
+                        org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)],
                 Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan],
                 Option[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan])] = {
     import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftAnti, LeftOuter, RightOuter}
@@ -1296,21 +1153,14 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     // bound; same stance as GraftScan's covering filter)
     val bothLo = (lPrune._1 ++ rPrune._1).reduceOption(KeyOrd.max(_, _))
     val bothHi = (lPrune._2 ++ rPrune._2).reduceOption(KeyOrd.min(_, _))
-    // `lKeep`/`rKeep` restrict each side to a FILE SUBSET before legs are
-    // cut (the snapshot diff passes "not shared with the other manifest":
-    // COW-shared files are byte-identical and cancel, so legs cover only
-    // the CHANGED ranges and the diff's cost stays ∝ the change volume)
-    def pruned(ix: KVIndex, keep: FileEntry => Boolean,
-               lo: Option[Seq[Any]], hi: Option[Seq[Any]]): Seq[FileEntry] = {
-      val cover = LegPlanner.covering(lo, hi)
-      ix.filesWhere(f => keep(f) && cover(f))
-    }
+    def pruned(ix: KVIndex, lo: Option[Seq[Any]], hi: Option[Seq[Any]]): Seq[FileEntry] =
+      ix.filesWhere(LegPlanner.covering(lo, hi))
     val lfs =
-      if (leftPreserving) pruned(this, lKeep, lPrune._1, lPrune._2)
-      else pruned(this, lKeep, bothLo, bothHi)
+      if (leftPreserving) pruned(this, lPrune._1, lPrune._2)
+      else pruned(this, bothLo, bothHi)
     val rfs =
-      if (rightPreserving) pruned(other, rKeep, rPrune._1, rPrune._2)
-      else pruned(other, rKeep, bothLo, bothHi)
+      if (rightPreserving) pruned(other, rPrune._1, rPrune._2)
+      else pruned(other, bothLo, bothHi)
     if (lfs.isEmpty && !rightPreserving) return Some((None, None, None))
     if (rfs.isEmpty && !leftPreserving) return Some((None, None, None))
 
@@ -1374,14 +1224,8 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
       val legs = zipLegs.map { case (lo, hi, afs, bfs) =>
         (legSlice(this, afs, lo, hi), legSlice(other, bfs, lo, hi))
       }
-      val lPlan = legs.map(_._1).reduce(_ unionByName _).queryExecution.analyzed
-      val rPlan = legs.map(_._2).reduce(_ unionByName _).queryExecution.analyzed
-      def attrsOf(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-                  names: Seq[String]) =
-        names.map(c => p.output.find(_.name == c).getOrElse(
-          sys.error(s"coRangeJoin: missing key column $c")))
-      Some((lPlan, rPlan, attrsOf(lPlan, key.cols.take(kl)),
-        attrsOf(rPlan, other.key.cols.take(kl))))
+      Some((legs.map(_._1).reduce(_ unionByName _).queryExecution.analyzed,
+        legs.map(_._2).reduce(_ unionByName _).queryExecution.analyzed))
     }
     val loPart = if (loLegs.isEmpty) None else Some(
       loLegs.map { case (lo, hi, afs, _) => legSlice(this, afs, lo, hi) }
@@ -1518,19 +1362,6 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     case d: java.sql.Date => Some(d.toLocalDate.toEpochDay)
     case d: java.time.LocalDate => Some(d.toEpochDay)
     case _ => None
-  }
-
-  /** ts column in its native integral units — the tolerance contract,
-    * which MUST agree with [[graft.plans.AsOfZipJoinExec]]'s raw-value
-    * semantics (days for DATE, microseconds for TIMESTAMP, the value
-    * itself for integrals). One definition serves both as-of fallbacks.
-    */
-  private def tsUnitsCol(tsType: org.apache.spark.sql.types.DataType,
-                         c: Column): Column = tsType match {
-    case org.apache.spark.sql.types.DateType =>
-      datediff(c, to_date(lit("1970-01-01")))
-    case org.apache.spark.sql.types.TimestampType => unix_micros(c)
-    case _ => c.cast("long")
   }
 
   /** Resolve a named column on a leg plan (fail loudly with context). */
@@ -1894,7 +1725,15 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
         "with probe columns — rename before joining")
     val rRestNames = key.cols.drop(el).filterNot(_ == rTsName)
 
-    def tsUnits(c: Column): Column = tsUnitsCol(tsType, c)
+    /** ts in its native integral units — the tolerance contract of
+      * [[graft.plans.AsOfZipJoinExec]] (days for DATE, microseconds for
+      * TIMESTAMP, the value itself for integrals).
+      */
+    def tsUnits(c: Column): Column = tsType match {
+      case org.apache.spark.sql.types.DateType => datediff(c, to_date(lit("1970-01-01")))
+      case org.apache.spark.sql.types.TimestampType => unix_micros(c)
+      case _ => c.cast("long")
+    }
 
     /** Stock fallback: probes get a per-row id, shuffled join on the equi
       * prefix + ts bound, one window picks the latest match per probe.
@@ -2044,6 +1883,14 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     * `added` / `removed` / `changed` between this snapshot and `newer`
     * (two versions of the same logical index, any temporal distance apart).
     *
+    * Builds the tagged full outer join on the key of the two pinned
+    * catalog relations ([[graft.sources.GraftTable.relation]]), each
+    * restricted to its side's NON-SHARED files; the session's
+    * [[graft.sources.GraftCoRangeJoin]] plans it as the zip join with the
+    * key coalesce folded in, so an aggregate on the key above plans no
+    * exchange. Output: the key columns, `old_<v>` and `new_<v>` per value
+    * column, and `change`.
+    *
     * The write-version stamp is excluded from the value comparison: COW
     * rewrites whole files, so a payload-unchanged row in a rewritten file
     * re-appears on both sides with only a new stamp — those rows cancel
@@ -2054,81 +1901,21 @@ final class KVIndex(val store: SnapshotStore, val manifest: SnapshotManifest,
     val vals = manifest.valueCols.filterNot(_ == "version")
     val oldPaths = files.map(_.path).toSet
     val newPaths = newer.files.map(_.path).toSet
-
-    def classify(joined: DataFrame): DataFrame = {
-      val valueChanged = vals.map(c => !(col(s"old_$c") <=> col(s"new_$c")))
-        .reduceOption(_ || _).getOrElse(lit(false))
-      joined.withColumn("change",
-          when(col("__old").isNull, lit("added"))
-            .when(col("__new").isNull, lit("removed"))
-            .when(valueChanged, lit("changed")))
-        .filter(col("change").isNotNull)
-        .drop("__old", "__new")
-    }
-
-    // stock shuffled diff: the fallback for overlapping layouts (and the
-    // trivially-empty all-shared case, where it reads zero bytes anyway)
-    def stock(): DataFrame = {
-      def side(m: SnapshotManifest, sideFiles: Seq[FileEntry], keep: Set[String],
-               tag: String): DataFrame = {
-        val fs = sideFiles.filterNot(f => keep.contains(f.path))
-        val base =
-          if (fs.isEmpty) store.emptyTyped(m) // typed empty, no scan
-          else store.readFiles(fs.map(_.path), m)
-        base.select(kcols.map(col) ++ vals.map(c => col(c).as(s"${tag}_$c")) :+
-          lit(true).as(s"__$tag"): _*)
-      }
-      classify(side(manifest, files, newPaths, "old")
-        .join(side(newer.manifest, newer.files, oldPaths, "new"), kcols, "full_outer"))
-    }
-
-    // the zip-join diff: legs are cut over the NON-SHARED file subsets
-    // only (COW-shared files are byte-identical and cancel), joined by
-    // the exchange-free full-outer merge with coalesced keys — the diff
-    // reads and shuffles NOTHING beyond the changed ranges, and an
-    // aggregate on the key above a bypass-free diff plans no exchange
-    import org.apache.spark.sql.catalyst.plans.FullOuter
-    coRangeLegPlans(newer, joinType = FullOuter,
-        lKeep = f => !newPaths.contains(f.path),
-        rKeep = f => !oldPaths.contains(f.path)) match {
-      case Some((zipOpt, loOpt, roOpt))
-          if zipOpt.nonEmpty || loOpt.nonEmpty || roOpt.nonEmpty =>
-        import org.apache.spark.sql.catalyst.expressions.{Alias, Literal}
-        import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
-        val ls = store.emptyTyped(manifest).schema
-        val rs = newer.store.emptyTyped(newer.manifest).schema
-        val boolT = org.apache.spark.sql.types.BooleanType
-        // per-side tagging BELOW the join (keys pass through untouched,
-        // so the leg alignment and the key attrs survive)
-        def tag(p: LogicalPlan, t: String): LogicalPlan = {
-          val byName = p.output.map(a => a.name -> a).toMap
-          Project(kcols.map(byName) ++
-            vals.map(c => Alias(byName(c), s"${t}_$c")()) :+
-            Alias(Literal(true), s"__$t")(), p)
-        }
-        def nullsOf(schema: org.apache.spark.sql.types.StructType, t: String) =
-          vals.map(c => Alias(Literal(null, schema(c).dataType), s"${t}_$c")()) :+
-            Alias(Literal(null, boolT), s"__$t")()
-        val zip = zipOpt.map { case (lp, rp, lKeys, rKeys) =>
-          graft.plans.ZipPartitionsJoin(tag(lp, "old"), tag(rp, "new"),
-            lKeys, rKeys, FullOuter, lKeys, rKeys)
-        }
-        val removedOnly = loOpt.map { lp => // ranges only the OLD side covers
-          val s = tag(lp, "old")
-          Project(s.output ++ nullsOf(rs, "new"), s)
-        }
-        val addedOnly = roOpt.map { rp => // ranges only the NEW side covers
-          val s = tag(rp, "new")
-          Project(s.output.take(kcols.size) ++ nullsOf(ls, "old") ++
-            s.output.drop(kcols.size), s)
-        }
-        val branches: Seq[LogicalPlan] = Seq(zip, removedOnly, addedOnly).flatten
-        classify(org.apache.spark.sql.graft.Shim.ofRows(spark, branches match {
-          case Seq(only) => only
-          case many => Union(many)
-        }))
-      case _ => stock()
-    }
+    val (l, r) = pinnedPair(newer, -1L, Some((
+      files.filterNot(f => newPaths.contains(f.path)),
+      newer.files.filterNot(f => oldPaths.contains(f.path)))))
+    def side(d: DataFrame, tag: String): DataFrame =
+      d.select(kcols.map(col) ++ vals.map(c => col(c).as(s"${tag}_$c")) :+
+        lit(true).as(s"__$tag"): _*)
+    val valueChanged = vals.map(c => !(col(s"old_$c") <=> col(s"new_$c")))
+      .reduceOption(_ || _).getOrElse(lit(false))
+    side(l, "old").join(side(r, "new"), kcols, "full_outer")
+      .withColumn("change",
+        when(col("__old").isNull, lit("added"))
+          .when(col("__new").isNull, lit("removed"))
+          .when(valueChanged, lit("changed")))
+      .filter(col("change").isNotNull)
+      .drop("__old", "__new")
   }
 }
 

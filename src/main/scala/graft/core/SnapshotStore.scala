@@ -274,7 +274,12 @@ object KeyOrd extends Ordering[Seq[Any]] {
       val xf = x.isInstanceOf[java.lang.Double] || x.isInstanceOf[java.lang.Float]
       val yf = y.isInstanceOf[java.lang.Double] || y.isInstanceOf[java.lang.Float]
       if (xi && yi) java.lang.Long.compare(x.longValue(), y.longValue())
-      else if (xf && yf) java.lang.Double.compare(x.doubleValue(), y.doubleValue())
+      else if (xf && yf) {
+        // Spark's float order (SQLOrderingUtil): -0.0 and 0.0 are one key,
+        // as in its joins and the commit fold; NaN equals NaN, above all
+        val (a, b) = (x.doubleValue(), y.doubleValue())
+        if (a == b) 0 else java.lang.Double.compare(a, b)
+      }
       else new java.math.BigDecimal(x.toString).compareTo(new java.math.BigDecimal(y.toString))
     case (x, y) => x.toString.compareTo(y.toString)
   }

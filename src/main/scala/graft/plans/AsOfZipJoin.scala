@@ -8,8 +8,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.types.{ByteType, DataType, DateType, IntegerType, LongType, ShortType, TimestampNTZType, TimestampType}
 
 /** Partition-zipped AS-OF join of two CO-RANGED children — the temporal
-  * "latest right row at-or-before" lookup ([[graft.core.KVIndex.asOfJoin]])
-  * run as a per-leg merge with ZERO exchanges, the way
+  * "latest right row at-or-before" lookup ([[graft.core.KVIndex.asOfJoin]],
+  * planned by [[graft.sources.GraftAsOfIdiom]]) run as a per-leg merge with ZERO exchanges, the way
   * [[ZipPartitionsJoin]] runs equi-joins.
   *
   * Contract (the CALLER constructs it, this node trusts it): partition i of
@@ -72,7 +72,7 @@ final case class AsOfZipJoin(left: LogicalPlan, right: LogicalPlan,
 
 object AsOfZipJoin {
   /** TIMESTAMP_NTZ deliberately excluded: the exec could diff raw micros,
-    * but the stock fallback plan ([[graft.core.KVIndex.asOfJoin]]) can only
+    * but the stock plan ([[graft.core.KVIndex.asOfJoin]]'s band) can only
     * express the delta through a tz cast, which shifts across DST
     * boundaries — the two paths would disagree on edge rows.
     */

@@ -8,8 +8,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 
 /** Partition-zipped equi-join of two CO-RANGED children — the physical
-  * half of the snapshot-layout join ([[graft.core.KVIndex.coRangeJoin]] /
-  * [[graft.sources.GraftCoRangeJoin]]).
+  * half of the snapshot-layout join ([[graft.sources.GraftCoRangeJoin]]).
   *
   * Contract (the CALLER constructs it, this node trusts it): partition i
   * of `left` and partition i of `right` hold exactly the rows of the same
@@ -35,7 +34,7 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
   * partition to hold ONE partition-key value, while a range leg holds an
   * interval of keys — which is why this is a custom node rather than a
   * `SupportsReportPartitioning` report on the scan; see the design note
-  * on [[graft.core.KVIndex.coRangeJoin]].
+  * on [[graft.sources.GraftCoRangeJoin]].
   *
   * Memory: NO build side. [[ZipPartitionsJoinExec.requiredChildOrdering]]
   * asks for both legs sorted by their keys, so `EnsureRequirements`
@@ -105,7 +104,7 @@ object ZipPartitionsJoin {
     * left value, one-sided rows the surviving side's — there is always
     * one); all other slots of a null-extending type go nullable.
     */
-  private[plans] def outputFor(jt: JoinType, lOut: Seq[Attribute],
+  private[graft] def outputFor(jt: JoinType, lOut: Seq[Attribute],
                                rOut: Seq[Attribute],
                                coalesced: Seq[(Attribute, Attribute)]): Seq[Attribute] =
     jt match {
@@ -155,8 +154,8 @@ final case class ZipPartitionsJoinExec(left: SparkPlan, right: SparkPlan,
     Seq(leftKeys.map(SortOrder(_, Ascending)),
       rightKeys.map(SortOrder(_, Ascending)))
 
-  /** With a COALESCED output (API full/right outer — the USING/diff
-    * shape), every row carries its key in the left key slots, matched or
+  /** With a COALESCED output (full/right outer under the USING/diff key
+    * coalesce), every row carries its key in the left key slots, matched or
     * not, and the merge emits in global key order across both sides — so
     * the left-key ordering claim is honest for BOTH types. Without it,
     * FULL OUTER interleaves right-only rows whose LEFT attributes are

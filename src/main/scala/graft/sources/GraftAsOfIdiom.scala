@@ -22,8 +22,8 @@ import graft.plans.AsOfZipJoin
   *   ) WHERE rn = 1
   * }}}
   *
-  * This is the engine's OWN fallback shape ([[graft.core.KVIndex.asOfJoin]]'s
-  * `stockAsOf`), so the rewrite is exactly the inverse of that lowering.
+  * This is the plan [[graft.core.KVIndex.asOfJoin]] builds over two pinned
+  * relations, so the library's as-of join takes this rewrite too.
   * Matched plan fragment: `Filter(rn = 1, Window([row_number() AS rn],
   * partitionSpec, orderSpec, join))` with an optional `WindowGroupLimit`
   * and an optional column-pruning `Project` between Window and Join (both
@@ -48,9 +48,9 @@ import graft.plans.AsOfZipJoin
   *  - the condition is leading-prefix key equalities on the RIGHT
   *    snapshot plus EXACTLY ONE ts bound `r.rts <= l.lts` (`<` = strict)
   *    between plain attributes, optionally with ONE tolerance band
-  *    `r.rts >= l.lts - K` on the same pair (a sub-day negative INTERVAL
-  *    for timestamps, a positive literal for integrals — the engine's
-  *    own fallback spelling), which maps to the merge's native-unit
+  *    `r.rts >= l.lts - K`, K ≥ 0, on the same pair (a day-time INTERVAL
+  *    for timestamps, `date_sub` for dates, a literal for integrals —
+  *    the library's own spelling), which maps to the merge's native-unit
   *    tolerance; any other conjunct declines;
   *  - PARTITION BY covers a PROVABLY UNIQUE left key (see above), so
   *    partitions are per-left-row — the exact requirement for
@@ -64,9 +64,13 @@ import graft.plans.AsOfZipJoin
   *  - the filter keeps rank 1 (`rn = 1` / `rn <= 1`); other conjuncts
   *    replay above the merge.
   *
-  * Scale shape: identical to the API as-of join — legs cut at equi-prefix
-  * grain from both manifests, per-leg one-candidate ordered merge, zero
-  * exchanges, no window, O(1) memory beyond the local leg sorts.
+  * Scale shape of the co-range construction: both manifests' file bounds
+  * cut shared leg boundaries at EQUI-KEY-PREFIX grain (the key-prefix
+  * join's leg rule, so an equi group is never split across legs) and each
+  * leg runs an ordered merge holding ONE candidate row: no shuffle, no
+  * window, no join explosion on many-versions keys, O(1) task heap beyond
+  * the local leg sorts. The left key's remaining columns join the left
+  * sort, so the merge's ordering claim covers the whole left key.
   */
 object GraftAsOfIdiom extends Rule[LogicalPlan] {
 
@@ -132,13 +136,13 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
       case org.apache.spark.sql.catalyst.expressions.TimestampAddInterval(
           l: AttributeReference,
           Literal(us: java.lang.Long, _: org.apache.spark.sql.types.DayTimeIntervalType), _)
-          if lOut.contains(l) && us < 0 => Some((l, -us))
+          if lOut.contains(l) && us <= 0 => Some((l, -us))
       // legacy CalendarInterval literal (sub-day only: day arithmetic is
       // session-tz-dependent while the merge compares raw micros)
       case org.apache.spark.sql.catalyst.expressions.TimestampAddInterval(
           l: AttributeReference, Literal(iv: org.apache.spark.unsafe.types.CalendarInterval, _), _)
           if lOut.contains(l) && iv.months == 0 && iv.days == 0 &&
-            iv.microseconds < 0 => Some((l, -iv.microseconds))
+            iv.microseconds <= 0 => Some((l, -iv.microseconds))
       // DATE bands: `date_sub(lts, K)` / `date_add(lts, -K)` / a legacy
       // days-only interval — all PURE day arithmetic on the raw day count
       // (DateType carries no time-of-day and no zone), exactly the merge's
@@ -149,15 +153,15 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
       // operand type and decline above, by design.
       case org.apache.spark.sql.catalyst.expressions.DateSub(
           l: AttributeReference, Literal(n: Integer, IntegerType))
-          if lOut.contains(l) && n > 0 => Some((l, n.longValue()))
+          if lOut.contains(l) && n >= 0 => Some((l, n.longValue()))
       case org.apache.spark.sql.catalyst.expressions.DateAdd(
           l: AttributeReference, Literal(n: Integer, IntegerType))
-          if lOut.contains(l) && n < 0 => Some((l, -n.longValue()))
+          if lOut.contains(l) && n <= 0 => Some((l, -n.longValue()))
       case org.apache.spark.sql.catalyst.expressions.DateAddInterval(
           l: AttributeReference,
           Literal(iv: org.apache.spark.unsafe.types.CalendarInterval, _), _, _)
           if lOut.contains(l) && iv.months == 0 && iv.microseconds == 0 &&
-            iv.days < 0 => Some((l, -iv.days.toLong))
+            iv.days <= 0 => Some((l, -iv.days.toLong))
       case org.apache.spark.sql.catalyst.expressions.Subtract(
           l: AttributeReference, Literal(n, t), _)
           if lOut.contains(l) && n != null && (t match {
@@ -166,7 +170,7 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
                  org.apache.spark.sql.types.ShortType |
                  org.apache.spark.sql.types.ByteType => true
             case _ => false
-          }) && n.asInstanceOf[Number].longValue() > 0 =>
+          }) && n.asInstanceOf[Number].longValue() >= 0 =>
         Some((l, n.asInstanceOf[Number].longValue()))
       case _ => None
     }
@@ -308,24 +312,29 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
           !lEqui.forall(a => lIds.contains(a.exprId))) None
       else {
         val lIx = new KVIndex(lg.storeRef, lg.manifestRef)
-        lIx.coRangeLegPlans(rIx, GraftCoRangeJoin.rowsPerLegConf(),
+        // the left key's remaining columns order each leg's left sort, so
+        // the merge's ordering claim covers the whole left key
+        val lByName = lrel.output.map(a => a.name -> a).toMap
+        val lRest = lKeyCols.drop(m).filterNot(_ == lTs.name).map(lByName)
+          .takeWhile(j.left.outputSet.contains)
+        lIx.coRangeLegPlans(rIx, GraftCoRangeJoin.rowsPerLeg(lg, rg),
             lg.pushedKeyBounds, rg.pushedKeyBounds, jt, keyLen = m).map {
           case (zipOpt, leftOnlyOpt, _) =>
-            val zip = zipOpt.map { case (lPlan, rPlan, _, _) =>
+            val zip = zipOpt.map { case (lPlan, rPlan) =>
               AsOfZipJoin(
                 lRebuild(graft.plans.OrderedPlans.aliasTo(lrel.output, lPlan)),
                 rRebuild(graft.plans.OrderedPlans.aliasTo(rrel.output, rPlan)),
                 lEqui, rEqui, lTs, rTs,
-                Nil, rRestAttrs, leftOuter, strict, tolerance)
+                lRest, rRestAttrs, leftOuter, strict, tolerance)
             }
             // equi ranges only the left covers: null-extend (left_outer
             // only; inner construction returns no left-only branch)
             val leftOnly = leftOnlyOpt.map { lp =>
               val stack = lRebuild(graft.plans.OrderedPlans.aliasTo(lrel.output, lp))
-              Project(stack.output ++ j.right.output.map(a =>
-                Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)), stack)
+              Project(stack.output ++ j.right.output.map(GraftCoRangeJoin.nullOf), stack)
             }
             val merged: LogicalPlan = Seq(zip, leftOnly).flatten match {
+              case Seq() => LocalRelation(j.output) // provably empty
               case Seq(only) => only
               case many => Union(many)
             }
@@ -341,6 +350,10 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
     // so left_outer needs no extra branch.
     def probe(): Option[LogicalPlan] = {
       if (j.left.isStreaming) return None
+      // two snapshots the co-range merge could not pair take the equi
+      // rewrite's policy for that case: a broadcastable snapshot keeps
+      // the stock plan
+      if (leftGraft.isDefined && GraftCoRangeJoin.broadcastable(rg)) return None
       // the snapshot is the right side of an inner/left_outer as-of, never
       // preserved: pruning its files / bloom-filtering its leg scans by
       // the probe set drops only rows that could never be a floor
@@ -356,8 +369,7 @@ object GraftAsOfIdiom extends Rule[LogicalPlan] {
         // row with the right side null-extended
         case ProbeRoute.AllPruned => Some(finish(
           if (leftOuter)
-            Project(j.left.output ++ j.right.output.map(a =>
-              Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)), j.left)
+            Project(j.left.output ++ j.right.output.map(GraftCoRangeJoin.nullOf), j.left)
           else LocalRelation(j.output)))
         case ProbeRoute.Unzippable => None
       }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, EqualTo, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, Coalesce, EqualTo, Expression, Literal}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Join, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -10,21 +10,53 @@ import graft.core.{KVIndex, KeyRange, ProbeRoute}
 import graft.plans.ZipPartitionsJoin
 import graft.plans.OrderedPlans.aliasTo
 
-/** Exchange-free key-equi-joins through the DSV2 path: `SELECT ... FROM
-  * cat.a JOIN cat.b ON a.<keys> = b.<keys>` plans the co-range zip join
-  * ([[graft.core.KVIndex.coRangeJoin]]) instead of shuffling both sides —
-  * the JOIN twin of [[GraftOrderedScan]]'s ordering rewrite, and the
-  * layout capability `SupportsReportPartitioning` cannot express for a
-  * RANGE-laid source (`KeyGroupedPartitioning` partitions hold one key
-  * value each; a range leg holds an interval — see the design note on
-  * `coRangeJoin`).
+/** Exchange-free key-equi-joins of snapshot relations: `SELECT ... FROM
+  * cat.a JOIN cat.b ON a.<keys> = b.<keys>`, and the plans the library
+  * builds over pinned relations ([[graft.core.KVIndex.coRangeJoin]],
+  * [[graft.core.KVIndex.diff]]), plan the co-range zip join instead of
+  * shuffling both sides — the JOIN twin of [[GraftOrderedScan]]'s
+  * ordering rewrite.
+  *
+  * The construction ([[graft.core.KVIndex.coRangeLegPlans]]): the two
+  * manifests' file bounds are cut into one shared, totally ordered
+  * sequence of leg boundaries (each side batched to ≈ the per-leg row
+  * target, [[rowsPerLeg]] — so per-TASK data stays one manifest batch at
+  * ANY snapshot size: a bigger snapshot means MORE legs, never bigger
+  * ones); each leg reads each side's covering files as ONE partition with
+  * half-open boundary predicates pushed into the scans, and partition i
+  * of the left can only ever match partition i of the right —
+  * [[graft.plans.ZipPartitionsJoinExec]] zips them with a per-leg
+  * STREAMING MERGE join (spillable local sorts, no build side). Legs
+  * where either side has no covering files are dropped wholesale for the
+  * types that drop unmatched rows, so a join of a huge snapshot against a
+  * narrow one reads only the intersecting key ranges of the big side —
+  * manifest pruning applied to a JOIN.
+  *
+  * Read amplification bound: a file whose key range spans m legs is
+  * scanned m times (once per covering leg, with disjoint boundary
+  * predicates). Adjacent legs whose covering file sets are identical on
+  * BOTH sides are merged away, and with a leg target ≥ each side's own
+  * file batch size a side's OWN boundaries never split its files —
+  * residual re-reads come only from the OTHER side's boundaries landing
+  * inside a file's range, ≤ ceil(otherRowsInRange / target) scans of
+  * that file.
+  *
+  * Design note: Spark's storage-partitioned joins
+  * (`SupportsReportPartitioning` + `KeyGroupedPartitioning`) cannot carry
+  * this — a key-grouped partition holds ONE key value, while a range leg
+  * holds an interval, and a graft scan never plans the `BatchScanExec`
+  * that consumes the report (it is spliced into a plain file read,
+  * [[SpliceGraftScan]]). The layout invariant is therefore built into the
+  * plan directly, the same stance as the manifest stitch.
   *
   * Join types: INNER, the LEFT-preserving snapshot-diff family
   * (LEFT OUTER / LEFT SEMI / LEFT ANTI — `WHERE [NOT] EXISTS` on the key
   * plans as semi/anti), RIGHT OUTER, and FULL OUTER (the two-snapshot
   * diff). Key ranges only one side covers ride separate union branches
   * (pass-through for anti, null-extension for the outer types) so they
-  * skip the join entirely.
+  * skip the join entirely. Under the USING-shape key coalesce, FULL and
+  * RIGHT OUTER fold it into the join ([[foldCoalesce]]) and keep the
+  * merge's key-order claims.
   *
   * Eligibility is strict — the stock join stays whenever:
   *  - the join type is anything else, or its condition is anything but a
@@ -47,8 +79,52 @@ import graft.plans.OrderedPlans.aliasTo
 object GraftCoRangeJoin extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
+    case p @ Project(_, _: Filter | _: Join) => foldCoalesce(p).getOrElse(p)
     case j @ Join(l, r, jt, Some(cond), _) if ZipPartitionsJoin.supports(jt) =>
       dispatch(j, l, r, cond, jt).getOrElse(j)
+  }
+
+  /** The key coalesce fold: a FULL or RIGHT OUTER two-snapshot join under
+    * the USING-shape projection `coalesce(l.k, r.k) AS k` (a SQL `FULL
+    * JOIN ... USING`, the library's full/right outer [[KVIndex.coRangeJoin]]
+    * and [[KVIndex.diff]]), possibly through deterministic Filters, plans
+    * the zip join with the coalesce folded into the exec
+    * ([[ZipPartitionsJoin]]'s `coalescedLeft`/`coalescedRight`). Every
+    * output row then carries its key in the left key slots, so the
+    * merge's key order is a live ordering and range-partitioning claim: a
+    * GROUP BY or ORDER BY on the key above plans no exchange. Every key
+    * pair must be coalesced, and nothing else (the projection outside its
+    * coalesces, the Filters) may read a raw coalesced slot, whose value
+    * the fold changes. Declines to the plain rewrite otherwise.
+    */
+  private def foldCoalesce(p: Project): Option[LogicalPlan] = {
+    def peel(x: LogicalPlan, fs: List[Filter]): Option[(Join, List[Filter])] = x match {
+      case f @ Filter(c, child) if c.deterministic => peel(child, f :: fs)
+      case j @ Join(_, _, FullOuter | RightOuter, Some(_), _) => Some((j, fs))
+      case _ => None
+    }
+    val (j, filters) = peel(p.child, Nil).getOrElse(return None)
+    def pairOf(e: Expression): Option[(Attribute, Attribute)] = e match {
+      case Alias(Coalesce(Seq(a: AttributeReference, b: AttributeReference)), _)
+          if j.left.outputSet.contains(a) && j.right.outputSet.contains(b) => Some((a, b))
+      case _ => None
+    }
+    val pairs = p.projectList.flatMap(pairOf).distinct
+    // each slot folds at most one partner
+    if (pairs.isEmpty || pairs.map(_._1).distinct.size < pairs.size ||
+        pairs.map(_._2).distinct.size < pairs.size) return None
+    val raw = AttributeSet(pairs.flatMap { case (a, b) => Seq(a, b) })
+    val otherReads = p.projectList.filter(pairOf(_).isEmpty).flatMap(_.references) ++
+      filters.flatMap(_.condition.references)
+    if (otherReads.exists(raw.contains)) return None
+    rewrite(j, j.left, j.right, j.condition.get, j.joinType, pairs).map { zip =>
+      val filtered = filters.foldLeft(zip)((c, f) => f.copy(child = c))
+      Project(p.projectList.map {
+        case al: Alias if pairOf(al).isDefined =>
+          al.withNewChildren(Seq(pairOf(al).get._1)).asInstanceOf[Alias]
+        case e => e
+      }, filtered)
+    }
   }
 
   /** Two-graft-side zip join first (both sides exchange-free); when that
@@ -215,11 +291,21 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
       case "false" => false
       case _ => autoEagerPlan(probe) // "auto"
     }) && eagerSafePlan(probe) && probe.stats.sizeInBytes <= BigInt(eagerMaxBytesConf())
-    ix.routeProbeLegs(probe, probeKeys, rowsPerLegConf(), eager, g.pushedKeyBounds) match {
+    ix.routeProbeLegs(probe, probeKeys, rowsPerLeg(g), eager, g.pushedKeyBounds) match {
       case ProbeRoute.AllPruned if !eager => ProbeRoute.Unzippable
       case r => r
     }
   }
+
+  /** Per-leg row target of a join over `scans`: the largest target a
+    * pinned relation carries ([[GraftTable.relation]], the library joins'
+    * `rowsPerLeg`), else [[rowsPerLegConf]].
+    */
+  private[sources] def rowsPerLeg(scans: GraftScan*): Long =
+    scans.map(_.legTarget).max match {
+      case t if t > 0 => t
+      case _ => rowsPerLegConf()
+    }
 
   /** per-leg row target from session conf (e.g. for wider tasks on a
     * scan-heavy join); ≤ 0 = the index's maxRowsPerFile convention
@@ -232,8 +318,12 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
       s"spark.graft.corange.rowsPerLeg must be an integer, got '$raw'") }
   }
 
+  /** The two-snapshot zip join; `coalesced` = the (left, right) pairs
+    * [[foldCoalesce]] folds into the exec, which must cover every key pair.
+    */
   private def rewrite(j: Join, l: LogicalPlan, r: LogicalPlan,
-                      cond: Expression, jt: JoinType): Option[LogicalPlan] = {
+                      cond: Expression, jt: JoinType,
+                      coalesced: Seq[(Attribute, Attribute)] = Nil): Option[LogicalPlan] = {
     val (lrel, lg, lRebuild) = side(l).getOrElse(return None)
     val (rrel, rg, rRebuild) = side(r).getOrElse(return None)
 
@@ -258,13 +348,25 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
 
     val lIx = new KVIndex(lg.storeRef, lg.manifestRef)
     val rIx = new KVIndex(rg.storeRef, rg.manifestRef)
+    // join keys = the cond's own attributes in key-column order; they
+    // survive the stacks (cond resolved ABOVE them in the original plan)
+    val byLName = pairs.map(p => p._1.name -> p).toMap
+    val lKeys: Seq[Attribute] = lKeyCols.take(m).map(c => byLName(c)._1)
+    val rKeys: Seq[Attribute] = lKeyCols.take(m).map(c => byLName(c)._2)
+    val coalescedIds = coalesced.map { case (a, b) => (a.exprId, b.exprId) }.toSet
+    if (coalesced.nonEmpty &&
+        !lKeys.zip(rKeys).forall { case (a, b) => coalescedIds((a.exprId, b.exprId)) })
+      return None
+    // the right partners of coalesced pairs leave the output: their values
+    // ride the left slots
+    val partner = coalesced.map { case (a, b) => a.exprId -> b }.toMap
+    val rKept = r.output.filterNot(a => coalesced.exists(_._2.exprId == a.exprId))
     // KEEP the scans' file prune: each side's pushed leading-key bounds
     // go in separately — coRangeLegPlans applies the intersection to the
     // sides the join type allows (a left-preserving join must not let a
     // RIGHT bound prune LEFT files: those rows survive unmatched).
     // Exactness is unaffected: the same predicates replay in the stacks.
-    val rowsPerLeg = rowsPerLegConf()
-    lIx.coRangeLegPlans(rIx, rowsPerLeg,
+    lIx.coRangeLegPlans(rIx, rowsPerLeg(lg, rg),
         lg.pushedKeyBounds, rg.pushedKeyBounds, jt, keyLen = m).map {
       case (zipOpt, leftOnlyOpt, rightOnlyOpt) =>
         // restore the relation's output exprIds over the legs, then replay
@@ -274,14 +376,10 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
         // preserves the leg-per-partition alignment; one-sided filters
         // below their own input is the stock pushdown direction for every
         // supported type)
-        // join keys = the cond's own attributes in key-column order; they
-        // survive the stacks (cond resolved ABOVE them in the original plan)
-        val byLName = pairs.map(p => p._1.name -> p).toMap
-        val lKeys: Seq[Attribute] = lKeyCols.take(m).map(c => byLName(c)._1)
-        val rKeys: Seq[Attribute] = lKeyCols.take(m).map(c => byLName(c)._2)
-        val zip = zipOpt.map { case (lPlan, rPlan, _, _) =>
+        val zip = zipOpt.map { case (lPlan, rPlan) =>
           ZipPartitionsJoin(lRebuild(aliasTo(lrel.output, lPlan)),
-            rRebuild(aliasTo(rrel.output, rPlan)), lKeys, rKeys, jt)
+            rRebuild(aliasTo(rrel.output, rPlan)), lKeys, rKeys, jt,
+            coalesced.map(_._1), coalesced.map(_._2))
         }
         // ranges only ONE side covers: pass-through (anti) / null-extend
         // the other side (outer types), through the SAME side stack —
@@ -291,24 +389,38 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
           val stack = lRebuild(aliasTo(lrel.output, lp))
           jt match {
             case LeftOuter | FullOuter =>
-              Project(stack.output ++ r.output.map(a =>
-                Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)), stack)
+              Project(stack.output ++ rKept.map(nullOf), stack)
             case _ => stack // LeftAnti: every left row in range survives
           }
         }
         val rightOnly = rightOnlyOpt.map { rp => // FullOuter / RightOuter
           val stack = rRebuild(aliasTo(rrel.output, rp))
-          Project(l.output.map(a =>
-            Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)) ++
-            stack.output, stack)
+          Project(l.output.map(a => partner.get(a.exprId)
+              .map(b => Alias(b, a.name)(exprId = a.exprId)).getOrElse(nullOf(a))) ++
+            rKept, stack)
         }
         val branches: Seq[LogicalPlan] = Seq(zip, leftOnly, rightOnly).flatten
         branches match {
-          case Seq() => LocalRelation(j.output) // provably empty
+          case Seq() => // provably empty
+            LocalRelation(ZipPartitionsJoin.outputFor(jt, l.output, r.output, coalesced))
           case Seq(only) => only
           case many => Union(many)
         }
     }
+  }
+
+  /** `a`'s null-extension: a null of its type under its own exprId. */
+  private[sources] def nullOf(a: Attribute): Alias =
+    Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)
+
+  /** The snapshot is small enough to broadcast (its manifest-stat size,
+    * the bytes a broadcast would move, under the session threshold): a
+    * stock BroadcastHashJoin then moves NEITHER side's bulk.
+    */
+  private[sources] def broadcastable(g: GraftScan): Boolean = {
+    val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
+    val size = g.estimateStatistics().sizeInBytes
+    thr >= 0 && size.isPresent && size.getAsLong <= thr
   }
 
   /** PROBE rewrite: exactly one join side is a plain graft snapshot scan
@@ -345,11 +457,7 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
                            graftOnLeft: Boolean): Option[LogicalPlan] = {
     val (grel, gg, gRebuild) = side(if (graftOnLeft) l else r).getOrElse(return None)
     val probe = if (graftOnLeft) r else l
-    if (probe.isStreaming) return None
-    val thr = org.apache.spark.sql.internal.SQLConf.get.autoBroadcastJoinThreshold
-    // the snapshot's manifest-stat size, the bytes a broadcast would move
-    val gSize = gg.estimateStatistics().sizeInBytes
-    if (thr >= 0 && gSize.isPresent && gSize.getAsLong <= thr) return None
+    if (probe.isStreaming || broadcastable(gg)) return None
 
     // (probeAttr, graftAttr) pairs; anything else in the condition declines
     val pairs = equiPairs(cond, probe.outputSet, AttributeSet(grel.output))
@@ -386,12 +494,9 @@ object GraftCoRangeJoin extends Rule[LogicalPlan] {
     def prunedAnswer(): LogicalPlan = jt match {
       case LeftAnti => probe // sound set => probe IS the left side
       case LeftOuter => // probe left, graft right
-        Project(probe.output ++ r.output.map(a =>
-          Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)), probe)
+        Project(probe.output ++ r.output.map(nullOf), probe)
       case RightOuter => // probe right, graft left
-        Project(l.output.map(a =>
-          Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)) ++
-          probe.output, probe)
+        Project(l.output.map(nullOf) ++ probe.output, probe)
       case _ => LocalRelation(j.output) // Inner, LeftSemi
     }
 

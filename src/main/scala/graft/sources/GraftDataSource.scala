@@ -208,7 +208,7 @@ final class GraftDataSource extends TableProvider with DataSourceRegister
 }
 
 final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
-                       pinned: Boolean = false)
+                       pinned: Boolean = false, legTarget: Long = -1L)
     extends Table with SupportsRead with SupportsWrite with SupportsDelete {
 
   // table resolution happens at ANALYSIS time — early enough that the
@@ -230,7 +230,7 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
     else java.util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(store, manifest, schema())
+    new GraftScanBuilder(store, manifest, schema(), legTarget)
 
   /** Append = one `Command.Insert` batch committed through
     * [[graft.core.KVIndex.executeWithRetry]], so concurrent format-level
@@ -315,14 +315,17 @@ final class GraftTable(store: SnapshotStore, manifest: SnapshotManifest,
 }
 
 object GraftTable {
-  /** The relation a registered snapshot view holds: this exact snapshot,
-    * pinned — the catalog table's own plan leaf, so every rewrite a
-    * catalog query gets reaches the view too.
+  /** The relation a registered snapshot view and the library's joins
+    * hold: this exact snapshot, pinned — the catalog table's own plan
+    * leaf, so every rewrite a catalog query gets reaches them too.
+    * `legTarget > 0` is the co-range rewrites' per-leg row target for
+    * joins over this relation, ahead of the session conf
+    * ([[GraftCoRangeJoin.rowsPerLeg]]).
     */
-  private[graft] def relation(store: SnapshotStore,
-                              manifest: SnapshotManifest): DataSourceV2Relation =
-    DataSourceV2Relation.create(new GraftTable(store, manifest, pinned = true),
-      None, None)
+  private[graft] def relation(store: SnapshotStore, manifest: SnapshotManifest,
+                              legTarget: Long = -1L): DataSourceV2Relation =
+    DataSourceV2Relation.create(
+      new GraftTable(store, manifest, pinned = true, legTarget), None, None)
 
   /** The pinned table of index `id` at a time-travel point — the one floor
     * behind `VERSION AS OF` / `TIMESTAMP AS OF` on catalog tables and
@@ -426,7 +429,7 @@ final class GraftNewIndexTable(store: SnapshotStore, indexId: String,
   * where Catalyst pushes them into parquet row-group stats.
   */
 final class GraftScanBuilder(store: SnapshotStore, manifest: SnapshotManifest,
-                             fullSchema: StructType)
+                             fullSchema: StructType, legTarget: Long)
     extends ScanBuilder with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownAggregates with SupportsPushDownLimit {
 
@@ -514,14 +517,15 @@ final class GraftScanBuilder(store: SnapshotStore, manifest: SnapshotManifest,
   override def isPartiallyPushed(): Boolean = true
 
   override def build(): Scan =
-    new GraftScan(store, manifest, keyCol, usable, required, aggRow, limit)
+    new GraftScan(store, manifest, keyCol, usable, required, aggRow, limit, legTarget)
 }
 
 final class GraftScan(store: SnapshotStore, manifest: SnapshotManifest,
                       keyCol: String, filters: Array[Filter],
                       required: StructType,
                       aggRow: Option[Seq[(StructField, Any)]] = None,
-                      limit: Option[Int] = None)
+                      limit: Option[Int] = None,
+                      private[sources] val legTarget: Long = -1L)
     extends Scan with SupportsReportStatistics {
 
   // the ordered-scan rewrite (GraftOrderedScan) re-plans an ORDER BY over

@@ -319,7 +319,7 @@ private[graft] object GraftDml {
           Project(p.output :+ Alias(Literal(true), name)(), p)
         val srcOut = m.sourceTable.output
         val nullBool = Literal(null, org.apache.spark.sql.types.BooleanType)
-        val zip = zipOpt.map { case (lp, rp, _, _) =>
+        val zip = zipOpt.map { case (lp, rp) =>
           val lSide = mark(aliasTo(out, lp), "__graft_t")
           val rSide = mark(srcRebuild(aliasTo(srcRelOut, rp)), "__graft_s")
           graft.plans.ZipPartitionsJoin(lSide, rSide,
@@ -331,14 +331,14 @@ private[graft] object GraftDml {
         val leftOnly = leftOnlyOpt.map { lp =>
           val stack = mark(aliasTo(out, lp), "__graft_t")
           Project(stack.output ++
-            (srcOut.map(a => Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)) :+
+            (srcOut.map(GraftCoRangeJoin.nullOf) :+
               Alias(nullBool, "__graft_s")()), stack)
         }
         // source-only key ranges: rows that can only hit NOT MATCHED
         // (insert) clauses
         val rightOnly = rightOnlyOpt.map { rp =>
           val stack = mark(srcRebuild(aliasTo(srcRelOut, rp)), "__graft_s")
-          Project((out.map(a => Alias(Literal(null, a.dataType), a.name)(exprId = a.exprId)) :+
+          Project((out.map(GraftCoRangeJoin.nullOf) :+
             Alias(nullBool, "__graft_t")()) ++ stack.output, stack)
         }
         val branches: Seq[LogicalPlan] = Seq(zip, leftOnly, rightOnly).flatten

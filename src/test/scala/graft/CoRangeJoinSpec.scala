@@ -753,6 +753,25 @@ class CoRangeJoinSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       case e: ShuffleExchangeExec => e }.isEmpty,
       s"right-outer + GROUP BY key must plan no exchange:\n${ro.queryExecution.executedPlan}")
     assert(ro.count() == b.count())
+
+    // SQL FULL JOIN ... USING (k) over the catalog: the analyzer's
+    // coalesce(a.k, b.k) key folds into the zip join, so GROUP BY k keeps
+    // the claim and plans no exchange
+    spark.conf.set("spark.sql.catalog.crjclm", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.crjclm.root", st.root)
+    val using = spark.sql(
+      """SELECT k, count(*) AS n, sum(av) AS s FROM crjclm.clm_a
+         FULL JOIN crjclm.clm_b USING (k) GROUP BY k""")
+    assert(collectFirst(using.queryExecution.executedPlan) {
+      case z: ZipPartitionsJoinExec => z }.isDefined,
+      s"FULL JOIN USING must plan the zip join:\n${using.queryExecution.executedPlan}")
+    assert(collect(using.queryExecution.executedPlan) {
+      case e: ShuffleExchangeExec => e }.isEmpty,
+      s"FULL JOIN USING + GROUP BY k must plan no exchange:\n${using.queryExecution.executedPlan}")
+    val stockUsing = a.join(b, Seq("k"), "full_outer").groupBy("k")
+      .agg(count(lit(1)).as("n"), sum("av").as("s"))
+    assert(using.collect().map(_.toString).sorted.toSeq ==
+      stockUsing.collect().map(_.toString).sorted.toSeq)
   }
 
   test("snapshot diff rides the zip join: only changed ranges read, zero exchanges") {

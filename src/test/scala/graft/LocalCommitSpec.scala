@@ -217,6 +217,16 @@ class LocalCommitSpec extends SparkSuite {
     assert(rows.size == 4 && rows.exists(_.startsWith("NaN|nan3|")) && rows.exists(_.contains("negzero")))
     val (clash, _, _) = bothTiers(boot, () => Seq(Command.Insert(dv(-0.0 -> "again"))))
     assert(clash.error.exists(_.code == "LEAF_DUPLICATE_KEY"))
+    // a file whose min is 0.0 covers -0.0: the upsert replaces that row
+    // instead of pruning the file away and committing a second one
+    def oneFile(store: SnapshotStore, id: String) = KVIndex.bootstrap(store, id,
+      dv(0.0 -> "zero", 1.0 -> "one", 2.0 -> "two"), Seq("d"),
+      txVersion = "tx0").fold(e => fail(e.message), identity)
+    val (neg, negRows, _) = bothTiers(oneFile, () => Seq(
+      Command.Insert(dv(-0.0 -> "negzero"), upsert = true)))
+    assert(neg.success, neg.error)
+    assert(negRows.size == 3 && negRows.count(_.contains("|negzero|")) == 1 &&
+      !negRows.exists(_.contains("|zero|")), negRows)
   }
 
   test("keys typed unlike the manifest's fold and write as Spark does") {

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.core._
+import graft.plans.{AsOfZipJoinExec, ZipPartitionsJoinExec}
 import graft.sources.GraftScan
 
 /** A registered snapshot view IS the catalog table pinned at its
@@ -131,6 +132,103 @@ class ViewParitySpec extends SparkSuite with AdaptiveSparkPlanHelper {
       assert(collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
         s"view-to-view key join must plan zero exchanges:\n$plan")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bcast)
+  }
+
+  /** The zip execs of a frame's plan, by kind, join type and coalesced
+    * slots, plus its exchange count and output partitions.
+    */
+  private def zipShape(df: org.apache.spark.sql.DataFrame): (Seq[String], Int, Int) = {
+    val plan = df.queryExecution.executedPlan
+    (collect(plan) {
+      case z: ZipPartitionsJoinExec => s"zip ${z.joinType} ${z.coalescedLeft.size}"
+      case z: AsOfZipJoinExec => s"asof outer=${z.leftOuter} strict=${z.strict} tol=${z.tolerance}"
+    }, collect(plan) { case e: ShuffleExchangeExec => e }.size, df.rdd.getNumPartitions)
+  }
+
+  /** A library join and the same statement in catalog SQL: equal rows, the
+    * same zip exec, zero exchanges.
+    */
+  private def assertJoinParity(what: String, api: org.apache.spark.sql.DataFrame,
+                               sql: String, empty: Boolean = false): Unit = {
+    val q = spark.sql(sql.replace("$t", s"$Cat.t").replace("$u", s"$Cat.u")
+      .replace("$w", s"$Cat.w"))
+    assert(api.columns.toSeq == q.columns.toSeq, s"$what: columns")
+    val rows = api.collect().map(_.toString).sorted.toSeq
+    assert(rows.isEmpty == empty, s"$what: ${rows.size} rows")
+    assert(rows == q.collect().map(_.toString).sorted.toSeq, s"$what: rows differ")
+    val shape = zipShape(api)
+    assert(shape._1.size == 1 && shape._2 == 0,
+      s"$what: expected one zip exec and no exchange:\n${api.queryExecution.executedPlan}")
+    assert(shape == zipShape(q), s"$what: API and SQL plans differ\n" +
+      s"${api.queryExecution.executedPlan}\n${q.queryExecution.executedPlan}")
+  }
+
+  test("the library joins are their catalog statements: same rows, same zip exec") {
+    store
+    def open(id: String) = KVIndex.open(store, id).fold(e => sys.error(e.message), identity)
+    val (t, u) = (open("t"), open("u"))
+    val w = KVIndex.bootstrap(store, "w", (2L until 6L).map(i => (i, s"w$i")).toDF("wk", "wv"),
+      Seq("wk")).fold(e => sys.error(e.message), identity)
+    val legs = 256L
+    spark.conf.set("spark.graft.corange.rowsPerLeg", legs.toString)
+    try {
+      val on = "a.tenant = b.tenant AND a.seq = b.seq"
+      val left = "a.tenant, a.seq, a.amount, a.version"
+      for ((jt, sqlJoin) <- Seq("inner" -> "JOIN", "left_outer" -> "LEFT JOIN")) {
+        assertJoinParity(jt, t.coRangeJoin(u, legs, jt),
+          s"SELECT $left, b.bv FROM $$t a $sqlJoin $$u b ON $on")
+      }
+      for ((jt, sqlJoin) <- Seq("left_semi" -> "LEFT SEMI JOIN", "left_anti" -> "LEFT ANTI JOIN")) {
+        assertJoinParity(jt, t.coRangeJoin(u, legs, jt),
+          s"SELECT $left FROM $$t a $sqlJoin $$u b ON $on")
+      }
+      for ((jt, sqlJoin) <- Seq("right_outer" -> "RIGHT JOIN", "full_outer" -> "FULL JOIN")) {
+        assertJoinParity(jt, t.coRangeJoin(u, legs, jt),
+          "SELECT coalesce(a.tenant, b.tenant) AS tenant, coalesce(a.seq, b.seq) AS seq, " +
+            "a.amount, coalesce(a.version, b.version) AS version, b.bv " +
+            s"FROM $$t a $sqlJoin $$u b ON $on")
+      }
+      assertJoinParity("equiLen prefix", t.coRangeJoin(w, legs, equiLen = 1),
+        s"SELECT $left, b.wv FROM $$t a JOIN $$w b ON a.tenant = b.wk")
+
+      for (outer <- Seq(false, true); strict <- Seq(false, true); tol <- Seq(-1L, 0L, 6L)) {
+        val band = if (tol >= 0) s" AND b.seq >= a.seq - $tol" else ""
+        assertJoinParity(s"asOf outer=$outer strict=$strict tol=$tol",
+          t.asOfJoin(u, equiLen = 1, joinType = if (outer) "left_outer" else "inner",
+            strict = strict, tolerance = tol, rowsPerLeg = legs),
+          s"""SELECT tenant, seq, amount, version, asof_ts, bv FROM (
+                SELECT $left, b.seq AS asof_ts, b.bv, row_number() OVER (
+                  PARTITION BY a.tenant, a.seq ORDER BY b.seq DESC) AS rn
+                FROM $$t a ${if (outer) "LEFT JOIN" else "JOIN"} $$u b
+                  ON a.tenant = b.tenant AND b.seq ${if (strict) "<" else "<="} a.seq$band
+              ) WHERE rn = 1""",
+          // strictly before, yet within 0 of the probe: nothing matches
+          empty = !outer && strict && tol == 0)
+      }
+    } finally spark.conf.unset("spark.graft.corange.rowsPerLeg")
+
+    // the diff: the statement reads whole snapshots, the library only the
+    // files the two do not share, so their leg counts differ
+    val older = new KVIndex(store, store.loadVersion("t", first))
+    val d = older.diff(t)
+    val q = spark.sql(
+      s"""SELECT tenant, seq, old_amount, new_amount, change FROM (
+            SELECT tenant, seq, o.amount AS old_amount, n.amount AS new_amount,
+              CASE WHEN o.__old IS NULL THEN 'added' WHEN n.__new IS NULL THEN 'removed'
+                   WHEN NOT (o.amount <=> n.amount) THEN 'changed' END AS change
+            FROM (SELECT tenant, seq, amount, true AS __old FROM $Cat.t VERSION AS OF $first) o
+            FULL JOIN (SELECT tenant, seq, amount, true AS __new FROM $Cat.t) n
+              USING (tenant, seq)) WHERE change IS NOT NULL""")
+    val diffRows = d.collect().map(_.toString).sorted.toSeq
+    assert(diffRows.size == 50 && diffRows == q.collect().map(_.toString).sorted.toSeq)
+    for (df <- Seq(d, q)) {
+      val (execs, exchanges, _) = zipShape(df)
+      assert(execs == Seq("zip FullOuter 2") && exchanges == 0,
+        s"diff must plan the coalesced zip join:\n${df.queryExecution.executedPlan}")
+    }
+    // nothing changed: no file to read and no Spark job
+    val (same, jobs) = jobsOf(t.diff(t).collect())
+    assert(same.isEmpty && jobs == 0, s"self-diff ran $jobs jobs")
   }
 
   test("a view stays read-only: INSERT and DELETE on its name change nothing") {
